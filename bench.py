@@ -1,7 +1,8 @@
 """colcrush benchmark harness.
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the CPUs
+this process may run on) and prints ONE JSON
 line: {"metric", "value" (total sec), "unit": "sec", "queries": {name:
 sec}, "sf", ...extras}. Extras report the engine's own numbers: encode
 throughput (GB/s of content bytes) on the synthetic source-code table
@@ -58,7 +59,8 @@ from colcrush.engine import encode_table
 from colcrush.engine.decoder import decode_table
 from colcrush.fixtures import source_code_df
 from colcrush.queries import QUERIES
-from colcrush.session import get_spark
+from colcrush.session import default_cores, get_spark
+from perfbench.metrics import tree_cpu_seconds
 
 HEADLINE = [
     "roundtrip_documents_sha",
@@ -84,37 +86,6 @@ HEADLINE = [
 ]
 
 
-def _tree_cpu_sec() -> float:
-    """CPU seconds of this process + all live descendants (JVM +
-    python workers) — hypervisor-throttle-proof (stall time under a
-    revoked CPU grant does not accrue). Same walker as
-    scripts/scaling_bench.py."""
-    ppids = {}
-    for d in os.listdir("/proc"):
-        if not d.isdigit():
-            continue
-        try:
-            with open(f"/proc/{d}/stat") as f:
-                parts = f.read().rsplit(")", 1)[1].split()
-            ppids[int(d)] = int(parts[1])
-        except OSError:
-            continue
-    total, stack, seen = 0.0, [os.getpid()], set()
-    while stack:
-        pid = stack.pop()
-        if pid in seen:
-            continue
-        seen.add(pid)
-        try:
-            with open(f"/proc/{pid}/stat") as f:
-                parts = f.read().rsplit(")", 1)[1].split()
-            total += (int(parts[11]) + int(parts[12])) / os.sysconf("SC_CLK_TCK")
-        except OSError:
-            pass
-        stack.extend([p for p, pp in ppids.items() if pp == pid])
-    return total
-
-
 def bench_encode(spark, n_rows: int, profile: str, parquet_oracle: bool = True):
     """Encode throughput + ratio on the deterministic source-code table."""
     src = source_code_df(spark, n_rows, n_repos=50).cache()
@@ -134,14 +105,12 @@ def bench_encode(spark, n_rows: int, profile: str, parquet_oracle: bool = True):
     # grants bursty CPU (CLAUDE.md: effective capacity swings ~1-8
     # cores AND clock across minutes, inflating both wall AND
     # CPU-seconds in throttled windows), so a single sample is ±50%
-    # noise; min-of-3 approximates the unthrottled cost. The clamp to
-    # >0 guards a python worker reaped between readings (its accrued
-    # CPU would leave the end reading lower than the start).
+    # noise; min-of-3 approximates the unthrottled cost.
     encode_s = float("inf")
     cpu_samples = []
     enc_bytes = 0
     for _ in range(2):
-        cpu0 = _tree_cpu_sec()
+        cpu0 = tree_cpu_seconds()
         t0 = time.time()
         enc = encode_table(src, group_cols=["repo", "lang"], profile=profile)
         agg = enc.agg(
@@ -149,34 +118,31 @@ def bench_encode(spark, n_rows: int, profile: str, parquet_oracle: bool = True):
             F.count(F.lit(1)).alias("chunk_cols"),
         ).collect()[0]
         encode_s = min(encode_s, time.time() - t0)
-        cpu_samples.append(max(0.0, _tree_cpu_sec() - cpu0))
+        cpu_samples.append(tree_cpu_seconds() - cpu0)
         enc_bytes = int(agg["enc"])
 
     # decode throughput (cache preserves partitioning -> colocated
     # decode); the cached pass also pays the cache write, so its time
     # upper-bounds a pure encode (conservative third sample)
-    cpu0 = _tree_cpu_sec()
+    cpu0 = tree_cpu_seconds()
     t0 = time.time()
     enc_cached = encode_table(src, group_cols=["repo", "lang"], profile=profile).cache()
     enc_cached.count()
     encode_s = min(encode_s, time.time() - t0)
-    cpu_samples.append(max(0.0, _tree_cpu_sec() - cpu0))
-    # min over POSITIVE samples only (0.0 marks a corrupted sample)
-    cpu_samples = [c for c in cpu_samples if c > 0]
-    encode_cpu = min(cpu_samples) if cpu_samples else 0.0
+    cpu_samples.append(tree_cpu_seconds() - cpu0)
+    encode_cpu = min(cpu_samples)
     # decode: min-of-2 samples, same bursty-host rationale as encode
     # (single wall samples are not comparable across burst windows)
     decode_s = float("inf")
     decode_cpu_samples = []
     for _ in range(2):
-        cpu0 = _tree_cpu_sec()
+        cpu0 = tree_cpu_seconds()
         t0 = time.time()
         dec = decode_table(enc_cached, src.schema, assume_colocated=True)
         n_dec = dec.count()
         decode_s = min(decode_s, time.time() - t0)
-        decode_cpu_samples.append(max(0.0, _tree_cpu_sec() - cpu0))
-    decode_cpu_samples = [c for c in decode_cpu_samples if c > 0]
-    decode_cpu = min(decode_cpu_samples) if decode_cpu_samples else 0.0
+        decode_cpu_samples.append(tree_cpu_seconds() - cpu0)
+    decode_cpu = min(decode_cpu_samples)
     # projected decode (2 of 5 columns): payload pruning happens BEFORE
     # any movement/decode — at 100 TB reads dominate writes, and most
     # reads are narrow projections, so this is a headline number
@@ -241,15 +207,14 @@ def bench_encode(spark, n_rows: int, profile: str, parquet_oracle: bool = True):
         archive_sec = time.time() - t0
         arc_cpu_samples = []
         for _ in range(2):
-            cpu0 = _tree_cpu_sec()
+            cpu0 = tree_cpu_seconds()
             t0 = time.time()
             n_arc = decode_table(arc, src.schema, assume_colocated=True).count()
             archive_decode_s = min(archive_decode_s, time.time() - t0)
-            arc_cpu_samples.append(max(0.0, _tree_cpu_sec() - cpu0))
+            arc_cpu_samples.append(tree_cpu_seconds() - cpu0)
         arc.unpersist()
         assert n_arc == n_rows
-        arc_cpu_samples = [c for c in arc_cpu_samples if c > 0]
-        archive_decode_cpu = min(arc_cpu_samples) if arc_cpu_samples else 0.0
+        archive_decode_cpu = min(arc_cpu_samples)
 
     src.unpersist()
     assert n_dec == n_rows
@@ -553,7 +518,7 @@ def _exec8_child_main():
     line on stdout."""
     n_rows = int(os.environ.get("COLCRUSH_BENCH_ROWS", "120000"))
     profile = os.environ.get("COLCRUSH_PROFILE", "balanced")
-    spark8 = get_spark("colcrush-bench-exec8", cores=8, driver_memory="48g")
+    spark8 = get_spark("colcrush-bench-exec8", cores=8)
     e8 = bench_encode(spark8, n_rows, profile, parquet_oracle=False)
     e8.update(persisted_decode_probe(spark8, n_rows))
     spark8.stop()
@@ -594,7 +559,7 @@ def _run_exec8_companion() -> dict:
     # driver contract never loses the exec8 series outright
     n_rows = int(os.environ.get("COLCRUSH_BENCH_ROWS", "120000"))
     profile = os.environ.get("COLCRUSH_PROFILE", "balanced")
-    spark8 = get_spark("colcrush-bench-exec8", cores=8, driver_memory="48g")
+    spark8 = get_spark("colcrush-bench-exec8", cores=8)
     e8 = bench_encode(spark8, n_rows, profile, parquet_oracle=False)
     spark8.stop()
     e8["pinned"] = False
@@ -606,10 +571,10 @@ def main():
         _exec8_child_main()
         return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     n_rows = int(os.environ.get("COLCRUSH_BENCH_ROWS", "120000"))
     profile = os.environ.get("COLCRUSH_PROFILE", "balanced")
-    spark = get_spark("colcrush-bench", cores=cpus, driver_memory="48g")
+    spark = get_spark("colcrush-bench", cores=cpus)
 
     # untimed warm-up: whole-stage-codegen JIT, python-worker spawn and
     # arrow IPC paths are once-per-JVM costs a steady-state cluster job

@@ -4,7 +4,6 @@
 from .dataset import (
     ensure_file_map,
     read_chunks,
-    read_chunks_colocated,
     register_view,
     compact_epochs,
     read_decoded,
@@ -25,7 +24,6 @@ __all__ = [
     "write_encoded",
     "resume_encode",
     "read_chunks",
-    "read_chunks_colocated",
     "ensure_file_map",
     "read_manifest",
     "read_schema",

@@ -222,11 +222,6 @@ def _committed_chunk_dirs(path: str) -> list[str]:
     return [fsio.join(path, CHUNKS_DIR)]
 
 
-# the four chunk-row fields decode needs; the colocated reader emits
-# exactly these so unrequested parquet columns are never read
-COLOCATED_DDL = "chunk_id string, column string, payload binary, payload_ck bigint"
-
-
 def _committed_part_files(path: str) -> list[tuple[str, str, int]]:
     """(relative, full, size) of every committed chunk part file.
     Relative paths (vs the dataset root) are what the file_map sidecar
@@ -463,55 +458,6 @@ def _chunk_file_batches(files, requested: "list[str] | None"):
                 yield pa.record_batch(arrays, schema=target)
         finally:
             pf.close(force=True)
-
-
-def read_chunks_colocated(
-    spark: SparkSession, path: str, columns: "list[str] | None" = None
-) -> DataFrame:
-    """Chunk rows for decode with per-task chunk COMPLETENESS, so
-    ``decode_table(..., assume_colocated=True)`` can skip the
-    chunk_id repartition — at 100 TB that exchange moves the entire
-    encoded payload (~10 TB for a full read at our ratios).
-
-    Why whole files are safe: every encoder task writes each chunk's
-    rows contiguously into exactly one part file (output batches pack
-    whole chunks; one file per task per write, maxRecordsPerFile
-    unset), and compact_epochs repartitions on chunk_id before its
-    rewrite — so every committed part file holds only whole chunks.
-    Each task here pyarrow-reads whole files (never splits one), which
-    preserves that completeness; the decoder still FAILS LOUDLY on an
-    incomplete chunk (decoder.py), so a dataset compacted by a
-    pre-r8 engine (whose rewrite could split a chunk across files)
-    raises instead of mis-decoding — fall back to read_chunks there.
-
-    NOTE: for an end-to-end decode prefer ``read_decoded(...,
-    colocated=True)`` — it FUSES this reader with the decode worker in
-    one mapInArrow stage, so payload bytes never cross a process
-    boundary. Using this DataFrame with decode_table chains two Python
-    stages and pays a python->JVM->python round trip of every payload
-    (measured slower than the shuffle path at bench scale).
-
-    Local and s3:// datasets only (pyarrow-openable from Python
-    workers); JVM-only schemes raise in fsio.open_input_file.
-    """
-    fdf = _colocated_file_df(spark, path)
-    if fdf is None:
-        # preserve read_chunks' behavior on an empty/missing dataset
-        return read_chunks(spark, path).select(
-            "chunk_id", "column", "payload", "payload_ck"
-        )
-    requested = list(columns) if columns is not None else None
-
-    def fn(it):
-        import pyarrow as pa
-
-        pa.set_cpu_count(1)
-        for batch in it:
-            yield from _chunk_file_batches(
-                batch.column("file").to_pylist(), requested
-            )
-
-    return fdf.mapInArrow(fn, COLOCATED_DDL)
 
 
 COMPACTED_FILE = "_compacted.json"

@@ -10,6 +10,8 @@ Conventions that make the driver's order-insensitive value-hash match:
 
 from __future__ import annotations
 
+import sys
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
@@ -42,7 +44,14 @@ _SCAN_ROW_GROUPS: dict[str, int] = {}
 def _scan_parallelism(path: str) -> int:
     """Total parquet row groups under ``path`` (file or directory).
     Footer reads are bounded at 64 files — a table with more files is
-    already at least that parallel, which is all the caller asks."""
+    already at least that parallel, which is all the caller asks.
+
+    A ``scheme://`` path (s3://, hdfs://, ...) counts as already wide
+    without touching the store: a local glob finds nothing there, and
+    reading remote footers from the driver would cost more than the
+    exchange the caller is deciding on."""
+    if "://" in path:
+        return sys.maxsize
     if path not in _SCAN_ROW_GROUPS:
         import glob
         import os

@@ -12,14 +12,34 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """Local-mode width: $SPARK_GRAFT_CPUS when set, else the CPUs this
+    process may run on (its affinity set, not the machine's count)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):  # absent on macOS
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def default_driver_memory() -> str:
+    """Driver heap that fits the host: a quarter of physical RAM, at
+    least 1 GB and at most 8 GB (the rest stays with the page cache,
+    the RAM-backed shuffle dir and the Python workers)."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(8, ram // 4 // (1 << 30)))}g"
+
+
 def get_spark(
     app: str = "colcrush",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "16g",
+    driver_memory: str | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
+    driver_memory = driver_memory or default_driver_memory()
     shuffle_partitions = shuffle_partitions or max(8, cores)
     b = (
         SparkSession.builder.master(f"local[{cores}]")

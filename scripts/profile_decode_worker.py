@@ -46,7 +46,7 @@ def materialize_pruned(n_rows: int, out_dir: str) -> tuple[int, object]:
     from colcrush.session import get_spark
 
     profile = os.environ.get("COLCRUSH_PROFILE", "balanced")
-    spark = get_spark("profile-decode-prep", cores=8, driver_memory="16g")
+    spark = get_spark("profile-decode-prep", cores=8)
     src = source_code_df(spark, n_rows, n_repos=50)
     raw = src.agg(
         F.sum(

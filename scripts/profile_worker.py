@@ -41,7 +41,7 @@ def materialize_prepared(n_rows: int, out_dir: str) -> tuple[int, object]:
     from colcrush.fixtures import source_code_df
     from colcrush.session import get_spark
 
-    spark = get_spark("profile-worker-prep", cores=8, driver_memory="16g")
+    spark = get_spark("profile-worker-prep", cores=8)
     src = source_code_df(spark, n_rows, n_repos=50)
     content = src.agg(F.sum(F.octet_length("content"))).collect()[0][0]
     prepared, fn = encode_prepare(src, group_cols=["repo", "lang"])

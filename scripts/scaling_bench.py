@@ -46,40 +46,9 @@ import pyspark.sql.functions as F
 from colcrush.session import get_spark
 from colcrush.engine import encode_table
 from colcrush.fixtures import source_code_df
+from perfbench.metrics import tree_cpu_seconds
 
-def _tree_cpu_sec():
-    # total CPU seconds of this process + every live descendant
-    # (the Spark JVM and its python workers) — hypervisor-throttle-proof
-    def children(pid, ppids):
-        return [p for p, pp in ppids.items() if pp == pid]
-    ppids = {{}}
-    for d in os.listdir("/proc"):
-        if not d.isdigit():
-            continue
-        try:
-            with open(f"/proc/{{d}}/stat") as f:
-                parts = f.read().rsplit(")", 1)[1].split()
-            ppids[int(d)] = int(parts[1])
-        except OSError:
-            continue
-    total = 0.0
-    stack = [os.getpid()]
-    seen = set()
-    while stack:
-        pid = stack.pop()
-        if pid in seen:
-            continue
-        seen.add(pid)
-        try:
-            with open(f"/proc/{{pid}}/stat") as f:
-                parts = f.read().rsplit(")", 1)[1].split()
-            total += (int(parts[11]) + int(parts[12])) / os.sysconf("SC_CLK_TCK")
-        except OSError:
-            pass
-        stack.extend(children(pid, ppids))
-    return total
-
-spark = get_spark("scaling", cores={cpus}, driver_memory="48g")
+spark = get_spark("scaling", cores={cpus})
 src = source_code_df(spark, {rows}, n_repos=50).cache()
 content_bytes = src.agg(F.sum(F.octet_length("content"))).collect()[0][0]
 # warm-up excluded from timing: spawn ALL python workers + JIT + arrow
@@ -106,12 +75,12 @@ encode_table(src, group_cols=["repo", "lang"], profile={profile!r}).agg(
 digest_expr = F.expr("bit_xor(xxhash64(chunk_id, column, seq, payload))")
 best_wall, best_cpu, total, digest = None, None, 0, None
 for _ in range(2):
-    cpu0 = _tree_cpu_sec()
+    cpu0 = tree_cpu_seconds()
     t0 = time.time()
     enc = encode_table(src, group_cols=["repo", "lang"], profile={profile!r})
     total, digest = enc.agg(F.sum("enc_bytes"), digest_expr).collect()[0]
     wall = time.time() - t0
-    cpu = _tree_cpu_sec() - cpu0
+    cpu = tree_cpu_seconds() - cpu0
     if best_wall is None or wall < best_wall:
         best_wall = wall
     if best_cpu is None or cpu < best_cpu:
@@ -284,15 +253,7 @@ via the named scripts):
    host windows the 4N run consumes the same total CPU as N, i.e. the
    job itself has no contention/synchronization overhead; readings
    below 1.0 track the host's burst windows, not the plan.
-2. **The shortfall reproduces WITHOUT Spark**: the control
-   (scripts/contention_probe.py, measured 2026-08-16 on this host)
-   runs the identical FSST kernel as independent processes (no shared
-   state, no synchronization) and
-   shows the same per-copy CPU inflation (x1.01-x1.17 by window) —
-   pure hypervisor/memory-hierarchy sharing on ONE box. On a real
-   cluster, 4N executors bring 4x nodes and 4x memory channels; this
-   artifact does not transfer.
-3. **Per-effective-core efficiency median = {_median(core_effs)}**
+2. **Per-effective-core efficiency median = {_median(core_effs)}**
    (this run): local[N] is not an N-core executor (JVM service threads
    consume extra host cores, a larger fraction at small N — measured
    true core ratio ~3.3x, not 4x); this normalizes the speedup by the
@@ -339,21 +300,6 @@ reported for continuity with earlier rounds, NOT the gate statistic).
 — the throttle-proof measurement: 1.0 means the 4N run consumed no
 extra CPU for the same work, which is what determines scaling on a
 real cluster where each executor owns its cores.
-
-## Attribution of the 4N CPU inflation (scripts/contention_probe.py)
-
-In clean host windows the encode job shows ZERO parallel overhead:
-the best interleaved pair measured cpu_4N == cpu_N to within 0.3%
-(work efficiency 0.998) with 0.941 wall efficiency. In contended
-windows cpu_4N inflates up to ~20%. A Spark-free control pins the
-cause: running the identical FSST kernel workload as 8 concurrent
-INDEPENDENT processes (no Spark, no shared state, no synchronization)
-inflates per-copy CPU by x1.01-x1.17 depending on the window — pure
-host co-residency cost (hypervisor scheduling + one box's shared
-memory hierarchy). On a real cluster, 4N executors add 4x nodes and
-4x memory channels, so this artifact does not transfer; the
-clean-window pair (0.941 wall, 0.998 work) is the faithful
-dedicated-hardware estimate.
 
 **Output byte identity across cluster sizes: {
     "IDENTICAL — every trial at BOTH levels produced the same "

@@ -19,14 +19,8 @@ import pytest
 
 import pyspark.sql.functions as F
 
-from colcrush.engine import (
-    compact_epochs,
-    decode_table,
-    read_chunks_colocated,
-    read_decoded,
-    write_encoded,
-)
-from colcrush.engine.dataset import CHUNKS_DIR, read_schema
+from colcrush.engine import compact_epochs, read_decoded, write_encoded
+from colcrush.engine.dataset import CHUNKS_DIR
 from colcrush.fixtures import source_code_df
 
 
@@ -266,19 +260,6 @@ def test_colocated_scan_falls_back_safely(spark, tmp_path):
     assert _rows(
         scan(spark, ds, columns=["path"], filters=filters, colocated=True)
     ) == want
-
-
-def test_read_chunks_colocated_standalone(spark, tmp_path):
-    """The unfused chunk DF keeps the decode_table contract
-    (assume_colocated=True) — the documented fallback surface."""
-    ds = str(tmp_path / "ds")
-    write_encoded(
-        source_code_df(spark, 200, n_repos=4), ds,
-        mode="overwrite", group_cols=["lang"],
-    )
-    chunks = read_chunks_colocated(spark, ds)
-    got = decode_table(chunks, read_schema(ds), assume_colocated=True)
-    assert _rows(got) == _rows(read_decoded(spark, ds))
 
 
 def test_write_encoded_file_map_optout(spark, tmp_path):

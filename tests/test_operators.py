@@ -340,6 +340,22 @@ def test_simhash_hash_modes_equivalent(spark):
     )
 
 
+def test_simhash_lane_guard_bound(spark):
+    """The packed vote lanes hold 32767 tokens per document: a document
+    of exactly that many gets a signature, one more token fails loudly
+    with the self-describing refusal instead of a generic overflow."""
+    from colcrush.operators.dedup import simhash_signatures
+
+    def doc(n_tokens):
+        text = " ".join(f"t{i % 97}" for i in range(n_tokens))
+        return spark.createDataFrame([(1, text)], "doc_id long, text string")
+
+    (row,) = simhash_signatures(doc(32767), "doc_id", "text").collect()
+    assert row["simhash"] is not None
+    with pytest.raises(Exception, match="exceeds 32767 tokens"):
+        simhash_signatures(doc(32768), "doc_id", "text").collect()
+
+
 def test_winnow_hash_modes_equivalent(spark):
     """The winnowing GUARANTEE (Schleimer et al. §2: any shared
     substring of length >= w+k-1 yields at least one shared

@@ -150,3 +150,33 @@ def test_encode_with_salt_plan_scans_input_once(spark, tmp_path):
     assert p.count("documents.parquet") == 1, p[:2000]
     data_side = p.split("BroadcastExchange")[0]
     assert data_side.count("Exchange hashpartitioning") == 1, p[:2000]
+
+
+def test_spread_treats_scheme_paths_as_wide(spark, tmp_path, monkeypatch):
+    """An s3:// table counts as already wide without any filesystem
+    access, so _spread adds no exchange; a local one-row-group table
+    still gets its repair exchange."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    import colcrush.queries as q
+
+    spark.range(100).coalesce(1).write.parquet(str(tmp_path / "t.parquet"))
+    local = spark.read.parquet(str(tmp_path / "t.parquet"))
+    monkeypatch.setattr(q, "_t", lambda spark, sf_dir, name: local)
+
+    def repartitioned(df):
+        return "RepartitionByExpression" in df._jdf.queryExecution().logical().toString()
+
+    assert repartitioned(q._spread(spark, str(tmp_path), "t"))
+
+    def no_fs(*args, **kwargs):
+        raise AssertionError("remote path touched the filesystem")
+
+    for mod, name in ((glob, "glob"), (os.path, "isfile"), (pq, "ParquetFile")):
+        monkeypatch.setattr(mod, name, no_fs)
+    path = "s3://bucket/sf1/t.parquet"
+    assert q._scan_parallelism(path) >= spark.sparkContext.defaultParallelism
+    assert not repartitioned(q._spread(spark, "s3://bucket/sf1", "t"))
