@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .dataset import read_chunks, read_manifest, read_schema
@@ -497,7 +498,10 @@ def filtered_min_max(
     if audit is not None:
         audit["n_survivors"] = stats.count()
         audit["n_seed"] = len(seed_ids)
-    seed_df = spark.createDataFrame([(c,) for c in seed_ids], ["chunk_id"])
+    # from Arrow: a LocalTableScan, not a Python RDD run through workers
+    seed_df = spark.createDataFrame(
+        pa.table({"chunk_id": pa.array(seed_ids, type=pa.string())})
+    )
     mn, mx = _extremes(seed_df)
     if mn is None:
         # seed chunks held no matching rows — decode all survivors

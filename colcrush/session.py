@@ -31,6 +31,36 @@ def default_driver_memory() -> str:
     return f"{max(1, min(8, ram // 4 // (1 << 30)))}g"
 
 
+# Spark's shuffle/spill dir when the host has a RAM-backed /dev/shm
+RAM_LOCAL_DIR = "/dev/shm/colcrush-spark-local"
+
+
+def local_dir_conf(
+    extra: dict, env_local_dirs: str | None, shm: bool
+) -> dict[str, str]:
+    """Settings for Spark's local (shuffle/spill) dir, given the
+    caller's ``extra`` settings, $SPARK_LOCAL_DIRS (which Spark prefers
+    over spark.local.dir) and whether /dev/shm exists.
+
+    The RAM-backed dir is used only when neither the caller nor the
+    environment names another one: local-mode shuffles otherwise
+    serialize through one disk and cap scaling (on a real cluster every
+    executor brings its own shuffle disks). Shuffle compression is off
+    exactly while that RAM-backed dir is the one in use — compressing
+    blocks headed to tmpfs is pure CPU, no disk or network exists for
+    the smaller bytes to help — and stays at Spark's default (on)
+    everywhere else, where shuffle bytes cross real disks and NICs. A
+    host with a small /dev/shm (e.g. a container's default 64 MB)
+    points spark.local.dir elsewhere and so gets compression back."""
+    if env_local_dirs or "spark.local.dir" in extra or not shm:
+        return {}
+    return {
+        "spark.local.dir": RAM_LOCAL_DIR,
+        "spark.shuffle.compress": "false",
+        "spark.shuffle.spill.compress": "false",
+    }
+
+
 def get_spark(
     app: str = "colcrush",
     cores: int | None = None,
@@ -41,6 +71,7 @@ def get_spark(
     cores = cores or default_cores()
     driver_memory = driver_memory or default_driver_memory()
     shuffle_partitions = shuffle_partitions or max(8, cores)
+    extra = extra or {}
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
@@ -49,6 +80,15 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.driver.memory", driver_memory)
+        # C1-only JIT: a session of seconds to minutes never finishes
+        # tiered warm-up, and the compiler threads then cost more CPU
+        # than every Spark task thread together — 8 point lookups on a
+        # 4-vCPU host: compiler threads 8.7 of 14.9 JVM CPU-s tiered
+        # (task threads 1.4), 2.5 of 8.6 C1-only, at the same walls.
+        # Spark puts defaultJavaOptions before extraJavaOptions, so a
+        # caller's extraJavaOptions still apply, and ``extra`` can
+        # replace this setting
+        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
@@ -56,31 +96,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
     )
-    # RAM-backed shuffle dirs when available: local-mode shuffles
-    # otherwise serialize through one disk and cap scaling (on a real
-    # cluster every executor brings its own shuffle disks)
-    shm = os.path.isdir("/dev/shm")
-    if shm:
-        shuffle_dir = "/dev/shm/colcrush-spark-local"
-        os.makedirs(shuffle_dir, exist_ok=True)
-        b = b.config("spark.local.dir", shuffle_dir)
-    # Shuffle compression is parameterised (COLCRUSH_SHUFFLE_COMPRESS=
-    # 1/0/auto): compressing blocks headed to a RAM-backed local dir is
-    # pure CPU — no disk or network exists for the smaller bytes to
-    # help — so "auto" (default) turns it off exactly when the
-    # RAM-backed dir above is in use. A cluster deployment configures
-    # executors via spark-submit, not this local-mode factory, and
-    # keeps Spark's default (on): there shuffle bytes cross real disks
-    # and NICs, where compression earns its CPU. On hosts with a SMALL
-    # /dev/shm (e.g. a container's default 64 MB) uncompressed shuffle
-    # files fill the tmpfs sooner — set COLCRUSH_SHUFFLE_COMPRESS=1 (or
-    # point spark.local.dir elsewhere) as the escape hatch.
-    comp_env = os.environ.get("COLCRUSH_SHUFFLE_COMPRESS", "auto")
-    comp_on = (not shm) if comp_env == "auto" else comp_env == "1"
-    b = b.config("spark.shuffle.compress", str(comp_on).lower()).config(
-        "spark.shuffle.spill.compress", str(comp_on).lower()
+    local = local_dir_conf(
+        extra, os.environ.get("SPARK_LOCAL_DIRS"), os.path.isdir("/dev/shm")
     )
-    for k, v in (extra or {}).items():
+    if local:
+        os.makedirs(RAM_LOCAL_DIR, exist_ok=True)
+    for k, v in {**local, **extra}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

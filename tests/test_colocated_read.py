@@ -62,9 +62,8 @@ def test_colocated_matches_default_full_and_projected(spark, tmp_path):
 def test_colocated_plan_has_no_payload_exchange(spark, tmp_path):
     ds = str(tmp_path / "ds")
     # explicit num_partitions: the r9 bytes-justified default would
-    # right-size this tiny input to ONE part file, collapsing the bin
-    # exchange to SinglePartition — this test pins the MULTI-file plan
-    # shape (range exchange on bin), so force a multi-file write
+    # right-size this tiny input to ONE part file — this test pins the
+    # MULTI-file plan shape, so force a multi-file write
     write_encoded(
         source_code_df(spark, 200, n_repos=4), ds,
         mode="overwrite", group_cols=["lang"], num_partitions=4,
@@ -73,16 +72,51 @@ def test_colocated_plan_has_no_payload_exchange(spark, tmp_path):
         read_decoded(spark, ds, colocated=True)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    exchanges = [l for l in plan.splitlines() if "Exchange" in l]
-    # exactly one exchange: the file-list bin repartition (path strings,
-    # not payloads); the chunk_id exchange of the default path is gone
-    assert len(exchanges) == 1, exchanges
-    assert "bin" in exchanges[0]
+    # no exchange at all: the size bins are a local table scan of one
+    # row per bin (one task each), and the chunk_id exchange of the
+    # default path is gone
+    assert "Exchange" not in plan, plan
+    assert "LocalTableScan" in plan, plan
     default_plan = (
         read_decoded(spark, ds)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange hashpartitioning(chunk_id" in default_plan
+
+
+def test_colocated_bins_run_one_task_each(spark):
+    """Every size bin is its own task, also with more part files than
+    cores and bins holding different numbers of files."""
+    from pyspark import TaskContext
+
+    from colcrush.engine.dataset import _colocated_file_df
+
+    n_bins = spark.sparkContext.defaultParallelism
+    # one large file fills a bin alone; the small ones pair up
+    files = [("/ds/chunks/big.parquet", 100)] + [
+        (f"/ds/chunks/part-{i:02d}.parquet", 10) for i in range(12)
+    ]
+    assert len(files) > n_bins
+    fdf = _colocated_file_df(spark, "/ds", files=files)
+
+    def report(it):
+        pid = TaskContext.get().partitionId()
+        for batch in it:
+            n_files = [len(fs) for fs in batch.column("files").to_pylist()]
+            yield pa.record_batch(
+                [
+                    pa.array([pid] * batch.num_rows, type=pa.int32()),
+                    batch.column("bin"),
+                    pa.array(n_files, type=pa.int32()),
+                ],
+                names=["pid", "bin", "n_files"],
+            )
+
+    rows = fdf.mapInArrow(report, "pid int, bin int, n_files int").collect()
+    assert sorted(r["bin"] for r in rows) == list(range(n_bins))
+    assert len({r["pid"] for r in rows}) == n_bins  # one bin per task
+    assert sum(r["n_files"] for r in rows) == len(files)
+    assert len({r["n_files"] for r in rows}) > 1  # uneven bins
 
 
 def test_colocated_reads_legacy_file_without_payload_ck(spark, tmp_path):
