@@ -378,13 +378,17 @@ def _colocated_file_df(
     """The committed chunk part files, greedy size-binned into
     min(n_files, defaultParallelism) bins: one row per bin
     (``bin int, files array<string>``). 1x parallelism, not an
-    oversubscribed multiple: a python-stage TASK costs ~0.2 CPU-s of
-    worker/arrow-stream setup (measured interleaved: 32 bins cost
-    +4.8 CPU-s over 8 bins for identical work at bench scale), which is
-    also why AQE's parallelismFirst coalesces the default read path to
-    ~defaultParallelism tasks — matching it keeps the colocated plan
-    at CPU parity. Greedy largest-first size-binning bounds bin skew by
-    the largest single file (a file is never split). None when the
+    oversubscribed multiple: a python-stage TASK has a fixed setup cost
+    (measured interleaved when this was tuned: 32 bins cost +4.8 CPU-s
+    over 8 bins for identical work at bench scale, ~0.2 CPU-s a task),
+    which is also why AQE's parallelismFirst coalesces the default read
+    path to ~defaultParallelism tasks — matching it keeps the colocated
+    plan at CPU parity. Most of that cost was the worker's per-task
+    zip-directory re-reads, not the Arrow stream; colcrush's worker
+    daemon skips them, and a trivial task now costs ~0.04 CPU-s (4-vCPU
+    host, CPython 3.11), so the 1x rule awaits a re-tune. Greedy
+    largest-first size-binning bounds bin skew by the largest single
+    file (a file is never split). None when the
     dataset has no part files. The file list is driver-side, same as
     Spark's own file-source listing. ``files`` overrides the listing
     with an explicit (full_path, size) subset — the file-pruned scan

@@ -68,14 +68,19 @@ _STAT_TRUNC = 64
 # mapInArrow per-task overhead, small enough for scheduler rebalancing)
 TARGET_PARTITION_BYTES = 32 << 20
 
-# low-end clamp for the same sizing: a python mapInArrow task costs
-# ~0.2 CPU-s of fixed setup (SCALE.md full-vs-noop decomposition), so
-# the old "floor at the core count" spawned pure overhead on small
-# inputs — 32 tasks of 1.5 MB measured ~2x the CPU of 6 tasks of 8 MB
-# on the 48 MB lineitem roundtrip, with byte-identical output (chunk
-# cuts are partition-count-independent by design). Parallelism is now
-# min(cores, bytes / MIN_TASK_BYTES): large inputs still get one task
-# per ~TARGET_PARTITION_BYTES, tiny ones never pay for idle workers.
+# low-end clamp for the same sizing: when it was tuned a python
+# mapInArrow task cost ~0.2 CPU-s of fixed setup (SCALE.md full-vs-noop
+# decomposition), so the old "floor at the core count" spawned pure
+# overhead on small inputs — 32 tasks of 1.5 MB measured ~2x the CPU of
+# 6 tasks of 8 MB on the 48 MB lineitem roundtrip, with byte-identical
+# output (chunk cuts are partition-count-independent by design).
+# Parallelism is now min(cores, bytes / MIN_TASK_BYTES): large inputs
+# still get one task per ~TARGET_PARTITION_BYTES, tiny ones never pay
+# for idle workers. Most of that setup was not the Arrow crossing but
+# the worker's per-task zip-directory re-reads, which
+# colcrush._worker_daemon skips: a trivial task now costs ~0.04 CPU-s
+# of process-tree CPU (was ~0.16; 4-vCPU host, CPython 3.11). The
+# clamp and the ceil rule below still carry the old tuning.
 MIN_TASK_BYTES = 8 << 20
 
 
@@ -89,10 +94,11 @@ def _salted_partitions(total_bytes: int, cores: int) -> int:
         # region can land at MIN_TASK_BYTES/2, and that parallelism
         # WINS there — floor was tried and measured worse (the 10 MB
         # decimal-roundtrip encode: 1 task 3.7 s vs 2 tasks 2.9 s
-        # median interleaved; the ~0.25 CPU-s task setup is cheaper
-        # than serializing several CPU-s of arrow crossing). The harm
-        # the clamp exists to stop is the far regime — 32 tasks of
-        # 1.5 MB — which ceil prevents just as well.
+        # median interleaved; the task setup, ~0.25 CPU-s then and
+        # ~0.04 now, is cheaper than serializing several CPU-s of
+        # arrow crossing). The harm the clamp exists to stop is the
+        # far regime — 32 tasks of 1.5 MB — which ceil prevents just
+        # as well.
         min(cores, -(-total_bytes // MIN_TASK_BYTES)),
         -(-total_bytes // TARGET_PARTITION_BYTES),
     )

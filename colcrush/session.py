@@ -89,6 +89,10 @@ def get_spark(
         # caller's extraJavaOptions still apply, and ``extra`` can
         # replace this setting
         .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
+        # Python workers fork from a daemon whose zip importers skip the
+        # per-task re-read of pyspark.zip and the spark-core jar (~0.2 s
+        # per task before CPython 3.13; see colcrush/_worker_daemon.py)
+        .config("spark.python.daemon.module", "colcrush._worker_daemon")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
