@@ -309,17 +309,16 @@ def persisted_decode_probe(spark, n_rows: int) -> dict:
                 ).count()
                 w = min(w, time.time() - t0)
             best[tag] = w
-        # shuffle-free colocated read (r8): same persisted dataset, the
-        # fused whole-file-reader + decode-worker plan — continuity
-        # series for the path a 100 TB full read would take (the
-        # chunk_id exchange of the default plan moves every encoded
-        # payload byte; this one moves none)
+        # shuffle-free read (r8): same persisted dataset through
+        # read_decoded, whose fused whole-file-reader + decode-worker
+        # plan moves no payload byte through an exchange (the
+        # decode_table(read_chunks(...)) plan above moves every one)
         from colcrush.engine import read_decoded
 
         w = float("inf")
         for _ in range(3):
             t0 = time.time()
-            read_decoded(spark, path, colocated=True).count()
+            read_decoded(spark, path).count()
             w = min(w, time.time() - t0)
         best["colocated"] = w
     finally:

@@ -116,7 +116,7 @@ def write_encoded(
         encode_kwargs["salt_plan"] = plan
         if encode_kwargs.get("num_partitions") is None:
             # size the encode from the total this pass already has:
-            # encode_prepare would otherwise re-aggregate the same sum
+            # encode_table would otherwise re-aggregate the same sum
             # over the plan (two more Spark jobs per write)
             encode_kwargs["num_partitions"] = _salted_partitions(
                 total, df.sparkSession.sparkContext.defaultParallelism
@@ -197,37 +197,27 @@ _MANIFEST_DDL = ", ".join(
 )
 
 
-def read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    direct = fsio.join(path, MANIFEST_DIR)
-    reader = spark.read.schema(_MANIFEST_DDL)
+def _committed_dirs(path: str, sub: str) -> list[str]:
+    """The ``sub`` directories (chunks/ or manifest/) a reader sees: a
+    committed base layout wins, else the committed epoch sub-datasets,
+    else the bare path's, so that Spark raises its own path error."""
     if _direct_committed(path):
-        return reader.parquet(direct)
-    epochs = _committed_epoch_dirs(path)
-    if epochs:
-        return reader.parquet(*[fsio.join(e, MANIFEST_DIR) for e in epochs])
-    return reader.parquet(direct)  # raise Spark's own path error
+        roots = [path]
+    else:
+        roots = _committed_epoch_dirs(path) or [path]
+    return [fsio.join(r, sub) for r in roots]
+
+
+def read_manifest(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.schema(_MANIFEST_DDL).parquet(
+        *_committed_dirs(path, MANIFEST_DIR)
+    )
 
 
 def read_chunks(spark: SparkSession, path: str) -> DataFrame:
-    direct = fsio.join(path, CHUNKS_DIR)
-    reader = spark.read.schema(ENCODED_DDL)
-    if _direct_committed(path):
-        return reader.parquet(direct)
-    epochs = _committed_epoch_dirs(path)
-    if epochs:
-        return reader.parquet(*[fsio.join(e, CHUNKS_DIR) for e in epochs])
-    return reader.parquet(direct)
-
-
-def _committed_chunk_dirs(path: str) -> list[str]:
-    """The chunks/ directories a reader sees (same commit-view rules as
-    read_chunks: direct layout wins, else committed epochs)."""
-    if _direct_committed(path):
-        return [fsio.join(path, CHUNKS_DIR)]
-    epochs = _committed_epoch_dirs(path)
-    if epochs:
-        return [fsio.join(e, CHUNKS_DIR) for e in epochs]
-    return [fsio.join(path, CHUNKS_DIR)]
+    return spark.read.schema(ENCODED_DDL).parquet(
+        *_committed_dirs(path, CHUNKS_DIR)
+    )
 
 
 def _committed_part_files(path: str) -> list[tuple[str, str, int]]:
@@ -236,7 +226,11 @@ def _committed_part_files(path: str) -> list[tuple[str, str, int]]:
     stores, so a dataset can be relocated without invalidating it."""
     root = path.rstrip("/")
     out = []
-    for d in _committed_chunk_dirs(path):
+    for d in _committed_dirs(path, CHUNKS_DIR):
+        if not fsio.isdir(d):
+            # nothing committed: the caller's Spark read of the bare
+            # path raises Spark's own path error
+            continue
         for name, size in fsio.list_files(d):
             if name.endswith(".parquet"):
                 full = fsio.join(d, name)
@@ -586,32 +580,42 @@ def read_decoded(
     ``decimal_formats`` rescales stored decimal columns on read
     (parquet4s rescaleOnRead, HALF_UP — see decoder._rescale_decimal).
 
-    ``colocated=True`` FUSES the whole-file chunk reader with the
-    decode worker in a single mapInArrow stage over a local table of
-    size bins (one task per bin, one Spark job): no exchange at all,
-    and payload bytes never cross a process boundary (disk -> pyarrow
-    read -> decode -> decoded rows out). Measured on a 4-vCPU host,
-    noop sink, median of interleaved repeats, fused vs default: 4000
-    F1 rows (2 part files) full read 0.47 vs 0.66 s wall, 0.96 vs
-    0.81 CPU-s; 2-column projection 0.32 vs 0.45 s, 0.64 vs 0.58 CPU-s.
-    At 40k rows (4 part files) full 0.55 vs 0.95 s, 2.0 vs 2.7 CPU-s;
-    projection 0.35 vs 0.52 s but 1.3 vs 0.7 CPU-s (the fused reader
-    reads every column's payload pages before dropping rows). The
-    trade GROWS with data: at 100 TB the eliminated exchange is ~10 TB
-    of shuffle disk+network per full read, plus no shuffle files to
-    lose on executor death. Local/s3 datasets written by this engine;
-    the decoder raises loudly if the colocation precondition does not
-    hold (e.g. a pre-r8 compaction split a chunk across files), so it
-    never mis-decodes — fall back to the default path there."""
+    The plan is :func:`fused_decode`: a whole-file pyarrow chunk reader
+    and the decode worker in one mapInArrow stage over a local table of
+    size bins (one task per bin, one Spark job). No exchange, and
+    payload bytes never cross a process boundary (disk -> pyarrow read
+    -> decode -> decoded rows out). At 100 TB the avoided chunk_id
+    exchange is ~10 TB of shuffle disk+network per full read.
+
+    Precondition: every chunk's rows sit in ONE part file. This
+    engine's writers keep it (encode emits each chunk from one
+    partition; compact_epochs repartitions on chunk_id before its
+    rewrite). A file set that breaks it never mis-decodes: the read
+    raises the decoder's "incomplete chunks" error naming the dataset
+    and the way out, ``decode_table(read_chunks(spark, path), schema)``,
+    whose chunk_id exchange puts split chunks back together.
+
+    That exchange plan is also the fallback, chosen by the path, not
+    by a flag: a JVM-only scheme (hdfs://, viewfs://), where workers
+    have no pyarrow handle, and a dataset with no part files.
+
+    Measured on a 4-vCPU host, interleaved medians, reads digested as
+    the ingest_read benchmark does, fused vs exchange plan: 4,000 F1
+    rows full read 0.70 vs 0.94 s wall, 1.06 vs 1.19 CPU-s; 2-column
+    projection 0.42 vs 0.50 s, 0.59 vs 0.66 CPU-s; 40,000 rows full
+    0.67 vs 0.94 s, 1.86 vs 2.56 CPU-s; projection 0.35 vs 0.52 s,
+    0.87 vs 0.84 CPU-s. A traced 2,000-row read sent 480 bytes into
+    Python workers and wrote no shuffle; the exchange plan sent 1.2 MB
+    and wrote 714 KB of shuffle.
+
+    ``colocated`` is ignored. It once selected the fused plan and stays
+    only because perfbench/layers.py still passes it."""
     schema = read_schema(path)
-    if colocated:
-        fused = fused_decode(
-            spark, path, schema, columns=columns,
-            decimal_formats=decimal_formats,
-        )
-        if fused is not None:
-            return fused
-        # empty dataset: fall through to the standard (empty) plan
+    fused = fused_decode(
+        spark, path, schema, columns=columns, decimal_formats=decimal_formats,
+    )
+    if fused is not None:
+        return fused
     return decode_table(
         read_chunks(spark, path), schema, columns=columns,
         decimal_formats=decimal_formats,
@@ -629,16 +633,16 @@ def fused_decode(
     """The fused (reader + decoder, one mapInArrow stage) plan over a
     persisted dataset, or None when there are no part files. ``files``
     restricts the read to an explicit (full_path, size) subset — the
-    file-pruned scan path. See read_decoded for the measured trade.
-    None also for JVM-only schemes (hdfs://, viewfs://) — the worker
-    has no pyarrow handle there; callers fall back to the default
-    Spark-scan plan."""
+    file-pruned scan path. See read_decoded for the precondition and
+    the measured trade. None also for JVM-only schemes (hdfs://,
+    viewfs://) — the worker has no pyarrow handle there; callers fall
+    back to the Spark-scan + chunk_id exchange plan."""
     if not fsio.pyarrow_openable(path):
         return None
     fdf = _colocated_file_df(spark, path, files=files)
     if fdf is None:
         return None
-    from .decoder import decode_worker
+    from .decoder import IncompleteChunksError, decode_worker
 
     ordered, out_schema, decode_fn = decode_worker(
         schema, columns=columns, decimal_formats=decimal_formats,
@@ -654,7 +658,16 @@ def fused_decode(
                 for files in batch.column("files").to_pylist():
                     yield from _chunk_file_batches(files, ordered)
 
-        yield from decode_fn(chunk_rows())
+        try:
+            yield from decode_fn(chunk_rows())
+        except IncompleteChunksError as e:
+            raise IncompleteChunksError(
+                f"{e} in dataset {path}: a chunk's rows are split across "
+                "part files, which the fused read requires to hold whole "
+                "chunks; read it with decode_table(read_chunks(spark, "
+                "path), schema), whose chunk_id exchange puts split "
+                "chunks back together"
+            ) from e
 
     return fdf.mapInArrow(fused, out_schema)
 

@@ -82,6 +82,11 @@ def _rescale_decimal(arr: pa.Array, precision: int, scale: int) -> pa.Array:
     return rescale_decimal128(arr, precision, scale)
 
 
+class IncompleteChunksError(RuntimeError):
+    """A decode worker's input ended with chunks missing column rows:
+    the chunk rows it was fed were not co-located per chunk."""
+
+
 def decode_table(
     chunks: DataFrame,
     schema: T.StructType,
@@ -90,14 +95,18 @@ def decode_table(
     decimal_formats: dict[str, tuple[int, int]] | None = None,
     verify_checksums: bool = True,
 ) -> DataFrame:
-    """Decode a chunk DataFrame (ENCODED_DDL) back to rows.
-
-    See :func:`decode_prepare` for the plan/worker split — this is
-    ``pruned.mapInArrow(fn, out_schema)`` over its result.
+    """Decode a chunk DataFrame (ENCODED_DDL) back to rows: the
+    projected chunk rows, repartitioned on chunk_id, through
+    :func:`decode_worker` in one mapInArrow stage.
 
     ``schema`` is the original table's Spark schema; ``columns``
     restricts the projection (pruning happens BEFORE the shuffle — only
     requested payloads move).
+
+    Over a persisted dataset, ``decode_table(read_chunks(spark, path),
+    schema)`` is the exchange plan: the reference the fused default
+    read (dataset.read_decoded) is tested against, its fallback for
+    JVM-only schemes, and the reader for part files that split a chunk.
 
     ``assume_colocated=True`` skips the repartition on chunk_id — valid
     when ``chunks`` comes straight from ``encode_table`` (each chunk's
@@ -115,33 +124,6 @@ def decode_table(
     rows. Datasets written before the column existed (or mixed
     appends whose rows read as NULL) skip the check per row.
     """
-    pruned, fn, out_schema = decode_prepare(
-        chunks,
-        schema,
-        columns=columns,
-        assume_colocated=assume_colocated,
-        decimal_formats=decimal_formats,
-        verify_checksums=verify_checksums,
-    )
-    return pruned.mapInArrow(fn, out_schema)
-
-
-def decode_prepare(
-    chunks: DataFrame,
-    schema: T.StructType,
-    columns: list[str] | None = None,
-    assume_colocated: bool = False,
-    decimal_formats: dict[str, tuple[int, int]] | None = None,
-    verify_checksums: bool = True,
-):
-    """The plan half of :func:`decode_table`: returns ``(pruned_df,
-    worker_fn, out_schema)`` where ``pruned_df`` is the projected (and,
-    unless colocated, chunk_id-repartitioned) chunk-row stream and
-    ``worker_fn`` the mapInArrow function — the seam the Spark-free
-    decode profiler (scripts/profile_decode_worker.py) drives so
-    measured decode-worker costs are the REAL worker over the REAL
-    pruned stream, mirroring encoder.encode_prepare.
-    """
     with_ck = verify_checksums and "payload_ck" in chunks.columns
     columns, out_schema, fn = decode_worker(
         schema,
@@ -158,7 +140,7 @@ def decode_prepare(
         # coalescing), which scales with the cluster — a fixed
         # defaultParallelism would underparallelize a 100 TB decode
         pruned = pruned.repartition("chunk_id")
-    return pruned, fn, out_schema
+    return pruned.mapInArrow(fn, out_schema)
 
 
 def decode_worker(
@@ -167,13 +149,14 @@ def decode_worker(
     decimal_formats: dict[str, tuple[int, int]] | None = None,
     with_ck: bool = True,
 ):
-    """The worker half of the decode seam, DataFrame-free: returns
-    ``(ordered_columns, out_schema, fn)`` where ``fn`` maps an iterator
-    of chunk-row batches (chunk_id, column, payload[, payload_ck]) to
-    decoded row batches. decode_prepare wires it behind a chunk
-    DataFrame; the fused colocated read path (dataset.read_decoded
-    with colocated=True) composes it directly with the in-worker file
-    reader so payload bytes never cross a process boundary."""
+    """The decode worker, DataFrame-free: returns ``(ordered_columns,
+    out_schema, fn)`` where ``fn`` maps an iterator of chunk-row
+    batches (chunk_id, column, payload[, payload_ck]) to decoded row
+    batches, and raises IncompleteChunksError if a chunk's column rows
+    never all arrive. decode_table wires it behind a chunk DataFrame;
+    the fused reader (dataset.fused_decode, the default read_decoded
+    plan) composes it directly with the in-worker file reader so
+    payload bytes never cross a process boundary."""
     requested = set(columns or [f.name for f in schema.fields])
     missing = requested - {f.name for f in schema.fields}
     if missing:
@@ -232,7 +215,7 @@ def decode_worker(
                     del pending[cid]
                     yield pa.record_batch(arrays, names=columns)
         if pending:
-            raise RuntimeError(
+            raise IncompleteChunksError(
                 f"incomplete chunks after decode: {list(pending)[:5]}"
             )
 

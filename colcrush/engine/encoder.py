@@ -608,52 +608,9 @@ def encode_table(
     bloom: "bool | Iterable[str]" = True,
     salt_plan: "DataFrame | None" = None,
 ) -> DataFrame:
-    """Encode ``df`` into the chunk table (ENCODED_DDL schema).
-
-    See :func:`encode_prepare` for the full contract — this is
-    ``prepared.mapInArrow(fn, ENCODED_DDL)`` over its result.
-    """
-    prepared, fn = encode_prepare(
-        df,
-        group_cols=group_cols,
-        sort_cols=sort_cols,
-        range_cols=range_cols,
-        target_chunk_bytes=target_chunk_bytes,
-        target_chunk_rows=target_chunk_rows,
-        target_group_bytes=target_group_bytes,
-        profile=profile,
-        num_partitions=num_partitions,
-        salted=salted,
-        namespace=namespace,
-        unstable_order_ok=unstable_order_ok,
-        bloom=bloom,
-        salt_plan=salt_plan,
-    )
-    return prepared.mapInArrow(fn, ENCODED_DDL)
-
-
-def encode_prepare(
-    df: DataFrame,
-    group_cols: Iterable[str] | None = None,
-    sort_cols: Iterable[str] | None = None,
-    range_cols: Iterable[str] | None = None,
-    target_chunk_bytes: int = 8 << 20,
-    target_chunk_rows: int = 1 << 16,
-    target_group_bytes: int = 16 << 20,
-    profile: str = "balanced",
-    num_partitions: int | None = None,
-    salted: bool = True,
-    namespace: str = "",
-    unstable_order_ok: bool = False,
-    bloom: "bool | Iterable[str]" = True,
-    salt_plan: "DataFrame | None" = None,
-):
-    """The plan half of :func:`encode_table`: returns ``(prepared_df,
-    worker_fn)`` where ``prepared_df`` is the salted/partitioned/sorted
-    row stream and ``worker_fn`` the mapInArrow function — the seam the
-    Spark-free worker profiler (scripts/profile_worker.py) drives so
-    measured worker costs are the REAL worker over the REAL prepared
-    stream, not a reimplementation that could drift.
+    """Encode ``df`` into the chunk table (ENCODED_DDL schema): the
+    salted/partitioned/sorted row stream through the encode worker in
+    one mapInArrow stage.
 
     One shuffle: repartition on (group_cols, salt). Groups bigger than
     ``target_group_bytes`` are split across ``n_salts`` deterministic
@@ -816,4 +773,4 @@ def encode_prepare(
         group_cols, target_chunk_bytes, target_chunk_rows, profile, salt_col,
         gk_col, namespace, bloom_cols,
     )
-    return df, fn
+    return df.mapInArrow(fn, ENCODED_DDL)

@@ -1,12 +1,15 @@
 """Shuffle-free colocated read path (engine/dataset.py r8).
 
-read_decoded(colocated=True) fuses a whole-file pyarrow chunk reader
-with the decode worker in ONE mapInArrow stage: the chunk_id exchange
-(which moves every encoded payload byte — ~10 TB per full read at
-100 TB) disappears, and payload bytes never cross a process boundary.
-These tests pin value equality with the default path, the shuffle-free
-plan, legacy-file NULL-checksum tolerance, corruption detection, and
-that compaction preserves the whole-chunks-per-file precondition.
+read_decoded's plan fuses a whole-file pyarrow chunk reader with the
+decode worker in ONE mapInArrow stage: the chunk_id exchange (which
+moves every encoded payload byte — ~10 TB per full read at 100 TB) is
+gone, and payload bytes never cross a process boundary. These tests
+pin value equality with the exchange plan
+``decode_table(read_chunks(spark, ds), read_schema(ds))`` (the
+reference), the shuffle-free plan, legacy-file NULL-checksum
+tolerance, corruption detection, the self-describing failure when a
+chunk is split across part files, and that compaction preserves the
+whole-chunks-per-file precondition.
 """
 
 from __future__ import annotations
@@ -19,7 +22,14 @@ import pytest
 
 import pyspark.sql.functions as F
 
-from colcrush.engine import compact_epochs, read_decoded, write_encoded
+from colcrush.engine import (
+    compact_epochs,
+    decode_table,
+    read_chunks,
+    read_decoded,
+    read_schema,
+    write_encoded,
+)
 from colcrush.engine.dataset import CHUNKS_DIR
 from colcrush.fixtures import source_code_df
 
@@ -28,9 +38,18 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _reference(spark, ds, columns=None):
+    """The exchange plan: Spark scan + chunk_id repartition + decode."""
+    return decode_table(read_chunks(spark, ds), read_schema(ds), columns=columns)
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def _drop_stale_crc_siblings(chunks_dir):
     """Rewriting a part file with pyarrow invalidates the Hadoop local
-    FS .crc sidecar Spark wrote; drop them so the DEFAULT read path
+    FS .crc sidecar Spark wrote; drop them so the exchange plan
     (used as the comparison oracle) doesn't fail on its own checksum."""
     for n in os.listdir(chunks_dir):
         if n.endswith(".crc"):
@@ -51,12 +70,10 @@ def test_colocated_matches_default_full_and_projected(spark, tmp_path):
         ),
         ds, mode="append", group_cols=["repo", "lang"],
     )
-    assert _rows(read_decoded(spark, ds, colocated=True)) == _rows(
-        read_decoded(spark, ds)
+    assert _rows(read_decoded(spark, ds)) == _rows(_reference(spark, ds))
+    assert _rows(read_decoded(spark, ds, columns=["path", "lang"])) == _rows(
+        _reference(spark, ds, columns=["path", "lang"])
     )
-    assert _rows(
-        read_decoded(spark, ds, columns=["path", "lang"], colocated=True)
-    ) == _rows(read_decoded(spark, ds, columns=["path", "lang"]))
 
 
 def test_colocated_plan_has_no_payload_exchange(spark, tmp_path):
@@ -68,20 +85,16 @@ def test_colocated_plan_has_no_payload_exchange(spark, tmp_path):
         source_code_df(spark, 200, n_repos=4), ds,
         mode="overwrite", group_cols=["lang"], num_partitions=4,
     )
-    plan = (
-        read_decoded(spark, ds, colocated=True)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # no exchange at all: the size bins are a local table scan of one
-    # row per bin (one task each), and the chunk_id exchange of the
-    # default path is gone
-    assert "Exchange" not in plan, plan
-    assert "LocalTableScan" in plan, plan
-    default_plan = (
-        read_decoded(spark, ds)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange hashpartitioning(chunk_id" in default_plan
+    # no exchange at all, full or projected: the size bins are a local
+    # table scan of one row per bin (one task each)
+    for columns in (None, ["path", "lang"]):
+        plan = _plan(read_decoded(spark, ds, columns=columns))
+        assert "Exchange" not in plan, plan
+        assert "LocalTableScan" in plan, plan
+        # the reference plan still reassembles chunks by exchange
+        assert "Exchange hashpartitioning(chunk_id" in _plan(
+            _reference(spark, ds, columns=columns)
+        )
 
 
 def test_colocated_bins_run_one_task_each(spark):
@@ -137,8 +150,7 @@ def test_colocated_reads_legacy_file_without_payload_ck(spark, tmp_path):
         if "payload_ck" in tbl.column_names:
             pq.write_table(tbl.drop_columns(["payload_ck"]), f)
     _drop_stale_crc_siblings(chunks_dir)
-    got = read_decoded(spark, ds, colocated=True)
-    assert _rows(got) == _rows(read_decoded(spark, ds))
+    assert _rows(read_decoded(spark, ds)) == _rows(_reference(spark, ds))
 
 
 def test_colocated_detects_payload_corruption(spark, tmp_path):
@@ -168,7 +180,44 @@ def test_colocated_detects_payload_corruption(spark, tmp_path):
     )
     _drop_stale_crc_siblings(chunks_dir)
     with pytest.raises(Exception, match="integrity"):
-        read_decoded(spark, ds, colocated=True).count()
+        read_decoded(spark, ds).count()
+
+
+def test_split_chunk_raises_with_the_way_out(spark, tmp_path):
+    """A chunk whose rows are split across two part files breaks the
+    fused read's precondition: read_decoded must raise the decoder's
+    "incomplete chunks" error naming the dataset and the exchange plan,
+    and that plan must still return the source rows."""
+    ds = str(tmp_path / "ds")
+    src = source_code_df(spark, 150, n_repos=3)
+    write_encoded(src, ds, mode="overwrite", group_cols=["lang"])
+    chunks_dir = os.path.join(ds, CHUNKS_DIR)
+    parts = sorted(n for n in os.listdir(chunks_dir) if n.endswith(".parquet"))
+    f = os.path.join(chunks_dir, parts[0])
+    tbl = pq.read_table(f).sort_by([("chunk_id", "ascending")])
+    # the first chunk has one row per column: cut between its first two
+    pq.write_table(tbl.slice(0, 1), f)
+    pq.write_table(tbl.slice(1), os.path.join(chunks_dir, "part-split.parquet"))
+    _drop_stale_crc_siblings(chunks_dir)
+    with pytest.raises(Exception, match="incomplete chunks") as err:
+        read_decoded(spark, ds).collect()
+    assert ds in str(err.value)
+    assert "decode_table(read_chunks(spark, path), schema)" in str(err.value)
+    assert _rows(_reference(spark, ds)) == _rows(src)
+
+
+def test_dataset_without_chunks_raises_spark_path_error(spark, tmp_path):
+    """No part files (a write that crashed before its chunk job): the
+    read falls back to the exchange plan, whose Spark scan raises its
+    own path error."""
+    from pyspark.errors import AnalysisException
+
+    from colcrush.engine.dataset import _write_schema
+
+    ds = str(tmp_path / "ds")
+    _write_schema(ds, source_code_df(spark, 10, n_repos=1).schema)
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_decoded(spark, ds).count()
 
 
 def test_colocated_across_epochs_and_compaction(spark, tmp_path):
@@ -186,10 +235,12 @@ def test_colocated_across_epochs_and_compaction(spark, tmp_path):
         df.where(F.col("lang") >= "m"), os.path.join(ds, "epoch=00000001"),
         mode="overwrite", group_cols=["lang"], namespace="epoch-1",
     )
-    before = _rows(read_decoded(spark, ds, colocated=True))
+    before = _rows(read_decoded(spark, ds))
+    assert before == _rows(_reference(spark, ds))
     assert len(before) == 300
     assert compact_epochs(spark, ds) == 2
-    assert _rows(read_decoded(spark, ds, colocated=True)) == before
+    assert _rows(read_decoded(spark, ds)) == before
+    assert _rows(_reference(spark, ds)) == before
     # compaction rebuilt the chunk->file sidecar against the base
     # layout, so the file-pruned scan works on the compacted dataset
     from colcrush.engine import scan

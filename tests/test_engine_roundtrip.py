@@ -69,25 +69,6 @@ def test_archive_profile_engine_roundtrip(spark, src):
         a.unpersist()
 
 
-def test_decode_prepare_seam_spark_free_replay(spark, src):
-    """decode_prepare's worker fn must be drivable OUTSIDE Spark over
-    the pruned stream's batches (the scripts/profile_decode_worker.py
-    contract) and reproduce the table exactly."""
-    import pyarrow as pa
-
-    from colcrush.engine.decoder import decode_prepare
-
-    enc = encode_table(src, group_cols=["repo", "lang"])
-    pruned, fn, out_schema = decode_prepare(enc, src.schema)
-    # one partition -> a single co-located batch stream, like one file
-    batches = pruned.coalesce(1).toArrow().to_batches(max_chunksize=64)
-    decoded = pa.Table.from_batches(list(fn(iter(batches))))
-    want = {r["content"] for r in src.collect()}
-    got = set(decoded.column("content").to_pylist())
-    assert got == want
-    assert decoded.num_rows == src.count()
-
-
 def test_roundtrip_ungrouped(spark, src):
     enc = encode_table(src.select("path", "content"))
     dec = decode_table(enc, src.select("path", "content").schema)
@@ -181,7 +162,13 @@ def test_decimal38_roundtrip_and_rescale_on_read(spark, tmp_path):
 
     import pytest
 
-    from colcrush.engine import read_decoded, read_manifest, write_encoded
+    from colcrush.engine import (
+        read_chunks,
+        read_decoded,
+        read_manifest,
+        read_schema,
+        write_encoded,
+    )
 
     D = decimal.Decimal
     df = spark.createDataFrame(
@@ -199,12 +186,16 @@ def test_decimal38_roundtrip_and_rescale_on_read(spark, tmp_path):
     assert back.exceptAll(df).count() == 0 and df.exceptAll(back).count() == 0
 
     # rescale to (12,2): exact for the money rows, HALF_UP on 1.995
+    fmt = {"amount": (12, 2)}
     got = {
         r["id"]: r["amount"]
-        for r in read_decoded(
-            spark, path, decimal_formats={"amount": (12, 2)}
-        ).collect()
+        for r in read_decoded(spark, path, decimal_formats=fmt).collect()
     }
+    # the fused read and the exchange plan rescale identically
+    ref = decode_table(
+        read_chunks(spark, path), read_schema(path), decimal_formats=fmt
+    )
+    assert got == {r["id"]: r["amount"] for r in ref.collect()}
     assert got[0] == D("0.00") and got[7] == D("0.49")
     assert got[2000] == D("2.00")   # HALF_UP, not banker's
     assert got[2001] == D("-2.00")  # HALF_UP away from zero

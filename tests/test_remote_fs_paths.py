@@ -30,6 +30,9 @@ from colcrush.engine.scan import column_min_max, count_rows, scan
 from colcrush.fixtures import source_code_df
 
 
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
 def test_engine_lifecycle_over_scheme_paths(spark, tmp_path):
     uri = f"file://{tmp_path}/ds"
     df = source_code_df(spark, 300, n_repos=4)
@@ -41,6 +44,8 @@ def test_engine_lifecycle_over_scheme_paths(spark, tmp_path):
     back = read_decoded(spark, uri)
     assert back.count() == 300
     assert back.exceptAll(df).count() == 0 and df.exceptAll(back).count() == 0
+    # file:// is pyarrow-openable: the fused read, no chunk_id exchange
+    assert "Exchange" not in _plan(back)
 
     # stats + filtered scan over the scheme path
     assert count_rows(spark, uri) == 300
@@ -120,6 +125,8 @@ def test_engine_lifecycle_over_viewfs(spark, tmp_path):
     back = read_decoded(spark, uri)
     assert back.count() == 300
     assert back.exceptAll(df).count() == 0 and df.exceptAll(back).count() == 0
+    # viewfs:// is JVM-only: read_decoded fell back to the exchange plan
+    assert "Exchange hashpartitioning(chunk_id" in _plan(back)
 
     assert count_rows(spark, uri) == 300
     mn, mx = column_min_max(spark, uri, "lang")
