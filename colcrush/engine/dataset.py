@@ -34,7 +34,7 @@ from .decoder import decode_table
 from .encoder import (
     ENCODED_DDL,
     MANIFEST_COLS,
-    _salted_partitions,
+    TARGET_GROUP_BYTES,
     encode_table,
     group_key_expr,
     payload_ck,
@@ -80,6 +80,11 @@ def write_encoded(
     root-level scans need a root map, and compaction deletes epoch
     dirs and rebuilds the map anyway — so building one per micro-batch
     was pure per-epoch latency.
+
+    Grouped writes without a ``salt_plan`` plan the salts here
+    (plan_salts, one histogram pass) and record the plan as the
+    salt_plan/ sidecar before the chunks; encode_table sizes the encode
+    from the plan it is handed.
     """
     if mode not in ("error", "overwrite", "append"):
         # an unrecognized mode must fail loudly: it would otherwise
@@ -96,37 +101,20 @@ def write_encoded(
                 f"append schema mismatch: dataset has {existing.simpleString()}, "
                 f"got {df.schema.simpleString()}"
             )
-    # salted-group writes compute the salt plan HERE (one histogram
-    # pass) and persist it as a sidecar: resume/append re-encodes then
-    # reuse the recorded plan instead of paying a second full input
+    # salts are planned HERE so the plan can be recorded: resume/append
+    # re-encodes then reuse it instead of paying a second full input
     # scan, and the recorded salts make re-encode chunk identity a
     # stored fact rather than a recomputation
     group_cols = list(encode_kwargs.get("group_cols") or [])
     plan = encode_kwargs.get("salt_plan")
-    own_plan = (
-        plan is None and bool(group_cols) and encode_kwargs.get("salted", True)
-    )
-    if own_plan:
-        plan, total = plan_salts(
+    if plan is None and group_cols:
+        plan = encode_kwargs["salt_plan"] = plan_salts(
             df,
             group_cols,
-            encode_kwargs.get("target_group_bytes", 16 << 20),
-            with_total=True,
+            encode_kwargs.get("target_group_bytes", TARGET_GROUP_BYTES),
         )
-        encode_kwargs["salt_plan"] = plan
-        if encode_kwargs.get("num_partitions") is None:
-            # size the encode from the total this pass already has:
-            # encode_table would otherwise re-aggregate the same sum
-            # over the plan (two more Spark jobs per write)
-            encode_kwargs["num_partitions"] = _salted_partitions(
-                total, df.sparkSession.sparkContext.defaultParallelism
-            )
-    encoded = None
+    encoded = encode_table(df, **encode_kwargs).persist()
     try:
-        # encode_table sits inside the try: if it raises (unknown bloom
-        # column, unsortable group cols, ...) the persisted salt-plan
-        # histogram must still be released
-        encoded = encode_table(df, **encode_kwargs).persist()
         _write_schema(path, df.schema)
         write_mode = "overwrite" if mode == "overwrite" else "append"
         if plan is not None:
@@ -155,10 +143,7 @@ def write_encoded(
         if file_map:
             ensure_file_map(df.sparkSession, path)
     finally:
-        if encoded is not None:
-            encoded.unpersist()
-        if own_plan:
-            plan.unpersist()
+        encoded.unpersist()
 
 
 def _committed_epoch_dirs(path: str) -> list[str]:
@@ -898,38 +883,34 @@ def resume_encode(
         # committed chunks any self-consistent plan yields correct,
         # internally consistent chunks.
         plan_path = fsio.join(path, SALT_PLAN_DIR)
-        own_restricted_plan = False
         if (
             "salt_plan" not in encode_kwargs
-            and encode_kwargs.get("salted", True)
             and not encode_kwargs.get("range_cols")
             and fsio.exists(plan_path)
         ):
             recorded = spark.read.parquet(plan_path)
             if {*group_cols, "_grp_bytes", "_n_salts"} <= set(recorded.columns):
-                plan = (
+                restricted = (
                     recorded.join(pend_groups, on=group_cols, how="left_semi")
                     .groupBy(*group_cols)
                     .agg(
                         F.max("_grp_bytes").alias("_grp_bytes"),
                         F.max("_n_salts").alias("_n_salts"),
                     )
-                    .persist()
                 )
-                # every pending group must be covered — a partial
-                # sidecar (legacy or clipped) falls back to re-planning
-                if plan.count() == n_missing:
-                    encode_kwargs["salt_plan"] = plan
-                    own_restricted_plan = True
-                else:
-                    plan.unpersist()
+                # collected once into a driver-side table, like a fresh
+                # plan_salts plan. Every pending group must be covered —
+                # a partial sidecar (legacy or clipped) falls back to
+                # re-planning
+                tbl = restricted.toArrow()
+                if tbl.num_rows == n_missing:
+                    encode_kwargs["salt_plan"] = spark.createDataFrame(
+                        tbl, schema=restricted.schema
+                    )
         write_encoded(
             pending.drop("_gk"), path, mode="append", group_cols=group_cols,
             **encode_kwargs,
         )
-        if own_restricted_plan:
-            # only the plan WE built here — never a caller-provided one
-            encode_kwargs["salt_plan"].unpersist()
         return n_missing
     finally:
         pend_groups.unpersist()

@@ -63,6 +63,10 @@ def payload_ck(blob: bytes) -> int:
 
 _STAT_TRUNC = 64
 
+# default skew threshold: a group above this many input bytes is split
+# across ceil(bytes / TARGET_GROUP_BYTES) salts (plan_salts)
+TARGET_GROUP_BYTES = 16 << 20
+
 # bytes-based partition sizing target for the salted-group encode path
 # (~4 chunks of the default 8 MB per task: big enough to amortize
 # mapInArrow per-task overhead, small enough for scheduler rebalancing)
@@ -552,20 +556,22 @@ def plan_salts(
     target_group_bytes: int,
     with_total: bool = False,
 ) -> "DataFrame | tuple[DataFrame, int]":
-    """First-pass size histogram -> salts-per-group (skew plan).
+    """Exact size histogram -> salts-per-group (the skew plan).
 
-    Returns a small DataFrame (group_cols..., n_salts int) intended for
-    a broadcast join. The mega-repo from the Zipf fixture lands many
-    salts; tiny groups get 1.
+    Returns a driver-side table (group_cols..., _grp_bytes, _n_salts)
+    for encode_table's broadcast join. The mega-repo from the Zipf
+    fixture lands many salts; tiny groups get 1.
 
-    ``with_total=True`` additionally returns the table's total byte
-    estimate (for bytes-based partition sizing). The histogram is then
-    persist()ed — materialized by the total aggregate — so it and the
-    later broadcast build share ONE input pass; the pinned copy is
-    histogram-sized (|groups| rows), not data-sized. persist (not
-    localCheckpoint) keeps the lineage, so an executor lost between
-    the sizing job and the encode action recomputes the blocks instead
-    of failing on a missing non-replicated checkpoint.
+    The histogram is collected ONCE (``toArrow``) and rebuilt as an
+    Arrow-built local DataFrame under the histogram's own schema, so
+    the join keys keep their Spark types and the join's build side is
+    a LocalTableScan: nothing is persisted, and reading the plan back
+    (its total, the sidecar write, the broadcast) never re-runs the
+    aggregation over the input. A plan has one row per group and is
+    broadcast anyway, so it already had to fit on the driver.
+
+    ``with_total=True`` additionally returns the plan's total byte
+    estimate (summed on the driver, no Spark job).
     """
     str_cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "string"]
     size_expr = None
@@ -574,10 +580,10 @@ def plan_salts(
         e = F.coalesce(e, F.lit(0))
         size_expr = e if size_expr is None else size_expr + e
     sizes = df.groupBy(*group_cols).agg(F.sum(size_expr).alias("_grp_bytes"))
-    # _grp_bytes stays in the plan: a persisted plan sidecar lets a
+    # _grp_bytes stays in the plan: a recorded plan sidecar lets a
     # later resume/append size its partitions (sum over the pending
     # groups) without re-scanning the input
-    out = sizes.select(
+    hist = sizes.select(
         *group_cols,
         "_grp_bytes",
         F.greatest(
@@ -585,11 +591,17 @@ def plan_salts(
             F.ceil(F.col("_grp_bytes") / F.lit(target_group_bytes)).cast("int"),
         ).alias("_n_salts"),
     )
+    plan = df.sparkSession.createDataFrame(hist.toArrow(), schema=hist.schema)
     if with_total:
-        out = out.persist()
-        total = out.agg(F.sum("_grp_bytes")).collect()[0][0] or 0
-        return out, int(total)
-    return out
+        return plan, _plan_bytes(plan)
+    return plan
+
+
+def _plan_bytes(plan: DataFrame) -> int:
+    """Total input bytes a salt plan covers, summed on the driver (the
+    plan is broadcast, so it fits there; a local plan answers without
+    a Spark job)."""
+    return sum(r[0] or 0 for r in plan.select("_grp_bytes").collect())
 
 
 def encode_table(
@@ -599,10 +611,9 @@ def encode_table(
     range_cols: Iterable[str] | None = None,
     target_chunk_bytes: int = 8 << 20,
     target_chunk_rows: int = 1 << 16,
-    target_group_bytes: int = 16 << 20,
+    target_group_bytes: int = TARGET_GROUP_BYTES,
     profile: str = "balanced",
     num_partitions: int | None = None,
-    salted: bool = True,
     namespace: str = "",
     unstable_order_ok: bool = False,
     bloom: "bool | Iterable[str]" = True,
@@ -630,12 +641,15 @@ def encode_table(
 
     ``salt_plan``: a precomputed plan_salts() DataFrame (group_cols +
     _grp_bytes + _n_salts). When given, the first-pass size histogram
-    over the input is SKIPPED — write_encoded persists the plan as a
+    over the input is SKIPPED — write_encoded records the plan as a
     dataset sidecar so resume/append re-encodes never pay a second full
     input scan (at 100 TB the histogram pass is itself a full read).
-    The salts — and therefore every chunk id and byte — are pure
-    functions of the plan, so passing the recorded plan reproduces the
-    original chunking exactly.
+    Without one, the grouped path plans here (plan_salts). The salts —
+    and therefore every chunk id and byte — are pure functions of the
+    plan, so passing the recorded plan reproduces the original chunking
+    exactly. This is the only place an encode is sized: without
+    ``num_partitions`` the grouped path derives it from the plan's
+    total bytes.
 
     Layouts:
     - ``group_cols`` (default path): hash partition on (group, salt);
@@ -661,8 +675,8 @@ def encode_table(
     # (the scheduler, not the plan, absorbs the width difference) and
     # scales to 100 TB as ~3M x 32 MB tasks. Chunk ids stay
     # partition-count-independent by design, so this remains a pure
-    # scheduling choice; the non-salted paths keep the width heuristic
-    # (no size histogram available without an extra pass).
+    # scheduling choice; the range and ungrouped paths keep the width
+    # heuristic (no size histogram available without an extra pass).
     cores = spark.sparkContext.defaultParallelism
 
     salt_col = "__salt"
@@ -689,38 +703,23 @@ def encode_table(
             "unstable_order_ok=True to accept order-dependent chunks."
         )
     if group_cols:
-        if salted:
-            if salt_plan is not None:
-                salts = salt_plan
-                if num_partitions is None:
-                    total_bytes = int(
-                        salts.agg(F.sum("_grp_bytes")).collect()[0][0] or 0
-                    )
-                    num_partitions = _salted_partitions(total_bytes, cores)
-            elif num_partitions is None:
-                salts, total_bytes = plan_salts(
-                    df, group_cols, target_group_bytes, with_total=True
-                )
-                num_partitions = _salted_partitions(total_bytes, cores)
-            else:
-                salts = plan_salts(df, group_cols, target_group_bytes)
-            df = df.join(
-                F.broadcast(salts.select(*group_cols, "_n_salts")),
-                on=group_cols,
-                how="left",
-            )
-            df = df.withColumn(key_col, sort_key)
-            df = df.withColumn(
-                salt_col,
-                F.pmod(
-                    F.col(key_col), F.coalesce(F.col("_n_salts"), F.lit(1))
-                ).cast("int"),
-            ).drop("_n_salts")
-        else:
-            if num_partitions is None:
-                num_partitions = 4 * cores
-            df = df.withColumn(key_col, sort_key)
-            df = df.withColumn(salt_col, F.lit(0).cast("int"))
+        if salt_plan is None:
+            salt_plan = plan_salts(df, group_cols, target_group_bytes)
+        if num_partitions is None:
+            num_partitions = _salted_partitions(_plan_bytes(salt_plan), cores)
+        df = df.join(
+            F.broadcast(salt_plan.select(*group_cols, "_n_salts")),
+            on=group_cols,
+            how="left",
+        )
+        df = df.withColumn(key_col, sort_key)
+        # a group the plan lacks (NULL keys never match the join) gets 1
+        df = df.withColumn(
+            salt_col,
+            F.pmod(
+                F.col(key_col), F.coalesce(F.col("_n_salts"), F.lit(1))
+            ).cast("int"),
+        ).drop("_n_salts")
         df = df.withColumn(gk_col, group_key_expr(group_cols))
         df = df.repartition(num_partitions, *group_cols, salt_col)
         # lead the sort with an 8-byte hash of the group key: the

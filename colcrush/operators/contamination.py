@@ -42,9 +42,9 @@ def contamination_overlap(
     threshold's sensitivity).
     """
     ref_text_col = ref_text_col or text_col
-    # _shingle_hashes, not _shingles: shingle STRINGS are never
-    # materialized (tuple-variadic xxhash64 per window — token
-    # boundaries preserved, so hash sets biject string-shingle sets)
+    # _shingle_hashes: shingle STRINGS are never materialized
+    # (tuple-variadic xxhash64 per window — token boundaries
+    # preserved, so hash sets biject string-shingle sets)
     # and the token array is scope-bound so split() evaluates once per
     # row, not once per shingle (the Catalyst transform-rebinding trap,
     # see CLAUDE.md / dedup._shingle_hashes)

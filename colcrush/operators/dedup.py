@@ -47,27 +47,6 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _shingles(text_col: str, n: int) -> F.Column:
-    """Word n-gram shingles as an array column (JVM-side, no UDF).
-    The token array is scope-bound via the 1-element-array transform so
-    Catalyst evaluates split() once per row, not once per shingle (the
-    O(words^2) rebinding trap — see _shingle_hashes / CLAUDE.md)."""
-    toks = F.split(F.col(text_col), " ")
-    if n == 1:
-        return F.array_distinct(toks)
-
-    def mk(ts: F.Column) -> F.Column:
-        # sliding window via sequence + slice
-        idx = F.sequence(F.lit(0), F.greatest(F.size(ts) - n, F.lit(0)))
-        return F.array_distinct(
-            F.transform(
-                idx, lambda i: F.array_join(F.slice(ts, i + 1, n), " ")
-            )
-        )
-
-    return F.element_at(F.transform(F.array(toks), mk), 1)
-
-
 def _shingle_hashes(text_col: str, n: int) -> F.Column:
     """Distinct word n-gram shingles as an array<long> of xxhash64
     values — the scale representation: no shingle STRING is ever
@@ -95,34 +74,6 @@ def _shingle_hashes(text_col: str, n: int) -> F.Column:
         )
 
     return F.element_at(F.transform(F.array(toks), mk), 1)
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, sig: array<int>) MinHash signatures, fully JVM-side:
-    per seed, min over murmur3(shingle, seed)."""
-    sh = _shingles(text_col, shingle_n).alias("_sh")
-    base = df.select(F.col(id_col), sh)
-    # explode shingles once, then num_hashes min-aggregates: whole-stage
-    # codegen'd, map-side partial aggregation (64 ints per doc per
-    # partition cross the shuffle), and no per-(doc,seed) array
-    # allocation — the higher-order-function formulation allocated a
-    # shingle-sized array per doc per seed and was ~10x slower
-    inv = base.select(F.col(id_col), F.explode("_sh").alias("_tok"))
-    aggs = [
-        F.min(F.hash(F.col("_tok"), F.lit(i))).alias(f"_h{i}")
-        for i in range(num_hashes)
-    ]
-    grouped = inv.groupBy(id_col).agg(*aggs)
-    return grouped.select(
-        F.col(id_col),
-        F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig"),
-    )
 
 
 def minhash_candidate_pairs(
@@ -191,6 +142,10 @@ def minhash_dedup_pairs(
         F.col(id_col),
         _shingle_hashes(text_col, shingle_n).alias("_hs"),
     ).localCheckpoint(eager=False)
+    # explode shingles once, then num_hashes min-aggregates: whole-stage
+    # codegen'd, map-side partial aggregation, and no per-(doc,seed)
+    # array allocation (a higher-order-function formulation was ~10x
+    # slower)
     inv = sets.select(F.col(id_col), F.explode("_hs").alias("_tok"))
     aggs = [
         F.min(F.hash(F.col("_tok"), F.lit(i))).alias(f"_h{i}")

@@ -85,17 +85,15 @@ import json, os, time, sys
 sys.path.insert(0, {REPO!r})
 import pyspark.sql.functions as F
 from colcrush.session import get_spark
-from colcrush.engine.dataset import read_chunks, read_schema
-from colcrush.engine.decoder import decode_table
+from colcrush.engine.dataset import read_decoded
 from perfbench.metrics import tree_cpu_seconds
 
 spark = get_spark("decode-scaling", cores={cpus})
-schema = read_schema({path!r})
 projected_only = {PROJECTED_ONLY!r}
 # warm-up: spawn all python workers + JIT + arrow paths; match the
 # measured workload (projected-only campaigns must not pay a full pass)
 warm_cols = ["path", "lang"] if projected_only else None
-decode_table(read_chunks(spark, {path!r}), schema, columns=warm_cols).count()
+read_decoded(spark, {path!r}, columns=warm_cols).count()
 best = {{}}
 workloads = (("full", None), ("projected", ["path", "lang"]))
 if projected_only:
@@ -103,9 +101,8 @@ if projected_only:
 for name, cols in workloads:
     w, c = None, None
     for _ in range(2):
-        chunks = read_chunks(spark, {path!r})
         cpu0 = tree_cpu_seconds(); t0 = time.time()
-        n = decode_table(chunks, schema, columns=cols).count()
+        n = read_decoded(spark, {path!r}, columns=cols).count()
         wall = time.time() - t0; cpu = tree_cpu_seconds() - cpu0
         w = wall if w is None or wall < w else w
         c = cpu if c is None or cpu < c else c

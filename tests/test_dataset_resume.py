@@ -68,6 +68,35 @@ def test_failed_encode_releases_salt_plan(spark, src, tmp):
     assert not leaked
 
 
+def test_encode_and_resume_persist_no_salt_plan(spark, src, tmp):
+    """The salt plan is a driver-side table, never a persisted
+    histogram: encode_table without a plan (the roundtrip queries'
+    path) and a resume that reuses the recorded sidecar both add no
+    persisted RDD to the session."""
+    from colcrush.engine import decode_table, encode_table
+    from colcrush.engine.dataset import CHUNKS_DIR, MANIFEST_DIR
+
+    sc = spark.sparkContext
+
+    def added():
+        # RDDs the ContextCleaner drops meanwhile may leave the set;
+        # none may join it
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray()) - before
+
+    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    enc = encode_table(li, group_cols=["l_returnflag"])
+    assert decode_table(enc, li.schema).count() == li.count()
+    assert not added()
+
+    write_encoded(src, tmp, group_cols=["repo", "lang"])
+    shutil.rmtree(os.path.join(tmp, CHUNKS_DIR))
+    shutil.rmtree(os.path.join(tmp, MANIFEST_DIR))
+    assert resume_encode(src, tmp, group_cols=["repo", "lang"]) > 0
+    assert read_decoded(spark, tmp).count() == src.count()
+    assert not added()
+
+
 def test_read_decoded_matches_source(spark, src, tmp):
     write_encoded(src, tmp, group_cols=["repo", "lang"])
     dec = read_decoded(spark, tmp)

@@ -60,12 +60,11 @@ def test_q1_whole_stage_codegen(spark):
 
 
 def test_encode_single_shuffle(spark):
-    """The DATA path must shuffle exactly once. Unsalted: 1 exchange
-    total. Salted: ALSO 1 data exchange — the tiny size-histogram
-    aggregation (whose output is broadcast back, never the data) runs
-    once in the bytes-based partition-sizing job and is persist()ed;
-    its cached subtree still PRINTS inside the broadcast build side
-    (InMemoryTableScan), but reads blocks, not data."""
+    """The DATA path must shuffle exactly once, and read the input
+    exactly once. plan_salts collects the tiny size histogram to the
+    driver, so its broadcast back (never the data) builds from a
+    LocalTableScan, not from a second aggregation over the input or a
+    cached copy of one."""
 
     def data_exchanges(plan: str) -> int:
         # any shuffle of the data, whatever its partitioning prints as:
@@ -78,22 +77,16 @@ def test_encode_single_shuffle(spark):
         )
 
     df = spark.read.parquet(f"{SF}/documents.parquet")
-    p0 = (
-        encode_table(df, group_cols=["lang"], salted=False)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert data_exchanges(p0) == 1, p0[:2000]
-
-    p1 = (
+    p = (
         encode_table(df, group_cols=["lang"])
         ._jdf.queryExecution().executedPlan().toString()
     )
     # probe side (everything before the broadcast build) = the data
     # path: exactly one exchange moves the data
-    data_side = p1.split("BroadcastExchange")[0]
-    assert data_exchanges(data_side) == 1, p1[:2000]
-    assert "BroadcastExchange" in p1  # salt plan joins via broadcast
-    assert "InMemoryTableScan" in p1  # histogram computed once, cached
+    data_side, build_side = p.split("BroadcastExchange", 1)
+    assert data_exchanges(data_side) == 1, p[:2000]
+    assert "LocalTableScan" in build_side, p[:2000]
+    assert p.count("documents.parquet") == 1, p[:2000]
 
 
 def test_salted_encode_splits_mega_group(spark):
@@ -117,6 +110,65 @@ def test_salted_encode_splits_mega_group(spark):
     assert biggest["n_salts"] > 1, "mega group was not salted"
     small = [r for r in per_group if r["b"] < (1 << 20)]
     assert all(r["n_salts"] == 1 for r in small), "tiny groups should not salt"
+
+
+def test_salted_encode_typed_group_keys(spark, tmp_path):
+    """The salt plan makes a round trip through the driver (collected,
+    then rebuilt as a local table); its keys must still join the input
+    when they are not strings. A key that no longer matches falls back
+    to 1 salt silently (coalesce(_n_salts, 1)), so the mega-group's
+    salt count is the check. A non-UTC session zone makes a shifted
+    timestamp key show."""
+    from colcrush.engine import read_decoded, write_encoded
+
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        # k: 0 = the mega-group (1,200 rows of ~1 KB), NULL = one
+        # NULL-key group (40 rows), 1..50 = tiny groups (~15 rows each)
+        k = (
+            F.when(F.col("id") < 1200, F.lit(0))
+            .when(F.col("id") < 1240, F.lit(None))
+            .otherwise(F.col("id") % 50 + 1)
+        ).cast("int")
+        src = spark.range(2000).select(
+            "id",
+            F.date_add(F.lit("2024-01-01").cast("date"), k).alias("d"),
+            (k * F.lit(1.25) + F.lit(0.01)).cast("decimal(12,2)").alias("dec"),
+            F.timestamp_micros(
+                F.lit(1_700_000_000_123_456) + k * F.lit(3_600_000_000)
+            ).alias("ts"),
+            F.repeat(F.sha2(F.col("id").cast("string"), 256), 16).alias("body"),
+        )
+        opts = dict(
+            group_cols=["d", "dec", "ts"],
+            target_group_bytes=64 << 10,
+            target_chunk_bytes=32 << 10,
+        )
+        per_group = (
+            encode_table(src, **opts)
+            .where(F.col("column") == "body")
+            .groupBy("group_key")
+            .agg(
+                F.countDistinct("salt").alias("n_salts"),
+                F.sum("raw_bytes").alias("b"),
+            )
+            .collect()
+        )
+        assert len(per_group) == 52  # mega + NULL + 50 tiny
+        biggest = max(per_group, key=lambda r: r["b"])
+        assert biggest["n_salts"] > 1, "typed mega-group key missed the plan"
+        small = [r for r in per_group if r["b"] < (64 << 10)]
+        assert len(small) == 51
+        assert all(r["n_salts"] == 1 for r in small), "tiny groups should not salt"
+
+        path = str(tmp_path / "typed")
+        write_encoded(src, path, **opts)
+        dec = read_decoded(spark, path)
+        assert dec.exceptAll(src).count() == 0
+        assert src.exceptAll(dec).count() == 0
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
 
 
 def test_record_filter_no_global_window(spark):
