@@ -74,12 +74,9 @@ def write_encoded(
     /root/reference/core/src/main/scala/com/github/mjakubowski84/parquet4s/IOOps.scala:37-56),
     'overwrite', or 'append'.
 
-    ``file_map=False`` skips the chunk->file sidecar build (a Spark job
-    reading every new part file's chunk_id column). Streaming epoch
-    sub-datasets pass False: per-epoch sidecars have NO reader —
-    root-level scans need a root map, and compaction deletes epoch
-    dirs and rebuilds the map anyway — so building one per micro-batch
-    was pure per-epoch latency.
+    ``file_map`` is ignored. It once turned the chunk->file sidecar
+    build on or off and stays only because perfbench/layers.py still
+    passes it; no write builds the sidecar.
 
     Grouped writes without a ``salt_plan`` plan the salts here
     (plan_salts, one histogram pass) and record the plan as the
@@ -134,14 +131,6 @@ def write_encoded(
         # write cost stays proportional to the increment at 100 TB
         manifest = encoded.select(*MANIFEST_COLS)
         manifest.write.mode(write_mode).parquet(manifest_path)
-        # chunk->file sidecar AFTER the commit (incremental: maps only
-        # the files this write added; overwrite invalidates the old map
-        # first — its rows reference replaced files). A crash before
-        # this point just leaves the marker stale and scans fall back.
-        if write_mode == "overwrite":
-            fsio.rmtree(fsio.join(path, FILE_MAP_DIR))
-        if file_map:
-            ensure_file_map(df.sparkSession, path)
     finally:
         encoded.unpersist()
 
@@ -205,11 +194,8 @@ def read_chunks(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _committed_part_files(path: str) -> list[tuple[str, str, int]]:
-    """(relative, full, size) of every committed chunk part file.
-    Relative paths (vs the dataset root) are what the file_map sidecar
-    stores, so a dataset can be relocated without invalidating it."""
-    root = path.rstrip("/")
+def _committed_part_files(path: str) -> list[tuple[str, int]]:
+    """(full path, size) of every committed chunk part file."""
     out = []
     for d in _committed_dirs(path, CHUNKS_DIR):
         if not fsio.isdir(d):
@@ -218,166 +204,101 @@ def _committed_part_files(path: str) -> list[tuple[str, str, int]]:
             continue
         for name, size in fsio.list_files(d):
             if name.endswith(".parquet"):
-                full = fsio.join(d, name)
-                out.append((full[len(root) + 1 :], full, size))
+                out.append((fsio.join(d, name), size))
     return out
 
 
-def _file_set_fingerprint(rels: "list[str]") -> dict:
-    """Order-independent fingerprint of a part-file name set: xor of
-    md5 prefixes + count. O(1) driver memory beyond the listing the
-    caller already holds."""
-    import hashlib
-
-    acc = 0
-    for r in rels:
-        acc ^= int(hashlib.md5(r.encode()).hexdigest()[:16], 16)
-    return {"n_files": len(rels), "xor_md5": acc}
-
-
-FILE_MAP_DIR = "file_map"
-_FILE_MAP_MARKER = "_complete.json"
-_FILE_MAP_DDL = "file string, chunk_id string"
-
-
 def ensure_file_map(spark: SparkSession, path: str) -> int:
-    """Bring the chunk->file sidecar up to date; returns the number of
-    newly mapped part files.
+    """(Re)write the chunk->file sidecar: one row per (part file,
+    chunk_id) under ``file_map/``, built by reading only each committed
+    part file's chunk_id column, with paths relative to the dataset
+    root. Returns the number of mapped part files.
 
-    The sidecar is one row per (part file, chunk_id) — built by reading
-    ONLY each new file's chunk_id column (a metadata-scale columnar
-    read, no payload pages). It is what lets a selective scan open
-    ONLY the files containing surviving chunks instead of scanning the
-    whole chunks table: at the 100 TB / ~3M-file shape a bloom point
-    lookup goes from touching every file's chunk rows to opening a
-    handful of files. Idempotent and incremental (anti-join against
-    the existing map — append cost is proportional to new files, the
-    same property the manifest append has); the _complete.json marker
-    stores a fingerprint of the COMMITTED file set, and readers use
-    the map only when their own listing matches it, so a missing or
-    stale sidecar degrades to the default scan, never to wrong rows.
-    Same fall-back discipline as the salt_plan sidecar (r5)."""
+    Kept only because perfbench/layers.py still times this build as
+    its ``engine.dataset.ensure_file_map`` layer. Nothing else calls
+    it, and nothing reads ``file_map/``: scans prune with the manifest
+    alone. The file-pruned scan that read the map lost to that plan on
+    point lookups (4-vCPU host, 4,000 F1 rows: 1.02 vs 0.66 s wall,
+    1.50 vs 0.95 CPU-s per lookup), so it was removed, and a map left
+    by an earlier revision is inert bytes. A no-op (0) on JVM-only
+    schemes (hdfs://, viewfs://), whose files the worker cannot open
+    with pyarrow."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     if not fsio.pyarrow_openable(path):
-        # JVM-only scheme (hdfs://, viewfs://): the map-building worker
-        # has no pyarrow handle for these, and neither would the
-        # file-pruned scan that consumes the map — no-op, scans fall
-        # back to the default plan (no marker is ever written)
         return 0
     files = _committed_part_files(path)
-    fm_dir = fsio.join(path, FILE_MAP_DIR)
-    # the delta is computed on the driver from the listing it already
-    # holds; only an existing map costs a (file-names-only) job
-    mapped: set = set()
-    if fsio.exists(fsio.join(fm_dir, "_SUCCESS")):
-        mapped = {
-            r["file"]
-            for r in spark.read.schema(_FILE_MAP_DDL).parquet(fm_dir)
-            .select("file").distinct().collect()
-        }
-    delta = [(f, s) for r, f, s in files if r not in mapped]
-    if delta:
-        root = path.rstrip("/")
+    fdf = _colocated_file_df(spark, files)
+    if fdf is None:
+        return 0
+    root = path.rstrip("/")
 
-        def fn(it):
-            pa.set_cpu_count(1)
-            for batch in it:
-                fulls = [f for fs in batch.column("files").to_pylist() for f in fs]
-                for full in fulls:
-                    # close each file as soon as its ids are read — a
-                    # task mapping many s3:// files would otherwise
-                    # hold every NativeFile's buffers until GC. NOTE
-                    # close(force=True): fsio.open_input_file returns a
-                    # plain path for local files (ParquetFile owns the
-                    # handle) but a NativeFile for s3://, and
-                    # ParquetFile.close() skips externally-opened
-                    # sources unless forced (verified on pyarrow 16).
-                    pf = pq.ParquetFile(fsio.open_input_file(full))
-                    try:
-                        ids: set = set()
-                        for rb in pf.iter_batches(
-                            columns=["chunk_id"], batch_size=8192
-                        ):
-                            ids.update(rb.column("chunk_id").to_pylist())
-                    finally:
-                        pf.close(force=True)
-                    ids = sorted(ids)
-                    yield pa.record_batch(
-                        [
-                            pa.array(
-                                [full[len(root) + 1 :]] * len(ids),
-                                type=pa.string(),
-                            ),
-                            pa.array(ids, type=pa.string()),
-                        ],
-                        names=["file", "chunk_id"],
-                    )
+    def fn(it):
+        pa.set_cpu_count(1)
+        for batch in it:
+            fulls = [f for fs in batch.column("files").to_pylist() for f in fs]
+            for full in fulls:
+                # close each file as soon as its ids are read — a
+                # task mapping many s3:// files would otherwise
+                # hold every NativeFile's buffers until GC. NOTE
+                # close(force=True): fsio.open_input_file returns a
+                # plain path for local files (ParquetFile owns the
+                # handle) but a NativeFile for s3://, and
+                # ParquetFile.close() skips externally-opened
+                # sources unless forced (verified on pyarrow 16).
+                pf = pq.ParquetFile(fsio.open_input_file(full))
+                try:
+                    ids: set = set()
+                    for rb in pf.iter_batches(
+                        columns=["chunk_id"], batch_size=8192
+                    ):
+                        ids.update(rb.column("chunk_id").to_pylist())
+                finally:
+                    pf.close(force=True)
+                ids = sorted(ids)
+                yield pa.record_batch(
+                    [
+                        pa.array(
+                            [full[len(root) + 1 :]] * len(ids),
+                            type=pa.string(),
+                        ),
+                        pa.array(ids, type=pa.string()),
+                    ],
+                    names=["file", "chunk_id"],
+                )
 
-        (
-            _colocated_file_df(spark, path, files=delta)
-            .mapInArrow(fn, _FILE_MAP_DDL)
-            .write.mode("append")
-            .parquet(fm_dir)
-        )
-    # marker written AFTER the rows: a crash in between leaves a stale
-    # fingerprint and readers fall back (never a map missing entries
-    # that the marker claims complete)
-    fsio.write_text_atomic(
-        fsio.join(fm_dir, _FILE_MAP_MARKER),
-        json.dumps(_file_set_fingerprint([r for r, _, _ in files])),
+    (
+        fdf.mapInArrow(fn, "file string, chunk_id string")
+        .write.mode("overwrite")
+        .parquet(fsio.join(path, "file_map"))
     )
-    return len(delta)
-
-
-def file_map_matches(path: str, rels: "list[str]") -> bool:
-    """True iff the sidecar's completeness marker covers exactly this
-    part-file set (readers pass the listing they already made)."""
-    marker = fsio.join(path, FILE_MAP_DIR, _FILE_MAP_MARKER)
-    if not fsio.exists(marker):
-        return False
-    try:
-        return fsio.read_json(marker) == _file_set_fingerprint(rels)
-    except (OSError, ValueError):
-        return False
-
-
-def read_file_map(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(_FILE_MAP_DDL).parquet(
-        fsio.join(path, FILE_MAP_DIR)
-    )
+    return len(files)
 
 
 def _colocated_file_df(
-    spark: SparkSession,
-    path: str,
-    files: "list[tuple[str, int]] | None" = None,
+    spark: SparkSession, files: "list[tuple[str, int]]"
 ) -> "DataFrame | None":
-    """The committed chunk part files, greedy size-binned into
-    min(n_files, defaultParallelism) bins: one row per bin
+    """The (full_path, size) part files ``files``, greedy size-binned
+    into min(n_files, defaultParallelism) bins: one row per bin
     (``bin int, files array<string>``). 1x parallelism, not an
     oversubscribed multiple: a python-stage TASK has a fixed setup cost
     (measured interleaved when this was tuned: 32 bins cost +4.8 CPU-s
     over 8 bins for identical work at bench scale, ~0.2 CPU-s a task),
-    which is also why AQE's parallelismFirst coalesces the default read
-    path to ~defaultParallelism tasks — matching it keeps the colocated
-    plan at CPU parity. Most of that cost was the worker's per-task
-    zip-directory re-reads, not the Arrow stream; colcrush's worker
-    daemon skips them, and a trivial task now costs ~0.04 CPU-s (4-vCPU
-    host, CPython 3.11), so the 1x rule awaits a re-tune. Greedy
-    largest-first size-binning bounds bin skew by the largest single
-    file (a file is never split). None when the
-    dataset has no part files. The file list is driver-side, same as
-    Spark's own file-source listing. ``files`` overrides the listing
-    with an explicit (full_path, size) subset — the file-pruned scan
-    and the file-map build pass only the files they need."""
+    which is also why AQE's parallelismFirst coalesces the exchange
+    read path to ~defaultParallelism tasks — matching it keeps the
+    fused read at CPU parity. Most of that cost was the worker's
+    per-task zip-directory re-reads, not the Arrow stream; colcrush's
+    worker daemon skips them, and a trivial task now costs ~0.04 CPU-s
+    (4-vCPU host, CPython 3.11), so the 1x rule awaits a re-tune.
+    Greedy largest-first size-binning bounds bin skew by the largest
+    single file (a file is never split). None when ``files`` is empty.
+    Callers pass the driver-side listing of _committed_part_files, the
+    same listing Spark's own file source makes."""
     import heapq
 
     import pyarrow as pa
 
-    if files is None:
-        files = [(f, s) for _, f, s in _committed_part_files(path)]
     if not files:
         return None
     n_bins = min(len(files), spark.sparkContext.defaultParallelism)
@@ -487,6 +408,8 @@ def compact_epochs(spark: SparkSession, path: str) -> int:
     Epochs NOT in the record with a committed base present are an
     inconsistent state (a sink kept writing past compaction — the
     encode sink refuses to, see streaming/encode_sink.py) and raise.
+    Compaction writes no chunk->file map; a ``file_map/`` dir left by
+    an earlier revision is neither read nor refreshed.
     """
     epochs = _committed_epoch_dirs(path)
     if _direct_committed(path):
@@ -508,11 +431,6 @@ def compact_epochs(spark: SparkSession, path: str) -> int:
             )
         for e in epochs:
             fsio.rmtree(e)
-        if epochs:
-            # a crash before the map rebuild left the epoch-based map
-            # behind; refresh it against the base layout
-            fsio.rmtree(fsio.join(path, FILE_MAP_DIR))
-            ensure_file_map(spark, path)
         return 0
     if not epochs:
         return 0
@@ -524,8 +442,8 @@ def compact_epochs(spark: SparkSession, path: str) -> int:
     (
         # repartition on chunk_id: the compacted rewrite must keep each
         # chunk's rows within ONE output file (Spark's read can split a
-        # source file mid-chunk at a row-group boundary) so the
-        # colocated read path stays valid after maintenance. One extra
+        # source file mid-chunk at a row-group boundary) so the fused
+        # read_decoded plan stays valid after maintenance. One extra
         # shuffle during a one-time compaction buys every future read
         # its shuffle-free plan — the right trade at 100 TB.
         chunks.repartition("chunk_id")
@@ -547,10 +465,6 @@ def compact_epochs(spark: SparkSession, path: str) -> int:
     manifest.write.mode("overwrite").parquet(fsio.join(path, MANIFEST_DIR))
     for e in epochs:
         fsio.rmtree(e)
-    # the old map rows reference epoch files that no longer exist —
-    # rebuild against the fresh base layout
-    fsio.rmtree(fsio.join(path, FILE_MAP_DIR))
-    ensure_file_map(spark, path)
     return len(epochs)
 
 
@@ -613,18 +527,16 @@ def fused_decode(
     schema: "T.StructType",
     columns: list[str] | None = None,
     decimal_formats: dict[str, tuple[int, int]] | None = None,
-    files: "list[tuple[str, int]] | None" = None,
 ) -> "DataFrame | None":
     """The fused (reader + decoder, one mapInArrow stage) plan over a
-    persisted dataset, or None when there are no part files. ``files``
-    restricts the read to an explicit (full_path, size) subset — the
-    file-pruned scan path. See read_decoded for the precondition and
-    the measured trade. None also for JVM-only schemes (hdfs://,
-    viewfs://) — the worker has no pyarrow handle there; callers fall
-    back to the Spark-scan + chunk_id exchange plan."""
+    persisted dataset's committed part files, or None when there are
+    none. See read_decoded for the precondition and the measured
+    trade. None also for JVM-only schemes (hdfs://, viewfs://) — the
+    worker has no pyarrow handle there; callers fall back to the
+    Spark-scan + chunk_id exchange plan."""
     if not fsio.pyarrow_openable(path):
         return None
-    fdf = _colocated_file_df(spark, path, files=files)
+    fdf = _colocated_file_df(spark, _committed_part_files(path))
     if fdf is None:
         return None
     from .decoder import IncompleteChunksError, decode_worker

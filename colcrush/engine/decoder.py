@@ -93,7 +93,6 @@ def decode_table(
     columns: list[str] | None = None,
     assume_colocated: bool = False,
     decimal_formats: dict[str, tuple[int, int]] | None = None,
-    verify_checksums: bool = True,
 ) -> DataFrame:
     """Decode a chunk DataFrame (ENCODED_DDL) back to rows: the
     projected chunk rows, repartitioned on chunk_id, through
@@ -118,13 +117,13 @@ def decode_table(
     decimal column at a different format, rescaling HALF_UP — the
     parquet4s rescaleOnRead contract (see _rescale_decimal).
 
-    ``verify_checksums=True`` (default) re-computes each payload's
-    stored ``payload_ck`` before decoding and raises on mismatch —
-    bit rot on a 100 TB store must fail loudly, not decode to wrong
-    rows. Datasets written before the column existed (or mixed
+    When ``chunks`` carries the ``payload_ck`` column, each payload's
+    stored checksum is re-computed before decoding and a mismatch
+    raises — bit rot on a 100 TB store must fail loudly, not decode to
+    wrong rows. Datasets written before the column existed (or mixed
     appends whose rows read as NULL) skip the check per row.
     """
-    with_ck = verify_checksums and "payload_ck" in chunks.columns
+    with_ck = "payload_ck" in chunks.columns
     columns, out_schema, fn = decode_worker(
         schema,
         columns=columns,

@@ -146,7 +146,7 @@ def listdir(path: str) -> list[str]:
 
 def list_files(path: str) -> list[tuple[str, int]]:
     """(basename, size_bytes) of the regular files directly under
-    ``path`` (no recursion). Used by the colocated chunk reader to
+    ``path`` (no recursion). Used by the fused chunk reader to
     enumerate part files with sizes for task balancing."""
     if not has_scheme(path):
         out = []
@@ -175,9 +175,9 @@ def list_files(path: str) -> list[tuple[str, int]]:
 
 def pyarrow_openable(path: str) -> bool:
     """True when open_input_file can produce a handle for this path
-    scheme (local, file:, s3://) — colocated readers and the file-map
-    builder gate on this and leave JVM-only schemes (hdfs://,
-    viewfs://) to the default Spark read path."""
+    scheme (local, file:, s3://) — the fused reader gates on this and
+    leaves JVM-only schemes (hdfs://, viewfs://) to the Spark read
+    path."""
     return not has_scheme(path) or path.startswith("file:") or _is_s3(path)
 
 

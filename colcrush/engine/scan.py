@@ -335,8 +335,6 @@ def scan(
     path: str,
     columns: list[str] | None = None,
     filters: list[tuple] | None = None,
-    colocated: bool = False,
-    max_pruned_files: int = 256,
 ) -> DataFrame:
     """Projected, filtered scan of an encoded dataset.
 
@@ -347,26 +345,10 @@ def scan(
     performs between partition filters and file filters
     (/root/reference/core/src/main/scala/com/github/mjakubowski84/parquet4s/PartitionFilter.scala:338-422).
 
-    ``colocated=True`` additionally prunes FILES for selective scans:
-    surviving chunk ids join the chunk->file sidecar
-    (dataset.ensure_file_map) and only the part files containing them
-    are opened — fused reader+decoder, no chunk_id exchange. At the
-    ~3M-file 100 TB shape a bloom point lookup then opens a handful of
-    files instead of scanning every file's chunk rows. Correct by
-    construction regardless of which extra chunks share those files:
-    the residual predicate re-applies on decoded rows, the same
-    guarantee bloom false positives already rely on. Falls back to the
-    default plan whenever the sidecar is missing/stale (fingerprint
-    mismatch), the surviving-file set exceeds ``max_pruned_files``
-    (bounding the driver-side file list), or there are no filters.
+    One plan: the surviving chunk ids semi-join the chunk rows, which
+    decode_table reassembles by chunk_id. The manifest is the only
+    index.
     """
-    from .dataset import (
-        _committed_part_files,
-        file_map_matches,
-        fused_decode,
-        read_file_map,
-    )
-
     schema = read_schema(path)
     filters = list(filters or [])
     _check_filter_types(schema, filters)
@@ -374,46 +356,18 @@ def scan(
     for f in filters:
         need_cols.update(_filter_cols(f))
 
-    alive_ids = None
+    chunks = read_chunks(spark, path)
     if filters:
         manifest = read_manifest(spark, path)
         # a chunk survives iff EVERY conjunct's per-column check passes
         # bloom-assisted pruning only when the manifest carries the
         # column (datasets written before it existed scan unchanged)
         wb = "bloom" in manifest.columns
-        alive_ids = _alive_chunk_ids(manifest, filters, wb)
-
-    decoded = None
-    if colocated and alive_ids is not None:
-        parts = _committed_part_files(path)
-        if file_map_matches(path, [r for r, _, _ in parts]):
-            surviving = (
-                read_file_map(spark, path)
-                .join(alive_ids, on="chunk_id", how="left_semi")
-                .select("file")
-                .distinct()
-                .limit(max_pruned_files + 1)  # bounded driver collect
-                .collect()
-            )
-            if len(surviving) <= max_pruned_files:
-                rels = {r["file"] for r in surviving}
-                files = [(f, s) for rel, f, s in parts if rel in rels]
-                decoded = fused_decode(
-                    spark, path, schema, columns=sorted(need_cols),
-                    files=files,
-                ) if files else decode_table(
-                    read_chunks(spark, path).where(F.lit(False)),
-                    schema, columns=sorted(need_cols),
-                    assume_colocated=True,
-                )
-    if decoded is None:
-        chunks = read_chunks(spark, path)
-        if alive_ids is not None:
-            # no broadcast hint: the surviving-chunk set is unbounded at
-            # 100 TB (~10^7 ids); AQE converts to broadcast when it IS
-            # small
-            chunks = chunks.join(alive_ids, on="chunk_id", how="left_semi")
-        decoded = decode_table(chunks, schema, columns=sorted(need_cols))
+        # no broadcast hint: the surviving-chunk set is unbounded at
+        # 100 TB (~10^7 ids); AQE converts to broadcast when it IS small
+        alive = _alive_chunk_ids(manifest, filters, wb)
+        chunks = chunks.join(alive, on="chunk_id", how="left_semi")
+    decoded = decode_table(chunks, schema, columns=sorted(need_cols))
     if filters:
         decoded = decoded.where(_residual_condition(filters))
     if columns:

@@ -377,13 +377,8 @@ def q_scan_bloom_point(spark, sf):
     values over orders), unioned on a shared schema; results must equal
     DuckDB's plain filters (pruning may only ever UNDER-prune). The
     fixture datasets are encoded once per process (bloom_fixture_paths)
-    — the timed body is probe + pruned decode only. Deliberately NOT
-    scan(colocated=True): the file-pruned path pays one extra Spark job
-    (file-map join + bounded collect), measured +0.75 s on this
-    ~10-file fixture where the default single-job plan wins — its win
-    is the many-file shape (SCALE.md r8, point-scan crossover).
-    tests/test_colocated_read.py pins that both plans return identical
-    rows."""
+    — the timed body is probe + pruned decode only, through scan's one
+    plan (manifest prune, chunk_id semi-join, decode)."""
     from .engine.scan import scan
 
     cust_path, orders_path = bloom_fixture_paths(spark, sf)

@@ -60,16 +60,12 @@ def encoded_stream_sink(
         n = batch_df.count()
         if n == 0:
             return
-        # file_map=False: per-epoch chunk->file sidecars have no reader
-        # (compaction rebuilds the root map after absorbing epochs) —
-        # building one per micro-batch was pure per-epoch latency
         write_encoded(
             batch_df,
             epoch_path,
             mode="overwrite",
             group_cols=group_cols,
             namespace=f"epoch-{int(epoch_id)}",
-            file_map=False,
             **encode_kwargs,
         )
         if post_commit is not None:

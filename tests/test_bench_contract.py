@@ -146,3 +146,69 @@ def test_campaign_scaling_reads_latest_history():
     assert 0 < out["scaling_encode_wall_med"] <= 2
     assert 0 < out["scaling_decode_wall_med"] <= 2
     assert isinstance(out["scaling_output_byte_identical"], bool)
+
+
+def _perfbench_colcrush_uses():
+    """(module, name) for every colcrush name perfbench/layers.py and
+    perfbench/workloads.py import, plus every ``Q.<attr>`` read off the
+    ``colcrush.queries`` module they import as ``Q``."""
+    import ast
+    import os
+
+    root = os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench")
+    uses = set()
+    for name in ("layers.py", "workloads.py"):
+        with open(os.path.join(root, name)) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith("colcrush"):
+                for alias in node.names:
+                    uses.add((node.module, alias.name))
+            elif (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "Q"
+            ):
+                uses.add(("colcrush.queries", node.attr))
+    return uses
+
+
+def test_perfbench_engine_surface_exists():
+    """The benchmark harness under perfbench/ is frozen and not run by
+    this suite; removing an engine name or keyword it uses would break
+    its traced runs unseen. Resolve every colcrush name it imports and
+    bind the exact calls it makes, without starting Spark."""
+    import importlib
+    import inspect
+
+    uses = _perfbench_colcrush_uses()
+    assert ("colcrush.engine", "ensure_file_map") in uses
+    for module, name in sorted(uses):
+        m = importlib.import_module(module)
+        if not hasattr(m, name):
+            # ``from colcrush import queries`` imports a submodule
+            importlib.import_module(f"{module}.{name}")
+
+    from colcrush import engine as E
+
+    spark, df, ds, cols = object(), object(), "/ds", ["repo", "lang"]
+    calls = [
+        # perfbench/layers.py
+        (E.plan_salts, (df, cols, 16 << 20), {"with_total": True}),
+        (E.encode_table, (df,), {"group_cols": cols}),
+        (E.write_encoded, (df, ds), {"group_cols": cols, "file_map": False}),
+        (E.ensure_file_map, (spark, ds), {}),
+        (E.read_chunks, (spark, ds), {}),
+        (E.read_decoded, (spark, ds), {}),
+        (E.read_decoded, (spark, ds), {"colocated": True}),
+        (E.pruned_chunk_count, (spark, ds, [("path", "==", "k")]), {}),
+        (E.scan, (spark, ds), {"filters": [("path", "==", "k")]}),
+        (E.read_manifest, (spark, ds), {}),
+        # perfbench/workloads.py
+        (E.read_decoded, (spark, ds), {"columns": ["path", "lang"]}),
+    ]
+    for fn, args, kwargs in calls:
+        inspect.signature(fn).bind(*args, **kwargs)
+    # write_encoded forwards unknown keywords to encode_table, so bind
+    # alone would accept a removed file_map; it must be a named option
+    assert "file_map" in inspect.signature(E.write_encoded).parameters

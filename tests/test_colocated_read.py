@@ -110,7 +110,7 @@ def test_colocated_bins_run_one_task_each(spark):
         (f"/ds/chunks/part-{i:02d}.parquet", 10) for i in range(12)
     ]
     assert len(files) > n_bins
-    fdf = _colocated_file_df(spark, "/ds", files=files)
+    fdf = _colocated_file_df(spark, files)
 
     def report(it):
         pid = TaskContext.get().partitionId()
@@ -241,129 +241,38 @@ def test_colocated_across_epochs_and_compaction(spark, tmp_path):
     assert compact_epochs(spark, ds) == 2
     assert _rows(read_decoded(spark, ds)) == before
     assert _rows(_reference(spark, ds)) == before
-    # compaction rebuilt the chunk->file sidecar against the base
-    # layout, so the file-pruned scan works on the compacted dataset
-    from colcrush.engine import scan
-    from colcrush.engine.dataset import _committed_part_files, file_map_matches
-
-    assert file_map_matches(ds, [r for r, _, _ in _committed_part_files(ds)])
-    got = scan(
-        spark, ds, columns=["path"], filters=[("lang", "==", "py")],
-        colocated=True,
-    )
-    assert _rows(got) == _rows(
-        scan(spark, ds, columns=["path"], filters=[("lang", "==", "py")])
-    )
 
 
-def test_file_map_sidecar_lifecycle(spark, tmp_path):
-    """write_encoded maintains the chunk->file sidecar incrementally;
-    ensure_file_map is idempotent and the completeness marker tracks
-    the committed part-file set."""
-    from colcrush.engine import ensure_file_map
-    from colcrush.engine.dataset import (
-        _committed_part_files,
-        file_map_matches,
-        read_file_map,
-    )
-
-    ds = str(tmp_path / "ds")
-    write_encoded(
-        source_code_df(spark, 300, n_repos=5), ds,
-        mode="overwrite", group_cols=["lang"],
-    )
-    parts = _committed_part_files(ds)
-    assert file_map_matches(ds, [r for r, _, _ in parts])
-    assert ensure_file_map(spark, ds) == 0  # idempotent no-op
-    # every part file is mapped, and every manifest chunk id appears
-    mapped_files = {
-        r["file"] for r in read_file_map(spark, ds).select("file").distinct().collect()
-    }
-    assert mapped_files == {r for r, _, _ in parts}
-    # append maps only the delta
-    write_encoded(
-        source_code_df(spark, 150, n_repos=5).withColumn(
-            "commit", F.concat(F.lit("y"), "commit")
-        ),
-        ds, mode="append", group_cols=["lang"],
-    )
-    parts2 = _committed_part_files(ds)
-    assert len(parts2) > len(parts)
-    assert file_map_matches(ds, [r for r, _, _ in parts2])
-
-
-def test_colocated_scan_matches_default_and_prunes_files(spark, tmp_path):
-    """File-pruned colocated scan: same rows as the default plan for a
-    selective filter AND a single-row point lookup; no chunk_id
-    exchange in the pruned plan."""
-    from colcrush.engine import scan
-
-    ds = str(tmp_path / "ds")
-    src = source_code_df(spark, 500, n_repos=8)
-    write_encoded(src, ds, mode="overwrite", group_cols=["repo", "lang"])
-    row = src.first()
-    group_f = [("repo", "==", row["repo"]), ("lang", "==", row["lang"])]
-    point_f = [("path", "==", row["path"])]
-    for filters in (group_f, point_f):
-        a = _rows(scan(spark, ds, columns=["path", "content"], filters=filters))
-        b_df = scan(
-            spark, ds, columns=["path", "content"], filters=filters,
-            colocated=True,
-        )
-        assert _rows(b_df) == a and len(a) > 0
-        plan = b_df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning(chunk_id" not in plan
-    # a filter surviving nothing returns empty, both paths
-    assert scan(
-        spark, ds, filters=[("lang", "==", "no-such-lang")], colocated=True
-    ).count() == 0
-
-
-def test_colocated_scan_falls_back_safely(spark, tmp_path):
-    """Stale/missing sidecar marker or an over-cap surviving-file set
-    must fall back to the default plan, never return wrong rows."""
-    from colcrush.engine import scan
-    from colcrush.engine.dataset import FILE_MAP_DIR, _FILE_MAP_MARKER
+def test_legacy_file_map_sidecar_is_inert(spark, tmp_path):
+    """A dataset written by an earlier revision carries a file_map/
+    chunk->file sidecar. No reader consults it and no write touches
+    it: the dataset reads, scans, verifies and appends as if it were
+    absent."""
+    from colcrush.engine import ensure_file_map, scan, verify_dataset
 
     ds = str(tmp_path / "ds")
     src = source_code_df(spark, 300, n_repos=5)
-    write_encoded(src, ds, mode="overwrite", group_cols=["lang"])
-    row = src.first()
-    filters = [("lang", "==", row["lang"])]
-    want = _rows(scan(spark, ds, columns=["path"], filters=filters))
-    # cap forces the fallback even with a healthy sidecar
-    capped = scan(
-        spark, ds, columns=["path"], filters=filters,
-        colocated=True, max_pruned_files=0,
-    )
-    assert _rows(capped) == want
-    assert "Exchange hashpartitioning(chunk_id" in (
-        capped._jdf.queryExecution().executedPlan().toString()
-    )
-    # stale marker: fallback, still correct
-    os.remove(os.path.join(ds, FILE_MAP_DIR, _FILE_MAP_MARKER))
-    assert _rows(
-        scan(spark, ds, columns=["path"], filters=filters, colocated=True)
-    ) == want
-
-
-def test_write_encoded_file_map_optout(spark, tmp_path):
-    """file_map=False (the streaming-epoch setting) must skip the
-    sidecar build entirely — per-epoch maps have no reader — while the
-    dataset itself stays fully readable and a later explicit
-    ensure_file_map builds the map on demand."""
-    import os
-
-    from colcrush.engine import ensure_file_map
-    from colcrush.engine.dataset import FILE_MAP_DIR, _committed_part_files, file_map_matches
-
-    ds = str(tmp_path / "ds")
-    write_encoded(
-        source_code_df(spark, 200, n_repos=4), ds,
-        mode="overwrite", group_cols=["lang"], file_map=False,
-    )
-    assert not os.path.exists(os.path.join(ds, FILE_MAP_DIR))
-    assert read_decoded(spark, ds).count() == 200
-    # on-demand build still works and covers the full part-file set
+    write_encoded(src, ds, mode="overwrite", group_cols=["repo", "lang"])
+    fm = os.path.join(ds, "file_map")
+    assert not os.path.exists(fm)
     assert ensure_file_map(spark, ds) > 0
-    assert file_map_matches(ds, [r for r, _, _ in _committed_part_files(ds)])
+    # the completeness marker earlier revisions wrote beside the rows
+    with open(os.path.join(fm, "_complete.json"), "w") as f:
+        f.write('{"n_files": 1, "xor_md5": 0}')
+    legacy = sorted(os.listdir(fm))
+
+    assert _rows(read_decoded(spark, ds)) == _rows(_reference(spark, ds))
+    key = src.orderBy("path").first()["path"]
+    got = scan(spark, ds, columns=["path", "lang"], filters=[("path", "==", key)])
+    want = _rows(src.where(F.col("path") == key).select("path", "lang"))
+    assert _rows(got) == want and len(want) >= 1
+    assert verify_dataset(spark, ds, deep=True)["ok"]
+
+    more = source_code_df(spark, 150, n_repos=5).withColumn(
+        "commit", F.concat(F.lit("z"), "commit")
+    )
+    write_encoded(more, ds, mode="append", group_cols=["repo", "lang"])
+    full = _rows(read_decoded(spark, ds))
+    assert full == _rows(_reference(spark, ds))
+    assert full == _rows(src.unionByName(more))
+    assert sorted(os.listdir(fm)) == legacy

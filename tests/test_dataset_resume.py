@@ -97,6 +97,49 @@ def test_encode_and_resume_persist_no_salt_plan(spark, src, tmp):
     assert not added()
 
 
+# Spark jobs one grouped write_encoded of the input below runs under
+# the test session. Building a chunk->file map would add one more.
+WRITE_ENCODED_JOBS = 8
+
+
+def test_write_encoded_job_count_and_no_file_map(spark, tmp_path):
+    """A grouped write runs a pinned number of Spark jobs and no write
+    or compaction leaves a file_map/ dir behind."""
+    from colcrush.engine import compact_epochs
+
+    sc = spark.sparkContext
+    df = source_code_df(spark, 400, n_repos=6)
+    ds = str(tmp_path / "ds")
+    group = "write-encoded-job-count"
+    sc.setJobGroup(group, "one grouped write_encoded")
+    try:
+        write_encoded(df, ds, group_cols=["repo", "lang"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == WRITE_ENCODED_JOBS
+
+    def no_file_map(p):
+        return not os.path.exists(os.path.join(p, "file_map"))
+
+    assert no_file_map(ds)
+    write_encoded(df, ds, mode="append", group_cols=["lang"])
+    assert no_file_map(ds)
+    write_encoded(df, ds, mode="overwrite", group_cols=["repo", "lang"])
+    assert no_file_map(ds)
+
+    streamed = str(tmp_path / "streamed")
+    for i, part in enumerate(
+        (df.where(F.col("lang") < "m"), df.where(F.col("lang") >= "m"))
+    ):
+        write_encoded(
+            part, os.path.join(streamed, f"epoch={i:08d}"), mode="overwrite",
+            group_cols=["lang"], namespace=f"epoch-{i}",
+        )
+    assert compact_epochs(spark, streamed) == 2
+    assert no_file_map(streamed)
+    assert read_decoded(spark, streamed).count() == 400
+
+
 def test_read_decoded_matches_source(spark, src, tmp):
     write_encoded(src, tmp, group_cols=["repo", "lang"])
     dec = read_decoded(spark, tmp)
