@@ -87,16 +87,17 @@ def minhash_candidate_pairs(
 
     One posexplode (NOT a bands-way union: each union branch would
     re-evaluate the whole signature plan) -> self-equi-join on
-    (band, bucket hash) that Catalyst shuffles once per side."""
-    band_hashes = F.array(
-        *[
-            F.hash(*[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)])
-            for b in range(bands)
-        ]
-    )
+    (band, bucket hash) that Catalyst shuffles once per side. The band
+    hash array is one SQL string: one py4j call, not one per node."""
+    hashes = [
+        "hash({})".format(
+            ", ".join(f"sig[{b * rows_per_band + r}]" for r in range(rows_per_band))
+        )
+        for b in range(bands)
+    ]
     buckets = sigs.select(
         F.col(id_col).alias("_id"),
-        F.posexplode(band_hashes).alias("_band", "_bh"),
+        F.posexplode(F.expr(f"array({', '.join(hashes)})")).alias("_band", "_bh"),
     )
     l = buckets.alias("l")
     r = buckets.alias("r")
@@ -145,19 +146,12 @@ def minhash_dedup_pairs(
     # explode shingles once, then num_hashes min-aggregates: whole-stage
     # codegen'd, map-side partial aggregation, and no per-(doc,seed)
     # array allocation (a higher-order-function formulation was ~10x
-    # slower)
+    # slower). The aggregates and their array are one SQL string.
     inv = sets.select(F.col(id_col), F.explode("_hs").alias("_tok"))
-    aggs = [
-        F.min(F.hash(F.col("_tok"), F.lit(i))).alias(f"_h{i}")
-        for i in range(num_hashes)
-    ]
+    mins = ", ".join(f"min(hash(_tok, {i}))" for i in range(num_hashes))
     sigs = (
         inv.groupBy(id_col)
-        .agg(*aggs)
-        .select(
-            F.col(id_col),
-            F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig"),
-        )
+        .agg(F.expr(f"array({mins})").alias("sig"))
         .localCheckpoint(eager=False)
     )
     cands = minhash_candidate_pairs(sigs, id_col, bands, rows_per_band)
@@ -212,56 +206,54 @@ def simhash_signatures(
     per-token aggregate work, measured value-identical on both hash
     modes (sign(2*count_j - n) == sign(sum of ±1 votes) exactly, and
     the bit-j -> (lane j//16, shift j%16) layout reproduces the old
-    word order). Tokens explode once; everything is whole-stage-
-    codegen'd with map-side partial aggregation — no Python anywhere.
+    word order). Tokens explode once; every per-token step is whole-
+    stage-codegen'd with map-side partial aggregation — no Python
+    anywhere.
 
     Overflow bound: documents of >= 32768 tokens are REFUSED loudly
     (assert_true below). Past 2^15 tokens the top lane's accumulation
-    (count x 2^48) can no longer be proven to stay inside signed-long
-    range, so Spark's default ANSI mode could abort the sum with a
-    generic overflow error; refusing at the provable bound keeps every
-    failure self-describing, and every signature that IS produced is
-    exact. At 100 TB, pre-chunk such documents (or SimHash the
-    chunks); the previous unpacked form merely degraded to a
-    near-meaningless majority over such sizes anyway."""
+    (count x 2^48) can leave signed-long range. The lane sums are
+    ``try_sum``, so an overflowing sum turns NULL instead of aborting
+    the job under ANSI mode with a generic overflow error, and the
+    token-count guard then names the refusal for every oversized
+    document; every signature that IS produced is exact. At 100 TB,
+    pre-chunk such documents (or SimHash the chunks); the previous
+    unpacked form merely degraded to a near-meaningless majority over
+    such sizes anyway.
+
+    The wide expression lists (word packing, lane sums, signature) are
+    SQL strings, one py4j call each instead of one per Column node:
+    the signature is a 64-step ``aggregate`` over the lane-sum array,
+    bound once through a 1-element-array transform (rebind trap)."""
     inv = df.select(
         F.col(id_col),
         F.explode(F.split(F.col(text_col), " ")).alias("_tok"),
     )
     if hash == "md5":
-        inv = inv.withColumn("_md5", F.md5("_tok"))
-        words = [
-            F.conv(F.substring("_md5", 4 * k + 1, 4), 16, 10).cast("long")
+        inv = inv.select(F.col(id_col), F.md5("_tok").alias("_md5"))
+        h = " | ".join(
+            f"shiftleft(CAST(conv(substring(_md5, {4 * k + 1}, 4), 16, 10) AS BIGINT),"
+            f" {16 * k})"
             for k in range(4)
-        ]
-        h = words[0]
-        for k in range(1, 4):
-            h = h.bitwiseOR(F.shiftleft(words[k], 16 * k))
-        inv = inv.select(id_col, h.alias("_h"))
+        )
     elif hash == "xxhash64":
-        inv = inv.select(id_col, F.xxhash64("_tok").alias("_h"))
+        h = "xxhash64(_tok)"
     else:
         raise ValueError(f"hash must be 'xxhash64' or 'md5', got {hash!r}")
-    sums = [
-        F.sum(
-            F.shiftrightunsigned(F.col("_h"), k).bitwiseAND(
-                F.lit(_SIMHASH_LANE_MASK)
-            )
-        ).alias(f"_s{k}")
-        for k in range(16)
-    ]
-    grouped = inv.groupBy(id_col).agg(*sums, F.count(F.lit(1)).alias("_n"))
-    sh = None
-    for j in range(64):
-        k, lane = j % 16, j // 16
-        cnt = F.shiftrightunsigned(F.col(f"_s{k}"), 16 * lane).bitwiseAND(
-            F.lit(0xFFFF)
-        )
-        bit = F.when(cnt * 2 > F.col("_n"), F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        term = F.shiftleft(bit, j)
-        sh = term if sh is None else sh.bitwiseOR(term)
+    inv = inv.select(F.col(id_col), F.expr(h).alias("_h"))
+    sums = ", ".join(
+        f"try_sum(shiftrightunsigned(_h, {k}) & {_SIMHASH_LANE_MASK}L)" for k in range(16)
+    )
+    grouped = inv.groupBy(id_col).agg(
+        F.expr(f"array({sums})").alias("_s"), F.count(F.lit(1)).alias("_n")
+    )
+    # bit j is lane j // 16 of sum j % 16: set when its count is a
+    # strict majority of the document's tokens
+    sh = F.expr(
+        "transform(array(_s), s -> aggregate(sequence(0, 63), 0L, (acc, j) -> acc"
+        " | IF((shiftrightunsigned(s[j % 16], j - j % 16) & 65535) * 2 > _n,"
+        " shiftleft(1L, j), 0L)))[0]"
+    )
     # lane-overflow guard: assert_true is free on the sane path and
     # fails loudly (not wrongly) on an oversized document (see the
     # overflow-bound note above for why the bound is 2^15)

@@ -85,10 +85,16 @@ def get_spark(
         # than every Spark task thread together — 8 point lookups on a
         # 4-vCPU host: compiler threads 8.7 of 14.9 JVM CPU-s tiered
         # (task threads 1.4), 2.5 of 8.6 C1-only, at the same walls.
+        # C1-only code keeps the default 48 MB code cache 32-43 MB
+        # full and the JIT recompiling pass after pass; a 240 MB cache
+        # cut perfbench queries cpu_s ~20% in 60 s runs (4 vCPUs).
         # Spark puts defaultJavaOptions before extraJavaOptions, so a
         # caller's extraJavaOptions still apply, and ``extra`` can
         # replace this setting
-        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
+        .config(
+            "spark.driver.defaultJavaOptions",
+            "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m",
+        )
         # Python workers fork from a daemon whose zip importers skip the
         # per-task re-read of pyspark.zip and the spark-core jar (~0.2 s
         # per task before CPython 3.13; see colcrush/_worker_daemon.py)

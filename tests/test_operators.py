@@ -343,17 +343,29 @@ def test_simhash_hash_modes_equivalent(spark):
 def test_simhash_lane_guard_bound(spark):
     """The packed vote lanes hold 32767 tokens per document: a document
     of exactly that many gets a signature, one more token fails loudly
-    with the self-describing refusal instead of a generic overflow."""
+    with the self-describing refusal instead of a generic overflow —
+    also when every token is the same, so the top lane's sum itself
+    leaves signed-long range, in both hash modes."""
     from colcrush.operators.dedup import simhash_signatures
 
-    def doc(n_tokens):
-        text = " ".join(f"t{i % 97}" for i in range(n_tokens))
+    def doc(n_tokens, distinct=97):
+        text = " ".join(f"t{i % distinct}" for i in range(n_tokens))
         return spark.createDataFrame([(1, text)], "doc_id long, text string")
 
     (row,) = simhash_signatures(doc(32767), "doc_id", "text").collect()
     assert row["simhash"] is not None
     with pytest.raises(Exception, match="exceeds 32767 tokens"):
         simhash_signatures(doc(32768), "doc_id", "text").collect()
+
+    # one repeated token: every bit's count is 0 or n, so the signature
+    # is the token's own hash right up to the bound
+    (want,) = spark.sql("SELECT xxhash64('t0')").first()
+    (row,) = simhash_signatures(doc(32767, 1), "doc_id", "text").collect()
+    assert row["simhash"] == want
+    for h in ("xxhash64", "md5"):
+        for n in (32768, 40000):
+            with pytest.raises(Exception, match="exceeds 32767 tokens"):
+                simhash_signatures(doc(n, 1), "doc_id", "text", hash=h).collect()
 
 
 def test_winnow_hash_modes_equivalent(spark):

@@ -34,6 +34,8 @@ def test_driver_jvm_runs_c1_only(spark):
     bean = spark.sparkContext._jvm.java.lang.management.ManagementFactory
     args = list(bean.getRuntimeMXBean().getInputArguments())
     assert "-XX:TieredStopAtLevel=1" in args, args
+    # the default 48 MB code cache fills under C1-only compilation
+    assert "-XX:ReservedCodeCacheSize=240m" in args, args
 
 
 def test_python_workers_fork_from_colcrush_daemon(spark):
