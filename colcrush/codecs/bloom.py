@@ -6,8 +6,9 @@ stats cannot prune `commit = '<sha>'` — every chunk's hex range spans
 the literal — but a few KB of bloom bits per chunk skip almost all of
 them. parquet4s (sitting on parquet-mr) exposes no bloom knobs, so
 this is a beyond-reference capability, built the same way the engine's
-other stats are: computed vectorized at encode time, stored in the
-manifest, turned into a Catalyst expression at scan time.
+other stats are: computed vectorized at encode time, stored on every
+chunk row (and the manifest), probed by the decode worker at scan time
+(engine/scan._bloom_excludes).
 
 Layout (manifest column ``bloom: array<bigint>``):
     [m_bits, k, kind, word_0, ..., word_{m_bits/64 - 1}]
@@ -21,8 +22,7 @@ m_bits is a power of two sized at ~10 bits per distinct value (capped
 at 16384 bits = 2 KB; column skipped entirely when the chunk has more
 than _MAX_DISTINCT distincts — a saturated bloom prunes nothing and
 bloats the manifest). At 100 TB that is <1% of encoded bytes, and the
-column is only READ when a bloom-eligible filter exists (parquet
-column pruning).
+column is only READ by filtered scans (parquet column pruning).
 
 Hashing is a polynomial rolling hash over the value bytes with uint64
 wraparound — exactly computable both vectorized (numpy, encode side)
@@ -194,8 +194,8 @@ def _bloom_words_numpy(h: np.ndarray, m: int, k: int) -> np.ndarray:
     # memory speed — same trick as fsst._presence)
     idx = (h_lo[None, :] + np.arange(k, dtype=np.int64)[:, None] * h_hi) % m
     bits[idx.ravel()] = True
-    # LSB-first within each 64-bit word (element_at(bloom, 4+idx//64)
-    # >> (idx%64)) & 1 on the query side. Words are read from the
+    # LSB-first within each 64-bit word ((bloom[3 + idx//64] >>
+    # (idx%64)) & 1 on the probe side). Words are read from the
     # packed bytes with EXPLICIT little-endian dtypes: a native-endian
     # .view() would make the stored words (and thus chunk output)
     # depend on the host — the cross-toolchain identity invariant
@@ -206,6 +206,6 @@ def _bloom_words_numpy(h: np.ndarray, m: int, k: int) -> np.ndarray:
 
 
 def probe_params(value: "str | bytes") -> tuple[int, int]:
-    """(h_lo, h_hi) for the scan-side double-hash probe expressions."""
+    """(h_lo, h_hi) for the scan-side double-hash probe."""
     h = hash_value(value)
     return h & 0xFFFFFFFF, (h >> 32) | 1

@@ -216,11 +216,15 @@ def ensure_file_map(spark: SparkSession, path: str) -> int:
 
     Kept only because perfbench/layers.py still times this build as
     its ``engine.dataset.ensure_file_map`` layer. Nothing else calls
-    it, and nothing reads ``file_map/``: scans prune with the manifest
-    alone. The file-pruned scan that read the map lost to that plan on
-    point lookups (4-vCPU host, 4,000 F1 rows: 1.02 vs 0.66 s wall,
-    1.50 vs 0.95 CPU-s per lookup), so it was removed, and a map left
-    by an earlier revision is inert bytes. A no-op (0) on JVM-only
+    it, and nothing reads ``file_map/``: a scan prunes chunks inside
+    its decode worker, from the stats on every chunk row, in the one
+    job of a full read. The file-pruned scan that read the map lost on
+    point lookups to the manifest-pruned scan of its time (4-vCPU host,
+    4,000 F1 rows: 1.02 vs 0.66 s wall, 1.50 vs 0.95 CPU-s per lookup),
+    so it was removed, and a map left by an earlier revision is inert
+    bytes. The in-worker prune beats that manifest prune in turn: at
+    40,000 F1 rows a lookup took 0.22 vs 0.82 s wall and 0.49 vs 1.47
+    CPU-s (medians of 5 interleaved pairs). A no-op (0) on JVM-only
     schemes (hdfs://, viewfs://), whose files the worker cannot open
     with pyarrow."""
     import pyarrow as pa
@@ -325,11 +329,13 @@ def _colocated_file_df(
     )
 
 
-def _chunk_file_batches(files, requested: "list[str] | None"):
-    """Yield normalized chunk-row batches (chunk_id, column, payload,
-    payload_ck) from whole chunk part files — pyarrow-read inside the
-    worker. Mirrors the explicit-schema Spark read: absent payload_ck
-    (pre-r6 files) reads as NULLs, unknown columns are never read.
+def _chunk_file_batches(files, requested: "list[str] | None", target):
+    """Yield normalized chunk-row batches of the Arrow schema
+    ``target`` (a subset of the ENCODED_DDL columns, as the decode
+    worker asks for them) from whole chunk part files — pyarrow-read
+    inside the worker. Mirrors the explicit-schema Spark read: a
+    column absent from a file an earlier revision wrote (payload_ck,
+    bloom) reads as NULLs, and columns outside ``target`` are never read.
     ``requested`` (original-table column names) prunes rows before any
     payload leaves the reader; batch_size is row-bounded low because a
     single chunk-column payload can be MBs."""
@@ -338,14 +344,6 @@ def _chunk_file_batches(files, requested: "list[str] | None"):
     import pyarrow.parquet as pq
 
     want_set = pa.array(requested, type=pa.string()) if requested else None
-    target = pa.schema(
-        [
-            ("chunk_id", pa.string()),
-            ("column", pa.string()),
-            ("payload", pa.binary()),
-            ("payload_ck", pa.int64()),
-        ]
-    )
     for f in files:
         # close each file after its batches are consumed: a long
         # fused-decode task iterating many part files must not hold
@@ -509,16 +507,34 @@ def read_decoded(
 
     ``colocated`` is ignored. It once selected the fused plan and stays
     only because perfbench/layers.py still passes it."""
-    schema = read_schema(path)
-    fused = fused_decode(
-        spark, path, schema, columns=columns, decimal_formats=decimal_formats,
-    )
-    if fused is not None:
-        return fused
-    return decode_table(
-        read_chunks(spark, path), schema, columns=columns,
+    return _decode_plan(
+        spark, path, read_schema(path), columns=columns,
         decimal_formats=decimal_formats,
     )
+
+
+def _decode_plan(
+    spark: SparkSession,
+    path: str,
+    schema: "T.StructType",
+    columns: list[str] | None = None,
+    decimal_formats: dict[str, tuple[int, int]] | None = None,
+    filters: list[tuple] | None = None,
+    decode: bool = True,
+) -> DataFrame:
+    """The one read plan of read_decoded and scan: :func:`fused_decode`,
+    or where it cannot run (JVM-only scheme, no part files) the
+    exchange plan ``decode_table(read_chunks(spark, path), ...)``. Both
+    run the same decode worker with the same ``filters``/``decode``
+    (see decoder.decode_worker)."""
+    kw = dict(
+        columns=columns, decimal_formats=decimal_formats, filters=filters,
+        decode=decode,
+    )
+    fused = fused_decode(spark, path, schema, **kw)
+    if fused is not None:
+        return fused
+    return decode_table(read_chunks(spark, path), schema, **kw)
 
 
 def fused_decode(
@@ -527,13 +543,18 @@ def fused_decode(
     schema: "T.StructType",
     columns: list[str] | None = None,
     decimal_formats: dict[str, tuple[int, int]] | None = None,
+    filters: list[tuple] | None = None,
+    decode: bool = True,
 ) -> "DataFrame | None":
     """The fused (reader + decoder, one mapInArrow stage) plan over a
     persisted dataset's committed part files, or None when there are
     none. See read_decoded for the precondition and the measured
     trade. None also for JVM-only schemes (hdfs://, viewfs://) — the
     worker has no pyarrow handle there; callers fall back to the
-    Spark-scan + chunk_id exchange plan."""
+    Spark-scan + chunk_id exchange plan. ``filters`` and ``decode``
+    prune chunks inside the worker (decoder.decode_worker): the reader
+    then also reads the stats columns, and with ``decode=False`` never
+    reads a payload."""
     if not fsio.pyarrow_openable(path):
         return None
     fdf = _colocated_file_df(spark, _committed_part_files(path))
@@ -541,8 +562,9 @@ def fused_decode(
         return None
     from .decoder import IncompleteChunksError, decode_worker
 
-    ordered, out_schema, decode_fn = decode_worker(
+    ordered, in_schema, out_schema, decode_fn = decode_worker(
         schema, columns=columns, decimal_formats=decimal_formats,
+        filters=filters, decode=decode,
     )
 
     def fused(it):
@@ -553,7 +575,7 @@ def fused_decode(
         def chunk_rows():
             for batch in it:
                 for files in batch.column("files").to_pylist():
-                    yield from _chunk_file_batches(files, ordered)
+                    yield from _chunk_file_batches(files, ordered, in_schema)
 
         try:
             yield from decode_fn(chunk_rows())

@@ -17,6 +17,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..codecs import decode_array
 from ..codecs.dec_rescale import rescale_decimal128
@@ -87,12 +88,38 @@ class IncompleteChunksError(RuntimeError):
     the chunk rows it was fed were not co-located per chunk."""
 
 
+# the chunk-row stats a chunk predicate reads (ENCODED_DDL types), in
+# the order scan.chunk_predicate indexes them
+STATS_FIELDS = (
+    pa.field("n_rows", pa.int64()),
+    pa.field("n_nulls", pa.int64()),
+    pa.field("min_s", pa.string()),
+    pa.field("max_s", pa.string()),
+    pa.field("min_d", pa.float64()),
+    pa.field("max_d", pa.float64()),
+    pa.field("bloom", pa.list_(pa.int64())),
+)
+
+# the prune pass (decode=False): one row per (chunk, requested column)
+PRUNE_SCHEMA = pa.schema(
+    [
+        pa.field("chunk_id", pa.string()),
+        pa.field("column", pa.string()),
+        pa.field("alive", pa.bool_()),
+        pa.field("min_d", pa.float64()),
+        pa.field("max_d", pa.float64()),
+    ]
+)
+
+
 def decode_table(
     chunks: DataFrame,
     schema: T.StructType,
     columns: list[str] | None = None,
     assume_colocated: bool = False,
     decimal_formats: dict[str, tuple[int, int]] | None = None,
+    filters: list[tuple] | None = None,
+    decode: bool = True,
 ) -> DataFrame:
     """Decode a chunk DataFrame (ENCODED_DDL) back to rows: the
     projected chunk rows, repartitioned on chunk_id, through
@@ -117,22 +144,26 @@ def decode_table(
     decimal column at a different format, rescaling HALF_UP — the
     parquet4s rescaleOnRead contract (see _rescale_decimal).
 
+    ``filters`` (scan's conjuncts) and ``decode`` prune chunks inside
+    the worker; see :func:`decode_worker`. With ``filters=None`` and
+    ``decode=True`` only the payload columns are selected.
+
     When ``chunks`` carries the ``payload_ck`` column, each payload's
     stored checksum is re-computed before decoding and a mismatch
     raises — bit rot on a 100 TB store must fail loudly, not decode to
     wrong rows. Datasets written before the column existed (or mixed
     appends whose rows read as NULL) skip the check per row.
     """
-    with_ck = "payload_ck" in chunks.columns
-    columns, out_schema, fn = decode_worker(
+    columns, in_schema, out_schema, fn = decode_worker(
         schema,
         columns=columns,
         decimal_formats=decimal_formats,
-        with_ck=with_ck,
+        with_ck="payload_ck" in chunks.columns,
+        filters=filters,
+        decode=decode,
     )
     pruned = chunks.where(chunks["column"].isin(columns)).select(
-        "chunk_id", "column", "payload",
-        *(["payload_ck"] if with_ck else []),
+        *in_schema.names
     )
     if not assume_colocated:
         # partition count from spark.sql.shuffle.partitions (+ AQE
@@ -147,15 +178,27 @@ def decode_worker(
     columns: list[str] | None = None,
     decimal_formats: dict[str, tuple[int, int]] | None = None,
     with_ck: bool = True,
+    filters: list[tuple] | None = None,
+    decode: bool = True,
 ):
     """The decode worker, DataFrame-free: returns ``(ordered_columns,
-    out_schema, fn)`` where ``fn`` maps an iterator of chunk-row
-    batches (chunk_id, column, payload[, payload_ck]) to decoded row
-    batches, and raises IncompleteChunksError if a chunk's column rows
-    never all arrive. decode_table wires it behind a chunk DataFrame;
-    the fused reader (dataset.fused_decode, the default read_decoded
-    plan) composes it directly with the in-worker file reader so
-    payload bytes never cross a process boundary."""
+    in_schema, out_schema, fn)`` where ``fn`` maps an iterator of
+    chunk-row batches (``in_schema``: chunk_id, column, payload[,
+    payload_ck]) to decoded row batches, and raises
+    IncompleteChunksError if a chunk's column rows never all arrive.
+    decode_table wires it behind a chunk DataFrame; the fused reader
+    (dataset.fused_decode, the default read_decoded plan) composes it
+    directly with the in-worker file reader so payload bytes never
+    cross a process boundary.
+
+    With ``filters`` (scan's (column, op, value) conjuncts) the chunk
+    rows also carry the STATS_FIELDS columns, and once all of a chunk's
+    rows have arrived it is decoded only if scan.chunk_predicate says
+    its stats may match every conjunct; payload checksums are checked
+    only for chunks that are decoded. ``decode=False`` is the prune
+    pass alone: no payload is read, and ``fn`` yields PRUNE_SCHEMA rows,
+    one per (chunk, requested column), with the chunk's verdict and
+    that column's min_d/max_d."""
     requested = set(columns or [f.name for f in schema.fields])
     missing = requested - {f.name for f in schema.fields}
     if missing:
@@ -166,56 +209,113 @@ def decode_worker(
         if f is None or not isinstance(f.dataType, T.DecimalType):
             raise ValueError(f"decimal_formats: {c} is not a decimal column")
     columns = [f.name for f in schema.fields if f.name in requested]
-    out_schema = T.StructType(
-        [
-            T.StructField(
-                f.name,
-                T.DecimalType(*decimal_formats[f.name])
-                if f.name in decimal_formats
-                else f.dataType,
-                f.nullable,
-            )
-            for f in schema.fields
-            if f.name in requested
-        ]
-    )
     n_expected = len(columns)
 
+    survives = None
+    if filters is not None or not decode:
+        from .scan import chunk_predicate
+
+        filter_cols, survives = chunk_predicate(filters or [])
+        # the prune pass reports every requested column's stats
+        stat_cols = requested if not decode else filter_cols & requested
+        stat_set = pa.array(sorted(stat_cols), type=pa.string())
+        stat_names = ["chunk_id", "column", *(f.name for f in STATS_FIELDS)]
+    with_ck = with_ck and decode
+    in_schema = pa.schema(
+        [
+            pa.field("chunk_id", pa.string()),
+            pa.field("column", pa.string()),
+            *([pa.field("payload", pa.binary())] if decode else []),
+            *([pa.field("payload_ck", pa.int64())] if with_ck else []),
+            *(STATS_FIELDS if survives is not None else []),
+        ]
+    )
+    if not decode:
+        out_schema = from_arrow_schema(PRUNE_SCHEMA)
+    else:
+        out_schema = T.StructType(
+            [
+                T.StructField(
+                    f.name,
+                    T.DecimalType(*decimal_formats[f.name])
+                    if f.name in decimal_formats
+                    else f.dataType,
+                    f.nullable,
+                )
+                for f in schema.fields
+                if f.name in requested
+            ]
+        )
+
+    def decoded(cid: str, d: dict) -> pa.RecordBatch:
+        for c in columns:
+            blob, ck = d[c]
+            # NULL ck = row predates the checksum column: skip. A NULL
+            # payload under a non-null checksum IS corruption (the
+            # payload column was lost) — raise the descriptive failure,
+            # not hashlib's TypeError
+            if ck is not None and (blob is None or payload_ck(blob) != ck):
+                nb = "NULL" if blob is None else f"{len(blob)} bytes"
+                raise ValueError(
+                    f"chunk integrity failure: payload checksum "
+                    f"mismatch for chunk {cid} column {c} "
+                    f"({nb}) — storage corruption?"
+                )
+        arrays = [
+            _rescale_decimal(decode_array(d[c][0]), *decimal_formats[c])
+            if c in decimal_formats
+            else decode_array(d[c][0])
+            for c in columns
+        ]
+        return pa.record_batch(arrays, names=columns)
+
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.compute as pc
+
         pa.set_cpu_count(1)  # executor runs one worker per core already
-        pending: dict[str, dict[str, bytes]] = {}
+        pending: dict[str, dict] = {}
+        stats: dict[str, dict[str, list]] = {}
+        verdicts: dict[str, list] = {n: [] for n in PRUNE_SCHEMA.names}
         for batch in it:
+            if survives is not None:
+                sub = batch.filter(
+                    pc.is_in(batch.column("column"), value_set=stat_set)
+                )
+                for cid, c, *s in zip(
+                    *(sub.column(n).to_pylist() for n in stat_names)
+                ):
+                    stats.setdefault(cid, {})[c] = s
             cids = batch.column("chunk_id").to_pylist()
             cols = batch.column("column").to_pylist()
-            payloads = batch.column("payload")
+            payloads = batch.column("payload") if decode else None
             cks = batch.column("payload_ck").to_pylist() if with_ck else None
             for i, cid in enumerate(cids):
                 d = pending.setdefault(cid, {})
-                d[cols[i]] = blob = payloads[i].as_py()
-                # NULL ck = row predates the checksum column: skip
-                if cks is not None and cks[i] is not None:
-                    # a NULL payload under a non-null checksum IS
-                    # corruption (the payload column was lost) — raise
-                    # the descriptive failure, not hashlib's TypeError
-                    if blob is None or payload_ck(blob) != cks[i]:
-                        nb = "NULL" if blob is None else f"{len(blob)} bytes"
-                        raise ValueError(
-                            f"chunk integrity failure: payload checksum "
-                            f"mismatch for chunk {cid} column {cols[i]} "
-                            f"({nb}) — storage corruption?"
-                        )
-                if len(d) == n_expected:
-                    arrays = [
-                        _rescale_decimal(decode_array(d[c]), *decimal_formats[c])
-                        if c in decimal_formats
-                        else decode_array(d[c])
-                        for c in columns
-                    ]
-                    del pending[cid]
-                    yield pa.record_batch(arrays, names=columns)
+                d[cols[i]] = (
+                    payloads[i].as_py() if decode else None,
+                    cks[i] if with_ck else None,
+                )
+                if len(d) < n_expected:
+                    continue
+                del pending[cid]
+                st = stats.pop(cid, {})
+                alive = survives is None or survives(st)
+                if not decode:
+                    for c in columns:
+                        s = st.get(c)
+                        row = (cid, c, alive, s and s[4], s and s[5])
+                        for n, v in zip(PRUNE_SCHEMA.names, row):
+                            verdicts[n].append(v)
+                elif alive:
+                    yield decoded(cid, d)
         if pending:
             raise IncompleteChunksError(
                 f"incomplete chunks after decode: {list(pending)[:5]}"
             )
+        if not decode:
+            yield pa.record_batch(
+                [pa.array(verdicts[f.name], f.type) for f in PRUNE_SCHEMA],
+                schema=PRUNE_SCHEMA,
+            )
 
-    return columns, out_schema, fn
+    return columns, in_schema, out_schema, fn

@@ -1,16 +1,20 @@
-"""Manifest-driven scans: chunk skipping + metadata-only statistics.
+"""Metadata-only statistics and stats-pruned scans.
 
 The engine's analog of parquet4s's stats layer and row-group skipping:
 - metadata-only count/min/max from the manifest (Stats.scala:16-58,
   stats/FileStats.scala:30-52 in /root/reference)
-- predicate-driven chunk pruning on manifest min/max before any payload
-  is read or decoded (FilteredFileStats.scala:129-143, row-group
-  pushdown in ParquetIterator.scala:144-150)
+- predicate-driven chunk pruning on chunk min/max, null counts and
+  bloom filters before any chunk is decoded (FilteredFileStats.scala:
+  129-143, row-group pushdown in ParquetIterator.scala:144-150)
 
-All pruning is plain DataFrame logic on the (tiny) manifest — Catalyst
-pushes the manifest filters into the parquet scan of chunks/ via a
-broadcast semi-join on chunk_id, so at 100 TB only surviving chunks'
-payload bytes are ever read.
+Pruning happens where parquet4s does it, in the reader: every chunk
+row carries its column's stats, so the decode worker (the fused
+whole-file reader, or the chunk_id exchange on JVM-only schemes)
+evaluates :func:`chunk_predicate` once a chunk's rows have arrived and
+decodes only the chunks that may match. A filtered scan is one Spark
+job with no exchange and no manifest read; pruned_chunk_count and
+filtered_min_max run the same worker with decoding switched off, so
+every entry point prunes with one rule set.
 """
 
 from __future__ import annotations
@@ -20,7 +24,7 @@ from typing import Any
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .dataset import read_chunks, read_manifest, read_schema
+from .dataset import _decode_plan, read_chunks, read_manifest, read_schema
 from .decoder import decode_table
 from .encoder import _STAT_TRUNC
 
@@ -130,8 +134,8 @@ def _bloom_key(v) -> "tuple[bytes | str, int] | None":
     """(probe key, kind) for a filter literal, or None when the literal
     has no bloom representation. Spark equality CASTS across types
     (``int_col = '5'`` can match rows), so the probe carries the kind
-    its bytes were derived from and the expression below only trusts
-    an exclusion when the stored bloom was built from the SAME kind."""
+    its bytes were derived from and only trusts an exclusion when the
+    stored bloom was built from the SAME kind."""
     from ..codecs.bloom import KIND_INT, KIND_STR
 
     if isinstance(v, (str, bytes)):
@@ -147,21 +151,20 @@ def _bloom_key(v) -> "tuple[bytes | str, int] | None":
     return None
 
 
-def _bloom_excludes(value) -> "F.Column":
-    """True when the chunk's bloom PROVES ``value`` absent (bloom
-    present, built from the literal's kind, and at least one of its k
-    double-hash probe bits clear). NULL/absent/kind-mismatched blooms
-    never exclude. Built as one SQL expression because
-    shiftright-by-a-column has no DataFrame-API form; the only
-    interpolated pieces are integers derived from the value's hash.
+def _bloom_excludes(value):
+    """A test ``bloom -> bool``: True when a chunk's bloom words PROVE
+    ``value`` absent (bloom present, built from the literal's kind, and
+    at least one of its k double-hash probe bits clear). NULL/absent/
+    kind-mismatched blooms never exclude.
 
-    See codecs/bloom.py for the layout ([m_bits, k, kind, words...])
-    and the shared scalar/vectorized hash the params come from."""
+    The probe twin of the encoder's build (codecs/bloom.py: layout
+    [m_bits, k, kind, words...], the shared scalar/vectorized hash
+    probe_params comes from); the two must stay in lockstep."""
     from ..codecs.bloom import _MAX_K, _MAX_VALUE_LEN, probe_params
 
     key = _bloom_key(value)
     if key is None:
-        return F.lit(False)
+        return lambda bloom: False
     key_bytes, kind = key
     kb = (
         key_bytes.encode("utf-8", "surrogatepass")
@@ -172,98 +175,130 @@ def _bloom_excludes(value) -> "F.Column":
         # a literal beyond the bloom key domain can never equal any
         # value of a bloom-carrying column (all its values are shorter)
         # — a same-kind bloom's presence alone proves absence
-        return F.expr(
-            f"(bloom IS NOT NULL AND element_at(bloom, 3) = {kind}L)"
-        )
+        return lambda bloom: bloom is not None and bloom[2] == kind
     h_lo, h_hi = probe_params(key_bytes)
-    probe_hits = []
-    for i in range(_MAX_K):
-        a = int(h_lo + i * h_hi)  # < 2^35, no bigint overflow
-        idx = f"pmod({a}L, element_at(bloom, 1))"
-        word = f"element_at(bloom, cast(shiftright({idx}, 6) + 4 as int))"
-        bit_set = f"(shiftright({word}, cast(pmod({idx}, 64) as int)) & 1L) = 1L"
-        # probe i is only required while i < k
-        probe_hits.append(f"({i} >= element_at(bloom, 2) OR {bit_set})")
-    maybe_present = " AND ".join(probe_hits)
-    return F.expr(
-        f"(bloom IS NOT NULL AND element_at(bloom, 3) = {kind}L "
-        f"AND NOT ({maybe_present}))"
-    )
+    probes = [h_lo + i * h_hi for i in range(_MAX_K)]
+
+    def excludes(bloom) -> bool:
+        if bloom is None or bloom[2] != kind:
+            return False
+        m, k = bloom[0], bloom[1]
+        for a in probes[:k]:
+            idx = a % m
+            # words are LSB-first int64s; >> on a negative word is
+            # arithmetic, so bit 63 reads correctly
+            if not (bloom[3 + (idx >> 6)] >> (idx & 63)) & 1:
+                return True
+        return False
+
+    return excludes
 
 
-def _chunk_survives(filt: tuple, with_bloom: bool = False) -> "F.Column":
-    """Manifest predicate: True if a chunk MIGHT contain matching rows.
+def _num_key(x: float) -> tuple:
+    """Spark's double order: NaN equals NaN and sorts above +inf."""
+    return (1, 0.0) if x != x else (0, x)
 
-    Mirrors parquet4s's canDrop contract (inverted): only provably
-    empty chunks are dropped. String stats are truncated to 64 chars at
-    encode time, so string range checks are conservative by design.
-    ``with_bloom`` additionally consults the per-chunk bloom filter for
-    string equality / in-set predicates (only passed when the manifest
-    schema carries the ``bloom`` column — datasets written before it
-    existed scan exactly as before).
 
-    Filters are conjuncts; a conjunct may be ("or", [leaf, ...]) whose
-    leaves must reference the SAME column (parquet4s boolean algebra,
-    Filter.scala:79-89) — the chunk survives if ANY branch might match.
-    """
-    if filt and filt[0] == "or":
-        out = F.lit(False)
-        for leaf in filt[1]:
-            out = out | _chunk_survives(tuple(leaf), with_bloom)
-        return out
-    col, op, val = (filt + (None,))[:3]
+# range test per op on (min, max, literal), all in one stats domain
+_RANGE = {
+    "==": lambda mn, mx, v: mn <= v <= mx,
+    "in": lambda mn, mx, v: mn <= v <= mx,
+    "<": lambda mn, mx, v: mn < v,
+    "<=": lambda mn, mx, v: mn <= v,
+    ">": lambda mn, mx, v: mx > v,
+    ">=": lambda mn, mx, v: mx >= v,
+}
+
+
+def _leaf_survives(col, op, val):
+    """A test ``stats -> bool`` for one leaf: False only when the
+    chunk's stats row of ``col`` (STATS_FIELDS order: n_rows, n_nulls,
+    min_s, max_s, min_d, max_d, bloom) proves no row matches.
+
+    Mirrors parquet4s's canDrop contract (inverted). The range check
+    runs in the literal's stats domain — min_d/max_d for numbers,
+    min_s/max_s for strings (truncated to 64 chars at encode time:
+    min_s is a lower bound, max_s a truncate-and-increment upper bound,
+    so string checks are conservative by design). For an in-set the
+    domain comes from its first element (mixed-kind lists are rejected
+    against the column type by _check_filter_types). Any other literal
+    kind, ``!=``, and NULL stats keep the chunk. Equality and in-sets
+    also consult the bloom (_bloom_excludes); for equality it composes
+    with the range check even when the range stats are NULL."""
     if op == "is_null":
-        return F.col("n_nulls") > 0
+        return lambda s: s[1] is None or s[1] > 0
     if op == "not_null":
-        return F.col("n_rows") > F.col("n_nulls")
-    # stats domain from a representative literal: for in-sets, the
-    # first element (the set is domain-homogeneous — mixed-kind lists
-    # are rejected against the column type by _check_filter_types, so
-    # an int IN-list prunes on min_d/max_d + KIND_INT bloom exactly
-    # like int equality; pre-r5 an int in-list silently fell through
-    # to "can't prune")
-    sample = (
-        next(iter(val))
-        if op == "in" and isinstance(val, (list, tuple, set, frozenset)) and len(val)
-        else val
-    )
+        return lambda s: s[0] is None or s[1] is None or s[0] > s[1]
+    if op not in _RANGE:
+        return lambda s: True
+    is_set = op == "in" and isinstance(val, (list, tuple, set, frozenset))
+    vals = list(val) if is_set else [val]
+    sample = vals[0] if is_set and vals else val
     if isinstance(sample, (int, float)) and not isinstance(sample, bool):
-        mn, mx = F.col("min_d"), F.col("max_d")
-        lit = lambda v: F.lit(float(v))  # noqa: E731
+        lo, key = 4, _num_key
+
+        def lit(v):
+            ok = isinstance(v, (int, float)) and not isinstance(v, bool)
+            return _num_key(float(v)) if ok else None
     elif isinstance(sample, str):
-        # string stats: min_s is a truncated lower bound, max_s a
-        # truncate-and-increment upper bound — range checks stay sound
-        mn, mx = F.col("min_s"), F.col("max_s")
-        lit = F.lit
+        lo, key = 2, (lambda x: x)
+
+        def lit(v):
+            return v if isinstance(v, str) else None
     else:
-        return F.lit(True)
-    have = mn.isNotNull() & mx.isNotNull()
-    if op == "==":
-        keep = (mn <= lit(val)) & (mx >= lit(val))
-    elif op == "<":
-        keep = mn < lit(val)
-    elif op == "<=":
-        keep = mn <= lit(val)
-    elif op == ">":
-        keep = mx > lit(val)
-    elif op == ">=":
-        keep = mx >= lit(val)
-    elif op == "in":
-        keep = F.lit(False)
-        for v in val if isinstance(val, (list, tuple, set, frozenset)) else [val]:
-            branch = (mn <= lit(v)) & (mx >= lit(v))
-            if with_bloom:
-                branch = branch & ~_bloom_excludes(v)
-            keep = keep | branch
-    else:  # != and anything else: can't prune via range
-        return F.lit(True)
-    survive = F.when(have, keep).otherwise(F.lit(True))
-    if with_bloom and op == "==":
-        # bloom exclusion composes with (never replaces) the range
-        # check: absent/null/kind-mismatched blooms fall back to
-        # range-only semantics (see _bloom_key)
-        survive = survive & ~_bloom_excludes(val)
-    return survive
+        return lambda s: True
+    in_range = _RANGE[op]
+    # (domain key or None, bloom test) per literal; None never matches a
+    # row (SQL NULL), another kind can't be range-checked here: keep
+    tests = [
+        (lit(v), _bloom_excludes(v)) for v in vals if v is not None
+    ]
+    unknown = any(k is None for k, _ in tests)
+
+    def survives(s) -> bool:
+        mn, mx = s[lo], s[lo + 1]
+        if op != "in":
+            k, excl = tests[0]
+            if mn is not None and mx is not None and not in_range(
+                key(mn), key(mx), k
+            ):
+                return False
+            return op != "==" or not excl(s[6])
+        if mn is None or mx is None or unknown:
+            return True
+        kmn, kmx = key(mn), key(mx)
+        return any(
+            in_range(kmn, kmx, k) and not excl(s[6]) for k, excl in tests
+        )
+
+    return survives
+
+
+def chunk_predicate(filters: list[tuple]):
+    """``(columns, survives)``: ``survives`` maps one chunk's stats,
+    ``{column: stats row}``, to False only when the stats PROVE that no
+    row of the chunk matches every conjunct; ``columns`` names the
+    columns whose stats it reads. Each conjunct needs one leaf whose
+    column stats may match (an ``or`` conjunct's leaves, parquet4s
+    boolean algebra, Filter.scala:79-89); a column without a stats row
+    never prunes. The one rule set of scan, pruned_chunk_count and
+    filtered_min_max, evaluated inside the decode worker
+    (decoder.decode_worker)."""
+    conjuncts = [
+        [(col, _leaf_survives(col, op, val)) for col, op, val in _leaves(f)]
+        for f in filters
+    ]
+    columns = frozenset(col for leaves in conjuncts for col, _ in leaves)
+
+    def survives(stats: dict) -> bool:
+        for leaves in conjuncts:
+            if not any(
+                col not in stats or ok(stats[col]) for col, ok in leaves
+            ):
+                return False
+        return True
+
+    return columns, survives
 
 
 def _leaf_condition(f) -> "F.Column":
@@ -296,38 +331,11 @@ def _leaf_condition(f) -> "F.Column":
 def _residual_condition(filters: list[tuple]) -> "F.Column":
     cond = F.lit(True)
     for f in filters:
-        if f and f[0] == "or":
-            branch = F.lit(False)
-            for leaf in f[1]:
-                branch = branch | _leaf_condition(leaf)
-            cond = cond & branch
-            continue
-        cond = cond & _leaf_condition(f)
+        branch = F.lit(False)
+        for leaf in _leaves(f):
+            branch = branch | _leaf_condition(leaf)
+        cond = cond & branch
     return cond
-
-
-def _alive_chunk_ids(
-    manifest: DataFrame, filters: list[tuple], with_bloom: bool
-) -> DataFrame:
-    """chunk_ids that MIGHT match every conjunct, in ONE aggregation
-    pass over the manifest: per chunk, each conjunct needs SOME stats
-    row admitting a match (max-of-indicator ≡ EXISTS). The previous
-    shape — one left-semi join per conjunct — shuffled the manifest k
-    times for k conjuncts; at 100 TB the manifest is ~10^7 rows, so
-    this is the difference between one exchange and k."""
-    if not filters:
-        return manifest.select("chunk_id").distinct()
-    aggs = [
-        F.max(
-            F.when(_conjunct_manifest_expr(f, with_bloom), 1).otherwise(0)
-        ).alias(f"_c{i}")
-        for i, f in enumerate(filters)
-    ]
-    alive = manifest.groupBy("chunk_id").agg(*aggs)
-    cond = F.lit(True)
-    for i in range(len(filters)):
-        cond = cond & (F.col(f"_c{i}") == 1)
-    return alive.where(cond).select("chunk_id")
 
 
 def scan(
@@ -339,15 +347,18 @@ def scan(
     """Projected, filtered scan of an encoded dataset.
 
     ``filters``: list of (column, op, value) conjuncts, op in
-    {==, !=, <, <=, >, >=, in, is_null, not_null}. Two-stage: manifest
-    min/max prunes whole chunks (no payload I/O), then the exact
-    predicate re-applies on decoded rows — the same split parquet4s
-    performs between partition filters and file filters
+    {==, !=, <, <=, >, >=, in, is_null, not_null}; any other op raises
+    ValueError. Two-stage: chunk stats prune whole chunks (no decode),
+    then the exact predicate re-applies on decoded rows — the same
+    split parquet4s performs between partition filters and file filters
     (/root/reference/core/src/main/scala/com/github/mjakubowski84/parquet4s/PartitionFilter.scala:338-422).
 
-    One plan: the surviving chunk ids semi-join the chunk rows, which
-    decode_table reassembles by chunk_id. The manifest is the only
-    index.
+    One plan, the read_decoded plan: the decode worker receives each
+    chunk's stats with its payloads and decodes only chunks whose stats
+    may match (chunk_predicate), then the residual predicate filters
+    rows. On a local, file: or s3:// dataset that is the fused reader:
+    one Spark job, no exchange, no manifest read; on JVM-only schemes
+    and empty datasets, the chunk_id exchange plan with the same worker.
     """
     schema = read_schema(path)
     filters = list(filters or [])
@@ -356,18 +367,10 @@ def scan(
     for f in filters:
         need_cols.update(_filter_cols(f))
 
-    chunks = read_chunks(spark, path)
-    if filters:
-        manifest = read_manifest(spark, path)
-        # a chunk survives iff EVERY conjunct's per-column check passes
-        # bloom-assisted pruning only when the manifest carries the
-        # column (datasets written before it existed scan unchanged)
-        wb = "bloom" in manifest.columns
-        # no broadcast hint: the surviving-chunk set is unbounded at
-        # 100 TB (~10^7 ids); AQE converts to broadcast when it IS small
-        alive = _alive_chunk_ids(manifest, filters, wb)
-        chunks = chunks.join(alive, on="chunk_id", how="left_semi")
-    decoded = decode_table(chunks, schema, columns=sorted(need_cols))
+    decoded = _decode_plan(
+        spark, path, schema, columns=sorted(need_cols),
+        filters=filters or None,
+    )
     if filters:
         decoded = decoded.where(_residual_condition(filters))
     if columns:
@@ -393,7 +396,7 @@ def filtered_min_max(
     1. decode only the ``seed_chunks`` most extreme surviving chunks
        (smallest min_d for the min, largest max_d for the max) and
        compute concrete filtered extremes from their rows;
-    2. decode the remaining survivors ONLY where the manifest range
+    2. decode the remaining survivors ONLY where the stats range
        could still beat those extremes (min_d < current min, or
        max_d > current max).
     On range-sorted data phase 2 is usually empty, so a filtered
@@ -403,14 +406,15 @@ def filtered_min_max(
     filters = list(filters or [])
     schema = read_schema(path)  # reused below — one metadata read
     _check_filter_types(schema, filters)
-    manifest = read_manifest(spark, path)
-    wb = "bloom" in manifest.columns
-    alive = _alive_chunk_ids(manifest, filters, wb)
-    # stats rows of the target column for surviving chunks — stays a
-    # DataFrame (12.5M chunks at 100 TB never land on the driver)
+    need = sorted({column} | {c for f in filters for c in _filter_cols(f)})
+    # the target column's stats for surviving chunks, from scan's own
+    # prune with decoding off (no payload is read) — stays a DataFrame
+    # (12.5M chunks at 100 TB never land on the driver)
     stats = (
-        manifest.where(F.col("column") == column)
-        .join(alive, on="chunk_id", how="left_semi")
+        _decode_plan(
+            spark, path, schema, columns=need, filters=filters, decode=False
+        )
+        .where(F.col("alive") & (F.col("column") == column))
         .select("chunk_id", "min_d", "max_d")
     )
     n_nostat = stats.where(
@@ -436,8 +440,6 @@ def filtered_min_max(
     seed_ids = sorted(set(lo_ids) | set(hi_ids))
     if not seed_ids:
         return None, None
-
-    need = sorted({column} | {c for f in filters for c in _filter_cols(f)})
 
     def _extremes(id_filter) -> tuple[Any, Any]:
         chunks = read_chunks(spark, path).join(id_filter, "chunk_id", "left_semi")
@@ -482,25 +484,53 @@ def pruned_chunk_count(
     spark: SparkSession, path: str, filters: list[tuple]
 ) -> tuple[int, int]:
     """(surviving_chunks, total_chunks) for a filter — test/observability
-    hook proving chunk skipping actually skips. Validates literal types
+    hook proving chunk skipping actually skips. Validates filters
     against the schema exactly as scan() does (a cross-typed literal
-    would count range drops against stats from the wrong domain)."""
-    _check_filter_types(read_schema(path), filters)
-    manifest = read_manifest(spark, path)
-    wb = "bloom" in manifest.columns
-    total = manifest.select("chunk_id").distinct().count()
-    return _alive_chunk_ids(manifest, filters, wb).count(), total
+    would count range drops against stats from the wrong domain), and
+    counts with scan's own prune: the surviving chunks are the chunks a
+    scan with ``filters`` decodes."""
+    schema = read_schema(path)
+    filters = list(filters or [])
+    _check_filter_types(schema, filters)
+    cols = sorted({c for f in filters for c in _filter_cols(f)})
+    cols = cols or [schema.fields[0].name]
+    row = (
+        _decode_plan(
+            spark, path, schema, columns=cols, filters=filters, decode=False
+        )
+        .where(F.col("column") == cols[0])
+        .agg(
+            F.count(F.when(F.col("alive"), 1)).alias("alive"),
+            F.count(F.lit(1)).alias("total"),
+        )
+        .collect()[0]
+    )
+    return row["alive"], row["total"]
+
+
+def _leaves(f) -> list[tuple]:
+    """A conjunct's (column, op, value) leaves: an ``or`` conjunct's
+    branches, else the conjunct itself. Raises on an op outside
+    _OPS."""
+    branches = f[1] if f and f[0] == "or" else [f]
+    leaves = [(tuple(lf) + (None,))[:3] for lf in branches]
+    for col, op, _ in leaves:
+        if op not in _OPS:
+            raise ValueError(
+                f"unsupported filter op {op!r} on column {col!r}; "
+                f"supported ops: {', '.join(sorted(_OPS))}"
+            )
+    return leaves
 
 
 def _filter_cols(f) -> set[str]:
-    if f and f[0] == "or":
-        return {leaf[0] for leaf in f[1]}
-    return {f[0]}
+    return {col for col, _, _ in _leaves(f)}
 
 
 def _check_filter_types(schema, filters: list[tuple]) -> None:
-    """Reject filter literals whose Python kind mismatches the column
-    type. parquet4s filters are statically typed (Filter.scala builds
+    """Reject ops outside _OPS (plain and ``or`` leaves alike) and
+    filter literals whose Python kind mismatches the column type.
+    parquet4s filters are statically typed (Filter.scala builds
     them from typed codecs — a mismatched literal cannot compile);
     here a mismatched literal would silently fall into the WRONG stats
     domain: e.g. an int column's min_s/max_s hold stringified numbers,
@@ -551,26 +581,8 @@ def _check_filter_types(schema, filters: list[tuple]) -> None:
                 )
 
     for f in filters:
-        if f and f[0] == "or":
-            for lf in f[1]:
-                leaf(*(tuple(lf) + (None,))[:3])
-        else:
-            leaf(*(tuple(f) + (None,))[:3])
-
-
-def _conjunct_manifest_expr(f, with_bloom: bool = False) -> "F.Column":
-    """Manifest-row predicate for one conjunct: the chunk has SOME stats
-    row proving a possible match. OR-conjuncts survive if any branch's
-    column stats admit a match."""
-    if f and f[0] == "or":
-        expr = F.lit(False)
-        for leaf in f[1]:
-            expr = expr | (
-                (F.col("column") == leaf[0])
-                & _chunk_survives(tuple(leaf), with_bloom)
-            )
-        return expr
-    return (F.col("column") == f[0]) & _chunk_survives(tuple(f), with_bloom)
+        for lf in _leaves(f):
+            leaf(*lf)
 
 
 def scan_udp(

@@ -370,7 +370,7 @@ def q_scan_bloom_point(spark, sf):
     parquet4s exposes no bloom knobs, so this is beyond-reference scale
     capability): min/max stats cannot prune equality on
     high-cardinality keys whose range spans every chunk, but the
-    per-chunk bloom in the manifest (codecs/bloom.py) drops every chunk
+    per-chunk bloom (codecs/bloom.py) drops every chunk
     that provably lacks the value. Exercises BOTH key kinds end to end:
     a string lookup (three lexicographically smallest c_name values
     over customer) and a KIND_INT lookup (three smallest o_orderkey
@@ -378,7 +378,8 @@ def q_scan_bloom_point(spark, sf):
     DuckDB's plain filters (pruning may only ever UNDER-prune). The
     fixture datasets are encoded once per process (bloom_fixture_paths)
     — the timed body is probe + pruned decode only, through scan's one
-    plan (manifest prune, chunk_id semi-join, decode)."""
+    plan (the fused read, whose decode worker drops chunks by their
+    stats and blooms, then the residual filter)."""
     from .engine.scan import scan
 
     cust_path, orders_path = bloom_fixture_paths(spark, sf)

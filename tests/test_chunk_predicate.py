@@ -1,0 +1,311 @@
+"""Soundness of scan's chunk predicate (engine/scan.chunk_predicate).
+
+The predicate runs inside the decode worker: a chunk is decoded only if
+its stats rows may match every conjunct. A wrong "drop" silently loses
+rows, so the rule set gets the hypothesis treatment on chunks encoded by
+the real encoder (the stats rows it writes: truncated string bounds,
+widened bounds for ints beyond 2^53, NULL stats for NaN-bearing float
+chunks, blooms), against a row matcher with Spark's comparison
+semantics. The Spark-backed tests then pin that a filtered scan equals
+a full read filtered by the same predicate, on the fused plan over
+epochs and compaction and on the exchange fallback (viewfs://), and
+that pruned_chunk_count counts exactly the chunks a scan decodes.
+"""
+
+from __future__ import annotations
+
+import math
+import os
+
+import pyarrow as pa
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+import pyspark.sql.functions as F
+from pyspark.sql import types as T
+
+from colcrush.engine import (
+    compact_epochs,
+    pruned_chunk_count,
+    read_decoded,
+    read_schema,
+    scan,
+    write_encoded,
+)
+from colcrush.engine.dataset import _chunk_file_batches, _committed_part_files
+from colcrush.engine.decoder import decode_worker
+from colcrush.engine.encoder import _OUT_COLS, _encode_chunk_into, _rows_to_batch
+from colcrush.engine.scan import _filter_cols, _residual_condition
+from colcrush.fixtures import source_code_df
+
+NAN = float("nan")
+BIG = 1 << 53
+
+# (arrow type, spark type, value strategy) per column kind
+FLOATS = st.one_of(
+    st.none(),
+    st.just(NAN),
+    st.sampled_from([0.0, -0.0, 1.5, -2.0, math.inf, -math.inf]),
+    st.floats(-1e6, 1e6, allow_nan=False),
+)
+STRINGS = st.one_of(
+    st.none(),
+    # up to 90 chars: stats past 64 chars are truncated bounds
+    st.text(alphabet="abé\U0010ffff", max_size=90),
+)
+INTS = st.one_of(
+    st.none(),
+    st.integers(BIG - 3, BIG + 3),
+    st.integers(-BIG - 3, -BIG + 3),
+    st.integers(-(1 << 63), (1 << 63) - 1),
+    st.integers(-5, 5),
+)
+KINDS = {
+    "float": (pa.float64(), T.DoubleType(), FLOATS),
+    "string": (pa.string(), T.StringType(), STRINGS),
+    "int": (pa.int64(), T.LongType(), INTS),
+}
+
+
+def _key(x):
+    """Spark's order on one column kind: NaN equals NaN, above +inf."""
+    if isinstance(x, float):
+        return (1, 0.0) if x != x else (0, x)
+    return (0, x)
+
+
+def _cmp(v, lit) -> int:
+    if isinstance(v, float) or isinstance(lit, float):
+        # a double column compares an int literal as a double
+        v, lit = float(v), float(lit)
+    a, b = _key(v), _key(lit)
+    return (a > b) - (a < b)
+
+
+def _matches(v, op, lit) -> bool:
+    if op == "is_null":
+        return v is None
+    if op == "not_null":
+        return v is not None
+    if v is None:
+        return False
+    if op == "in":
+        return any(x is not None and _cmp(v, x) == 0 for x in lit)
+    c = _cmp(v, lit)
+    return {"==": c == 0, "<": c < 0, "<=": c <= 0, ">": c > 0, ">=": c >= 0}[op]
+
+
+def _row_matches(v, filters) -> bool:
+    return all(
+        any(_matches(v, op, lit) for _, op, lit in (f[1] if f[0] == "or" else [f]))
+        for f in filters
+    )
+
+
+def _literals(kind, values):
+    """Literals near the chunk values: the values, their neighbours and
+    a few off-range constants, so that range and bloom drops both fire."""
+    present = [v for v in values if v is not None]
+    if kind == "int":
+        near = [v + d for v in present for d in (-1, 1)]
+        near = [v for v in near if -(1 << 63) <= v < (1 << 63)]
+        extra = [0, BIG, -BIG, 12345]
+    elif kind == "float":
+        near = [math.nextafter(v, math.inf) for v in present if v == v]
+        extra = [NAN, 0.0, 2.5, math.inf, -math.inf]
+    else:
+        near = [v + "a" for v in present] + [v[:-1] for v in present if v]
+        extra = ["", "b", "zz", "a" * 70, "x" * 300]
+    return present + near + extra
+
+
+@st.composite
+def _case(draw):
+    kind = draw(st.sampled_from(sorted(KINDS)))
+    strat = KINDS[kind][2]
+    chunks = draw(
+        st.lists(st.lists(strat, min_size=1, max_size=12), min_size=1, max_size=4)
+    )
+    lits = _literals(kind, [v for c in chunks for v in c])
+    lit = st.sampled_from(lits)
+    leaf = st.one_of(
+        st.tuples(st.just("v"), st.sampled_from(["==", "<", "<=", ">", ">="]), lit),
+        st.tuples(st.just("v"), st.just("in"), st.lists(lit, min_size=1, max_size=3)),
+        st.tuples(st.just("v"), st.sampled_from(["is_null", "not_null"]), st.none()),
+    )
+    conjunct = leaf | st.tuples(st.just("or"), st.lists(leaf, min_size=2, max_size=3))
+    filters = draw(st.lists(conjunct, min_size=1, max_size=3))
+    return kind, chunks, filters
+
+
+def _encode(kind, chunks):
+    """One chunk-row batch per chunk, exactly as the encoder writes them."""
+    arrow_type = KINDS[kind][0]
+    out = []
+    for seq, values in enumerate(chunks):
+        rows = {c: [] for c in _OUT_COLS}
+        batch = pa.record_batch([pa.array(values, type=arrow_type)], names=["v"])
+        _encode_chunk_into(rows, [batch], "g", 0, seq, "balanced")
+        out.append(_rows_to_batch(rows))
+    return out
+
+
+@settings(max_examples=300, deadline=None)
+@given(_case())
+def test_chunk_predicate_never_drops_a_matching_chunk(case):
+    kind, chunks, filters = case
+    schema = T.StructType([T.StructField("v", KINDS[kind][1])])
+    batches = _encode(kind, chunks)
+    *_, decode_fn = decode_worker(schema, filters=filters)
+    decoded = [len(list(decode_fn(iter([b])))) for b in batches]
+    for values, n in zip(chunks, decoded):
+        assert n in (0, 1)
+        if n == 0:
+            hits = [v for v in values if _row_matches(v, filters)]
+            assert not hits, f"dropped a chunk holding matches {hits!r} of {filters!r}"
+    # the prune pass (decode off) keeps exactly the chunks decoding keeps
+    *_, prune_fn = decode_worker(schema, filters=filters, decode=False)
+    (verdicts,) = list(prune_fn(iter(batches)))
+    assert verdicts.column("alive").to_pylist() == [n == 1 for n in decoded]
+
+
+def _chunks_scan_decodes(path, filters):
+    """Chunks the scan's decode worker decodes over the dataset's part
+    files, counted in-process (one output batch per decoded chunk)."""
+    schema = read_schema(path)
+    need = sorted({f.name for f in schema.fields} | {
+        c for f in filters for c in _filter_cols(f)
+    })
+    ordered, in_schema, _, fn = decode_worker(schema, columns=need, filters=filters)
+    files = [f for f, _ in _committed_part_files(path)]
+    return sum(1 for _ in fn(_chunk_file_batches(files, ordered, in_schema)))
+
+
+def _rows(df):
+    # NaN != NaN: compare it as a marker
+    def cell(x):
+        return "NaN" if isinstance(x, float) and x != x else x
+
+    return sorted((tuple(map(cell, r)) for r in df.collect()), key=repr)
+
+
+def _assert_scan_equals_filtered_read(spark, path, filters, columns=None):
+    got = scan(spark, path, columns=columns, filters=filters)
+    want = read_decoded(spark, path).where(_residual_condition(filters))
+    if columns:
+        want = want.select(*columns)
+    assert _rows(got) == _rows(want), filters
+
+
+def test_scan_matches_filtered_read_on_value_edge_cases(spark, tmp_path):
+    """NULLs, NaN, strings past the 64-char stats truncation and ints
+    beyond 2^53, in small chunks: every filter's scan equals the full
+    read filtered, and pruned_chunk_count equals the chunks decoded."""
+    rows = []
+    for i in range(240):
+        rows.append((
+            i,
+            None if i % 11 == 0 else (NAN if i % 17 == 0 else float(i % 40) - 7.5),
+            None if i % 13 == 0 else ("p" * 66 + f"{i:03d}" if i % 2 else f"s{i:03d}"),
+            None if i % 19 == 0 else BIG + (i % 7) - 3,
+        ))
+    df = spark.createDataFrame(rows, "i long, f double, s string, n long")
+    path = str(tmp_path / "edge")
+    write_encoded(df, path, range_cols=["i"], target_chunk_rows=24)
+    long_s = "p" * 66 + "031"
+    cases = [
+        [("f", ">", 10.0)],
+        [("f", "==", NAN)],
+        [("f", "<", -5.0)],
+        [("s", "==", long_s)],
+        [("s", ">=", "p" * 66 + "2")],
+        [("s", "in", ["s004", long_s, "zz"])],
+        [("n", "==", BIG + 2)],
+        [("n", "<", BIG - 2)],
+        [("n", "in", [BIG - 3, BIG + 100])],
+        [("f", "is_null")],
+        [("s", "not_null"), ("i", "<", 60)],
+        [("or", [("i", "<", 10), ("n", ">=", BIG + 3)])],
+        [("i", ">=", 200), ("f", "<=", 0.0)],
+    ]
+    for filters in cases:
+        _assert_scan_equals_filtered_read(spark, path, filters)
+        alive, total = pruned_chunk_count(spark, path, filters)
+        assert total >= 8
+        assert alive == _chunks_scan_decodes(path, filters), filters
+    alive, total = pruned_chunk_count(spark, path, [("i", "<", 24)])
+    assert alive < total
+
+
+def test_scan_matches_filtered_read_over_epochs_and_compaction(spark, tmp_path):
+    ds = str(tmp_path / "ds")
+    df = source_code_df(spark, 300, n_repos=4)
+    write_encoded(
+        df.where(F.col("lang") < "m"), os.path.join(ds, "epoch=00000000"),
+        mode="overwrite", group_cols=["lang"], namespace="epoch-0",
+    )
+    write_encoded(
+        df.where(F.col("lang") >= "m"), os.path.join(ds, "epoch=00000001"),
+        mode="overwrite", group_cols=["lang"], namespace="epoch-1",
+    )
+    key = df.orderBy("path").first()
+    cases = [
+        [("path", "==", key["path"])],
+        [("lang", "in", ["python", "rust"])],
+        [("or", [("lang", "<", "c"), ("commit", "==", key["commit"])])],
+    ]
+    for stage in ("epochs", "compacted"):
+        if stage == "compacted":
+            assert compact_epochs(spark, ds) == 2
+        for filters in cases:
+            _assert_scan_equals_filtered_read(
+                spark, ds, filters, columns=["path", "lang"]
+            )
+            alive, _ = pruned_chunk_count(spark, ds, filters)
+            assert alive == _chunks_scan_decodes(ds, filters), (stage, filters)
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_scan_matches_filtered_read_over_viewfs(spark, tmp_path):
+    """viewfs:// is JVM-only: scan runs the chunk_id exchange fallback,
+    whose worker prunes with the same predicate."""
+    conf = spark._jsc.hadoopConfiguration()
+    conf.set(
+        "fs.viewfs.mounttable.colcrushscan.link./data", f"file://{tmp_path}"
+    )
+    uri = "viewfs://colcrushscan/data/ds"
+    df = source_code_df(spark, 300, n_repos=4)
+    write_encoded(df, uri, mode="overwrite", group_cols=["lang"])
+    key = df.orderBy("path").first()["path"]
+    filters = [("path", "==", key)]
+    got = scan(spark, uri, filters=filters)
+    assert "Exchange hashpartitioning(chunk_id" in _plan(got)
+    assert _rows(got) == _rows(df.where(F.col("path") == key))
+    _assert_scan_equals_filtered_read(spark, uri, [("lang", ">=", "p")])
+    alive, total = pruned_chunk_count(spark, uri, filters)
+    # the local view of the same files: identical verdicts
+    assert (alive, total) == pruned_chunk_count(spark, str(tmp_path / "ds"), filters)
+    assert alive < total
+
+
+@pytest.mark.parametrize(
+    "filters",
+    [[("k", "=", 5)], [("or", [("k", "<", 1), ("k", "like", "a%")])]],
+)
+def test_unsupported_filter_op_raises_everywhere(spark, tmp_path, filters):
+    from colcrush.engine import filtered_min_max
+
+    path = str(tmp_path / "ds")
+    write_encoded(spark.range(64).select(F.col("id").alias("k")), path)
+    bad = "'='" if filters[0][0] == "k" else "'like'"
+    for call in (
+        lambda: scan(spark, path, filters=filters),
+        lambda: pruned_chunk_count(spark, path, filters),
+        lambda: filtered_min_max(spark, path, "k", filters),
+    ):
+        with pytest.raises(ValueError, match=f"unsupported filter op {bad}"):
+            call()

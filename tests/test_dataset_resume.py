@@ -140,6 +140,30 @@ def test_write_encoded_job_count_and_no_file_map(spark, tmp_path):
     assert read_decoded(spark, streamed).count() == 400
 
 
+def test_scan_lookup_is_one_job_without_exchange(spark, tmp_path):
+    """An equality scan on a local dataset is one Spark job: the decode
+    worker prunes chunks from the stats their rows carry, so the plan
+    reads no manifest/ and has no exchange."""
+    sc = spark.sparkContext
+    df = source_code_df(spark, 400, n_repos=6)
+    ds = str(tmp_path / "ds")
+    write_encoded(df, ds, group_cols=["repo", "lang"])
+    key = df.orderBy("path").first()["path"]
+    got = scan(spark, ds, columns=["path", "lang"], filters=[("path", "==", key)])
+    group = "scan-lookup-job-count"
+    sc.setJobGroup(group, "one equality scan")
+    try:
+        rows = got.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert "manifest" not in plan, plan
+    want = df.where(F.col("path") == key).select("path", "lang").collect()
+    assert sorted(rows) == sorted(want) and rows
+
+
 def test_read_decoded_matches_source(spark, src, tmp):
     write_encoded(src, tmp, group_cols=["repo", "lang"])
     dec = read_decoded(spark, tmp)
