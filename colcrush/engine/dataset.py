@@ -605,10 +605,11 @@ def verify_dataset(
     says "every committed chunk is present, exactly once, and intact"
     without decoding anything. Detects, per (chunk_id, column) key:
     manifest rows whose chunk payload is gone (lost files), chunk rows
-    the manifest never committed (orphans from a crashed write — the
-    manifest-commits-chunks protocol makes these invisible to readers,
-    but they cost storage), duplicate keys on either side (a resume
-    bug would double-append), and stored-checksum divergence between
+    the manifest never committed (orphans from a crashed write —
+    readers list every part file and decode these rows too, while the
+    manifest-based stats do not count them; resume_encode removes
+    them), duplicate keys on either side (a resume bug would
+    double-append), and stored-checksum divergence between
     the manifest copy and the chunk copy. ``deep=True`` additionally
     re-computes every payload's md5 checksum from its bytes (the same
     verification decode performs, but over ALL columns without
@@ -766,6 +767,12 @@ def resume_encode(
     Chunk determinism (hash partitioning on group+salt, sorted rows,
     content-independent chunk ids) guarantees a resumed run reproduces
     byte-identical chunks for the missing groups.
+
+    When a manifest exists, the chunk part files of a write that
+    crashed before its manifest rows landed are removed first
+    (_remove_orphan_chunk_files): readers list every part file, so
+    those chunks would otherwise be read beside their re-encoded
+    copies. Run it with no other writer on ``path``.
     """
     spark = df.sparkSession
     manifest_path = fsio.join(path, MANIFEST_DIR)
@@ -788,6 +795,7 @@ def resume_encode(
             have_manifest = False  # fresh restart: every group pending
     else:
         have_manifest = True
+        _remove_orphan_chunk_files(spark, path)
     if not have_manifest:
         pending = df.withColumn("_gk", key_expr)
     else:
@@ -848,3 +856,42 @@ def resume_encode(
         return n_missing
     finally:
         pend_groups.unpersist()
+
+
+def _remove_orphan_chunk_files(spark: SparkSession, path: str) -> None:
+    """Delete the chunk part files whose chunk ids the manifest never
+    committed — what a write that crashed between its chunk and
+    manifest jobs leaves. One Spark action over every part file's
+    chunk_id column. Raises, deleting nothing, when a file mixes
+    committed and uncommitted ids: removing it would lose committed
+    rows."""
+    from urllib.parse import unquote
+
+    committed = (
+        read_manifest(spark, path)
+        .select("chunk_id")
+        .distinct()
+        .withColumn("committed", F.lit(1))
+    )
+    orphans = (
+        read_chunks(spark, path)
+        .select(F.input_file_name().alias("file"), "chunk_id")
+        .join(committed, "chunk_id", "left")
+        .groupBy("file")
+        .agg(
+            F.count(F.when(F.col("committed").isNull(), 1)).alias("orphan"),
+            F.count("committed").alias("committed"),
+        )
+        .where(F.col("orphan") > 0)
+        .collect()
+    )
+    mixed = [r["file"] for r in orphans if r["committed"]]
+    if mixed:
+        raise ValueError(
+            f"{path}: part files mix committed and uncommitted chunks "
+            f"({mixed[:3]}); removing them would lose committed rows"
+        )
+    # Spark reports URIs; delete the reader's own listing entry
+    listed = {f.rsplit("/", 1)[-1]: f for f, _ in _committed_part_files(path)}
+    for r in orphans:
+        fsio.remove(listed[unquote(r["file"].rsplit("/", 1)[-1])])

@@ -100,15 +100,9 @@ STATS_FIELDS = (
     pa.field("bloom", pa.list_(pa.int64())),
 )
 
-# the prune pass (decode=False): one row per (chunk, requested column)
+# the prune pass (decode=False): one verdict row per chunk
 PRUNE_SCHEMA = pa.schema(
-    [
-        pa.field("chunk_id", pa.string()),
-        pa.field("column", pa.string()),
-        pa.field("alive", pa.bool_()),
-        pa.field("min_d", pa.float64()),
-        pa.field("max_d", pa.float64()),
-    ]
+    [pa.field("chunk_id", pa.string()), pa.field("alive", pa.bool_())]
 )
 
 
@@ -196,9 +190,8 @@ def decode_worker(
     rows have arrived it is decoded only if scan.chunk_predicate says
     its stats may match every conjunct; payload checksums are checked
     only for chunks that are decoded. ``decode=False`` is the prune
-    pass alone: no payload is read, and ``fn`` yields PRUNE_SCHEMA rows,
-    one per (chunk, requested column), with the chunk's verdict and
-    that column's min_d/max_d."""
+    pass alone (scan.pruned_chunk_count): no payload is read, and ``fn``
+    yields PRUNE_SCHEMA rows, one per chunk with its verdict."""
     requested = set(columns or [f.name for f in schema.fields])
     missing = requested - {f.name for f in schema.fields}
     if missing:
@@ -216,9 +209,7 @@ def decode_worker(
         from .scan import chunk_predicate
 
         filter_cols, survives = chunk_predicate(filters or [])
-        # the prune pass reports every requested column's stats
-        stat_cols = requested if not decode else filter_cols & requested
-        stat_set = pa.array(sorted(stat_cols), type=pa.string())
+        stat_set = pa.array(sorted(filter_cols & requested), type=pa.string())
         stat_names = ["chunk_id", "column", *(f.name for f in STATS_FIELDS)]
     with_ck = with_ck and decode
     in_schema = pa.schema(
@@ -275,7 +266,7 @@ def decode_worker(
         pa.set_cpu_count(1)  # executor runs one worker per core already
         pending: dict[str, dict] = {}
         stats: dict[str, dict[str, list]] = {}
-        verdicts: dict[str, list] = {n: [] for n in PRUNE_SCHEMA.names}
+        verdicts: tuple[list, list] = ([], [])
         for batch in it:
             if survives is not None:
                 sub = batch.filter(
@@ -301,11 +292,8 @@ def decode_worker(
                 st = stats.pop(cid, {})
                 alive = survives is None or survives(st)
                 if not decode:
-                    for c in columns:
-                        s = st.get(c)
-                        row = (cid, c, alive, s and s[4], s and s[5])
-                        for n, v in zip(PRUNE_SCHEMA.names, row):
-                            verdicts[n].append(v)
+                    verdicts[0].append(cid)
+                    verdicts[1].append(alive)
                 elif alive:
                     yield decoded(cid, d)
         if pending:
@@ -314,7 +302,7 @@ def decode_worker(
             )
         if not decode:
             yield pa.record_batch(
-                [pa.array(verdicts[f.name], f.type) for f in PRUNE_SCHEMA],
+                [pa.array(v, f.type) for v, f in zip(verdicts, PRUNE_SCHEMA)],
                 schema=PRUNE_SCHEMA,
             )
 

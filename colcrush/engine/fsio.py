@@ -226,6 +226,28 @@ def rmtree(path: str) -> None:
     fs.delete(p, True)
 
 
+def remove(path: str) -> None:
+    """Delete one file; a missing file is no error, as in rmtree."""
+    if not has_scheme(path):
+        # a local Hadoop write leaves a .<name>.crc checksum beside it
+        d, name = os.path.split(path)
+        for f in (path, os.path.join(d, f".{name}.crc")):
+            try:
+                os.remove(f)
+            except FileNotFoundError:
+                pass
+        return
+    if _is_s3(path):
+        s3, key = _s3(path)
+        try:
+            s3.delete_file(key)
+        except FileNotFoundError:
+            pass
+        return
+    _, fs, p = _fs(path)
+    fs.delete(p, False)
+
+
 def read_text(path: str) -> str:
     if not has_scheme(path):
         with open(path) as f:

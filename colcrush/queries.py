@@ -276,10 +276,10 @@ def q_stats_filtered_minmax(spark, sf):
 
 
 def q_stats_engine_minmax(spark, sf):
-    """Engine filtered min/max with early-termination chunk skipping
-    (FilteredFileStats.scala:129-143 analog): encode lineitem range-
-    sorted, then answer a filtered min/max decoding only boundary
-    chunks; values must equal DuckDB's full filtered aggregate."""
+    """Engine filtered min/max (FilteredFileStats.scala:129-143
+    analog): encode lineitem range-sorted, then answer a filtered
+    min/max with one filtered scan that decodes only the chunks the
+    stats keep; values must equal DuckDB's full filtered aggregate."""
     import shutil
     import tempfile
 

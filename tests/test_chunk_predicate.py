@@ -8,8 +8,10 @@ widened bounds for ints beyond 2^53, NULL stats for NaN-bearing float
 chunks, blooms), against a row matcher with Spark's comparison
 semantics. The Spark-backed tests then pin that a filtered scan equals
 a full read filtered by the same predicate, on the fused plan over
-epochs and compaction and on the exchange fallback (viewfs://), and
-that pruned_chunk_count counts exactly the chunks a scan decodes.
+epochs and compaction and on the exchange fallback (viewfs://), that
+pruned_chunk_count counts exactly the chunks a scan decodes, and that
+the stats layer built on the scan (filtered_min_max, column_min_max)
+returns Spark's own min/max.
 """
 
 from __future__ import annotations
@@ -26,9 +28,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import types as T
 
 from colcrush.engine import (
+    column_min_max,
     compact_epochs,
+    filtered_min_max,
     pruned_chunk_count,
     read_decoded,
+    read_manifest,
     read_schema,
     scan,
     write_encoded,
@@ -182,12 +187,13 @@ def _chunks_scan_decodes(path, filters):
     return sum(1 for _ in fn(_chunk_file_batches(files, ordered, in_schema)))
 
 
-def _rows(df):
+def _cell(x):
     # NaN != NaN: compare it as a marker
-    def cell(x):
-        return "NaN" if isinstance(x, float) and x != x else x
+    return "NaN" if isinstance(x, float) and x != x else x
 
-    return sorted((tuple(map(cell, r)) for r in df.collect()), key=repr)
+
+def _rows(df):
+    return sorted((tuple(map(_cell, r)) for r in df.collect()), key=repr)
 
 
 def _assert_scan_equals_filtered_read(spark, path, filters, columns=None):
@@ -198,21 +204,48 @@ def _assert_scan_equals_filtered_read(spark, path, filters, columns=None):
     assert _rows(got) == _rows(want), filters
 
 
-def test_scan_matches_filtered_read_on_value_edge_cases(spark, tmp_path):
-    """NULLs, NaN, strings past the 64-char stats truncation and ints
-    beyond 2^53, in small chunks: every filter's scan equals the full
-    read filtered, and pruned_chunk_count equals the chunks decoded."""
-    rows = []
-    for i in range(240):
-        rows.append((
-            i,
-            None if i % 11 == 0 else (NAN if i % 17 == 0 else float(i % 40) - 7.5),
-            None if i % 13 == 0 else ("p" * 66 + f"{i:03d}" if i % 2 else f"s{i:03d}"),
-            None if i % 19 == 0 else BIG + (i % 7) - 3,
-        ))
+# a string past the stats truncation whose 64-char prefix ends in
+# U+10FFFF: its max stat cannot be incremented and is recorded as NULL
+ASTRAL = "\U0010ffff" * 70
+
+
+def _float_value(i):
+    if i % 11 == 0:
+        return None
+    if i % 17 == 0:
+        return NAN
+    if i % 23 == 5:
+        return math.inf
+    if i % 29 == 7:
+        return -math.inf
+    return float(i % 40) - 7.5
+
+
+def _string_value(i):
+    if i % 13 == 0:
+        return None
+    if i == 101:
+        return ASTRAL
+    return "p" * 66 + f"{i:03d}" if i % 2 else f"s{i:03d}"
+
+
+def _write_edge_dataset(spark, path):
+    """NULLs, NaN, +-inf, strings past the 64-char stats truncation and
+    ints around 2^53 in 24-row chunks, range-sorted on ``i``; rows 240
+    to 287 are NULL but for ``i``, so at least one chunk is all-NULL."""
+    rows = [
+        (i, _float_value(i), _string_value(i), None if i % 19 == 0 else BIG + (i % 7) - 3)
+        for i in range(240)
+    ] + [(i, None, None, None) for i in range(240, 288)]
     df = spark.createDataFrame(rows, "i long, f double, s string, n long")
-    path = str(tmp_path / "edge")
     write_encoded(df, path, range_cols=["i"], target_chunk_rows=24)
+
+
+def test_scan_matches_filtered_read_on_value_edge_cases(spark, tmp_path):
+    """Every filter's scan over the edge-value dataset equals the full
+    read filtered, and pruned_chunk_count equals the chunks decoded."""
+    path = str(tmp_path / "edge")
+    _write_edge_dataset(spark, path)
     long_s = "p" * 66 + "031"
     cases = [
         [("f", ">", 10.0)],
@@ -228,6 +261,8 @@ def test_scan_matches_filtered_read_on_value_edge_cases(spark, tmp_path):
         [("s", "not_null"), ("i", "<", 60)],
         [("or", [("i", "<", 10), ("n", ">=", BIG + 3)])],
         [("i", ">=", 200), ("f", "<=", 0.0)],
+        [("f", "==", math.inf)],
+        [("s", ">", "s2")],
     ]
     for filters in cases:
         _assert_scan_equals_filtered_read(spark, path, filters)
@@ -292,13 +327,54 @@ def test_scan_matches_filtered_read_over_viewfs(spark, tmp_path):
     assert alive < total
 
 
+def test_stats_layer_matches_spark_min_max(spark, tmp_path):
+    """filtered_min_max and column_min_max equal Spark's min/max over
+    the filtered full read, with the value types Spark returns: NaN is
+    the max of a double column holding it, +-inf are values, NULL-only
+    chunks and a filter matching nothing add nothing, integers around
+    2^53 are exact, and long strings (one past an unincrementable
+    U+10FFFF stats prefix) are actual values. Run on the fused plan and,
+    through viewfs://, on the chunk_id exchange fallback."""
+    local = str(tmp_path / "edge")
+    _write_edge_dataset(spark, local)
+    null_chunks = read_manifest(spark, local).where(
+        (F.col("column") == "f") & (F.col("n_nulls") == F.col("n_rows"))
+    )
+    assert null_chunks.count() >= 1
+    spark._jsc.hadoopConfiguration().set(
+        "fs.viewfs.mounttable.colcrushstats.link./data", f"file://{tmp_path}"
+    )
+    cols = ["i", "f", "s", "n"]
+    full = read_decoded(spark, local)
+    cases = [
+        [],
+        [("i", "<", 120)],
+        [("f", ">", 1e300)],
+        [("s", ">=", "p" * 66)],
+        [("i", ">=", 240)],
+        [("i", ">", 10**6)],
+    ]
+    for filters in cases:
+        sub = full.where(_residual_condition(filters)) if filters else full
+        want = sub.agg(
+            *[F.min(c) for c in cols], *[F.max(c) for c in cols]
+        ).first()
+        for path in (local, "viewfs://colcrushstats/data/edge"):
+            for j, c in enumerate(cols):
+                if filters:
+                    got = filtered_min_max(spark, path, c, filters)
+                else:
+                    got = column_min_max(spark, path, c)
+                exp = (want[j], want[j + len(cols)])
+                assert [*map(_cell, got)] == [*map(_cell, exp)], (path, c, filters)
+                assert [type(x) for x in got] == [type(x) for x in exp]
+
+
 @pytest.mark.parametrize(
     "filters",
     [[("k", "=", 5)], [("or", [("k", "<", 1), ("k", "like", "a%")])]],
 )
 def test_unsupported_filter_op_raises_everywhere(spark, tmp_path, filters):
-    from colcrush.engine import filtered_min_max
-
     path = str(tmp_path / "ds")
     write_encoded(spark.range(64).select(F.col("id").alias("k")), path)
     bad = "'='" if filters[0][0] == "k" else "'like'"

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 
 import pyspark.sql.functions as F
 import pytest
@@ -206,6 +207,80 @@ def test_resume_recovers_lost_manifest(spark, src, tmp):
     assert dec.count() == src.count()
 
 
+def _crash_before_manifest(monkeypatch):
+    """Make every parquet write to a ``manifest`` dir raise: a write
+    then dies after its chunk job, before its manifest commit."""
+    from pyspark.sql import DataFrameWriter
+
+    parquet = DataFrameWriter.parquet
+
+    def crashing(self, path, *args, **kwargs):
+        if path.rstrip("/").endswith("manifest"):
+            raise RuntimeError("simulated crash before the manifest commit")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crashing)
+
+
+def test_resume_after_crashed_append_removes_orphan_chunks(
+    spark, tmp_path, monkeypatch
+):
+    """An append that crashed before its manifest commit leaves chunk
+    part files no manifest row commits. Readers list every part file,
+    so they see those rows; resume_encode removes the files before it
+    re-encodes the missing groups, and the dataset then reads back as
+    the source, each row once."""
+    groups = ["repo", "lang"]
+    src = source_code_df(spark, 400, n_repos=6).cache()
+    first = src.where(F.col("lang") < "j")
+    ds = str(tmp_path / "ds")
+    write_encoded(first, ds, group_cols=groups)
+    with monkeypatch.context() as m:
+        _crash_before_manifest(m)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            write_encoded(
+                src.where(F.col("lang") >= "j"), ds, mode="append",
+                group_cols=groups,
+            )
+    n_first = first.count()
+    assert 0 < n_first < 400 and count_rows(spark, ds) == n_first
+    assert read_decoded(spark, ds).count() == 400  # the orphans are read
+
+    assert resume_encode(src, ds, group_cols=groups) > 0
+    dec = read_decoded(spark, ds)
+    assert dec.exceptAll(src).count() == 0 and src.exceptAll(dec).count() == 0
+    assert count_rows(spark, ds) == 400
+    key = src.where(F.col("lang") >= "j").orderBy("path").first()["path"]
+    assert scan(spark, ds, filters=[("path", "==", key)]).count() == 1
+
+
+def test_resume_refuses_part_file_mixing_committed_and_orphan_chunks(
+    spark, src, tmp
+):
+    """A part file holding committed and uncommitted chunk ids cannot
+    be removed without losing committed rows: resume_encode raises and
+    deletes nothing."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    write_encoded(src, tmp, group_cols=["repo", "lang"])
+    chunks = os.path.join(tmp, "chunks")
+    part = sorted(f for f in os.listdir(chunks) if f.endswith(".parquet"))[0]
+    t = pq.read_table(os.path.join(chunks, part))
+    first_id = t.column("chunk_id")[0].as_py()
+    ids = pc.if_else(
+        pc.equal(t.column("chunk_id"), first_id), "uncommitted-chunk",
+        t.column("chunk_id"),
+    )
+    mixed = t.set_column(t.schema.get_field_index("chunk_id"), "chunk_id", ids)
+    assert len(set(mixed.column("chunk_id").to_pylist())) > 1
+    pq.write_table(mixed, os.path.join(chunks, "part-99999-mixed.parquet"))
+    with pytest.raises(ValueError, match="mix committed and uncommitted"):
+        resume_encode(src, tmp, group_cols=["repo", "lang"])
+    assert os.path.exists(os.path.join(chunks, "part-99999-mixed.parquet"))
+    assert os.path.exists(os.path.join(chunks, part))
+
+
 def test_resumed_chunks_byte_identical(spark, src, tmp):
     """F4(c): a resumed run must reproduce byte-identical output."""
     tmp2 = tmp + "_full"
@@ -384,11 +459,35 @@ def test_decimal_columns_use_int_codec(spark, tmp_path):
     assert s1 == s2
 
 
-def test_filtered_min_max_early_termination(spark, tmp_path):
-    """FilteredFileStats early termination analog
-    (stats/FilteredFileStats.scala:129-143): on range-sorted chunks a
-    filtered min/max decodes only the boundary chunks, and the result
-    equals the full filtered scan's."""
+def _jobs_and_plans(spark, monkeypatch, fn):
+    """``fn()``'s result, the number of Spark jobs it ran (statusTracker
+    job group) and the physical plans of the DataFrames it collected."""
+    sc = spark.sparkContext
+    plans = []
+    frame = type(spark.range(0))  # the session's concrete DataFrame class
+    collect = frame.collect
+
+    def recording_collect(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return collect(df)
+
+    group = f"stats-jobs-{uuid.uuid4().hex}"
+    with monkeypatch.context() as m:
+        m.setattr(frame, "collect", recording_collect)
+        sc.setJobGroup(group, "stats job count")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group)), plans
+
+
+def test_filtered_min_max_early_termination(spark, tmp_path, monkeypatch):
+    """FilteredFileStats analog (stats/FilteredFileStats.scala:129-143):
+    on range-sorted chunks a filtered min/max is ONE filtered scan
+    whose worker decodes only the chunks the stats keep, at most 2
+    Spark jobs with no chunk_id exchange, and equals the full filtered
+    aggregate. column_min_max on the integer column returns ints."""
     from colcrush.engine import filtered_min_max
 
     p = str(tmp_path / "fmm")
@@ -397,22 +496,19 @@ def test_filtered_min_max_early_termination(spark, tmp_path):
         (F.col("id") % 97).cast("double").alias("v"),
     )
     write_encoded(sdf, p, range_cols=["idx"], target_chunk_rows=512)
-    audit = {}
-    mn, mx = filtered_min_max(
-        spark, p, "idx", [("idx", ">=", 1000), ("idx", "<", 7000)],
-        seed_chunks=2, audit=audit,
+    filters = [("idx", ">=", 1000), ("idx", "<", 7000)]
+    (mn, mx), jobs, plans = _jobs_and_plans(
+        spark, monkeypatch, lambda: filtered_min_max(spark, p, "idx", filters)
     )
     assert (mn, mx) == (1000, 6999)
-    # range-sorted: the extremes live in the seed chunks; phase 2 empty
-    assert audit["n_seed"] <= 4
-    assert audit["n_rest"] == 0
-    assert audit["n_survivors"] > audit["n_seed"], "skipping had work to skip"
+    assert jobs <= 2, jobs
+    assert plans and not any("Exchange hashpartitioning(chunk_id" in x for x in plans)
+    alive, total = pruned_chunk_count(spark, p, filters)
+    assert alive < total, "skipping had work to skip"
 
     # unsorted chunks on the aggregated column still give exact answers
-    audit2 = {}
     mn2, mx2 = filtered_min_max(
-        spark, p, "v", [("idx", ">=", 1000), ("idx", "<", 1100)],
-        audit=audit2,
+        spark, p, "v", [("idx", ">=", 1000), ("idx", "<", 1100)]
     )
     want = (
         sdf.where((F.col("idx") >= 1000) & (F.col("idx") < 1100))
@@ -420,6 +516,30 @@ def test_filtered_min_max_early_termination(spark, tmp_path):
         .collect()[0]
     )
     assert (mn2, mx2) == (want[0], want[1])
+
+    # actual values of the column's type, not the double stats
+    mn3, mx3 = column_min_max(spark, p, "idx")
+    assert (mn3, mx3) == (0, 8191) and type(mn3) is int and type(mx3) is int
+
+
+def test_column_min_max_long_strings_one_pruned_scan(spark, tmp_path, monkeypatch):
+    """Truncated (>= 64-char) string stats are bounds, so column_min_max
+    decodes the chunks that could beat the exact stats — through one
+    pruned scan (at most 6 Spark jobs in all, no chunk_id exchange)."""
+    rows = [(i, ("m" if i % 3 else "c") * 70 + f"{i:04d}") for i in range(2048)]
+    # chunks of short strings: exact stats, which the long extremes beat
+    rows += [(i, ("d" if i % 2 else "l") + f"{i:04d}") for i in range(2048, 2304)]
+    df = spark.createDataFrame(rows, "i long, s string")
+    p = str(tmp_path / "long")
+    write_encoded(df, p, range_cols=["i"], target_chunk_rows=128)
+    got, jobs, plans = _jobs_and_plans(
+        spark, monkeypatch, lambda: column_min_max(spark, p, "s")
+    )
+    want = df.agg(F.min("s"), F.max("s")).first()
+    assert got == (want[0], want[1])
+    assert got[0].startswith("c" * 70) and got[1].startswith("m" * 70)
+    assert jobs <= 6, jobs
+    assert plans and not any("Exchange hashpartitioning(chunk_id" in x for x in plans)
 
 
 def test_resume_reuses_recorded_salt_plan(spark, src, tmp, monkeypatch):
