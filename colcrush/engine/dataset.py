@@ -519,16 +519,16 @@ def _decode_plan(
     schema: "T.StructType",
     columns: list[str] | None = None,
     decimal_formats: dict[str, tuple[int, int]] | None = None,
-    filters: list[tuple] | None = None,
+    prune: "tuple | None" = None,
     decode: bool = True,
 ) -> DataFrame:
-    """The one read plan of read_decoded and scan: :func:`fused_decode`,
-    or where it cannot run (JVM-only scheme, no part files) the
-    exchange plan ``decode_table(read_chunks(spark, path), ...)``. Both
-    run the same decode worker with the same ``filters``/``decode``
-    (see decoder.decode_worker)."""
+    """The one read plan of read_decoded, scan and scan_udp:
+    :func:`fused_decode`, or where it cannot run (JVM-only scheme, no
+    part files) the exchange plan ``decode_table(read_chunks(spark,
+    path), ...)``. Both run the same decode worker with the same chunk
+    predicate ``prune`` and ``decode`` (see decoder.decode_worker)."""
     kw = dict(
-        columns=columns, decimal_formats=decimal_formats, filters=filters,
+        columns=columns, decimal_formats=decimal_formats, prune=prune,
         decode=decode,
     )
     fused = fused_decode(spark, path, schema, **kw)
@@ -543,7 +543,7 @@ def fused_decode(
     schema: "T.StructType",
     columns: list[str] | None = None,
     decimal_formats: dict[str, tuple[int, int]] | None = None,
-    filters: list[tuple] | None = None,
+    prune: "tuple | None" = None,
     decode: bool = True,
 ) -> "DataFrame | None":
     """The fused (reader + decoder, one mapInArrow stage) plan over a
@@ -551,7 +551,7 @@ def fused_decode(
     none. See read_decoded for the precondition and the measured
     trade. None also for JVM-only schemes (hdfs://, viewfs://) — the
     worker has no pyarrow handle there; callers fall back to the
-    Spark-scan + chunk_id exchange plan. ``filters`` and ``decode``
+    Spark-scan + chunk_id exchange plan. ``prune`` and ``decode``
     prune chunks inside the worker (decoder.decode_worker): the reader
     then also reads the stats columns, and with ``decode=False`` never
     reads a payload."""
@@ -564,7 +564,7 @@ def fused_decode(
 
     ordered, in_schema, out_schema, decode_fn = decode_worker(
         schema, columns=columns, decimal_formats=decimal_formats,
-        filters=filters, decode=decode,
+        prune=prune, decode=decode,
     )
 
     def fused(it):

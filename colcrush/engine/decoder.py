@@ -1,12 +1,22 @@
-"""Distributed decode: chunk table -> original DataFrame.
+"""Distributed decode: chunk rows -> original DataFrame.
 
 Projected decode (only requested columns travel + decode) is the
 engine's analog of parquet4s column projection
 (/root/reference/core/src/main/scala/com/github/mjakubowski84/parquet4s/ParquetIterator.scala:107,
-ParquetReader.scala:283-319). Chunk rows are co-located by a single
-repartition on chunk_id; the decode fn reassembles a chunk once all of
-its requested column rows have arrived (order-free accumulation, so no
-sort is needed).
+ParquetReader.scala:283-319). :func:`decode_worker` is the one decode
+worker: it reassembles a chunk once all of its requested column rows
+have arrived (order-free accumulation, so no sort is needed). Two plans
+feed it: the fused reader (dataset.fused_decode, the default read),
+which reads whole part files inside the worker, and
+:func:`decode_table`, which co-locates a chunk DataFrame's rows by one
+repartition on chunk_id.
+
+The worker's ``prune`` hook is a chunk predicate, ``(stat_columns,
+survives)``: once a chunk's rows have arrived, ``survives`` sees the
+stats rows of ``stat_columns`` and the chunk is decoded only if it
+returns True. The decoder knows no filter language; scan builds the
+predicate (scan.chunk_predicate for its filters, a wrapped user
+callable for scan_udp).
 """
 
 from __future__ import annotations
@@ -89,7 +99,7 @@ class IncompleteChunksError(RuntimeError):
 
 
 # the chunk-row stats a chunk predicate reads (ENCODED_DDL types), in
-# the order scan.chunk_predicate indexes them
+# the order ``survives`` receives them
 STATS_FIELDS = (
     pa.field("n_rows", pa.int64()),
     pa.field("n_nulls", pa.int64()),
@@ -112,7 +122,7 @@ def decode_table(
     columns: list[str] | None = None,
     assume_colocated: bool = False,
     decimal_formats: dict[str, tuple[int, int]] | None = None,
-    filters: list[tuple] | None = None,
+    prune: "tuple | None" = None,
     decode: bool = True,
 ) -> DataFrame:
     """Decode a chunk DataFrame (ENCODED_DDL) back to rows: the
@@ -138,8 +148,8 @@ def decode_table(
     decimal column at a different format, rescaling HALF_UP — the
     parquet4s rescaleOnRead contract (see _rescale_decimal).
 
-    ``filters`` (scan's conjuncts) and ``decode`` prune chunks inside
-    the worker; see :func:`decode_worker`. With ``filters=None`` and
+    ``prune`` (a chunk predicate) and ``decode`` prune chunks inside
+    the worker; see :func:`decode_worker`. With ``prune=None`` and
     ``decode=True`` only the payload columns are selected.
 
     When ``chunks`` carries the ``payload_ck`` column, each payload's
@@ -153,7 +163,7 @@ def decode_table(
         columns=columns,
         decimal_formats=decimal_formats,
         with_ck="payload_ck" in chunks.columns,
-        filters=filters,
+        prune=prune,
         decode=decode,
     )
     pruned = chunks.where(chunks["column"].isin(columns)).select(
@@ -172,7 +182,7 @@ def decode_worker(
     columns: list[str] | None = None,
     decimal_formats: dict[str, tuple[int, int]] | None = None,
     with_ck: bool = True,
-    filters: list[tuple] | None = None,
+    prune: "tuple | None" = None,
     decode: bool = True,
 ):
     """The decode worker, DataFrame-free: returns ``(ordered_columns,
@@ -185,13 +195,14 @@ def decode_worker(
     directly with the in-worker file reader so payload bytes never
     cross a process boundary.
 
-    With ``filters`` (scan's (column, op, value) conjuncts) the chunk
-    rows also carry the STATS_FIELDS columns, and once all of a chunk's
-    rows have arrived it is decoded only if scan.chunk_predicate says
-    its stats may match every conjunct; payload checksums are checked
-    only for chunks that are decoded. ``decode=False`` is the prune
-    pass alone (scan.pruned_chunk_count): no payload is read, and ``fn``
-    yields PRUNE_SCHEMA rows, one per chunk with its verdict."""
+    ``prune`` is a chunk predicate ``(stat_columns, survives)``: the
+    chunk rows then also carry the STATS_FIELDS columns, and a chunk
+    whose rows have all arrived is decoded only if ``survives`` maps
+    ``{column: its STATS_FIELDS values}`` (of the requested
+    ``stat_columns``) to True. Payloads are copied and checked only for
+    decoded chunks. ``decode=False`` is the prune pass alone
+    (scan.pruned_chunk_count): no payload is read, and ``fn`` yields
+    PRUNE_SCHEMA rows, one per chunk with its verdict."""
     requested = set(columns or [f.name for f in schema.fields])
     missing = requested - {f.name for f in schema.fields}
     if missing:
@@ -204,13 +215,9 @@ def decode_worker(
     columns = [f.name for f in schema.fields if f.name in requested]
     n_expected = len(columns)
 
-    survives = None
-    if filters is not None or not decode:
-        from .scan import chunk_predicate
-
-        filter_cols, survives = chunk_predicate(filters or [])
-        stat_set = pa.array(sorted(filter_cols & requested), type=pa.string())
-        stat_names = ["chunk_id", "column", *(f.name for f in STATS_FIELDS)]
+    stat_cols, survives = prune or ((), None)
+    stat_set = pa.array(sorted(set(stat_cols) & requested), type=pa.string())
+    stat_names = ["chunk_id", "column", *(f.name for f in STATS_FIELDS)]
     with_ck = with_ck and decode
     in_schema = pa.schema(
         [
@@ -239,8 +246,9 @@ def decode_worker(
         )
 
     def decoded(cid: str, d: dict) -> pa.RecordBatch:
+        arrays = []
         for c in columns:
-            blob, ck = d[c]
+            blob, ck = d[c][0].as_py(), d[c][1]
             # NULL ck = row predates the checksum column: skip. A NULL
             # payload under a non-null checksum IS corruption (the
             # payload column was lost) — raise the descriptive failure,
@@ -252,12 +260,10 @@ def decode_worker(
                     f"mismatch for chunk {cid} column {c} "
                     f"({nb}) — storage corruption?"
                 )
-        arrays = [
-            _rescale_decimal(decode_array(d[c][0]), *decimal_formats[c])
-            if c in decimal_formats
-            else decode_array(d[c][0])
-            for c in columns
-        ]
+            arr = decode_array(blob)
+            if c in decimal_formats:
+                arr = _rescale_decimal(arr, *decimal_formats[c])
+            arrays.append(arr)
         return pa.record_batch(arrays, names=columns)
 
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -282,8 +288,9 @@ def decode_worker(
             cks = batch.column("payload_ck").to_pylist() if with_ck else None
             for i, cid in enumerate(cids):
                 d = pending.setdefault(cid, {})
+                # an Arrow scalar: decoded() copies out kept chunks only
                 d[cols[i]] = (
-                    payloads[i].as_py() if decode else None,
+                    payloads[i] if decode else None,
                     cks[i] if with_ck else None,
                 )
                 if len(d) < n_expected:

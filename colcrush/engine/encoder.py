@@ -14,10 +14,11 @@ Scale design:
 - ONE shuffle total (repartition on group+salt); encoding is map-side.
 - Skew (one mega-repo = north_rule) is handled by a salt count derived
   from a first-pass size histogram, broadcast-joined back (small dim).
-- Chunk identity is a pure function of (group, salt, seq), and the
-  group+salt hash partitioning makes chunk boundaries independent of
-  the partition count, so N- and 4N-core runs (and resumed runs)
-  produce identical chunks.
+- Chunk identity is a pure function of (group, salt, seq). On the
+  grouped path the group+salt hash partitioning makes chunk boundaries
+  independent of the partition count, so N- and 4N-core runs (and
+  resumed runs) produce identical chunks. The range and ungrouped
+  paths cut chunks per partition, so theirs follow ``num_partitions``.
 """
 
 from __future__ import annotations
@@ -77,7 +78,7 @@ TARGET_PARTITION_BYTES = 32 << 20
 # decomposition), so the old "floor at the core count" spawned pure
 # overhead on small inputs — 32 tasks of 1.5 MB measured ~2x the CPU of
 # 6 tasks of 8 MB on the 48 MB lineitem roundtrip, with byte-identical
-# output (chunk cuts are partition-count-independent by design).
+# output (grouped chunk cuts are partition-count-independent).
 # Parallelism is now min(cores, bytes / MIN_TASK_BYTES): large inputs
 # still get one task per ~TARGET_PARTITION_BYTES, tiny ones never pay
 # for idle workers. Most of that setup was not the Arrow crossing but
@@ -656,8 +657,13 @@ def encode_table(
       chunk ids are deterministic and independent of partition count.
     - ``range_cols``: range partition + sort — chunks carry tight
       min/max ranges, maximizing manifest chunk-skipping (the analog of
-      sorted row groups). Chunk ids unique per run, not resume-stable.
-    - neither: deterministic row-hash pseudo-groups.
+      sorted row groups). The salt is the partition id, so chunks and
+      their ids follow ``num_partitions`` (default
+      ``4 * defaultParallelism``): unique per run, not resume-stable.
+    - neither: deterministic row-hash pseudo-groups, one per partition
+      (salt = row hash mod ``num_partitions``), so chunks and their ids
+      are deterministic for one ``num_partitions`` but change with it,
+      and its default follows the cluster width.
     """
     group_cols = list(group_cols or [])
     range_cols = list(range_cols or [])
@@ -673,10 +679,11 @@ def encode_table(
     # (mapInArrow per-task overhead dominates below ~10 MB). Bytes
     # sizing also gives the N- and 4N-core runs the SAME partitioning
     # (the scheduler, not the plan, absorbs the width difference) and
-    # scales to 100 TB as ~3M x 32 MB tasks. Chunk ids stay
-    # partition-count-independent by design, so this remains a pure
-    # scheduling choice; the range and ungrouped paths keep the width
-    # heuristic (no size histogram available without an extra pass).
+    # scales to 100 TB as ~3M x 32 MB tasks. Grouped chunk ids are
+    # partition-count-independent, so here this is a pure scheduling
+    # choice. The range and ungrouped paths keep the width heuristic (no
+    # size histogram available without an extra pass), and there the
+    # partition count IS the chunking: their chunk ids follow it.
     cores = spark.sparkContext.defaultParallelism
 
     salt_col = "__salt"
@@ -745,8 +752,9 @@ def encode_table(
         df = df.sortWithinPartitions(*range_cols)
         df = df.withColumn(salt_col, F.spark_partition_id().cast("int"))
     else:
-        # ungrouped: deterministic pseudo-groups via row hash so chunk ids
-        # are unique and independent of the partition count
+        # ungrouped: deterministic pseudo-groups via row hash, one per
+        # partition, so chunk ids are unique and reproducible for one
+        # num_partitions, but follow it (its default is the width)
         if num_partitions is None:
             num_partitions = 4 * cores
         df = df.withColumn(key_col, sort_key)

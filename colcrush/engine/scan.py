@@ -9,26 +9,31 @@ The engine's analog of parquet4s's stats layer and row-group skipping:
 
 Pruning happens where parquet4s does it, in the reader: every chunk
 row carries its column's stats, so the decode worker (the fused
-whole-file reader, or the chunk_id exchange on JVM-only schemes)
-evaluates :func:`chunk_predicate` once a chunk's rows have arrived and
-decodes only the chunks that may match. A filtered scan is one Spark
-job with no exchange and no manifest read. The stats layer reads
-through it: filtered_min_max aggregates one filtered scan,
-column_min_max decodes the chunks whose stats are bounds rather than
-values through one scan, and pruned_chunk_count runs the same worker
-with decoding switched off, so every entry point prunes with one rule
-set.
+whole-file reader, or the chunk_id exchange on JVM-only schemes) runs a
+chunk predicate once a chunk's rows have arrived and decodes only the
+chunks that may match. The worker takes the predicate as a ``prune``
+pair built here on the driver: :func:`chunk_predicate` for scan's
+filters, and the user's stats callables for :func:`scan_udp` (a
+parquet4s UDP, whose canDrop reads the same statistics in the same
+skipping pass). Either scan is one Spark job with no exchange and no
+manifest read. The stats layer reads through it: filtered_min_max
+aggregates one filtered scan, column_min_max decodes the chunks whose
+stats are bounds rather than values through one scan, and
+pruned_chunk_count runs the same worker with decoding switched off, so
+every filter entry point prunes with one rule set.
 """
 
 from __future__ import annotations
 
+from datetime import date, datetime, timedelta, timezone
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from .dataset import _decode_plan, read_chunks, read_manifest, read_schema
-from .decoder import decode_table
+from .dataset import _decode_plan, read_manifest, read_schema
+from .decoder import STATS_FIELDS
 from .encoder import _STAT_TRUNC
 
 _OPS = {"==", "!=", "<", "<=", ">", ">=", "in", "is_null", "not_null"}
@@ -50,12 +55,14 @@ def column_min_max(spark: SparkSession, path: str, column: str) -> tuple[Any, An
     """min/max of ``column`` folded over chunk stats (parquet4s
     Stats.min/max, Stats.scala:34-58), returning ACTUAL column values,
     like the reference: ``int`` for integer columns, ``float`` for
-    floating ones, ``bool`` for booleans, ``(None, None)`` when every
-    value is NULL.
+    floating ones, ``bool`` for booleans, ``date``/``datetime`` for
+    dates and timestamps, ``(None, None)`` when every value is NULL.
 
     One manifest aggregate answers when every chunk's stats are exact
-    values. Integer and boolean extremes come from the stringified stats
-    (min_s/max_s), exact at any magnitude; floating ones from min_d/max_d.
+    values. Integer, boolean, date and timestamp extremes come from the
+    stringified stats (min_s/max_s) cast back to the column type, exact
+    at any magnitude and in any session time zone (a timestamp stat
+    carries its UTC offset); floating ones from min_d/max_d.
     Decimals carry a one-ulp-widened double bound, so their extremes
     are bounds, not values. String stats are truncated to 64 chars at
     encode time (min: truncation; max: truncate-and-increment —
@@ -73,7 +80,7 @@ def column_min_max(spark: SparkSession, path: str, column: str) -> tuple[Any, An
     column unfiltered. Columns without suspect chunks (short strings,
     dates, integers) stay pure metadata reads."""
     dt = next((f.dataType for f in read_schema(path).fields if f.name == column), None)
-    if isinstance(dt, (T.IntegralType, T.BooleanType)):
+    if isinstance(dt, (T.IntegralType, T.BooleanType, *_TEMPORAL)):
         lo, hi = F.col("min_s").try_cast(dt), F.col("max_s").try_cast(dt)
     elif isinstance(dt, T.NumericType):
         lo, hi = F.col("min_d"), F.col("max_d")
@@ -196,7 +203,70 @@ _RANGE = {
 }
 
 
-def _leaf_survives(col, op, val):
+# per temporal column type: the zero its stats are counted from, the
+# unit, and Spark's cast of a string literal to that count (NULL when
+# the literal does not parse)
+_TEMPORAL = {
+    T.DateType: (
+        date(1970, 1, 1), timedelta(days=1),
+        lambda c: F.unix_date(c.try_cast("date")),
+    ),
+    T.TimestampType: (
+        datetime(1970, 1, 1, tzinfo=timezone.utc), timedelta(microseconds=1),
+        lambda c: F.unix_micros(c.try_cast("timestamp")),
+    ),
+    T.TimestampNTZType: (
+        datetime(1970, 1, 1), timedelta(microseconds=1),
+        lambda c: F.timestamp_diff(
+            "MICROSECOND",
+            F.lit("1970-01-01").cast("timestamp_ntz"),
+            c.try_cast("timestamp_ntz"),
+        ),
+    ),
+}
+
+
+def _epoch_units(stat: str, zero, unit) -> "int | None":
+    """A date or timestamp stat (the encoder's ``str()`` of the value:
+    ``2023-03-01``, ``2023-03-01 13:00:00+00:00``, or without offset for
+    TIMESTAMP_NTZ) as a count of ``unit`` since ``zero``, or None when
+    it does not parse or its offset does not match the column kind."""
+    try:
+        return (type(zero).fromisoformat(stat) - zero) // unit
+    except (TypeError, ValueError):
+        return None
+
+
+def _temporal_literals(spark: SparkSession, schema, filters: list[tuple]) -> dict:
+    """``{column: (zero, unit, {literal: epoch units or None})}`` for every
+    string literal on a date or timestamp column: the value Spark's own
+    cast gives it under the session time zone, which is what the
+    residual comparison casts it to. One local one-row frame answers
+    every literal, so no Spark job runs."""
+    kinds = {f.name: type(f.dataType) for f in schema.fields}
+    lits = sorted({
+        (col, v)
+        for f in filters
+        for col, op, val in _leaves(f)
+        if kinds.get(col) in _TEMPORAL and op in _RANGE
+        for v in (val if isinstance(val, (list, tuple, set, frozenset)) else [val])
+        if isinstance(v, str)
+    })
+    if not lits:
+        return {}
+    names = [f"l{i}" for i in range(len(lits))]
+    row = spark.createDataFrame(
+        pa.table({n: [v] for n, (_, v) in zip(names, lits)})
+    ).select(*[
+        _TEMPORAL[kinds[col]][2](F.col(n)) for n, (col, _) in zip(names, lits)
+    ]).collect()[0]
+    out: dict = {}
+    for (col, v), units in zip(lits, row):
+        out.setdefault(col, (*_TEMPORAL[kinds[col]][:2], {}))[2][v] = units
+    return out
+
+
+def _leaf_survives(col, op, val, temporal=None):
     """A test ``stats -> bool`` for one leaf: False only when the
     chunk's stats row of ``col`` (STATS_FIELDS order: n_rows, n_nulls,
     min_s, max_s, min_d, max_d, bloom) proves no row matches.
@@ -205,12 +275,16 @@ def _leaf_survives(col, op, val):
     runs in the literal's stats domain — min_d/max_d for numbers,
     min_s/max_s for strings (truncated to 64 chars at encode time:
     min_s is a lower bound, max_s a truncate-and-increment upper bound,
-    so string checks are conservative by design). For an in-set the
-    domain comes from its first element (mixed-kind lists are rejected
-    against the column type by _check_filter_types). Any other literal
-    kind, ``!=``, and NULL stats keep the chunk. Equality and in-sets
-    also consult the bloom (_bloom_excludes); for equality it composes
-    with the range check even when the range stats are NULL."""
+    so string checks are conservative by design). On a date or
+    timestamp column (``temporal``: the column's entry of
+    _temporal_literals) a string literal is checked in epoch units: the
+    stats parsed, the literal as Spark casts it; a side that does not
+    parse keeps the chunk. For an in-set the domain comes from its
+    first element (mixed-kind lists are rejected against the column
+    type by _check_filter_types). Any other literal kind, ``!=``, and
+    NULL stats keep the chunk. Equality and in-sets also consult the
+    bloom (_bloom_excludes); for equality it composes with the range
+    check even when the range stats are NULL."""
     if op == "is_null":
         return lambda s: s[1] is None or s[1] > 0
     if op == "not_null":
@@ -220,7 +294,17 @@ def _leaf_survives(col, op, val):
     is_set = op == "in" and isinstance(val, (list, tuple, set, frozenset))
     vals = list(val) if is_set else [val]
     sample = vals[0] if is_set and vals else val
-    if isinstance(sample, (int, float)) and not isinstance(sample, bool):
+    if temporal is not None and isinstance(sample, str):
+        # (no bloom: the encoder builds none for temporal columns)
+        zero, unit, units = temporal
+        lo = 2
+
+        def key(stat):
+            return _epoch_units(stat, zero, unit)
+
+        def lit(v):
+            return units.get(v) if isinstance(v, str) else None
+    elif isinstance(sample, (int, float)) and not isinstance(sample, bool):
         lo, key = 4, _num_key
 
         def lit(v):
@@ -235,24 +319,24 @@ def _leaf_survives(col, op, val):
         return lambda s: True
     in_range = _RANGE[op]
     # (domain key or None, bloom test) per literal; None never matches a
-    # row (SQL NULL), another kind can't be range-checked here: keep
+    # row (SQL NULL), another kind or an unparsed one can't be
+    # range-checked here: keep
     tests = [
         (lit(v), _bloom_excludes(v)) for v in vals if v is not None
     ]
     unknown = any(k is None for k, _ in tests)
 
     def survives(s) -> bool:
-        mn, mx = s[lo], s[lo + 1]
+        kmn = None if s[lo] is None else key(s[lo])
+        kmx = None if s[lo + 1] is None else key(s[lo + 1])
+        ranged = kmn is not None and kmx is not None
         if op != "in":
             k, excl = tests[0]
-            if mn is not None and mx is not None and not in_range(
-                key(mn), key(mx), k
-            ):
+            if ranged and k is not None and not in_range(kmn, kmx, k):
                 return False
             return op != "==" or not excl(s[6])
-        if mn is None or mx is None or unknown:
+        if not ranged or unknown:
             return True
-        kmn, kmx = key(mn), key(mx)
         return any(
             in_range(kmn, kmx, k) and not excl(s[6]) for k, excl in tests
         )
@@ -260,18 +344,24 @@ def _leaf_survives(col, op, val):
     return survives
 
 
-def chunk_predicate(filters: list[tuple]):
+def chunk_predicate(filters: list[tuple], temporal: "dict | None" = None):
     """``(columns, survives)``: ``survives`` maps one chunk's stats,
     ``{column: stats row}``, to False only when the stats PROVE that no
     row of the chunk matches every conjunct; ``columns`` names the
     columns whose stats it reads. Each conjunct needs one leaf whose
     column stats may match (an ``or`` conjunct's leaves, parquet4s
     boolean algebra, Filter.scala:79-89); a column without a stats row
-    never prunes. The one rule set of scan, pruned_chunk_count and
-    filtered_min_max, evaluated inside the decode worker
-    (decoder.decode_worker)."""
+    never prunes. ``temporal`` holds the date and timestamp columns'
+    cast string literals (_temporal_literals): a string literal on a
+    column it does not name is compared as a string. The one rule set
+    of scan, pruned_chunk_count and filtered_min_max, passed to the
+    decode worker as its ``prune`` (decoder.decode_worker)."""
+    temporal = temporal or {}
     conjuncts = [
-        [(col, _leaf_survives(col, op, val)) for col, op, val in _leaves(f)]
+        [
+            (col, _leaf_survives(col, op, val, temporal.get(col)))
+            for col, op, val in _leaves(f)
+        ]
         for f in filters
     ]
     columns = frozenset(col for leaves in conjuncts for col, _ in leaves)
@@ -285,6 +375,13 @@ def chunk_predicate(filters: list[tuple]):
         return True
 
     return columns, survives
+
+
+def _scan_prune(spark: SparkSession, schema, filters: list[tuple]):
+    """The decode worker's ``prune`` for scan's ``filters``, validated
+    against ``schema`` first (_check_filter_types)."""
+    _check_filter_types(schema, filters)
+    return chunk_predicate(filters, _temporal_literals(spark, schema, filters))
 
 
 def _leaf_condition(f) -> "F.Column":
@@ -345,17 +442,18 @@ def scan(
     rows. On a local, file: or s3:// dataset that is the fused reader:
     one Spark job, no exchange, no manifest read; on JVM-only schemes
     and empty datasets, the chunk_id exchange plan with the same worker.
+    String literals on date and timestamp columns prune as Spark casts
+    them, under the session time zone (_temporal_literals).
     """
     schema = read_schema(path)
     filters = list(filters or [])
-    _check_filter_types(schema, filters)
+    prune = _scan_prune(spark, schema, filters) if filters else None
     need_cols = set(columns or [f.name for f in schema.fields])
     for f in filters:
         need_cols.update(_filter_cols(f))
 
     decoded = _decode_plan(
-        spark, path, schema, columns=sorted(need_cols),
-        filters=filters or None,
+        spark, path, schema, columns=sorted(need_cols), prune=prune
     )
     if filters:
         decoded = decoded.where(_residual_condition(filters))
@@ -400,12 +498,12 @@ def pruned_chunk_count(
     scan with ``filters`` decodes."""
     schema = read_schema(path)
     filters = list(filters or [])
-    _check_filter_types(schema, filters)
+    prune = _scan_prune(spark, schema, filters)
     cols = sorted({c for f in filters for c in _filter_cols(f)})
     cols = cols or [schema.fields[0].name]
     row = (
         _decode_plan(
-            spark, path, schema, columns=cols, filters=filters, decode=False
+            spark, path, schema, columns=cols, prune=prune, decode=False
         )
         .agg(
             F.count(F.when(F.col("alive"), 1)).alias("alive"),
@@ -461,11 +559,10 @@ def _check_filter_types(schema, filters: list[tuple]) -> None:
             elif isinstance(v, (int, float)):
                 ok = isinstance(dt, T.NumericType)
             elif isinstance(v, (str, bytes)):
-                # temporal columns accept string literals: their
-                # stringified stats use one uniform format, so the
-                # lexicographic range check IS order-consistent (unlike
-                # stringified numbers), and _leaf_condition's cast
-                # matches Spark semantics
+                # temporal columns accept string literals: the residual
+                # comparison casts them as Spark does, and the chunk
+                # predicate range-checks them in epoch units after the
+                # same cast (_temporal_literals), never as strings
                 ok = isinstance(
                     dt,
                     (
@@ -494,6 +591,7 @@ def _check_filter_types(schema, filters: list[tuple]) -> None:
 def scan_udp(
     spark: SparkSession,
     path: str,
+    column: str,
     chunk_keep,
     row_condition,
     columns: list[str] | None = None,
@@ -501,39 +599,37 @@ def scan_udp(
     negated: bool = False,
     inverse_chunk_drop=None,
 ) -> DataFrame:
-    """User-defined-predicate scan — the parquet4s UDP contract
-    (/root/reference/core/src/main/scala/com/github/mjakubowski84/parquet4s/UDP.scala:17-51):
-    ``chunk_keep`` is a Column over manifest stats rows (column, n_rows,
-    n_nulls, min_s/max_s, min_d/max_d) deciding whether a chunk MIGHT
-    match (the inverse of canDrop); ``row_condition`` is the exact
-    per-row Column applied after decode (keep). Chunks failing
-    chunk_keep for ANY stats row are skipped without payload I/O.
+    """User-defined-predicate scan, the parquet4s UDP contract
+    (UDP.scala:17-51), on scan's one-job plan. ``chunk_keep`` maps one
+    chunk's stats of ``column`` (a dict keyed by the STATS_FIELDS
+    names) to True when the chunk MIGHT match (the inverse of canDrop);
+    the decode worker skips the chunks it rejects (None keeps all).
+    ``row_condition`` is the exact per-row Column applied after decode.
 
-    ``negated=True`` evaluates NOT(row_condition) — the parquet4s
-    ``not`` path (Filter.scala UDP handling). Pruning then uses
-    ``inverse_chunk_drop`` (UDP.inverseCanDrop, UDP.scala:37-46): a
-    manifest-stats Column that is True iff EVERY value in the chunk
-    matches the ORIGINAL predicate, so no row survives negation and the
-    chunk is dropped. ``chunk_keep`` is ignored under negation — it
-    cannot be soundly inverted (a chunk that might match may also might
-    not-match). With no ``inverse_chunk_drop``, nothing is pruned."""
+    ``negated=True`` keeps NOT(row_condition), the parquet4s ``not``
+    path. Pruning then uses ``inverse_chunk_drop`` (UDP.inverseCanDrop,
+    UDP.scala:37-46), True iff EVERY value of the chunk matches the
+    ORIGINAL predicate, so no row survives negation; ``chunk_keep``
+    cannot be soundly inverted and is ignored. Without
+    ``inverse_chunk_drop`` nothing is pruned."""
     schema = read_schema(path)
-    manifest = read_manifest(spark, path)
+    names = [f.name for f in schema.fields]
+    need = sorted({*(columns or names), column})  # raises on unknown names
+    prune = _udp_prune(column, chunk_keep, negated, inverse_chunk_drop)
+    decoded = _decode_plan(spark, path, schema, columns=need, prune=prune)
+    decoded = decoded.where(~row_condition if negated else row_condition)
+    return decoded.select(*[c for c in names if c in columns]) if columns else decoded
+
+
+def _udp_prune(column: str, chunk_keep, negated=False, inverse_chunk_drop=None):
+    """scan_udp's chunk predicate, the decode worker's ``prune`` pair;
+    None when nothing prunes."""
     if negated:
-        row_condition = ~row_condition
-        chunk_keep = (
-            ~inverse_chunk_drop if inverse_chunk_drop is not None else F.lit(True)
-        )
-    # kept = chunks with NO stats row failing chunk_keep. Anti-join on
-    # the dropped set, then semi-join chunks on the kept set — both
-    # unhinted (either side is unbounded at 100 TB; AQE broadcasts
-    # whichever turns out small, mirroring scan()).
-    dropped = manifest.where(~chunk_keep).select("chunk_id").distinct()
-    kept = (
-        manifest.select("chunk_id")
-        .distinct()
-        .join(dropped, on="chunk_id", how="left_anti")
+        inv = inverse_chunk_drop
+        chunk_keep = None if inv is None else (lambda st: not inv(st))
+    if chunk_keep is None:
+        return None
+    fields = [f.name for f in STATS_FIELDS]
+    return frozenset([column]), lambda stats: column not in stats or bool(
+        chunk_keep(dict(zip(fields, stats[column])))
     )
-    chunks = read_chunks(spark, path).join(kept, on="chunk_id", how="left_semi")
-    decoded = decode_table(chunks, schema, columns=columns)
-    return decoded.where(row_condition)

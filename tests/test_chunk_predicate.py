@@ -8,10 +8,13 @@ widened bounds for ints beyond 2^53, NULL stats for NaN-bearing float
 chunks, blooms), against a row matcher with Spark's comparison
 semantics. The Spark-backed tests then pin that a filtered scan equals
 a full read filtered by the same predicate, on the fused plan over
-epochs and compaction and on the exchange fallback (viewfs://), that
-pruned_chunk_count counts exactly the chunks a scan decodes, and that
-the stats layer built on the scan (filtered_min_max, column_min_max)
-returns Spark's own min/max.
+epochs and compaction and on the exchange fallback (viewfs://), with
+string literals on date and timestamp columns in several spellings and
+session time zones, that pruned_chunk_count counts exactly the chunks a
+scan decodes, that scan_udp's stats callables keep the decode worker
+from decoding the chunks they drop, and that the stats layer built on
+the scan (filtered_min_max, column_min_max) returns Spark's own
+min/max.
 """
 
 from __future__ import annotations
@@ -41,7 +44,15 @@ from colcrush.engine import (
 from colcrush.engine.dataset import _chunk_file_batches, _committed_part_files
 from colcrush.engine.decoder import decode_worker
 from colcrush.engine.encoder import _OUT_COLS, _encode_chunk_into, _rows_to_batch
-from colcrush.engine.scan import _filter_cols, _residual_condition
+from colcrush.engine.scan import (
+    _TEMPORAL,
+    _epoch_units,
+    _residual_condition,
+    _scan_prune,
+    _udp_prune,
+    chunk_predicate,
+    scan_udp,
+)
 from colcrush.fixtures import source_code_df
 
 NAN = float("nan")
@@ -162,7 +173,8 @@ def test_chunk_predicate_never_drops_a_matching_chunk(case):
     kind, chunks, filters = case
     schema = T.StructType([T.StructField("v", KINDS[kind][1])])
     batches = _encode(kind, chunks)
-    *_, decode_fn = decode_worker(schema, filters=filters)
+    prune = chunk_predicate(filters)
+    *_, decode_fn = decode_worker(schema, prune=prune)
     decoded = [len(list(decode_fn(iter([b])))) for b in batches]
     for values, n in zip(chunks, decoded):
         assert n in (0, 1)
@@ -170,21 +182,22 @@ def test_chunk_predicate_never_drops_a_matching_chunk(case):
             hits = [v for v in values if _row_matches(v, filters)]
             assert not hits, f"dropped a chunk holding matches {hits!r} of {filters!r}"
     # the prune pass (decode off) keeps exactly the chunks decoding keeps
-    *_, prune_fn = decode_worker(schema, filters=filters, decode=False)
+    *_, prune_fn = decode_worker(schema, prune=prune, decode=False)
     (verdicts,) = list(prune_fn(iter(batches)))
     assert verdicts.column("alive").to_pylist() == [n == 1 for n in decoded]
 
 
-def _chunks_scan_decodes(path, filters):
-    """Chunks the scan's decode worker decodes over the dataset's part
-    files, counted in-process (one output batch per decoded chunk)."""
-    schema = read_schema(path)
-    need = sorted({f.name for f in schema.fields} | {
-        c for f in filters for c in _filter_cols(f)
-    })
-    ordered, in_schema, _, fn = decode_worker(schema, columns=need, filters=filters)
+def _chunks_decoded(path, prune):
+    """Chunks the decode worker decodes with the chunk predicate
+    ``prune`` over the dataset's part files, counted in-process (one
+    output batch per decoded chunk)."""
+    ordered, in_schema, _, fn = decode_worker(read_schema(path), prune=prune)
     files = [f for f, _ in _committed_part_files(path)]
     return sum(1 for _ in fn(_chunk_file_batches(files, ordered, in_schema)))
+
+
+def _chunks_scan_decodes(spark, path, filters):
+    return _chunks_decoded(path, _scan_prune(spark, read_schema(path), filters))
 
 
 def _cell(x):
@@ -230,20 +243,49 @@ def _string_value(i):
 
 
 def _write_edge_dataset(spark, path):
-    """NULLs, NaN, +-inf, strings past the 64-char stats truncation and
-    ints around 2^53 in 24-row chunks, range-sorted on ``i``; rows 240
-    to 287 are NULL but for ``i``, so at least one chunk is all-NULL."""
+    """NULLs, NaN, +-inf, strings past the 64-char stats truncation,
+    ints around 2^53, a date ``d`` (2023-02-20 + i // 8) and a timestamp
+    ``ts`` (2023-03-01 00:00 UTC + i hours, plus some microseconds on
+    even rows) in 24-row chunks, range-sorted on ``i``; rows 240 to 287
+    are NULL but for ``i``, so at least one chunk is all-NULL."""
     rows = [
         (i, _float_value(i), _string_value(i), None if i % 19 == 0 else BIG + (i % 7) - 3)
         for i in range(240)
     ] + [(i, None, None, None) for i in range(240, 288)]
     df = spark.createDataFrame(rows, "i long, f double, s string, n long")
+    i = F.col("i")
+    live = (i < 240) & (i % 31 != 0)
+    df = df.select(
+        "*",
+        F.when(live, F.date_add(F.lit("2023-02-20").cast("date"), (i / 8).cast("int"))).alias("d"),
+        F.when(live, F.timestamp_micros(
+            F.lit(1677628800 * 10**6) + i * 3600 * 10**6
+            + F.when(i % 2 == 0, i * 1001 + 7).otherwise(0)
+        )).alias("ts"),
+    )
     write_encoded(df, path, range_cols=["i"], target_chunk_rows=24)
+
+
+# string literals on the date and timestamp columns, in spellings other
+# than the stats' (``2023-03-01 13:00:00+00:00``): row 13 has ts
+# 2023-03-01 13:00 UTC (05:00 in Los Angeles), rows 72-79 have d
+# 2023-03-01
+TEMPORAL_CASES = [
+    [("ts", "==", "2023-03-01T13:00:00")],
+    [("d", "==", "2023-3-1")],
+    [("ts", "==", "2023-03-01 05:00:00")],
+    [("ts", "in", ["2023-03-01 05:00", "2023-03-02T10:00:00.010017"])],
+    [("d", "in", ["2023-3-1", "2023-03-10 23:59:59"])],
+    [("ts", "<", "2023-03-02 00:00:00.000001")],
+    [("d", ">=", "2023-03-21")],
+    [("or", [("ts", ">", "2023-03-10T20:00:00Z"), ("d", "<=", "2023-2-22")])],
+]
 
 
 def test_scan_matches_filtered_read_on_value_edge_cases(spark, tmp_path):
     """Every filter's scan over the edge-value dataset equals the full
-    read filtered, and pruned_chunk_count equals the chunks decoded."""
+    read filtered, and pruned_chunk_count equals the chunks decoded;
+    the temporal cases also under a non-UTC session."""
     path = str(tmp_path / "edge")
     _write_edge_dataset(spark, path)
     long_s = "p" * 66 + "031"
@@ -263,14 +305,42 @@ def test_scan_matches_filtered_read_on_value_edge_cases(spark, tmp_path):
         [("i", ">=", 200), ("f", "<=", 0.0)],
         [("f", "==", math.inf)],
         [("s", ">", "s2")],
+        *TEMPORAL_CASES,
     ]
     for filters in cases:
         _assert_scan_equals_filtered_read(spark, path, filters)
         alive, total = pruned_chunk_count(spark, path, filters)
         assert total >= 8
-        assert alive == _chunks_scan_decodes(path, filters), filters
-    alive, total = pruned_chunk_count(spark, path, [("i", "<", 24)])
-    assert alive < total
+        assert alive == _chunks_scan_decodes(spark, path, filters), filters
+    for filters in ([("i", "<", 24)], [("d", "==", "2023-3-1")]):
+        alive, total = pruned_chunk_count(spark, path, filters)
+        assert alive < total, filters
+    # Spark casts a string literal on a timestamp column under the
+    # session time zone, and a timestamp stat carries the offset of the
+    # session that encoded it: every pair of encoding and reading zone
+    key = "spark.sql.session.timeZone"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "America/Los_Angeles")
+        la = str(tmp_path / "edge_la")
+        _write_edge_dataset(spark, la)
+        for tz, ds in (
+            ("America/Los_Angeles", path), ("America/Los_Angeles", la), ("UTC", la)
+        ):
+            spark.conf.set(key, tz)
+            for filters in TEMPORAL_CASES:
+                _assert_scan_equals_filtered_read(spark, ds, filters)
+    finally:
+        spark.conf.set(key, before)
+    # a stat or a literal that does not parse keeps the chunk
+    date_zero, ts_zero = _TEMPORAL[T.DateType][:2], _TEMPORAL[T.TimestampType][:2]
+    assert _epoch_units("not a date", *date_zero) is None
+    assert _epoch_units("2023-03-01 13:00:00", *ts_zero) is None  # no offset
+    _, survives = chunk_predicate(
+        [("ts", "==", "not a time")], {"ts": (*ts_zero, {"not a time": None})}
+    )
+    stats = [24, 0, "2023-03-01 00:00:00+00:00", "2023-03-01 23:00:00+00:00", None, None, None]
+    assert survives({"ts": stats})
 
 
 def test_scan_matches_filtered_read_over_epochs_and_compaction(spark, tmp_path):
@@ -298,7 +368,7 @@ def test_scan_matches_filtered_read_over_epochs_and_compaction(spark, tmp_path):
                 spark, ds, filters, columns=["path", "lang"]
             )
             alive, _ = pruned_chunk_count(spark, ds, filters)
-            assert alive == _chunks_scan_decodes(ds, filters), (stage, filters)
+            assert alive == _chunks_scan_decodes(spark, ds, filters), (stage, filters)
 
 
 def _plan(df):
@@ -332,9 +402,10 @@ def test_stats_layer_matches_spark_min_max(spark, tmp_path):
     the filtered full read, with the value types Spark returns: NaN is
     the max of a double column holding it, +-inf are values, NULL-only
     chunks and a filter matching nothing add nothing, integers around
-    2^53 are exact, and long strings (one past an unincrementable
-    U+10FFFF stats prefix) are actual values. Run on the fused plan and,
-    through viewfs://, on the chunk_id exchange fallback."""
+    2^53 are exact, long strings (one past an unincrementable U+10FFFF
+    stats prefix) are actual values, and dates and timestamps come back
+    as ``date`` and ``datetime``. Run on the fused plan and, through
+    viewfs://, on the chunk_id exchange fallback."""
     local = str(tmp_path / "edge")
     _write_edge_dataset(spark, local)
     null_chunks = read_manifest(spark, local).where(
@@ -344,7 +415,7 @@ def test_stats_layer_matches_spark_min_max(spark, tmp_path):
     spark._jsc.hadoopConfiguration().set(
         "fs.viewfs.mounttable.colcrushstats.link./data", f"file://{tmp_path}"
     )
-    cols = ["i", "f", "s", "n"]
+    cols = ["i", "f", "s", "n", "d", "ts"]
     full = read_decoded(spark, local)
     cases = [
         [],
@@ -353,6 +424,7 @@ def test_stats_layer_matches_spark_min_max(spark, tmp_path):
         [("s", ">=", "p" * 66)],
         [("i", ">=", 240)],
         [("i", ">", 10**6)],
+        [("ts", "<", "2023-03-03T00:00:00")],
     ]
     for filters in cases:
         sub = full.where(_residual_condition(filters)) if filters else full
@@ -368,6 +440,40 @@ def test_stats_layer_matches_spark_min_max(spark, tmp_path):
                 exp = (want[j], want[j + len(cols)])
                 assert [*map(_cell, got)] == [*map(_cell, exp)], (path, c, filters)
                 assert [type(x) for x in got] == [type(x) for x in exp]
+
+
+def test_scan_udp_decodes_only_the_chunks_its_callables_keep(spark, tmp_path):
+    """scan_udp's stats callables run in the decode worker as its chunk
+    predicate: a chunk ``chunk_keep`` rejects (or, negated, one
+    ``inverse_chunk_drop`` proves all-matching) is never decoded, and
+    the rows equal the full read filtered by the row condition."""
+    path = str(tmp_path / "edge")
+    _write_edge_dataset(spark, path)
+    stats = read_manifest(spark, path).where(F.col("column") == "i")
+    total = stats.count()
+
+    def keep(st):  # canDrop inverted: some i < 60
+        return st["min_d"] is None or st["min_d"] < 60
+
+    def all_match(st):  # inverseCanDrop: every i < 60
+        return st["max_d"] is not None and st["max_d"] < 60
+
+    kept = stats.where(F.col("min_d") < 60).count()
+    assert 0 < kept < total
+    assert _chunks_decoded(path, _udp_prune("i", keep)) == kept
+    inverse = _udp_prune("i", keep, negated=True, inverse_chunk_drop=all_match)
+    all_matching = stats.where(F.col("max_d") < 60).count()
+    assert all_matching > 0
+    assert _chunks_decoded(path, inverse) == total - all_matching
+    cond = F.col("i") < 60
+    full = read_decoded(spark, path)
+    for negated in (False, True):
+        got = scan_udp(
+            spark, path, "i", keep, cond, ["i", "s"], negated=negated,
+            inverse_chunk_drop=all_match,
+        )
+        want = full.where(~cond if negated else cond).select("i", "s")
+        assert _rows(got) == _rows(want) and _rows(got)
 
 
 @pytest.mark.parametrize(

@@ -26,6 +26,7 @@ from colcrush.engine import (
     scan,
     write_encoded,
 )
+from colcrush.engine.scan import scan_udp
 from colcrush.fixtures import source_code_df
 
 
@@ -144,7 +145,8 @@ def test_write_encoded_job_count_and_no_file_map(spark, tmp_path):
 def test_scan_lookup_is_one_job_without_exchange(spark, tmp_path):
     """An equality scan on a local dataset is one Spark job: the decode
     worker prunes chunks from the stats their rows carry, so the plan
-    reads no manifest/ and has no exchange."""
+    reads no manifest/ and has no exchange. scan_udp runs the same
+    plan."""
     sc = spark.sparkContext
     df = source_code_df(spark, 400, n_repos=6)
     ds = str(tmp_path / "ds")
@@ -162,6 +164,28 @@ def test_scan_lookup_is_one_job_without_exchange(spark, tmp_path):
     assert "Exchange" not in plan, plan
     assert "manifest" not in plan, plan
     want = df.where(F.col("path") == key).select("path", "lang").collect()
+    assert sorted(rows) == sorted(want) and rows
+
+    # a user-defined predicate runs the same plan: its stats callable
+    # prunes in the decode worker
+    cond = F.col("path") == key
+    got = scan_udp(
+        spark, ds, "path",
+        lambda st: st["min_s"] is None or st["max_s"] is None
+        or st["min_s"] <= key <= st["max_s"],
+        cond, ["path", "lang"],
+    )
+    group = "scan-udp-job-count"
+    sc.setJobGroup(group, "one user-defined-predicate scan")
+    try:
+        rows = got.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert "manifest" not in plan, plan
+    want = read_decoded(spark, ds).where(cond).select("path", "lang").collect()
     assert sorted(rows) == sorted(want) and rows
 
 

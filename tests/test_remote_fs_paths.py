@@ -26,7 +26,7 @@ from colcrush.engine import (
     resume_encode,
     write_encoded,
 )
-from colcrush.engine.scan import column_min_max, count_rows, scan
+from colcrush.engine.scan import column_min_max, count_rows, scan, scan_udp
 from colcrush.fixtures import source_code_df
 
 
@@ -134,6 +134,17 @@ def test_engine_lifecycle_over_viewfs(spark, tmp_path):
     assert scan(
         spark, uri, columns=["repo"], filters=[("lang", "==", mn)]
     ).count() > 0
+    # a negated user-defined predicate on the exchange fallback: chunks
+    # whose every lang is mn hold no row of the negation
+    cond = F.col("lang") == mn
+    got = scan_udp(
+        spark, uri, "lang", None, cond, ["repo", "lang"], negated=True,
+        inverse_chunk_drop=lambda st: st["min_s"] == st["max_s"] == mn,
+    )
+    assert "Exchange hashpartitioning(chunk_id" in _plan(got)
+    want = back.where(~cond).select("repo", "lang")
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    assert got.count() == 300 - back.where(cond).count() > 0
 
     with pytest.raises(FileExistsError):
         write_encoded(df, uri, mode="error", group_cols=["lang"])

@@ -10,20 +10,22 @@ from colcrush.engine.scan import scan_udp
 
 def test_scan_udp_contract(spark, tmp_path):
     """parquet4s UDP (UDP.scala:17-51): stats-level canDrop + row-level
-    keep. Chunk-keep: only chunks whose idx range intersects [0, 100);
-    row-keep: even idx."""
+    keep. ``chunk_keep`` reads one chunk's stats of ``idx`` and keeps
+    only chunks whose range intersects [0, 100); row-keep: even idx."""
     p = str(tmp_path / "ds")
     df = spark.range(4096).select(
         F.col("id").alias("idx"), (F.col("id") % 7).alias("v")
     )
     write_encoded(df, p, range_cols=["idx"], target_chunk_rows=512)
-    chunk_keep = (F.col("column") != "idx") | (
-        (F.col("min_d") < 100) & (F.col("max_d") >= 0)
-    )
+
+    def chunk_keep(st):
+        return st["min_d"] < 100 and st["max_d"] >= 0
+
     got = scan_udp(
         spark,
         p,
-        chunk_keep=chunk_keep,
+        "idx",
+        chunk_keep,
         row_condition=(F.col("idx") % 2 == 0) & (F.col("idx") < 100),
     )
     rows = got.collect()
@@ -43,18 +45,22 @@ def test_scan_udp_inverse_can_drop(spark, tmp_path):
         F.col("id").alias("idx"), (F.col("id") % 7).alias("v")
     )
     write_encoded(df, p, range_cols=["idx"], target_chunk_rows=512)
-    # inverseCanDrop: every idx in the chunk satisfies idx < 1000
-    inverse_drop = (F.col("column") == "idx") & (F.col("max_d") < 1000)
+
+    def inverse_drop(st):  # every idx in the chunk satisfies idx < 1000
+        return st["max_d"] < 1000
+
     n_droppable = (
-        read_manifest(spark, p).where(inverse_drop).select("chunk_id")
-        .distinct().count()
+        read_manifest(spark, p)
+        .where((F.col("column") == "idx") & (F.col("max_d") < 1000))
+        .count()
     )
     assert n_droppable >= 1  # pruning has something to do
 
     got = scan_udp(
         spark,
         p,
-        chunk_keep=F.lit(True),  # ignored under negation
+        "idx",
+        lambda st: False,  # ignored under negation
         row_condition=F.col("idx") < 1000,
         negated=True,
         inverse_chunk_drop=inverse_drop,
@@ -65,8 +71,7 @@ def test_scan_udp_inverse_can_drop(spark, tmp_path):
 
     # without inverse_chunk_drop nothing is pruned but results match
     got2 = scan_udp(
-        spark, p,
-        chunk_keep=F.lit(True),
+        spark, p, "idx", None,
         row_condition=F.col("idx") < 1000,
         negated=True,
     )
