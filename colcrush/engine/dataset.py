@@ -37,6 +37,7 @@ from .encoder import (
     TARGET_GROUP_BYTES,
     encode_table,
     group_key_expr,
+    layout_cols,
     payload_ck,
     plan_salts,
 )
@@ -83,6 +84,9 @@ def write_encoded(
     salt_plan/ sidecar before the chunks; encode_table sizes the encode
     from the plan it is handed.
     """
+    group_cols, _ = layout_cols(
+        encode_kwargs.get("group_cols"), encode_kwargs.get("range_cols")
+    )
     if mode not in ("error", "overwrite", "append"):
         # an unrecognized mode must fail loudly: it would otherwise
         # skip the CREATE existence check and silently APPEND
@@ -102,7 +106,6 @@ def write_encoded(
     # re-encodes then reuse it instead of paying a second full input
     # scan, and the recorded salts make re-encode chunk identity a
     # stored fact rather than a recomputation
-    group_cols = list(encode_kwargs.get("group_cols") or [])
     plan = encode_kwargs.get("salt_plan")
     if plan is None and group_cols:
         plan = encode_kwargs["salt_plan"] = plan_salts(
@@ -774,6 +777,7 @@ def resume_encode(
     those chunks would otherwise be read beside their re-encoded
     copies. Run it with no other writer on ``path``.
     """
+    layout_cols(group_cols, encode_kwargs.get("range_cols"))
     spark = df.sparkSession
     manifest_path = fsio.join(path, MANIFEST_DIR)
     chunks_path = fsio.join(path, CHUNKS_DIR)
@@ -825,11 +829,7 @@ def resume_encode(
         # committed chunks any self-consistent plan yields correct,
         # internally consistent chunks.
         plan_path = fsio.join(path, SALT_PLAN_DIR)
-        if (
-            "salt_plan" not in encode_kwargs
-            and not encode_kwargs.get("range_cols")
-            and fsio.exists(plan_path)
-        ):
+        if "salt_plan" not in encode_kwargs and fsio.exists(plan_path):
             recorded = spark.read.parquet(plan_path)
             if {*group_cols, "_grp_bytes", "_n_salts"} <= set(recorded.columns):
                 restricted = (

@@ -14,11 +14,12 @@ Scale design:
 - ONE shuffle total (repartition on group+salt); encoding is map-side.
 - Skew (one mega-repo = north_rule) is handled by a salt count derived
   from a first-pass size histogram, broadcast-joined back (small dim).
-- Chunk identity is a pure function of (group, salt, seq). On the
-  grouped path the group+salt hash partitioning makes chunk boundaries
-  independent of the partition count, so N- and 4N-core runs (and
-  resumed runs) produce identical chunks. The range and ungrouped
-  paths cut chunks per partition, so theirs follow ``num_partitions``.
+- Chunk identity is a pure function of (group, salt, seq), salts of the
+  input bytes (an ungrouped encode is one group): chunk boundaries do
+  not depend on the partition count, so N- and 4N-core runs (and
+  resumed runs) produce identical chunks. Range chunks never cross a
+  range partition: same at any width while the input fits one, past
+  that they follow ``repartitionByRange``'s sample of the input.
 """
 
 from __future__ import annotations
@@ -410,12 +411,11 @@ def _encode_chunk_into(
 
 
 def _make_encode_fn(
-    group_cols: list[str],
     target_chunk_bytes: int,
     target_chunk_rows: int,
     profile: str,
-    salt_col: str | None,
-    gk_col: str | None = None,
+    salt_col: str,
+    gk_col: str,
     namespace: str = "",
     bloom_cols: "frozenset[str] | None" = None,
 ):
@@ -471,13 +471,11 @@ def _make_encode_fn(
                 ]
             )
             row_sizes = _batch_row_sizes(data)
+            # vectorized group/salt boundary detection on the
+            # Spark-rendered key (one string column)
+            gk_vals = batch.column(gk_col).to_numpy(zero_copy_only=False)
             key_change = np.zeros(batch.num_rows, dtype=bool)
-            gk_vals = None
-            if gk_col is not None and group_cols:
-                # vectorized group/salt boundary detection on the
-                # Spark-rendered key (one string column)
-                gk_vals = batch.column(gk_col).to_numpy(zero_copy_only=False)
-                key_change[1:] |= gk_vals[1:] != gk_vals[:-1]
+            key_change[1:] |= gk_vals[1:] != gk_vals[:-1]
             key_change[1:] |= salts[1:] != salts[:-1]
 
             boundaries = np.flatnonzero(key_change)
@@ -486,7 +484,7 @@ def _make_encode_fn(
             for s, e in zip(starts, ends):
                 if e <= s:
                     continue
-                key = str(gk_vals[s]) if gk_vals is not None else "[]"
+                key = str(gk_vals[s])
                 salt = int(salts[s])
                 if cur_key is not None and (key != cur_key or salt != cur_salt):
                     out = flush()
@@ -605,6 +603,14 @@ def _plan_bytes(plan: DataFrame) -> int:
     return sum(r[0] or 0 for r in plan.select("_grp_bytes").collect())
 
 
+def layout_cols(group_cols, range_cols) -> tuple[list[str], list[str]]:
+    """Both as lists; an encode is hash-grouped or range-sorted, not both."""
+    group_cols, range_cols = list(group_cols or []), list(range_cols or [])
+    if group_cols and range_cols:
+        raise ValueError(f"group_cols {group_cols} and range_cols {range_cols} are exclusive")
+    return group_cols, range_cols
+
+
 def encode_table(
     df: DataFrame,
     group_cols: Iterable[str] | None = None,
@@ -655,40 +661,36 @@ def encode_table(
     Layouts:
     - ``group_cols`` (default path): hash partition on (group, salt);
       chunk ids are deterministic and independent of partition count.
-    - ``range_cols``: range partition + sort — chunks carry tight
-      min/max ranges, maximizing manifest chunk-skipping (the analog of
-      sorted row groups). The salt is the partition id, so chunks and
-      their ids follow ``num_partitions`` (default
-      ``4 * defaultParallelism``): unique per run, not resume-stable.
-    - neither: deterministic row-hash pseudo-groups, one per partition
-      (salt = row hash mod ``num_partitions``), so chunks and their ids
-      are deterministic for one ``num_partitions`` but change with it,
-      and its default follows the cluster width.
+    - neither: the grouped layout with no group columns — one
+      pseudo-group (key ``[]``) salted by its bytes like any group, so
+      its chunk ids are the same at any width and ``num_partitions``.
+    - ``range_cols`` (exclusive with ``group_cols``): range partition +
+      sort — chunks carry tight min/max ranges, maximizing manifest
+      chunk-skipping (the analog of sorted row groups). The salt is the
+      range partition id, sized from bytes like the other layouts, so
+      an input that fits one partition chunks the same at any width;
+      past that, the boundaries follow ``repartitionByRange``'s sample
+      of the input's own partitions. Not resume-stable.
     """
-    group_cols = list(group_cols or [])
-    range_cols = list(range_cols or [])
+    group_cols, range_cols = layout_cols(group_cols, range_cols)
     sort_cols = list(sort_cols or [c for c in df.columns if c not in group_cols])
     spark = df.sparkSession
-    # Partition sizing is BYTES-based (salted-group path): one
-    # partition per ~TARGET_PARTITION_BYTES of input, with parallelism
-    # capped at min(cores, bytes / MIN_TASK_BYTES) — a task below
-    # ~8 MB is pure mapInArrow setup overhead. The round-2 "4x cores"
+    # Partition sizing is BYTES-based for every layout (the salt plan's
+    # total): one partition per ~TARGET_PARTITION_BYTES, parallelism
+    # capped at min(cores, bytes / MIN_TASK_BYTES) — a task below ~8 MB
+    # is pure mapInArrow setup overhead. The round-2 "4x cores"
     # multiplier sized partitions by CLUSTER WIDTH, which backfired at
     # high core counts on modest inputs — 128 partitions of 2.9 MB at
-    # local[32] measured 2.4x the CPU and 2.5x the wall of 32x12 MB
-    # (mapInArrow per-task overhead dominates below ~10 MB). Bytes
-    # sizing also gives the N- and 4N-core runs the SAME partitioning
-    # (the scheduler, not the plan, absorbs the width difference) and
-    # scales to 100 TB as ~3M x 32 MB tasks. Grouped chunk ids are
-    # partition-count-independent, so here this is a pure scheduling
-    # choice. The range and ungrouped paths keep the width heuristic (no
-    # size histogram available without an extra pass), and there the
-    # partition count IS the chunking: their chunk ids follow it.
+    # local[32] measured 2.4x the CPU and 2.5x the wall of 32x12 MB.
+    # Bytes sizing gives N- and 4N-core runs the SAME partitioning and
+    # scales to 100 TB as ~3M x 32 MB tasks. For salted encodes it is a
+    # pure scheduling choice; range chunks never cross a partition, so
+    # there it keeps the chunking free of the host width.
     cores = spark.sparkContext.defaultParallelism
 
     salt_col = "__salt"
     key_col = "__sortkey"
-    gk_col = "__groupkey" if group_cols else None
+    gk_col = "__groupkey"
     # deterministic total-ish order WITHOUT comparing multi-KB strings in
     # the sorter: one 8-byte hash of the sort columns (collisions only
     # swap near-identical rows inside one group — chunk content unaffected)
@@ -709,14 +711,23 @@ def encode_table(
             "sort_cols including at least one non-map column, or pass "
             "unstable_order_ok=True to accept order-dependent chunks."
         )
-    if group_cols:
-        if salt_plan is None:
-            salt_plan = plan_salts(df, group_cols, target_group_bytes)
-        if num_partitions is None:
-            num_partitions = _salted_partitions(_plan_bytes(salt_plan), cores)
+    # a range encode given its partition count needs no plan
+    if salt_plan is None and not (range_cols and num_partitions):
+        salt_plan = plan_salts(df, group_cols, target_group_bytes)
+    if num_partitions is None:
+        num_partitions = _salted_partitions(_plan_bytes(salt_plan), cores)
+    if range_cols:
+        df = df.withColumn(key_col, F.lit(0).cast("long"))
+        df = df.repartitionByRange(num_partitions, *range_cols)
+        df = df.sortWithinPartitions(*range_cols)
+        df = df.withColumn(salt_col, F.spark_partition_id().cast("int"))
+        df = df.withColumn(gk_col, group_key_expr([]))
+    else:
+        # an ungrouped encode is one group: its one plan row salts the
+        # whole input by bytes, and every row takes the key "[]"
         df = df.join(
             F.broadcast(salt_plan.select(*group_cols, "_n_salts")),
-            on=group_cols,
+            on=group_cols or None,
             how="left",
         )
         df = df.withColumn(key_col, sort_key)
@@ -744,26 +755,6 @@ def encode_table(
                 + [salt_col, key_col]
             )
         )
-    elif range_cols:
-        if num_partitions is None:
-            num_partitions = 4 * cores
-        df = df.withColumn(key_col, F.lit(0).cast("long"))
-        df = df.repartitionByRange(num_partitions, *range_cols)
-        df = df.sortWithinPartitions(*range_cols)
-        df = df.withColumn(salt_col, F.spark_partition_id().cast("int"))
-    else:
-        # ungrouped: deterministic pseudo-groups via row hash, one per
-        # partition, so chunk ids are unique and reproducible for one
-        # num_partitions, but follow it (its default is the width)
-        if num_partitions is None:
-            num_partitions = 4 * cores
-        df = df.withColumn(key_col, sort_key)
-        df = df.withColumn(
-            salt_col,
-            F.pmod(F.col(key_col), F.lit(num_partitions)).cast("int"),
-        )
-        df = df.repartition(num_partitions, salt_col)
-        df = df.sortWithinPartitions(salt_col, key_col)
 
     if bloom is True:
         bloom_cols = None
@@ -777,7 +768,7 @@ def encode_table(
                 f"bloom columns not in the input: {sorted(unknown)}"
             )
     fn = _make_encode_fn(
-        group_cols, target_chunk_bytes, target_chunk_rows, profile, salt_col,
-        gk_col, namespace, bloom_cols,
+        target_chunk_bytes, target_chunk_rows, profile, salt_col, gk_col,
+        namespace, bloom_cols,
     )
     return df.mapInArrow(fn, ENCODED_DDL)

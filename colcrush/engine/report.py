@@ -26,19 +26,3 @@ def codec_summary(manifest: DataFrame) -> DataFrame:
         .orderBy("column", "codec")
     )
 
-
-def dataset_summary(manifest: DataFrame) -> dict:
-    """One-line totals for logs/bench output."""
-    row = manifest.agg(
-        F.countDistinct("chunk_id").alias("chunks"),
-        F.countDistinct("group_key").alias("groups"),
-        F.sum("raw_bytes").alias("raw"),
-        F.sum("enc_bytes").alias("enc"),
-    ).collect()[0]
-    return {
-        "chunks": row["chunks"],
-        "groups": row["groups"],
-        "raw_bytes": int(row["raw"] or 0),
-        "enc_bytes": int(row["enc"] or 0),
-        "ratio": round((row["enc"] or 0) / max(1, row["raw"] or 1), 4),
-    }

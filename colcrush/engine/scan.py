@@ -239,30 +239,51 @@ def _epoch_units(stat: str, zero, unit) -> "int | None":
 
 def _temporal_literals(spark: SparkSession, schema, filters: list[tuple]) -> dict:
     """``{column: (zero, unit, {literal: epoch units or None})}`` for every
-    string literal on a date or timestamp column: the value Spark's own
-    cast gives it under the session time zone, which is what the
-    residual comparison casts it to. One local one-row frame answers
-    every literal, so no Spark job runs."""
+    string or same-kind literal (a ``date`` on a date column, a
+    ``datetime`` on a timestamp one) on a date or timestamp column:
+    Spark's own cast of it under the session time zone, built with
+    ``F.lit`` for a same-kind one, exactly as the residual compares it.
+    One local one-row frame answers every literal, so no Spark job runs."""
     kinds = {f.name: type(f.dataType) for f in schema.fields}
-    lits = sorted({
+
+    def castable(kind, v):
+        # a datetime on a date column makes Spark compare as timestamps
+        if kind is T.DateType:
+            return isinstance(v, (str, date)) and not isinstance(v, datetime)
+        return isinstance(v, (str, datetime))
+
+    lits = list(dict.fromkeys(
         (col, v)
         for f in filters
         for col, op, val in _leaves(f)
         if kinds.get(col) in _TEMPORAL and op in _RANGE
         for v in (val if isinstance(val, (list, tuple, set, frozenset)) else [val])
-        if isinstance(v, str)
-    })
+        if castable(kinds[col], v)
+    ))
     if not lits:
         return {}
-    names = [f"l{i}" for i in range(len(lits))]
-    row = spark.createDataFrame(
-        pa.table({n: [v] for n, (_, v) in zip(names, lits)})
-    ).select(*[
-        _TEMPORAL[kinds[col]][2](F.col(n)) for n, (col, _) in zip(names, lits)
+
+    def units(col, v):
+        cast = _TEMPORAL[kinds[col]][2]
+        if isinstance(v, str) or kinds[col] is not T.TimestampNTZType:
+            return cast(F.lit(v))
+        # Spark compares a datetime with a TIMESTAMP_NTZ column as
+        # timestamps, casting the column under the session time zone,
+        # which is neither one-to-one nor monotone across a DST change:
+        # the literal's wall time serves only where the zone's offset is
+        # the same two days before and after it
+        us, span = F.unix_micros(F.lit(v).try_cast("timestamp")), 2 * 86400 * 10**6
+        before, at, after = (
+            cast(F.timestamp_micros(us + d)) for d in (-span, 0, span)
+        )
+        return F.when((at - before == span) & (after - at == span), at)
+
+    row = spark.createDataFrame(pa.table({"_": [0]})).select(*[
+        units(col, v) for col, v in lits
     ]).collect()[0]
     out: dict = {}
-    for (col, v), units in zip(lits, row):
-        out.setdefault(col, (*_TEMPORAL[kinds[col]][:2], {}))[2][v] = units
+    for (col, v), n in zip(lits, row):
+        out.setdefault(col, (*_TEMPORAL[kinds[col]][:2], {}))[2][v] = n
     return out
 
 
@@ -277,14 +298,14 @@ def _leaf_survives(col, op, val, temporal=None):
     min_s is a lower bound, max_s a truncate-and-increment upper bound,
     so string checks are conservative by design). On a date or
     timestamp column (``temporal``: the column's entry of
-    _temporal_literals) a string literal is checked in epoch units: the
-    stats parsed, the literal as Spark casts it; a side that does not
-    parse keeps the chunk. For an in-set the domain comes from its
-    first element (mixed-kind lists are rejected against the column
-    type by _check_filter_types). Any other literal kind, ``!=``, and
-    NULL stats keep the chunk. Equality and in-sets also consult the
-    bloom (_bloom_excludes); for equality it composes with the range
-    check even when the range stats are NULL."""
+    _temporal_literals) a string or same-kind literal is checked in
+    epoch units: the stats parsed, the literal as Spark casts it; a
+    side that does not parse or cast keeps the chunk. For an in-set the
+    domain comes from its first element (mixed-kind lists are rejected
+    against the column type by _check_filter_types). Any other literal
+    kind, ``!=``, and NULL stats keep the chunk. Equality and in-sets
+    also consult the bloom (_bloom_excludes); for equality it composes
+    with the range check even when the range stats are NULL."""
     if op == "is_null":
         return lambda s: s[1] is None or s[1] > 0
     if op == "not_null":
@@ -294,7 +315,7 @@ def _leaf_survives(col, op, val, temporal=None):
     is_set = op == "in" and isinstance(val, (list, tuple, set, frozenset))
     vals = list(val) if is_set else [val]
     sample = vals[0] if is_set and vals else val
-    if temporal is not None and isinstance(sample, str):
+    if temporal is not None and isinstance(sample, (str, date)):
         # (no bloom: the encoder builds none for temporal columns)
         zero, unit, units = temporal
         lo = 2
@@ -303,7 +324,7 @@ def _leaf_survives(col, op, val, temporal=None):
             return _epoch_units(stat, zero, unit)
 
         def lit(v):
-            return units.get(v) if isinstance(v, str) else None
+            return units.get(v) if isinstance(v, (str, date)) else None
     elif isinstance(sample, (int, float)) and not isinstance(sample, bool):
         lo, key = 4, _num_key
 
@@ -352,10 +373,10 @@ def chunk_predicate(filters: list[tuple], temporal: "dict | None" = None):
     column stats may match (an ``or`` conjunct's leaves, parquet4s
     boolean algebra, Filter.scala:79-89); a column without a stats row
     never prunes. ``temporal`` holds the date and timestamp columns'
-    cast string literals (_temporal_literals): a string literal on a
-    column it does not name is compared as a string. The one rule set
-    of scan, pruned_chunk_count and filtered_min_max, passed to the
-    decode worker as its ``prune`` (decoder.decode_worker)."""
+    cast string and same-kind literals (_temporal_literals): a string
+    literal on a column it does not name is compared as a string. The
+    one rule set of scan, pruned_chunk_count and filtered_min_max,
+    passed to the decode worker as its ``prune`` (decoder.decode_worker)."""
     temporal = temporal or {}
     conjuncts = [
         [

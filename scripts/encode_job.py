@@ -6,6 +6,10 @@ resumable colcrush dataset (the north_rule deployment shape).
         scripts/encode_job.py --input <parquet dir or SYNTH:rows> \
         --output /path/ds --group-cols repo,lang [--resume]
 
+Prints one JSON line; ``chunk_ids_sha256`` digests the sorted distinct
+chunk ids, so runs at two widths can be compared by one value.
+``--group-cols ""`` runs the ungrouped encode.
+
 On a cluster, swap --master for yarn/k8s and size --num-executors; the
 job itself is unchanged (the engine plans partitioning from data size,
 not from the master URL).
@@ -14,6 +18,7 @@ not from the master URL).
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import time
 
@@ -60,13 +65,16 @@ def main() -> None:
         F.sum("raw_bytes").alias("raw_bytes"),
         F.countDistinct("chunk_id").alias("chunks"),
     ).collect()[0]
+    ids = sorted(r[0] for r in m.select("chunk_id").distinct().collect())
     print(json.dumps({
         "action": action,
+        "group_cols": group_cols,
         "wall_sec": round(wall, 2),
         "chunks": stats["chunks"],
         "encoded_bytes": int(stats["enc_bytes"]),
         "raw_bytes": int(stats["raw_bytes"]),
         "ratio": round(stats["enc_bytes"] / max(1, stats["raw_bytes"]), 4),
+        "chunk_ids_sha256": hashlib.sha256("\n".join(ids).encode()).hexdigest(),
     }))
     spark.stop()
 

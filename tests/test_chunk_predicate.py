@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import math
 import os
+from datetime import date, datetime, timezone
 
 import pyarrow as pa
 import pytest
@@ -244,10 +245,12 @@ def _string_value(i):
 
 def _write_edge_dataset(spark, path):
     """NULLs, NaN, +-inf, strings past the 64-char stats truncation,
-    ints around 2^53, a date ``d`` (2023-02-20 + i // 8) and a timestamp
+    ints around 2^53, a date ``d`` (2023-02-20 + i // 8), a timestamp
     ``ts`` (2023-03-01 00:00 UTC + i hours, plus some microseconds on
-    even rows) in 24-row chunks, range-sorted on ``i``; rows 240 to 287
-    are NULL but for ``i``, so at least one chunk is all-NULL."""
+    even rows) and ``tn``, ``ts`` as TIMESTAMP_NTZ (wall time in the
+    encoding session's zone), in 24-row chunks, range-sorted on ``i``;
+    rows 240 to 287 are NULL but for ``i``, so at least one chunk is
+    all-NULL."""
     rows = [
         (i, _float_value(i), _string_value(i), None if i % 19 == 0 else BIG + (i % 7) - 3)
         for i in range(240)
@@ -263,13 +266,16 @@ def _write_edge_dataset(spark, path):
             + F.when(i % 2 == 0, i * 1001 + 7).otherwise(0)
         )).alias("ts"),
     )
+    df = df.withColumn("tn", F.col("ts").cast("timestamp_ntz"))
     write_encoded(df, path, range_cols=["i"], target_chunk_rows=24)
 
 
 # string literals on the date and timestamp columns, in spellings other
-# than the stats' (``2023-03-01 13:00:00+00:00``): row 13 has ts
+# than the stats' (``2023-03-01 13:00:00+00:00``), and same-kind
+# ``date``/``datetime`` literals, naive and aware: row 13 has ts
 # 2023-03-01 13:00 UTC (05:00 in Los Angeles), rows 72-79 have d
-# 2023-03-01
+# 2023-03-01. Los Angeles enters DST on 2023-03-12 at 10:00 UTC, within
+# two days of the last ``tn`` literal, which then keeps every chunk.
 TEMPORAL_CASES = [
     [("ts", "==", "2023-03-01T13:00:00")],
     [("d", "==", "2023-3-1")],
@@ -279,6 +285,16 @@ TEMPORAL_CASES = [
     [("ts", "<", "2023-03-02 00:00:00.000001")],
     [("d", ">=", "2023-03-21")],
     [("or", [("ts", ">", "2023-03-10T20:00:00Z"), ("d", "<=", "2023-2-22")])],
+    [("d", "==", date(2023, 3, 1))],
+    [("d", "<", date(2023, 2, 22))],
+    [("d", "in", [date(2023, 3, 1), "2023-03-10"])],
+    [("d", "==", datetime(2023, 3, 1))],
+    [("ts", "==", datetime(2023, 3, 1, 13, tzinfo=timezone.utc))],
+    [("ts", ">=", datetime(2023, 3, 10, 20))],
+    [("tn", "==", datetime(2023, 3, 1, 13))],
+    [("tn", "<", datetime(2023, 3, 2, tzinfo=timezone.utc))],
+    [("tn", "==", "2023-03-01 13:00:00")],
+    [("tn", ">", datetime(2023, 3, 10, 20, tzinfo=timezone.utc))],
 ]
 
 
@@ -312,9 +328,10 @@ def test_scan_matches_filtered_read_on_value_edge_cases(spark, tmp_path):
         alive, total = pruned_chunk_count(spark, path, filters)
         assert total >= 8
         assert alive == _chunks_scan_decodes(spark, path, filters), filters
-    for filters in ([("i", "<", 24)], [("d", "==", "2023-3-1")]):
+    for filters in ([("i", "<", 24)], [("d", "==", "2023-3-1")], *TEMPORAL_CASES[8:]):
         alive, total = pruned_chunk_count(spark, path, filters)
-        assert alive < total, filters
+        # a datetime on a date column is compared as a timestamp
+        assert (alive == total) == (filters[0][2] == datetime(2023, 3, 1)), filters
     # Spark casts a string literal on a timestamp column under the
     # session time zone, and a timestamp stat carries the offset of the
     # session that encoded it: every pair of encoding and reading zone
@@ -330,6 +347,12 @@ def test_scan_matches_filtered_read_on_value_edge_cases(spark, tmp_path):
             spark.conf.set(key, tz)
             for filters in TEMPORAL_CASES:
                 _assert_scan_equals_filtered_read(spark, ds, filters)
+        # the tn literal near the DST change is not cast back to wall
+        # time; the one far from it is
+        spark.conf.set(key, "America/Los_Angeles")
+        for filters, pruned in ((TEMPORAL_CASES[-1], False), (TEMPORAL_CASES[-3], True)):
+            alive, total = pruned_chunk_count(spark, path, filters)
+            assert (alive < total) == pruned, filters
     finally:
         spark.conf.set(key, before)
     # a stat or a literal that does not parse keeps the chunk

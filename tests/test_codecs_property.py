@@ -312,9 +312,7 @@ def test_encode_fn_chunk_cut_properties(group_sizes, cap, batch_rows):
         return out
 
     def chunks(step):
-        fn = _make_encode_fn(
-            ["g"], 1 << 30, cap, "balanced", "__salt", "__groupkey"
-        )
+        fn = _make_encode_fn(1 << 30, cap, "balanced", "__salt", "__groupkey")
         out = []
         for b in fn(iter(batches(step))):
             for i in range(b.num_rows):
@@ -383,9 +381,7 @@ def test_encode_fn_byte_cap_cut_purity(group_sizes, byte_cap, batch_rows):
         return out
 
     def chunks(step):
-        fn = _make_encode_fn(
-            ["g"], byte_cap, 1 << 20, "balanced", "__salt", "__groupkey"
-        )
+        fn = _make_encode_fn(byte_cap, 1 << 20, "balanced", "__salt", "__groupkey")
         out = []
         for b in fn(iter(batches(step))):
             for i in range(b.num_rows):

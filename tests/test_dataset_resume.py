@@ -378,6 +378,41 @@ def test_chunk_skipping_actually_skips(spark, tmp):
     assert got.agg(F.max("idx")).collect()[0][0] == 99
 
 
+def test_range_encode_sizes_from_bytes(spark, tmp):
+    """A range encode takes its partition count from the input bytes,
+    not the core count: 8,192 rows of 16 bytes fit one range partition,
+    so 512-row chunks make exactly 16 at any width."""
+    sdf = spark.range(8192).select(
+        F.col("id").alias("idx"), (F.col("id") * 7).alias("v")
+    )
+    write_encoded(sdf, tmp, range_cols=["idx"], target_chunk_rows=512)
+    assert read_manifest(spark, tmp).select("chunk_id").distinct().count() == 16
+
+
+def test_group_and_range_cols_are_exclusive(spark, tmp_path):
+    """Passing both layouts raises a ValueError naming both, before any
+    Spark job runs, from every encode entry point."""
+    from colcrush.engine import encode_table
+
+    sc = spark.sparkContext
+    df = spark.range(10).select(F.col("id").alias("k"), F.col("id").alias("r"))
+    p = str(tmp_path / "both")
+    group = "group-and-range-cols"
+    sc.setJobGroup(group, "encode with both layouts")
+    try:
+        for call in (
+            lambda: encode_table(df, group_cols=["k"], range_cols=["r"]),
+            lambda: write_encoded(df, p, group_cols=["k"], range_cols=["r"]),
+            lambda: resume_encode(df, p, ["k"], range_cols=["r"]),
+        ):
+            with pytest.raises(ValueError, match=r"group_cols.*'k'.*range_cols.*'r'"):
+                call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert not os.path.exists(p)
+
+
 def test_scan_or_filter(spark, tmp_path):
     """Boolean algebra parity (Filter.scala:79-89): OR of two ranges
     prunes the middle chunks and keeps both ends."""

@@ -321,13 +321,14 @@ def test_chunk_identity_independent_of_partition_count(spark):
     batch stream — local[8] vs local[32] encoded the same input to
     different bytes, silently breaking the N-vs-4N and resume identity
     the manifest design promises). Same input, two partition counts,
-    byte-for-byte identical chunk tables."""
+    byte-for-byte identical chunk tables, grouped and ungrouped (one
+    pseudo-group salted by its bytes)."""
     from colcrush.engine import encode_table
     from colcrush.fixtures import source_code_df
 
     df = source_code_df(spark, 6000, n_repos=5)
 
-    def manifest(nparts):
+    def manifest(nparts, group_cols):
         # small arrow batches so every shard spans several batches: the
         # batch PHASE within a shard depends on which other shards
         # share its partition — exactly what changes with the partition
@@ -337,7 +338,7 @@ def test_chunk_identity_independent_of_partition_count(spark):
         try:
             enc = encode_table(
                 df,
-                group_cols=["repo", "lang"],
+                group_cols=group_cols,
                 target_group_bytes=1 << 20,   # force multi-salt mega-groups
                 target_chunk_bytes=256 << 10,  # force byte-cap cuts
                 num_partitions=nparts,
@@ -349,9 +350,10 @@ def test_chunk_identity_independent_of_partition_count(spark):
         finally:
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
-    a = manifest(7)
-    b = manifest(23)
-    assert a == b
+    for group_cols in (["repo", "lang"], []):
+        a = manifest(7, group_cols)
+        assert len({r[0] for r in a}) > 1, group_cols
+        assert a == manifest(23, group_cols), group_cols
 
 
 def test_payload_checksum_integrity(spark, src):
