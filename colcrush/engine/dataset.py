@@ -9,15 +9,15 @@ Iceberg jars, which aren't in this image):
                               them re-compressed would hide the ratio)
   <root>/manifest/            chunk rows sans payload (lineage + metrics:
                               codec, dict size, ratio, row counts, min/max)
-  <root>/salt_plan/           recorded skew plan (group -> bytes, n_salts):
-                              resume/append re-encodes reuse it instead of
-                              re-scanning the input for the size histogram
+
+A ``salt_plan/`` or ``file_map/`` dir left by an earlier revision is
+inert: nothing reads or writes it.
 
 The manifest is written AFTER the chunks, so its presence commits them —
 the analog of parquet4s's postWriteHandler checkpoint semantics
 (/root/reference/akkaPekko/src/main/scala/com/github/mjakubowski84/parquet4s/ParquetPartitioningFlow.scala:303-316).
-Resume = anti-join the planned (group, salt) work units against the
-committed manifest and encode only what's missing
+Resume = anti-join the input's groups against the committed manifest,
+plan the salts of the pending groups and encode only those
 (SURVEY.md §7 step 5).
 """
 
@@ -45,7 +45,6 @@ from .encoder import (
 SCHEMA_FILE = "schema.json"
 CHUNKS_DIR = "chunks"
 MANIFEST_DIR = "manifest"
-SALT_PLAN_DIR = "salt_plan"
 
 
 def _write_schema(path: str, schema: T.StructType) -> None:
@@ -79,14 +78,11 @@ def write_encoded(
     build on or off and stays only because perfbench/layers.py still
     passes it; no write builds the sidecar.
 
-    Grouped writes without a ``salt_plan`` plan the salts here
-    (plan_salts, one histogram pass) and record the plan as the
-    salt_plan/ sidecar before the chunks; encode_table sizes the encode
-    from the plan it is handed.
+    ``encode_kwargs`` go to encode_table, which plans the salts and
+    sizes the encode; chunk bytes are a pure function of the input and
+    these kwargs. The write records no plan: resume_encode re-plans
+    the groups it finds missing.
     """
-    group_cols, _ = layout_cols(
-        encode_kwargs.get("group_cols"), encode_kwargs.get("range_cols")
-    )
     if mode not in ("error", "overwrite", "append"):
         # an unrecognized mode must fail loudly: it would otherwise
         # skip the CREATE existence check and silently APPEND
@@ -102,27 +98,10 @@ def write_encoded(
                 f"append schema mismatch: dataset has {existing.simpleString()}, "
                 f"got {df.schema.simpleString()}"
             )
-    # salts are planned HERE so the plan can be recorded: resume/append
-    # re-encodes then reuse it instead of paying a second full input
-    # scan, and the recorded salts make re-encode chunk identity a
-    # stored fact rather than a recomputation
-    plan = encode_kwargs.get("salt_plan")
-    if plan is None and group_cols:
-        plan = encode_kwargs["salt_plan"] = plan_salts(
-            df,
-            group_cols,
-            encode_kwargs.get("target_group_bytes", TARGET_GROUP_BYTES),
-        )
     encoded = encode_table(df, **encode_kwargs).persist()
     try:
         _write_schema(path, df.schema)
         write_mode = "overwrite" if mode == "overwrite" else "append"
-        if plan is not None:
-            # the plan sidecar lands BEFORE the chunks: a write that
-            # crashes mid-chunk-job leaves the recorded plan behind, so
-            # the resume re-encode skips the histogram pass and
-            # reproduces the originally planned chunking exactly
-            plan.write.mode(write_mode).parquet(fsio.join(path, SALT_PLAN_DIR))
         (
             encoded.write.mode(write_mode)
             .option("compression", "uncompressed")
@@ -767,9 +746,16 @@ def resume_encode(
     """Encode only groups not yet committed in the manifest; append.
 
     Returns the number of (group) work units that were still missing.
-    Chunk determinism (hash partitioning on group+salt, sorted rows,
-    content-independent chunk ids) guarantees a resumed run reproduces
-    byte-identical chunks for the missing groups.
+    A pending group is a whole group (the anti-join is on the group
+    key), so the salt plan of the pending rows gives it the bytes and
+    salts the original write gave it; with chunk determinism (hash
+    partitioning on group+salt, sorted rows, content-independent chunk
+    ids) a resumed run reproduces byte-identical chunks for the missing
+    groups. Pass the original write's ``encode_kwargs`` (group and
+    chunk byte targets, profile, bloom, namespace) to reproduce its
+    bytes; ``num_partitions`` may differ. The plan's aggregation is the
+    pass that finds the pending groups, so a resume reads its input
+    twice: once to plan, once to encode.
 
     When a manifest exists, the chunk part files of a write that
     crashed before its manifest rows landed are removed first
@@ -781,7 +767,6 @@ def resume_encode(
     spark = df.sparkSession
     manifest_path = fsio.join(path, MANIFEST_DIR)
     chunks_path = fsio.join(path, CHUNKS_DIR)
-    key_expr = group_key_expr(group_cols)
     if not fsio.exists(manifest_path):
         if fsio.exists(fsio.join(chunks_path, "_SUCCESS")):
             # crashed between chunk write and manifest commit: the chunk
@@ -800,62 +785,32 @@ def resume_encode(
     else:
         have_manifest = True
         _remove_orphan_chunk_files(spark, path)
-    if not have_manifest:
-        pending = df.withColumn("_gk", key_expr)
-    else:
+    pending = df
+    if have_manifest:
         committed_keys = (
             read_manifest(spark, path)
-            .select("group_key")
+            .select(F.col("group_key").alias("_gk"))
             .distinct()
-            .withColumn("_gk", F.col("group_key"))
-            .drop("group_key")
         )
         # no broadcast hint: the committed-group set grows with the
         # dataset (AQE broadcasts it at runtime whenever it fits)
-        pending = df.withColumn("_gk", key_expr).join(
-            committed_keys, on="_gk", how="left_anti"
+        pending = (
+            df.withColumn("_gk", group_key_expr(group_cols))
+            .join(committed_keys, on="_gk", how="left_anti")
+            .drop("_gk")
         )
-    pend_groups = pending.select(*group_cols).distinct().persist()
-    try:
-        n_missing = pend_groups.count()
-        if n_missing == 0:
-            return 0
-        # reuse the recorded salt plan: the resume encode then skips the
-        # size-histogram pass over the pending rows (at 100 TB that pass
-        # is itself a full read), and the recorded salts reproduce the
-        # originally planned chunking as a stored fact. Duplicate
-        # sidecar rows (an earlier crashed resume appended its slice
-        # again) collapse via a deterministic max — for a group with NO
-        # committed chunks any self-consistent plan yields correct,
-        # internally consistent chunks.
-        plan_path = fsio.join(path, SALT_PLAN_DIR)
-        if "salt_plan" not in encode_kwargs and fsio.exists(plan_path):
-            recorded = spark.read.parquet(plan_path)
-            if {*group_cols, "_grp_bytes", "_n_salts"} <= set(recorded.columns):
-                restricted = (
-                    recorded.join(pend_groups, on=group_cols, how="left_semi")
-                    .groupBy(*group_cols)
-                    .agg(
-                        F.max("_grp_bytes").alias("_grp_bytes"),
-                        F.max("_n_salts").alias("_n_salts"),
-                    )
-                )
-                # collected once into a driver-side table, like a fresh
-                # plan_salts plan. Every pending group must be covered —
-                # a partial sidecar (legacy or clipped) falls back to
-                # re-planning
-                tbl = restricted.toArrow()
-                if tbl.num_rows == n_missing:
-                    encode_kwargs["salt_plan"] = spark.createDataFrame(
-                        tbl, schema=restricted.schema
-                    )
+    plan = plan_salts(
+        pending, group_cols,
+        encode_kwargs.get("target_group_bytes", TARGET_GROUP_BYTES),
+    )
+    # one plan row per pending group, read on the driver (no Spark job)
+    n_missing = len(plan.collect())
+    if n_missing:
         write_encoded(
-            pending.drop("_gk"), path, mode="append", group_cols=group_cols,
-            **encode_kwargs,
+            pending, path, mode="append", group_cols=group_cols,
+            salt_plan=plan, **encode_kwargs,
         )
-        return n_missing
-    finally:
-        pend_groups.unpersist()
+    return n_missing
 
 
 def _remove_orphan_chunk_files(spark: SparkSession, path: str) -> None:

@@ -558,16 +558,18 @@ def plan_salts(
     """Exact size histogram -> salts-per-group (the skew plan).
 
     Returns a driver-side table (group_cols..., _grp_bytes, _n_salts)
-    for encode_table's broadcast join. The mega-repo from the Zipf
-    fixture lands many salts; tiny groups get 1.
+    for encode_table's broadcast join, one row per group that has rows
+    (an empty input plans no group, with or without group columns).
+    The mega-repo from the Zipf fixture lands many salts; tiny groups
+    get 1.
 
     The histogram is collected ONCE (``toArrow``) and rebuilt as an
     Arrow-built local DataFrame under the histogram's own schema, so
     the join keys keep their Spark types and the join's build side is
     a LocalTableScan: nothing is persisted, and reading the plan back
-    (its total, the sidecar write, the broadcast) never re-runs the
-    aggregation over the input. A plan has one row per group and is
-    broadcast anyway, so it already had to fit on the driver.
+    (its rows, its total, the broadcast) never re-runs the aggregation
+    over the input. A plan is broadcast anyway, so it already had to
+    fit on the driver.
 
     ``with_total=True`` additionally returns the plan's total byte
     estimate (summed on the driver, no Spark job).
@@ -578,10 +580,15 @@ def plan_salts(
         e = F.octet_length(F.col(c)) if c in str_cols else F.lit(8)
         e = F.coalesce(e, F.lit(0))
         size_expr = e if size_expr is None else size_expr + e
-    sizes = df.groupBy(*group_cols).agg(F.sum(size_expr).alias("_grp_bytes"))
-    # _grp_bytes stays in the plan: a recorded plan sidecar lets a
-    # later resume/append size its partitions (sum over the pending
-    # groups) without re-scanning the input
+    # a global aggregate (no group columns) over an empty input is one
+    # row of NULL bytes: not a group
+    sizes = (
+        df.groupBy(*group_cols)
+        .agg(F.sum(size_expr).alias("_grp_bytes"))
+        .where(F.col("_grp_bytes").isNotNull())
+    )
+    # _grp_bytes stays in the plan: encode_table sizes its partitions
+    # from their sum
     hist = sizes.select(
         *group_cols,
         "_grp_bytes",
@@ -600,7 +607,7 @@ def _plan_bytes(plan: DataFrame) -> int:
     """Total input bytes a salt plan covers, summed on the driver (the
     plan is broadcast, so it fits there; a local plan answers without
     a Spark job)."""
-    return sum(r[0] or 0 for r in plan.select("_grp_bytes").collect())
+    return sum(r[0] for r in plan.select("_grp_bytes").collect())
 
 
 def layout_cols(group_cols, range_cols) -> tuple[list[str], list[str]]:
@@ -647,16 +654,15 @@ def encode_table(
     unaffected by how the column was selected.
 
     ``salt_plan``: a precomputed plan_salts() DataFrame (group_cols +
-    _grp_bytes + _n_salts). When given, the first-pass size histogram
-    over the input is SKIPPED — write_encoded records the plan as a
-    dataset sidecar so resume/append re-encodes never pay a second full
-    input scan (at 100 TB the histogram pass is itself a full read).
-    Without one, the grouped path plans here (plan_salts). The salts —
-    and therefore every chunk id and byte — are pure functions of the
-    plan, so passing the recorded plan reproduces the original chunking
-    exactly. This is the only place an encode is sized: without
-    ``num_partitions`` the grouped path derives it from the plan's
-    total bytes.
+    _grp_bytes + _n_salts) of ``df``. When given, the first-pass size
+    histogram over the input is skipped; resume_encode passes the plan
+    it built to count its pending groups. Without one, the encode plans
+    here (plan_salts). The salts — and therefore every chunk id and
+    byte — are pure functions of each group's bytes, so a plan of any
+    input holding whole groups salts those groups as an encode of the
+    full input would. This is the only place an encode is sized:
+    without ``num_partitions`` it is derived from the plan's total
+    bytes.
 
     Layouts:
     - ``group_cols`` (default path): hash partition on (group, salt);
@@ -711,6 +717,17 @@ def encode_table(
             "sort_cols including at least one non-map column, or pass "
             "unstable_order_ok=True to accept order-dependent chunks."
         )
+    if bloom is True:
+        bloom_cols = None
+    elif bloom is False:
+        bloom_cols = frozenset()
+    else:
+        bloom_cols = frozenset(bloom)
+        unknown = bloom_cols - set(df.columns)
+        if unknown:
+            raise ValueError(
+                f"bloom columns not in the input: {sorted(unknown)}"
+            )
     # a range encode given its partition count needs no plan
     if salt_plan is None and not (range_cols and num_partitions):
         salt_plan = plan_salts(df, group_cols, target_group_bytes)
@@ -756,17 +773,6 @@ def encode_table(
             )
         )
 
-    if bloom is True:
-        bloom_cols = None
-    elif bloom is False:
-        bloom_cols = frozenset()
-    else:
-        bloom_cols = frozenset(bloom)
-        unknown = bloom_cols - set(df.columns)
-        if unknown:
-            raise ValueError(
-                f"bloom columns not in the input: {sorted(unknown)}"
-            )
     fn = _make_encode_fn(
         target_chunk_bytes, target_chunk_rows, profile, salt_col, gk_col,
         namespace, bloom_cols,

@@ -1,8 +1,10 @@
 #!/usr/bin/env bash
 # north_rule deployment shape: spark-submit --py-files at two cluster
 # sizes (local[N] / local[4N] as the sandbox proxy for N / 4N executors),
-# grouped and ungrouped. Each layout must print the same chunk-id digest
-# (chunk_ids_sha256) at both sizes.
+# grouped and ungrouped. Per layout: an encode at local[N], a resume at
+# local[4N] of that encode with its chunks/ and manifest/ deleted (the
+# crash window), and a fresh encode at local[4N]. All three must print
+# the same chunk-id digest (chunk_ids_sha256); the script exits 1 if not.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 N="${1:-2}"
@@ -13,16 +15,36 @@ trap 'rm -rf "$(dirname "$OUT")" "$(dirname "$ZIP")"' EXIT
 zip -qr "$ZIP" colcrush
 # driver heap fitted to this host, as get_spark() sizes it
 MEM="$(python3 -c 'from colcrush.session import default_driver_memory as m; print(m())')"
+run() {  # run CORES GROUP_COLS [encode_job.py flags...]; sets DIGEST
+  local cores="$1" group_cols="$2" line
+  shift 2
+  echo "== spark-submit local[$cores] --group-cols \"$group_cols\" $* =="
+  line="$(spark-submit --master "local[$cores]" \
+    --conf spark.sql.shuffle.partitions="$cores" \
+    --conf spark.sql.execution.arrow.pyspark.enabled=true \
+    --conf spark.driver.memory="$MEM" \
+    --py-files "$ZIP" \
+    scripts/encode_job.py --input "SYNTH:$ROWS" --output "$OUT" \
+    --group-cols "$group_cols" "$@" 2>/dev/null | tail -1)"
+  echo "$line"
+  DIGEST="$(python3 -c 'import json, sys; print(json.loads(sys.argv[1])["chunk_ids_sha256"])' "$line")"
+}
+STATUS=0
 for GROUP_COLS in "repo,lang" ""; do
-  for CORES in "$N" "$((4 * N))"; do
-    rm -rf "$OUT"
-    echo "== spark-submit local[$CORES] --group-cols \"$GROUP_COLS\" =="
-    spark-submit --master "local[$CORES]" \
-      --conf spark.sql.shuffle.partitions="$CORES" \
-      --conf spark.sql.execution.arrow.pyspark.enabled=true \
-      --conf spark.driver.memory="$MEM" \
-      --py-files "$ZIP" \
-      scripts/encode_job.py --input "SYNTH:$ROWS" --output "$OUT" \
-      --group-cols "$GROUP_COLS" 2>/dev/null | tail -1
-  done
+  rm -rf "$OUT"
+  run "$N" "$GROUP_COLS"
+  WANT="$DIGEST"
+  rm -rf "$OUT/chunks" "$OUT/manifest"
+  run "$((4 * N))" "$GROUP_COLS" --resume
+  RESUMED="$DIGEST"
+  rm -rf "$OUT"
+  run "$((4 * N))" "$GROUP_COLS"
+  if [ "$RESUMED" = "$WANT" ] && [ "$DIGEST" = "$WANT" ]; then
+    echo "group-cols \"$GROUP_COLS\": one chunk_ids_sha256 at both widths and resumed"
+  else
+    echo "group-cols \"$GROUP_COLS\": digests differ (local[$N] $WANT," \
+      "resumed $RESUMED, local[$((4 * N))] $DIGEST)"
+    STATUS=1
+  fi
 done
+exit "$STATUS"

@@ -57,23 +57,41 @@ def test_write_rejects_unknown_mode(spark, src, tmp):
         write_encoded(src, tmp, mode="create", group_cols=["repo", "lang"])
 
 
-def test_failed_encode_releases_salt_plan(spark, src, tmp):
-    """If encode_table raises after the salt-plan histogram was
-    persisted (unknown bloom column here), write_encoded must unpersist
-    the plan on the error path — a leaked persisted DataFrame eats
-    executor storage for the session's lifetime (ADVICE r5)."""
+def _jobs(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_unknown_bloom_column_raises_before_any_job(spark, src, tmp):
+    """An unknown bloom column name is checked before the salt plan's
+    aggregation: write_encoded raises with no Spark job run and no
+    persisted RDD left behind (a leaked one would eat executor storage
+    for the session's lifetime)."""
     sc = spark.sparkContext
     before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    with pytest.raises(ValueError, match="not in the input"):
-        write_encoded(src, tmp, group_cols=["repo", "lang"], bloom=["nope"])
+
+    def write():
+        with pytest.raises(ValueError, match="not in the input"):
+            write_encoded(src, tmp, group_cols=["repo", "lang"], bloom=["nope"])
+
+    _, jobs = _jobs(spark, write)
+    assert jobs == 0
     leaked = set(sc._jsc.getPersistentRDDs().keySet().toArray()) - before
     assert not leaked
+    assert not os.path.exists(tmp)
 
 
 def test_encode_and_resume_persist_no_salt_plan(spark, src, tmp):
     """The salt plan is a driver-side table, never a persisted
     histogram: encode_table without a plan (the roundtrip queries'
-    path) and a resume that reuses the recorded sidecar both add no
+    path) and a resume that plans its pending groups both add no
     persisted RDD to the session."""
     from colcrush.engine import decode_table, encode_table
     from colcrush.engine.dataset import CHUNKS_DIR, MANIFEST_DIR
@@ -100,34 +118,31 @@ def test_encode_and_resume_persist_no_salt_plan(spark, src, tmp):
 
 
 # Spark jobs one grouped write_encoded of the input below runs under
-# the test session. Building a chunk->file map would add one more.
-WRITE_ENCODED_JOBS = 8
+# the test session. Building a chunk->file map or recording the salt
+# plan would add one more each.
+WRITE_ENCODED_JOBS = 7
 
 
 def test_write_encoded_job_count_and_no_file_map(spark, tmp_path):
     """A grouped write runs a pinned number of Spark jobs and no write
-    or compaction leaves a file_map/ dir behind."""
+    or compaction leaves a file_map/ or salt_plan/ dir behind."""
     from colcrush.engine import compact_epochs
 
-    sc = spark.sparkContext
     df = source_code_df(spark, 400, n_repos=6)
     ds = str(tmp_path / "ds")
-    group = "write-encoded-job-count"
-    sc.setJobGroup(group, "one grouped write_encoded")
-    try:
-        write_encoded(df, ds, group_cols=["repo", "lang"])
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == WRITE_ENCODED_JOBS
+    _, jobs = _jobs(spark, lambda: write_encoded(df, ds, group_cols=["repo", "lang"]))
+    assert jobs == WRITE_ENCODED_JOBS
 
-    def no_file_map(p):
-        return not os.path.exists(os.path.join(p, "file_map"))
+    def no_sidecar(p):
+        return not any(
+            os.path.exists(os.path.join(p, d)) for d in ("file_map", "salt_plan")
+        )
 
-    assert no_file_map(ds)
+    assert no_sidecar(ds)
     write_encoded(df, ds, mode="append", group_cols=["lang"])
-    assert no_file_map(ds)
+    assert no_sidecar(ds)
     write_encoded(df, ds, mode="overwrite", group_cols=["repo", "lang"])
-    assert no_file_map(ds)
+    assert no_sidecar(ds)
 
     streamed = str(tmp_path / "streamed")
     for i, part in enumerate(
@@ -138,7 +153,7 @@ def test_write_encoded_job_count_and_no_file_map(spark, tmp_path):
             group_cols=["lang"], namespace=f"epoch-{i}",
         )
     assert compact_epochs(spark, streamed) == 2
-    assert no_file_map(streamed)
+    assert no_sidecar(streamed)
     assert read_decoded(spark, streamed).count() == 400
 
 
@@ -521,7 +536,6 @@ def test_decimal_columns_use_int_codec(spark, tmp_path):
 def _jobs_and_plans(spark, monkeypatch, fn):
     """``fn()``'s result, the number of Spark jobs it ran (statusTracker
     job group) and the physical plans of the DataFrames it collected."""
-    sc = spark.sparkContext
     plans = []
     frame = type(spark.range(0))  # the session's concrete DataFrame class
     collect = frame.collect
@@ -530,15 +544,10 @@ def _jobs_and_plans(spark, monkeypatch, fn):
         plans.append(df._jdf.queryExecution().executedPlan().toString())
         return collect(df)
 
-    group = f"stats-jobs-{uuid.uuid4().hex}"
     with monkeypatch.context() as m:
         m.setattr(frame, "collect", recording_collect)
-        sc.setJobGroup(group, "stats job count")
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group)), plans
+        out, jobs = _jobs(spark, fn)
+    return out, jobs, plans
 
 
 def test_filtered_min_max_early_termination(spark, tmp_path, monkeypatch):
@@ -601,45 +610,74 @@ def test_column_min_max_long_strings_one_pruned_scan(spark, tmp_path, monkeypatc
     assert plans and not any("Exchange hashpartitioning(chunk_id" in x for x in plans)
 
 
-def test_resume_reuses_recorded_salt_plan(spark, src, tmp, monkeypatch):
-    """The salt plan sidecar lands BEFORE the chunks, so a write that
-    crashed mid-chunk-job leaves the plan behind; the resume re-encode
-    must REUSE it — no second size-histogram pass over the input (at
-    100 TB the histogram is itself a full read) — and produce chunks
-    byte-identical to an uncrashed encode."""
-    import colcrush.engine.encoder as enc_mod
-    from colcrush.engine.dataset import CHUNKS_DIR, SALT_PLAN_DIR
+# Spark jobs a resume of a write that crashed before its chunks landed
+# (no chunks/, no manifest/) runs under the test session: the plan of
+# its pending groups, then write_encoded's jobs on that plan. A pass
+# that only counts the pending groups would add jobs.
+RESUME_JOBS = 7
 
-    tmp2 = tmp + "_full"
-    write_encoded(src, tmp2, group_cols=["repo", "lang"])
 
-    write_encoded(src, tmp, group_cols=["repo", "lang"])
-    assert os.path.isdir(os.path.join(tmp, SALT_PLAN_DIR))
-    # simulate the crash window: chunk job died mid-write (no chunks,
-    # no manifest), the plan sidecar survives
+def _chunk_rows(spark, p):
+    return read_manifest(spark, p).select(
+        "chunk_id", "column", "enc_bytes", "payload_ck"
+    )
+
+
+def _same_rows(a, b):
+    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_resume_replans_pending_groups(spark, src, tmp):
+    """A resume plans the salts of its pending groups from the pending
+    rows, in the pass that finds them: a crashed write resumes in a
+    pinned number of Spark jobs to chunks byte-identical to an
+    uncrashed write. No write records a plan, and a ``salt_plan/`` dir
+    left by an earlier revision is ignored, wrong salts and all."""
+    from colcrush.engine.dataset import CHUNKS_DIR, MANIFEST_DIR
+
+    groups = ["repo", "lang"]
+    full = tmp + "_full"
+    write_encoded(src, full, group_cols=groups)
+    write_encoded(src, tmp, group_cols=groups)
+    # simulate the crash window: the chunk job died mid-write (no
+    # chunks, no manifest)
     shutil.rmtree(os.path.join(tmp, CHUNKS_DIR))
-    shutil.rmtree(os.path.join(tmp, "manifest"))
+    shutil.rmtree(os.path.join(tmp, MANIFEST_DIR))
+    # an earlier revision's plan, every group salted 7 ways
+    src.groupBy(*groups).agg(
+        F.lit(1 << 30).cast("long").alias("_grp_bytes"),
+        F.lit(7).alias("_n_salts"),
+    ).write.parquet(os.path.join(tmp, "salt_plan"))
 
-    def _boom(*a, **k):
-        raise AssertionError("plan_salts must not run during resume")
+    n, jobs = _jobs(spark, lambda: resume_encode(src, tmp, group_cols=groups))
+    assert n == src.select(*groups).distinct().count()
+    assert jobs == RESUME_JOBS
+    assert _same_rows(_chunk_rows(spark, tmp), _chunk_rows(spark, full))
+    assert resume_encode(src, tmp, group_cols=groups) == 0
+    assert not os.path.exists(os.path.join(full, "salt_plan"))
 
-    monkeypatch.setattr(enc_mod, "plan_salts", _boom)
-    # dataset.write_encoded imported plan_salts by name too
-    import colcrush.engine.dataset as ds_mod
-
-    monkeypatch.setattr(ds_mod, "plan_salts", _boom)
-    assert resume_encode(src, tmp, group_cols=["repo", "lang"]) > 0
-    monkeypatch.undo()
-
-    a = read_manifest(spark, tmp).select("chunk_id", "column", "enc_bytes", "n_rows")
-    b = read_manifest(spark, tmp2).select("chunk_id", "column", "enc_bytes", "n_rows")
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    # a resume that ADDS groups the sidecar does not cover must fall
-    # back to planning those groups (coverage check), not mis-salt them
+    # a resume that ADDS groups plans them with the rest of its pending
+    # rows
     more = src.withColumn("lang", F.concat(F.col("lang"), F.lit("_x")))
-    assert resume_encode(src.unionAll(more), tmp, group_cols=["repo", "lang"]) > 0
+    assert resume_encode(src.unionAll(more), tmp, group_cols=groups) > 0
     assert read_decoded(spark, tmp).count() == src.count() * 2
+
+
+def test_ungrouped_resume_after_crash_byte_identical(spark, src, tmp):
+    """An ungrouped write that crashed before its chunks landed resumes
+    to chunks byte-identical to an uncrashed write, and a second resume
+    finds nothing missing: the empty pending input plans no group."""
+    from colcrush.engine.dataset import CHUNKS_DIR, MANIFEST_DIR
+
+    full = tmp + "_full"
+    write_encoded(src, full)
+    write_encoded(src, tmp)
+    shutil.rmtree(os.path.join(tmp, CHUNKS_DIR))
+    shutil.rmtree(os.path.join(tmp, MANIFEST_DIR))
+    assert resume_encode(src, tmp, group_cols=[]) == 1
+    assert _same_rows(_chunk_rows(spark, tmp), _chunk_rows(spark, full))
+    assert resume_encode(src, tmp, group_cols=[]) == 0
+    assert count_rows(spark, tmp) == src.count()
 
 
 def test_verify_dataset_fsck(spark, src, tmp):

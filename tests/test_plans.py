@@ -181,10 +181,11 @@ def test_record_filter_no_global_window(spark):
 
 
 def test_encode_with_salt_plan_scans_input_once(spark, tmp_path):
-    """With a recorded salt plan, the encode plan must read the INPUT
-    exactly once (the broadcast build side scans the tiny plan, not a
-    second histogram aggregation over the input) — the property that
-    makes sidecar-reusing resume a one-pass job at 100 TB."""
+    """Given a salt plan, the encode plan must read the INPUT exactly
+    once (the broadcast build side scans the tiny plan, not a second
+    histogram aggregation over the input) — the property that keeps a
+    resume, which hands the encode the plan it built of its pending
+    rows, at two input passes: one to plan, one to encode."""
     import pyspark.sql.functions as F
 
     from colcrush.engine.encoder import plan_salts
