@@ -10,6 +10,13 @@ so every Python worker is forked from a process whose zip importers skip
 that re-read while the archive's (st_mtime_ns, st_size) is unchanged.
 Needs ``colcrush`` importable from the worker's start-up path (cwd,
 PYTHONPATH or site-packages), as colcrush's own UDFs already do.
+
+In a ``get_spark`` session the JVM reaches this daemon and its workers
+over a Unix socket (``spark.python.unix.domain.socket.enabled``), not
+loopback TCP. PySpark's daemon then treats every connection as
+authenticated and skips the worker secret, so the socket's directory,
+colcrush's per-user dir (``colcrush._userdir.user_dir``: owned by this
+user, mode 0700), is what keeps other local users out of the workers.
 """
 
 import os

@@ -28,6 +28,8 @@ import tempfile
 
 import numpy as np
 
+from colcrush._userdir import user_dir
+
 _SRC = r"""
 #include <stdlib.h>
 #include <string.h>
@@ -855,21 +857,7 @@ def _so_dir() -> str:
     local user could pre-plant a malicious .so there — dlopening it
     would run arbitrary code inside every Spark worker. A private dir
     plus the ownership check in load() closes that."""
-    uid = os.getuid() if hasattr(os, "getuid") else 0
-    d = os.path.join(tempfile.gettempdir(), f"colcrush-{uid}")
-    os.makedirs(d, mode=0o700, exist_ok=True)
-    # exist_ok trusts a PRE-EXISTING dir — which an attacker could have
-    # created first at the predictable name, letting them swap entries
-    # between the stat check and dlopen (TOCTOU). Require the dir
-    # itself to be ours and closed to group/other before using it.
-    st = os.stat(d)
-    if hasattr(os, "geteuid") and st.st_uid != os.geteuid():
-        raise RuntimeError(f"{d} exists but is not owned by this user")
-    if st.st_mode & 0o077:
-        os.chmod(d, 0o700)
-        if os.stat(d).st_mode & 0o077:
-            raise RuntimeError(f"{d} permissions could not be restricted")
-    return d
+    return user_dir(tempfile.gettempdir())
 
 
 def _so_path() -> str:

@@ -25,6 +25,7 @@ every filter entry point prunes with one rule set.
 
 from __future__ import annotations
 
+import math
 from datetime import date, datetime, timedelta, timezone
 from typing import Any
 
@@ -329,8 +330,16 @@ def _leaf_survives(col, op, val, temporal=None):
         lo, key = 4, _num_key
 
         def lit(v):
-            ok = isinstance(v, (int, float)) and not isinstance(v, bool)
-            return _num_key(float(v)) if ok else None
+            if not isinstance(v, (int, float)) or isinstance(v, bool):
+                return None
+            f = float(v)
+            if op in ("<", ">") and isinstance(v, int) and int(f) != v:
+                # an int literal beyond 2**53 rounds to nearest and may
+                # land on an exact extreme it lies strictly beyond
+                # (2**53 < 2**53 + 1, yet both are 2.0**53): one ulp
+                # outward keeps such a chunk
+                f = math.nextafter(f, math.inf if op == "<" else -math.inf)
+            return _num_key(f)
     elif isinstance(sample, str):
         lo, key = 2, (lambda x: x)
 

@@ -11,7 +11,11 @@ N="${1:-2}"
 ROWS="${2:-20000}"
 OUT="$(mktemp -d)/ds"
 ZIP="$(mktemp -d)/colcrush.zip"
-trap 'rm -rf "$(dirname "$OUT")" "$(dirname "$ZIP")"' EXIT
+# Python workers over Unix sockets, as get_spark() sets them. PySpark
+# skips the worker secret on them, so they go in a 0700 dir; under /tmp
+# whatever $TMPDIR is, as a socket path must fit AF_UNIX's 107 bytes
+SOCK_DIR="$(mktemp -d -p /tmp)"
+trap 'rm -rf "$(dirname "$OUT")" "$(dirname "$ZIP")" "$SOCK_DIR"' EXIT
 zip -qr "$ZIP" colcrush
 # driver heap fitted to this host, as get_spark() sizes it
 MEM="$(python3 -c 'from colcrush.session import default_driver_memory as m; print(m())')"
@@ -23,6 +27,8 @@ run() {  # run CORES GROUP_COLS [encode_job.py flags...]; sets DIGEST
     --conf spark.sql.shuffle.partitions="$cores" \
     --conf spark.sql.execution.arrow.pyspark.enabled=true \
     --conf spark.driver.memory="$MEM" \
+    --conf spark.python.unix.domain.socket.enabled=true \
+    --conf spark.python.unix.domain.socket.dir="$SOCK_DIR" \
     --py-files "$ZIP" \
     scripts/encode_job.py --input "SYNTH:$ROWS" --output "$OUT" \
     --group-cols "$group_cols" "$@" 2>/dev/null | tail -1)"

@@ -25,7 +25,7 @@ from datetime import date, datetime, timezone
 
 import pyarrow as pa
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 import pyspark.sql.functions as F
@@ -170,6 +170,9 @@ def _encode(kind, chunks):
 
 @settings(max_examples=300, deadline=None)
 @given(_case())
+# int literals that round onto an exact extreme they lie strictly beyond
+@example(("int", [[-BIG]], [("v", ">", -BIG - 1)]))
+@example(("int", [[BIG]], [("v", "<", BIG + 1)]))
 def test_chunk_predicate_never_drops_a_matching_chunk(case):
     kind, chunks, filters = case
     schema = T.StructType([T.StructField("v", KINDS[kind][1])])
