@@ -1,4 +1,4 @@
-"""Encoded dataset persistence: chunks + manifest + resumable restarts.
+"""Encoded dataset persistence: chunks + manifest, one commit per write.
 
 Directory layout (an Iceberg-metadata-style commit protocol without the
 Iceberg jars, which aren't in this image):
@@ -9,22 +9,28 @@ Iceberg jars, which aren't in this image):
                               them re-compressed would hide the ratio)
   <root>/manifest/            chunk rows sans payload (lineage + metrics:
                               codec, dict size, ratio, row counts, min/max)
+  <root>/commit=NNNNNNNN/     each later write: the same three entries
+  <root>/epoch=NNNNNNNN/      a stream epoch (streaming/encode_sink.py), ditto
 
 A ``salt_plan/`` or ``file_map/`` dir left by an earlier revision is
 inert: nothing reads or writes it.
 
-The manifest is written AFTER the chunks, so its presence commits them —
-the analog of parquet4s's postWriteHandler checkpoint semantics
-(/root/reference/akkaPekko/src/main/scala/com/github/mjakubowski84/parquet4s/ParquetPartitioningFlow.scala:303-316).
+Every write is one commit, written in overwrite mode, manifest after
+chunks, and visible once ``manifest/_SUCCESS`` lands — the analog of
+parquet4s's postWriteHandler checkpoint (ParquetPartitioningFlow.scala
+303-316). The first write is the base; commit n > 0 is ``commit=n``, n
+one above the highest committed commit, so a retry replaces its own
+uncommitted attempt. Readers see the committed base (or else the
+committed epochs) plus the committed commits; a crash leaves nothing to
+repair.
 Resume = anti-join the input's groups against the committed manifest,
-plan the salts of the pending groups and encode only those
+plan the salts of the pending groups and commit only those
 (SURVEY.md §7 step 5).
 """
 
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -45,6 +51,9 @@ from .encoder import (
 SCHEMA_FILE = "schema.json"
 CHUNKS_DIR = "chunks"
 MANIFEST_DIR = "manifest"
+COMMIT_PREFIX = "commit="
+EPOCH_PREFIX = "epoch="
+COMPACTED_FILE = "_compacted.json"
 
 
 def _write_schema(path: str, schema: T.StructType) -> None:
@@ -55,9 +64,9 @@ def _write_schema(path: str, schema: T.StructType) -> None:
 def read_schema(path: str) -> T.StructType:
     p = fsio.join(path, SCHEMA_FILE)
     if not fsio.exists(p):
-        epochs = _committed_epoch_dirs(path)
-        if epochs:
-            p = fsio.join(epochs[0], SCHEMA_FILE)
+        subs = _committed_subs(path)
+        if subs:
+            p = fsio.join(path, subs[0], SCHEMA_FILE)
     return T.StructType.fromJson(fsio.read_json(p))
 
 
@@ -68,11 +77,14 @@ def write_encoded(
     file_map: bool = True,
     **encode_kwargs,
 ) -> None:
-    """Encode ``df`` and persist chunks + manifest at ``path``.
+    """Encode ``df`` and commit its chunks + manifest at ``path``.
 
-    mode: 'error' (CREATE semantics, like parquet4s Mode.CREATE —
-    /root/reference/core/src/main/scala/com/github/mjakubowski84/parquet4s/IOOps.scala:37-56),
-    'overwrite', or 'append'.
+    mode: 'error' (CREATE semantics, like parquet4s Mode.CREATE,
+    IOOps.scala:37-56) refuses base chunks, committed epochs or commits;
+    'overwrite' removes epochs, commits and the compaction record, then
+    rewrites the base (not crash-atomic, like Spark's overwrite);
+    'append' is the next commit, its chunk ids namespaced
+    ``commit-<n>``. A crashed append is invisible; re-run it.
 
     ``file_map`` is ignored. It once turned the chunk->file sidecar
     build on or off and stays only because perfbench/layers.py still
@@ -87,57 +99,83 @@ def write_encoded(
         # an unrecognized mode must fail loudly: it would otherwise
         # skip the CREATE existence check and silently APPEND
         raise ValueError(f"mode must be error|overwrite|append, got {mode!r}")
-    chunks_path = fsio.join(path, CHUNKS_DIR)
-    manifest_path = fsio.join(path, MANIFEST_DIR)
-    if mode == "error" and fsio.exists(chunks_path):
+    if mode == "error" and (
+        fsio.exists(fsio.join(path, CHUNKS_DIR)) or _committed_subs(path)
+    ):
         raise FileExistsError(f"{path} already contains an encoded dataset")
-    if mode == "append" and fsio.exists(fsio.join(path, SCHEMA_FILE)):
+    if mode == "overwrite" and fsio.isdir(path):
+        for name in fsio.listdir(path):
+            if name.startswith((COMMIT_PREFIX, EPOCH_PREFIX)):
+                fsio.rmtree(fsio.join(path, name))
+            elif name == COMPACTED_FILE:
+                fsio.remove(fsio.join(path, name))
+    n = _next_commit(path) if mode == "append" else 0
+    if n:
+        ns = encode_kwargs.get("namespace")
+        encode_kwargs["namespace"] = f"{ns}|commit-{n}" if ns else f"commit-{n}"
+    _commit(df, path, n, **encode_kwargs)
+
+
+def _commit(df: DataFrame, path: str, n: int, **encode_kwargs) -> None:
+    """Encode ``df`` into commit ``n`` of the dataset at ``path`` (the
+    base layout when 0), in overwrite mode: chunks, then the manifest,
+    whose _SUCCESS makes the commit visible."""
+    if n:
         existing = read_schema(path)
         if existing != df.schema:
             raise ValueError(
                 f"append schema mismatch: dataset has {existing.simpleString()}, "
                 f"got {df.schema.simpleString()}"
             )
+        path = fsio.join(path, f"{COMMIT_PREFIX}{n:08d}")
     encoded = encode_table(df, **encode_kwargs).persist()
     try:
         _write_schema(path, df.schema)
-        write_mode = "overwrite" if mode == "overwrite" else "append"
         (
-            encoded.write.mode(write_mode)
+            encoded.write.mode("overwrite")
             .option("compression", "uncompressed")
-            .parquet(chunks_path)
+            .parquet(fsio.join(path, CHUNKS_DIR))
         )
         # manifest rows come from the SAME persisted plan (encode runs
-        # once; no chunk re-scan) and commit strictly after the chunks —
-        # in append mode only the new rows are appended, so the manifest
-        # write cost stays proportional to the increment at 100 TB
-        manifest = encoded.select(*MANIFEST_COLS)
-        manifest.write.mode(write_mode).parquet(manifest_path)
+        # once; no chunk re-scan) and commit strictly after the chunks;
+        # a commit writes only its own rows, so the manifest write cost
+        # stays proportional to the increment at 100 TB
+        encoded.select(*MANIFEST_COLS).write.mode("overwrite").parquet(
+            fsio.join(path, MANIFEST_DIR)
+        )
     finally:
         encoded.unpersist()
 
 
-def _committed_epoch_dirs(path: str) -> list[str]:
-    """Epoch sub-datasets (streaming sink layout) whose manifest is
-    committed — an epoch dir with chunks but no manifest/_SUCCESS is an
-    uncommitted partial write and must stay invisible to readers."""
+def _committed(root: str) -> bool:
+    """The (sub-)dataset at ``root`` is committed iff its manifest
+    carries Spark's job-commit marker."""
+    return fsio.exists(fsio.join(root, MANIFEST_DIR, "_SUCCESS"))
+
+
+def _committed_subs(path: str) -> list[str]:
+    """Sorted names of the committed ``commit=`` and ``epoch=``
+    sub-datasets under ``path``: one listing of the dataset root."""
     if not fsio.isdir(path):
         return []
-    out = []
-    for d in sorted(fsio.listdir(path)):
-        if d.startswith("epoch=") and fsio.exists(
-            fsio.join(path, d, MANIFEST_DIR, "_SUCCESS")
-        ):
-            out.append(fsio.join(path, d))
-    return out
+    return sorted(
+        d
+        for d in fsio.listdir(path)
+        if d.startswith((COMMIT_PREFIX, EPOCH_PREFIX))
+        and _committed(fsio.join(path, d))
+    )
 
 
-def _direct_committed(path: str) -> bool:
-    """The base-layout dataset at ``path`` is committed iff its
-    manifest carries Spark's job-commit marker — a crashed compaction
-    or write leaves chunks without a committed manifest, and readers
-    must then keep seeing the epoch sub-datasets instead."""
-    return fsio.exists(fsio.join(path, MANIFEST_DIR, "_SUCCESS"))
+def _next_commit(path: str) -> int:
+    """0 (the base) when nothing at ``path`` is committed, else one
+    above the highest committed commit (a base or epochs count as 0)."""
+    subs = _committed_subs(path)
+    if not subs and not _committed(path):
+        return 0
+    return 1 + max(
+        (int(d[len(COMMIT_PREFIX):]) for d in subs if d.startswith(COMMIT_PREFIX)),
+        default=0,
+    )
 
 
 # Explicit read schemas: a dataset appended to across format revisions
@@ -154,13 +192,18 @@ _MANIFEST_DDL = ", ".join(
 
 
 def _committed_dirs(path: str, sub: str) -> list[str]:
-    """The ``sub`` directories (chunks/ or manifest/) a reader sees: a
-    committed base layout wins, else the committed epoch sub-datasets,
-    else the bare path's, so that Spark raises its own path error."""
-    if _direct_committed(path):
-        roots = [path]
+    """The ``sub`` directories (chunks/ or manifest/) a reader sees: the
+    committed base, or else the committed epochs, plus the committed
+    commits; the bare path's when nothing is committed, so that Spark
+    raises its own path error."""
+    subs = _committed_subs(path)
+    if _committed(path):
+        # a compacted base absorbed the epochs; a commit stays beside it
+        roots = [path] + [
+            fsio.join(path, d) for d in subs if d.startswith(COMMIT_PREFIX)
+        ]
     else:
-        roots = _committed_epoch_dirs(path) or [path]
+        roots = [fsio.join(path, d) for d in subs] or [path]
     return [fsio.join(r, sub) for r in roots]
 
 
@@ -359,9 +402,6 @@ def _chunk_file_batches(files, requested: "list[str] | None", target):
             pf.close(force=True)
 
 
-COMPACTED_FILE = "_compacted.json"
-
-
 def _absorbed_epochs(path: str) -> list[str] | None:
     """Epoch dir basenames recorded as absorbed by a compaction, or
     None when no compaction record exists."""
@@ -378,21 +418,26 @@ def compact_epochs(spark: SparkSession, path: str) -> int:
     (no collisions), so compaction is one distributed copy of chunk
     rows plus the manifest. Returns the number of epochs compacted.
 
+    Epochs fold into an absent base; commit dirs stay where they are,
+    visible on both sides of the flip.
+
     Crash-safe ordering: base chunks first, then the _compacted.json
     record of which epoch dirs the base absorbs, then the base manifest
-    (its _SUCCESS marker is what flips readers from the epoch view to
-    the base view — see _direct_committed), epoch-dir cleanup last. A
-    crash at any point leaves readers on exactly one consistent view;
-    re-running compaction after a crash between the manifest commit and
-    the cleanup deletes exactly the recorded absorbed dirs (returns 0).
+    (its _SUCCESS marker is the base's commit, which flips readers from
+    the epoch view to the base view — see _committed_dirs), epoch-dir
+    cleanup last. A crash at any point leaves readers on exactly one
+    consistent view; re-running compaction after a crash between the
+    manifest commit and the cleanup deletes exactly the recorded
+    absorbed dirs (returns 0).
     Epochs NOT in the record with a committed base present are an
     inconsistent state (a sink kept writing past compaction — the
     encode sink refuses to, see streaming/encode_sink.py) and raise.
     Compaction writes no chunk->file map; a ``file_map/`` dir left by
     an earlier revision is neither read nor refreshed.
     """
-    epochs = _committed_epoch_dirs(path)
-    if _direct_committed(path):
+    names = [d for d in _committed_subs(path) if d.startswith(EPOCH_PREFIX)]
+    epochs = [fsio.join(path, d) for d in names]
+    if _committed(path):
         # resume of the cleanup phase: delete only what the base absorbs
         absorbed = _absorbed_epochs(path)
         if absorbed is None and epochs:
@@ -401,11 +446,11 @@ def compact_epochs(spark: SparkSession, path: str) -> int:
                 "record — cannot tell whether the remaining epoch dirs "
                 "are absorbed (safe to delete) or contain unmerged data"
             )
-        leftover = [e for e in epochs if os.path.basename(e) not in (absorbed or [])]
+        leftover = [d for d in names if d not in (absorbed or [])]
         if leftover:
             raise ValueError(
                 f"{path} has epochs written AFTER compaction "
-                f"({[os.path.basename(e) for e in leftover]}); their data "
+                f"({leftover}); their data "
                 "is invisible to base-view readers — move them to a fresh "
                 "dataset path and compact there"
             )
@@ -440,7 +485,7 @@ def compact_epochs(spark: SparkSession, path: str) -> int:
     )
     fsio.write_text_atomic(
         fsio.join(path, COMPACTED_FILE),
-        json.dumps({"epochs": [os.path.basename(e) for e in epochs]}),
+        json.dumps({"epochs": names}),
     )
     manifest.write.mode("overwrite").parquet(fsio.join(path, MANIFEST_DIR))
     for e in epochs:
@@ -587,11 +632,9 @@ def verify_dataset(
     says "every committed chunk is present, exactly once, and intact"
     without decoding anything. Detects, per (chunk_id, column) key:
     manifest rows whose chunk payload is gone (lost files), chunk rows
-    the manifest never committed (orphans from a crashed write —
-    readers list every part file and decode these rows too, while the
-    manifest-based stats do not count them; resume_encode removes
-    them), duplicate keys on either side (a resume bug would
-    double-append), and stored-checksum divergence between
+    the manifest never recorded inside a committed (sub-)dataset,
+    duplicate keys on either side (appends by earlier revisions reused
+    chunk ids), and stored-checksum divergence between
     the manifest copy and the chunk copy. ``deep=True`` additionally
     re-computes every payload's md5 checksum from its bytes (the same
     verification decode performs, but over ALL columns without
@@ -603,9 +646,9 @@ def verify_dataset(
     as ``payloads_unchecked`` rather than failing. A write that crashed
     before creating any manifest (chunks exist, manifest dir absent)
     reports every chunk as ``missing_in_manifest`` instead of raising
-    Spark's path error. The audit covers COMMITTED data: epoch dirs
-    without a committed manifest are invisible to readers by protocol
-    and are not scanned here.
+    Spark's path error. The audit covers COMMITTED data: epoch and
+    commit dirs without a committed manifest are invisible to readers
+    by protocol and are not scanned here.
 
     ``deep`` may also be a FRACTION in (0, 1): ``deep=True`` reads
     every payload byte — right for a one-off audit, too expensive as a
@@ -743,7 +786,7 @@ def resume_encode(
     group_cols: list[str],
     **encode_kwargs,
 ) -> int:
-    """Encode only groups not yet committed in the manifest; append.
+    """Encode only groups not yet committed, as one new commit.
 
     Returns the number of (group) work units that were still missing.
     A pending group is a whole group (the anti-join is on the group
@@ -757,36 +800,26 @@ def resume_encode(
     pass that finds the pending groups, so a resume reads its input
     twice: once to plan, once to encode.
 
-    When a manifest exists, the chunk part files of a write that
-    crashed before its manifest rows landed are removed first
-    (_remove_orphan_chunk_files): readers list every part file, so
-    those chunks would otherwise be read beside their re-encoded
-    copies. Run it with no other writer on ``path``.
+    The pending groups are the next commit, under the caller's
+    namespace: their keys are in no committed manifest, so their ids
+    are new. Resume is group-granular: a crashed append into committed
+    groups is retried by re-running it.
     """
     layout_cols(group_cols, encode_kwargs.get("range_cols"))
     spark = df.sparkSession
-    manifest_path = fsio.join(path, MANIFEST_DIR)
     chunks_path = fsio.join(path, CHUNKS_DIR)
-    if not fsio.exists(manifest_path):
-        if fsio.exists(fsio.join(chunks_path, "_SUCCESS")):
-            # crashed between chunk write and manifest commit: the chunk
-            # job itself completed (_SUCCESS), so recover the manifest.
-            # Explicit read schema: columns the legacy chunk files lack
-            # (bloom, payload_ck) surface as NULL — a dataset written
-            # before they existed stays recoverable, deterministically
-            chunk_rows = spark.read.schema(ENCODED_DDL).parquet(chunks_path)
-            manifest = chunk_rows.select(
-                *[c for c in MANIFEST_COLS if c in chunk_rows.columns]
-            )
-            manifest.write.mode("overwrite").parquet(manifest_path)
-            have_manifest = True  # fall through: anti-join verifies it
-        else:
-            have_manifest = False  # fresh restart: every group pending
-    else:
-        have_manifest = True
-        _remove_orphan_chunk_files(spark, path)
+    if not _committed(path) and fsio.exists(fsio.join(chunks_path, "_SUCCESS")):
+        # crashed between chunk write and manifest commit: the chunk
+        # job itself completed (_SUCCESS), so recover the manifest.
+        # Explicit read schema: columns the legacy chunk files lack
+        # (bloom, payload_ck) surface as NULL — a dataset written
+        # before they existed stays recoverable, deterministically
+        spark.read.schema(ENCODED_DDL).parquet(chunks_path).select(
+            *MANIFEST_COLS
+        ).write.mode("overwrite").parquet(fsio.join(path, MANIFEST_DIR))
+    n = _next_commit(path)
     pending = df
-    if have_manifest:
+    if n:
         committed_keys = (
             read_manifest(spark, path)
             .select(F.col("group_key").alias("_gk"))
@@ -806,47 +839,8 @@ def resume_encode(
     # one plan row per pending group, read on the driver (no Spark job)
     n_missing = len(plan.collect())
     if n_missing:
-        write_encoded(
-            pending, path, mode="append", group_cols=group_cols,
-            salt_plan=plan, **encode_kwargs,
+        _commit(
+            pending, path, n, group_cols=group_cols, salt_plan=plan,
+            **encode_kwargs,
         )
     return n_missing
-
-
-def _remove_orphan_chunk_files(spark: SparkSession, path: str) -> None:
-    """Delete the chunk part files whose chunk ids the manifest never
-    committed — what a write that crashed between its chunk and
-    manifest jobs leaves. One Spark action over every part file's
-    chunk_id column. Raises, deleting nothing, when a file mixes
-    committed and uncommitted ids: removing it would lose committed
-    rows."""
-    from urllib.parse import unquote
-
-    committed = (
-        read_manifest(spark, path)
-        .select("chunk_id")
-        .distinct()
-        .withColumn("committed", F.lit(1))
-    )
-    orphans = (
-        read_chunks(spark, path)
-        .select(F.input_file_name().alias("file"), "chunk_id")
-        .join(committed, "chunk_id", "left")
-        .groupBy("file")
-        .agg(
-            F.count(F.when(F.col("committed").isNull(), 1)).alias("orphan"),
-            F.count("committed").alias("committed"),
-        )
-        .where(F.col("orphan") > 0)
-        .collect()
-    )
-    mixed = [r["file"] for r in orphans if r["committed"]]
-    if mixed:
-        raise ValueError(
-            f"{path}: part files mix committed and uncommitted chunks "
-            f"({mixed[:3]}); removing them would lose committed rows"
-        )
-    # Spark reports URIs; delete the reader's own listing entry
-    listed = {f.rsplit("/", 1)[-1]: f for f, _ in _committed_part_files(path)}
-    for r in orphans:
-        fsio.remove(listed[unquote(r["file"].rsplit("/", 1)[-1])])

@@ -288,6 +288,11 @@ def decode_worker(
             cks = batch.column("payload_ck").to_pylist() if with_ck else None
             for i, cid in enumerate(cids):
                 d = pending.setdefault(cid, {})
+                if cols[i] in d:  # keeping either would mix two chunks
+                    raise ValueError(
+                        f"chunk {cid} column {cols[i]} arrived twice "
+                        "before the chunk was complete"
+                    )
                 # an Arrow scalar: decoded() copies out kept chunks only
                 d[cols[i]] = (
                     payloads[i] if decode else None,

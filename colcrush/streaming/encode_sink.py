@@ -27,7 +27,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 from ..engine import fsio
-from ..engine.dataset import MANIFEST_DIR, _direct_committed, write_encoded
+from ..engine.dataset import _committed, write_encoded
 
 
 def encoded_stream_sink(
@@ -45,7 +45,7 @@ def encoded_stream_sink(
     Returns the StreamingQuery."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if _direct_committed(path):
+        if _committed(path):
             # a committed compacted base short-circuits the epoch view,
             # so any epoch written now would be silently invisible to
             # readers — refuse instead of losing data
@@ -55,7 +55,7 @@ def encoded_stream_sink(
                 "readers. Point the sink at a fresh dataset path."
             )
         epoch_path = fsio.join(path, f"epoch={int(epoch_id):08d}")
-        if fsio.exists(fsio.join(epoch_path, MANIFEST_DIR, "_SUCCESS")):
+        if _committed(epoch_path):
             return  # replay of a fully committed epoch: idempotent no-op
         n = batch_df.count()
         if n == 0:

@@ -7,8 +7,10 @@ resumable colcrush dataset (the north_rule deployment shape).
         --output /path/ds --group-cols repo,lang [--resume]
 
 Prints one JSON line; ``chunk_ids_sha256`` digests the sorted distinct
-chunk ids, so runs at two widths can be compared by one value.
-``--group-cols ""`` runs the ungrouped encode.
+chunk ids, so runs at two widths can be compared by one value, and
+``rows`` is the dataset's row count (``count_rows``, from the
+manifest). ``--group-cols ""`` runs the ungrouped encode; ``--mode
+append`` adds the input to an existing dataset as a new commit.
 
 On a cluster, swap --master for yarn/k8s and size --num-executors; the
 job itself is unchanged (the engine plans partitioning from data size,
@@ -40,7 +42,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
 
     # imported after session start so --py-files zips resolve on executors
-    from colcrush.engine import read_manifest, resume_encode, write_encoded
+    from colcrush.engine import count_rows, read_manifest, resume_encode, write_encoded
     from colcrush.fixtures import source_code_df
 
     if args.input.startswith("SYNTH:"):
@@ -60,7 +62,6 @@ def main() -> None:
 
     m = read_manifest(spark, args.output)
     stats = m.agg(
-        F.sum(F.when(F.col("column") == m.select("column").first()[0], F.col("n_rows"))).alias("_"),
         F.sum("enc_bytes").alias("enc_bytes"),
         F.sum("raw_bytes").alias("raw_bytes"),
         F.countDistinct("chunk_id").alias("chunks"),
@@ -70,6 +71,7 @@ def main() -> None:
         "action": action,
         "group_cols": group_cols,
         "wall_sec": round(wall, 2),
+        "rows": count_rows(spark, args.output),
         "chunks": stats["chunks"],
         "encoded_bytes": int(stats["enc_bytes"]),
         "raw_bytes": int(stats["raw_bytes"]),

@@ -1,0 +1,393 @@
+"""One commit protocol: every write_encoded is its own committed
+sub-dataset (the base for a dataset's first write, ``commit=<n>`` for
+every later one), visible once its manifest/_SUCCESS lands.
+
+Checks that appends never repeat committed chunk ids, that the write
+modes see the whole dataset (base, epochs, commits), that a dataset
+an earlier revision appended to in place still reads as before, and a
+hypothesis lifecycle model over write, overwrite, appends, crashed
+appends, resumes, stream epochs and compaction.
+"""
+
+from __future__ import annotations
+
+import os
+from collections import Counter
+
+import pyarrow as pa
+import pytest
+from hypothesis import HealthCheck, settings
+from hypothesis import strategies as st
+from hypothesis.stateful import (
+    RuleBasedStateMachine,
+    initialize,
+    invariant,
+    rule,
+    run_state_machine_as_test,
+)
+
+import pyspark.sql.functions as F
+from pyspark.sql import types as T
+
+from colcrush.codecs import encode_array
+from colcrush.engine import (
+    column_min_max,
+    compact_epochs,
+    count_rows,
+    decode_table,
+    encode_table,
+    read_chunks,
+    read_decoded,
+    resume_encode,
+    scan,
+    verify_dataset,
+    write_encoded,
+)
+from colcrush.engine.dataset import (
+    CHUNKS_DIR,
+    COMPACTED_FILE,
+    MANIFEST_DIR,
+    read_schema,
+)
+from colcrush.engine.decoder import decode_worker
+from colcrush.engine.encoder import MANIFEST_COLS, payload_ck
+from colcrush.fixtures import source_code_df
+
+from .test_dataset_resume import _crash_before_manifest, _same_rows
+
+GROUPS = ["repo", "lang"]
+# the lifecycle model's operations
+OPS = (
+    "overwrite", "append", "crashed_append", "rerun_crashed_append",
+    "resume", "epoch", "compact",
+)
+
+
+def _epoch(df, ds, k, group_cols=("lang",)):
+    """Write epoch ``k`` of a stream dataset as the encode sink does."""
+    write_encoded(
+        df, os.path.join(ds, f"epoch={k:08d}"), mode="overwrite",
+        group_cols=list(group_cols), namespace=f"epoch-{k}",
+    )
+
+
+def test_decode_worker_refuses_a_repeated_pending_key():
+    """A (chunk_id, column) row that arrives again while its chunk is
+    still pending raises, naming the chunk and the column; a chunk id
+    that arrives again after its chunk completed decodes twice, as a
+    read of two part files sharing ids always did."""
+    schema = T.StructType(
+        [T.StructField("a", T.LongType()), T.StructField("b", T.LongType())]
+    )
+    _, in_schema, _, fn = decode_worker(schema)
+    blob, _ = encode_array(pa.array([1, 2], pa.int64()))
+
+    def row(column):
+        return pa.record_batch(
+            [
+                pa.array(["c1"]),
+                pa.array([column]),
+                pa.array([blob], pa.binary()),
+                pa.array([payload_ck(blob)], pa.int64()),
+            ],
+            schema=in_schema,
+        )
+
+    with pytest.raises(ValueError, match="chunk c1 column a arrived twice"):
+        list(fn(iter([row("a"), row("a"), row("b")])))
+    out = list(fn(iter([row("a"), row("b"), row("b"), row("a")])))
+    assert [b.num_rows for b in out] == [2, 2]
+
+
+def test_create_mode_refuses_a_stream_dataset(spark, tmp_path):
+    """mode='error' refuses a path holding committed epochs (a base
+    written there would hide them) or commits, not only base chunks."""
+    ds = str(tmp_path / "ds")
+    df = source_code_df(spark, 100, n_repos=2)
+    _epoch(df, ds, 0)
+    with pytest.raises(FileExistsError):
+        write_encoded(df, ds, group_cols=GROUPS)
+    assert not os.path.exists(os.path.join(ds, CHUNKS_DIR))
+    assert read_decoded(spark, ds).count() == 100
+
+
+def test_overwrite_replaces_epochs_commits_and_compaction_record(
+    spark, tmp_path
+):
+    """mode='overwrite' leaves only its own rows: it removes every epoch
+    and commit dir and the compaction record before writing the base."""
+    df = source_code_df(spark, 100, n_repos=2)
+    small = df.where(F.col("lang") < "m")
+
+    compacted = str(tmp_path / "compacted")
+    _epoch(df, compacted, 0)
+    assert compact_epochs(spark, compacted) == 1
+    write_encoded(small, compacted, mode="overwrite", group_cols=GROUPS)
+    assert not os.path.exists(os.path.join(compacted, COMPACTED_FILE))
+    assert count_rows(spark, compacted) == small.count()
+
+    ds = str(tmp_path / "stream")
+    _epoch(df, ds, 0)
+    write_encoded(df, ds, mode="append", group_cols=GROUPS)
+    write_encoded(small, ds, mode="overwrite", group_cols=GROUPS)
+    assert sorted(os.listdir(ds)) == [CHUNKS_DIR, MANIFEST_DIR, "schema.json"]
+    assert _same_rows(read_decoded(spark, ds), small)
+    assert compact_epochs(spark, ds) == 0
+
+
+@pytest.mark.parametrize("group_cols", [GROUPS, []], ids=["grouped", "ungrouped"])
+def test_append_commits_under_its_own_chunk_ids(spark, tmp_path, group_cols):
+    """An append that touches groups the dataset already holds commits
+    under ids no earlier commit uses: the metadata answers count every
+    row once and the audit passes."""
+    src = source_code_df(spark, 400, n_repos=6).cache()
+    first = src.where(F.col("path") < "m")
+    ds = str(tmp_path / "ds")
+    write_encoded(first, ds, group_cols=group_cols)
+    write_encoded(
+        src.where(F.col("path") >= "m"), ds, mode="append",
+        group_cols=group_cols,
+    )
+    assert read_decoded(spark, ds).count() == 400
+    assert count_rows(spark, ds) == 400
+    report = verify_dataset(spark, ds)
+    assert report["ok"], report
+    assert _same_rows(read_decoded(spark, ds), src)
+    assert sorted(d for d in os.listdir(ds) if d.startswith("commit=")) == [
+        "commit=00000001"
+    ]
+
+
+def test_append_to_a_stream_dataset_survives_compaction(spark, tmp_path):
+    """An append to a dataset of stream epochs is a commit beside them:
+    readers see epochs plus the commit, and compaction folds the epochs
+    into the base while the commit stays visible."""
+    stream = source_code_df(spark, 400, n_repos=4).cache()
+    extra = source_code_df(spark, 10, n_repos=4)
+    ds = str(tmp_path / "ds")
+    _epoch(stream.where(F.col("lang") < "m"), ds, 0)
+    _epoch(stream.where(F.col("lang") >= "m"), ds, 1)
+    write_encoded(extra, ds, mode="append", group_cols=GROUPS)
+    assert read_decoded(spark, ds).count() == 410
+    assert count_rows(spark, ds) == 410
+    assert compact_epochs(spark, ds) == 2
+    assert _same_rows(read_decoded(spark, ds), stream.unionAll(extra))
+    assert count_rows(spark, ds) == 410
+    assert verify_dataset(spark, ds)["ok"]
+
+
+def test_in_place_appended_dataset_reads_as_before(spark, tmp_path):
+    """A base-layout dataset an earlier revision appended to in place
+    (second chunk and manifest files in chunks/ and manifest/, ids
+    repeated) reads the same rows as then, and a new append to it
+    commits beside it."""
+    src = source_code_df(spark, 400, n_repos=6).cache()
+    first, rest = src.where(F.col("path") < "m"), src.where(F.col("path") >= "m")
+    ds = str(tmp_path / "ds")
+    write_encoded(first, ds, group_cols=GROUPS)
+    encoded = encode_table(rest, group_cols=GROUPS).cache()
+    encoded.write.mode("append").option("compression", "uncompressed").parquet(
+        os.path.join(ds, CHUNKS_DIR)
+    )
+    encoded.select(*MANIFEST_COLS).write.mode("append").parquet(
+        os.path.join(ds, MANIFEST_DIR)
+    )
+    encoded.unpersist()
+    assert _same_rows(read_decoded(spark, ds), src)
+    more = src.where(F.col("lang") < "m")
+    write_encoded(more, ds, mode="append", group_cols=GROUPS)
+    assert _same_rows(read_decoded(spark, ds), src.unionAll(more))
+
+
+# ---------------------------------------------------------------------
+# lifecycle model
+
+
+class DatasetLifecycle(RuleBasedStateMachine):
+    """The model is the multiset of committed rows, plus the group keys
+    resume_encode's anti-join sees as committed and which views exist
+    (a committed base, the epoch count)."""
+
+    spark = None
+    pool: pa.Table = None  # the source rows the operations draw from
+    tmp_root = None
+    runs = 0
+
+    def __init__(self):
+        super().__init__()
+        cls = type(self)
+        cls.runs += 1
+        self.path = os.path.join(cls.tmp_root, f"ds{cls.runs}")
+        self.cols = cls.pool.column_names
+        self.pool_rows = [tuple(r.values()) for r in cls.pool.to_pylist()]
+        self.rows: Counter = Counter()
+        self.keys: set = set()
+        self.base = False
+        self.epochs = 0
+        self.crashed = None
+
+    def _df(self, idx):
+        return self.spark.createDataFrame(self.pool.take(sorted(idx)))
+
+    def _key(self, row, group_cols):
+        """The group key resume_encode's anti-join compares."""
+        if not group_cols:
+            return "[]"
+        return tuple(row[self.cols.index(c)] for c in group_cols)
+
+    def _add(self, idx, group_cols):
+        for i in idx:
+            self.rows[self.pool_rows[i]] += 1
+            self.keys.add(self._key(self.pool_rows[i], group_cols))
+
+    def _write(self, idx, group_cols, **kw):
+        write_encoded(self._df(idx), self.path, group_cols=group_cols, **kw)
+        self._add(idx, group_cols)
+
+    def _epoch(self, idx, group_cols):
+        _epoch(self._df(idx), self.path, self.epochs, group_cols)
+        self.epochs += 1
+        self._add(idx, group_cols)
+
+    # -- rules and operations
+
+    subset = st.lists(st.integers(0, 39), min_size=1, max_size=12, unique=True)
+    layout = st.sampled_from([GROUPS, []])
+
+    @initialize(idx=subset, group_cols=layout, stream=st.booleans())
+    def create(self, idx, group_cols, stream):
+        if stream:
+            self._epoch(idx, group_cols)
+        else:
+            self._write(idx, group_cols)
+            self.base = True
+
+    def valid(self, op):
+        return {
+            "rerun_crashed_append": self.crashed is not None,
+            # the encode sink refuses a committed base
+            "epoch": not self.base,
+            # compaction folds epochs into an absent base
+            "compact": not self.base and self.epochs > 0,
+        }.get(op, True)
+
+    # One rule draws the operation among those valid in this state, so
+    # every example can reach every operation: hypothesis enables only a
+    # random subset of a machine's rules in each example.
+    @rule(data=st.data(), idx=subset, group_cols=layout)
+    def step(self, data, idx, group_cols):
+        op = data.draw(st.sampled_from([o for o in OPS if self.valid(o)]))
+        getattr(self, op)(idx, group_cols)
+
+    def overwrite(self, idx, group_cols):
+        self.rows, self.keys = Counter(), set()
+        self._write(idx, group_cols, mode="overwrite")
+        self.base, self.epochs = True, 0
+
+    def append(self, idx, group_cols):
+        self._write(idx, group_cols, mode="append")
+
+    def crashed_append(self, idx, group_cols):
+        with pytest.MonkeyPatch.context() as m:
+            _crash_before_manifest(m)
+            with pytest.raises(RuntimeError, match="simulated crash"):
+                write_encoded(
+                    self._df(idx), self.path, mode="append",
+                    group_cols=group_cols,
+                )
+        self.crashed = (idx, group_cols)
+
+    def rerun_crashed_append(self, _idx, _group_cols):
+        (idx, group_cols), self.crashed = self.crashed, None
+        self.append(idx, group_cols)
+
+    def resume(self, idx, group_cols):
+        pending = [
+            i for i in idx
+            if self._key(self.pool_rows[i], group_cols) not in self.keys
+        ]
+        n = resume_encode(self._df(idx), self.path, group_cols=group_cols)
+        assert (n > 0) == bool(pending)
+        self._add(pending, group_cols)
+
+    def epoch(self, idx, group_cols):
+        self._epoch(idx, group_cols)
+
+    def compact(self, _idx, _group_cols):
+        assert compact_epochs(self.spark, self.path) == self.epochs
+        self.base, self.epochs = True, 0
+
+    # -- the checks, after every step
+
+    @invariant()
+    def readers_agree_with_the_model(self):
+        spark, path = self.spark, self.path
+        want = self.rows
+
+        def got(df):
+            return Counter(tuple(r) for r in df.collect())
+
+        assert got(read_decoded(spark, path)) == want
+        exchange = decode_table(read_chunks(spark, path), read_schema(path))
+        assert got(exchange) == want
+        assert count_rows(spark, path) == sum(want.values())
+        path_at, lang_at = self.cols.index("path"), self.cols.index("lang")
+        key = min(t[path_at] for t in want)
+        looked_up = scan(spark, path, filters=[("path", "==", key)])
+        assert got(looked_up) == Counter(
+            {t: k for t, k in want.items() if t[path_at] == key}
+        )
+        langs = [t[lang_at] for t in want]
+        assert column_min_max(spark, path, "lang") == (min(langs), max(langs))
+        report = verify_dataset(spark, path)
+        assert report["ok"], report
+
+
+def _lifecycle(spark, tmp_path):
+    DatasetLifecycle.spark = spark
+    DatasetLifecycle.pool = source_code_df(spark, 40, n_repos=3).toArrow()
+    DatasetLifecycle.tmp_root = str(tmp_path)
+
+
+# every operation at least once, crossing them: appends beside epochs,
+# an append that takes the number of a crashed one, a re-run after it,
+# a resume, compaction with commits present, then an overwrite
+SEQUENCE = [
+    ("epoch", range(3, 10), GROUPS),
+    ("append", range(0, 5), GROUPS),
+    ("crashed_append", range(10, 16), []),
+    ("append", range(5, 9), []),
+    ("rerun_crashed_append", (), None),
+    ("resume", range(0, 20), GROUPS),
+    ("compact", (), None),
+    ("overwrite", range(30, 36), GROUPS),
+]
+
+
+def test_dataset_lifecycle_sequence(spark, tmp_path):
+    """The model's operations in a fixed order, checked after each."""
+    _lifecycle(spark, tmp_path)
+    machine = DatasetLifecycle()
+    machine.create(list(range(6)), [], stream=True)
+    machine.readers_agree_with_the_model()
+    for op, idx, group_cols in SEQUENCE:
+        assert machine.valid(op), op
+        getattr(machine, op)(list(idx), group_cols)
+        machine.readers_agree_with_the_model()
+
+
+def test_dataset_lifecycle_model(spark, tmp_path):
+    """Random operation sequences. Derandomized, so every run takes the
+    same steps; the bounds keep the test near 20 s on 4 vCPUs."""
+    _lifecycle(spark, tmp_path)
+    run_state_machine_as_test(
+        DatasetLifecycle,
+        settings=settings(
+            max_examples=3,
+            stateful_step_count=4,
+            deadline=None,
+            database=None,
+            derandomize=True,
+            suppress_health_check=list(HealthCheck),
+        ),
+    )

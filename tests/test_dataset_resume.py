@@ -20,6 +20,7 @@ from colcrush.engine import (
     column_min_max,
     count_rows,
     pruned_chunk_count,
+    read_chunks,
     read_decoded,
     read_manifest,
     resume_encode,
@@ -261,63 +262,44 @@ def _crash_before_manifest(monkeypatch):
     monkeypatch.setattr(DataFrameWriter, "parquet", crashing)
 
 
-def test_resume_after_crashed_append_removes_orphan_chunks(
-    spark, tmp_path, monkeypatch
-):
-    """An append that crashed before its manifest commit leaves chunk
-    part files no manifest row commits. Readers list every part file,
-    so they see those rows; resume_encode removes the files before it
-    re-encodes the missing groups, and the dataset then reads back as
-    the source, each row once."""
-    groups = ["repo", "lang"]
+def test_crashed_append_is_invisible_until_rerun(spark, tmp_path, monkeypatch):
+    """An append that crashed before its manifest commit leaves a commit
+    dir whose manifest never committed: read_decoded, count_rows and
+    scan see none of its rows. Re-running the same append replaces that
+    attempt and commits the rows once, grouped and ungrouped; so does a
+    resume, whose pending groups here are the crashed append's."""
+    from colcrush.engine import verify_dataset
+
     src = source_code_df(spark, 400, n_repos=6).cache()
-    first = src.where(F.col("lang") < "j")
-    ds = str(tmp_path / "ds")
-    write_encoded(first, ds, group_cols=groups)
-    with monkeypatch.context() as m:
-        _crash_before_manifest(m)
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            write_encoded(
-                src.where(F.col("lang") >= "j"), ds, mode="append",
-                group_cols=groups,
-            )
+    first, rest = src.where(F.col("lang") < "j"), src.where(F.col("lang") >= "j")
     n_first = first.count()
-    assert 0 < n_first < 400 and count_rows(spark, ds) == n_first
-    assert read_decoded(spark, ds).count() == 400  # the orphans are read
+    assert 0 < n_first < 400
+    key = rest.orderBy("path").first()["path"]
+    cases = ((["repo", "lang"], "rerun"), ([], "rerun"), (["repo", "lang"], "resume"))
+    for i, (groups, recovery) in enumerate(cases):
+        ds = str(tmp_path / f"ds{i}")
+        write_encoded(first, ds, group_cols=groups)
 
-    assert resume_encode(src, ds, group_cols=groups) > 0
-    dec = read_decoded(spark, ds)
-    assert dec.exceptAll(src).count() == 0 and src.exceptAll(dec).count() == 0
-    assert count_rows(spark, ds) == 400
-    key = src.where(F.col("lang") >= "j").orderBy("path").first()["path"]
-    assert scan(spark, ds, filters=[("path", "==", key)]).count() == 1
+        def append():
+            write_encoded(rest, ds, mode="append", group_cols=groups)
 
+        with monkeypatch.context() as m:
+            _crash_before_manifest(m)
+            with pytest.raises(RuntimeError, match="simulated crash"):
+                append()
+        assert count_rows(spark, ds) == n_first
+        assert read_decoded(spark, ds).count() == n_first
+        assert scan(spark, ds, filters=[("path", "==", key)]).count() == 0
 
-def test_resume_refuses_part_file_mixing_committed_and_orphan_chunks(
-    spark, src, tmp
-):
-    """A part file holding committed and uncommitted chunk ids cannot
-    be removed without losing committed rows: resume_encode raises and
-    deletes nothing."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    write_encoded(src, tmp, group_cols=["repo", "lang"])
-    chunks = os.path.join(tmp, "chunks")
-    part = sorted(f for f in os.listdir(chunks) if f.endswith(".parquet"))[0]
-    t = pq.read_table(os.path.join(chunks, part))
-    first_id = t.column("chunk_id")[0].as_py()
-    ids = pc.if_else(
-        pc.equal(t.column("chunk_id"), first_id), "uncommitted-chunk",
-        t.column("chunk_id"),
-    )
-    mixed = t.set_column(t.schema.get_field_index("chunk_id"), "chunk_id", ids)
-    assert len(set(mixed.column("chunk_id").to_pylist())) > 1
-    pq.write_table(mixed, os.path.join(chunks, "part-99999-mixed.parquet"))
-    with pytest.raises(ValueError, match="mix committed and uncommitted"):
-        resume_encode(src, tmp, group_cols=["repo", "lang"])
-    assert os.path.exists(os.path.join(chunks, "part-99999-mixed.parquet"))
-    assert os.path.exists(os.path.join(chunks, part))
+        if recovery == "rerun":
+            append()
+        else:
+            assert resume_encode(src, ds, group_cols=groups) > 0
+        assert _same_rows(read_decoded(spark, ds), src)
+        assert count_rows(spark, ds) == 400
+        assert scan(spark, ds, filters=[("path", "==", key)]).count() == 1
+        assert verify_dataset(spark, ds)["ok"]
+        assert resume_encode(src, ds, group_cols=groups) == 0
 
 
 def test_resumed_chunks_byte_identical(spark, src, tmp):
@@ -360,7 +342,7 @@ def test_resume_across_parallelism_byte_identical(spark, src, tmp):
     def payloads(p):
         return sorted(
             (r["chunk_id"], r["column"], bytes(r["payload"]))
-            for r in spark.read.parquet(os.path.join(p, "chunks"))
+            for r in read_chunks(spark, p)
             .select("chunk_id", "column", "payload")
             .collect()
         )
