@@ -190,15 +190,6 @@ def train_with_residual(
     return table, (cur if table else None)
 
 
-def compress_sequential(corpus: bytes, table: list[tuple[int, int, int]]) -> bytes:
-    """Reference implementation: per-symbol bytes.replace chain (the
-    training trajectory). Kept for tests/ratio comparisons."""
-    cur = corpus
-    for code, x, y in table:
-        cur = cur.replace(bytes((x, y)), bytes((code,)))
-    return cur
-
-
 def _match_symbols(table: list[tuple[int, int, int]]) -> list[tuple[bytes, int]]:
     """Deterministic greedy-match candidate list: (expansion, code),
     sorted by (length desc, expansion bytes asc). Duplicate expansions
@@ -347,13 +338,6 @@ def decompress_raw(
     idx = np.repeat((starts.astype(idt)[a] - offs), l)
     idx += np.arange(total, dtype=idt)
     return flat[idx]
-
-
-def decompress_sequential(data: bytes, table: list[tuple[int, int, int]]) -> bytes:
-    cur = data
-    for code, x, y in reversed(table):
-        cur = cur.replace(bytes((code,)), bytes((x, y)))
-    return cur
 
 
 def serialize_table(table: list[tuple[int, int, int]]) -> bytes:

@@ -14,7 +14,7 @@ from .dataset import (
     write_encoded,
 )
 from .decoder import decode_table
-from .encoder import ENCODED_DDL, MANIFEST_COLS, encode_table, plan_salts
+from .encoder import CHUNK_SCHEMA, ENCODED_DDL, MANIFEST_COLS, encode_table, plan_salts
 from .scan import column_min_max, count_rows, filtered_min_max, pruned_chunk_count, scan
 
 __all__ = [
@@ -36,6 +36,7 @@ __all__ = [
     "column_min_max",
     "filtered_min_max",
     "pruned_chunk_count",
+    "CHUNK_SCHEMA",
     "ENCODED_DDL",
     "MANIFEST_COLS",
 ]

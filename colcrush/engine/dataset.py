@@ -4,25 +4,30 @@ Directory layout (an Iceberg-metadata-style commit protocol without the
 Iceberg jars, which aren't in this image):
 
   <root>/schema.json          original table schema (Spark JSON)
-  <root>/chunks/              chunk rows incl. payload, parquet, UNCOMPRESSED
-                              (our codecs did the compression — storing
-                              them re-compressed would hide the ratio)
-  <root>/manifest/            chunk rows sans payload (lineage + metrics:
-                              codec, dict size, ratio, row counts, min/max)
+  <root>/chunks/              chunk rows (encoder.CHUNK_SCHEMA), parquet,
+                              UNCOMPRESSED (our codecs did the compression
+                              — storing them re-compressed would hide the
+                              ratio)
+  <root>/manifest/            the chunk files read back without payload
+                              (lineage + metrics: codec, dict size, ratio,
+                              row counts, min/max)
   <root>/commit=NNNNNNNN/     each later write: the same three entries
   <root>/epoch=NNNNNNNN/      a stream epoch (streaming/encode_sink.py), ditto
 
 A ``salt_plan/`` or ``file_map/`` dir left by an earlier revision is
 inert: nothing reads or writes it.
 
-Every write is one commit, written in overwrite mode, manifest after
-chunks, and visible once ``manifest/_SUCCESS`` lands — the analog of
-parquet4s's postWriteHandler checkpoint (ParquetPartitioningFlow.scala
-303-316). The first write is the base; commit n > 0 is ``commit=n``, n
-one above the highest committed commit, so a retry replaces its own
-uncommitted attempt. Readers see the committed base (or else the
-committed epochs) plus the committed commits; a crash leaves nothing to
-repair.
+Every write is one commit, written in overwrite mode, and visible once
+``manifest/_SUCCESS`` lands — the analog of parquet4s's
+postWriteHandler checkpoint (ParquetPartitioningFlow.scala 303-316).
+The encode runs once, unpersisted, into the chunk files; the manifest
+is then written from those files (``_commit_manifest``, also the
+manifest writer of a resumed crash and of compaction), as parquet-mr
+writes a footer describing the pages it wrote. The first write is the
+base; commit n > 0 is ``commit=n``, n one above the highest committed
+commit, so a retry replaces its own uncommitted attempt. Readers see
+the committed base (or else the committed epochs) plus the committed
+commits; a crash leaves nothing to repair.
 Resume = anti-join the input's groups against the committed manifest,
 plan the salts of the pending groups and commit only those
 (SURVEY.md §7 step 5).
@@ -39,7 +44,7 @@ from . import fsio
 from .decoder import decode_table
 from .encoder import (
     ENCODED_DDL,
-    MANIFEST_COLS,
+    MANIFEST_DDL,
     TARGET_GROUP_BYTES,
     encode_table,
     group_key_expr,
@@ -119,7 +124,8 @@ def write_encoded(
 def _commit(df: DataFrame, path: str, n: int, **encode_kwargs) -> None:
     """Encode ``df`` into commit ``n`` of the dataset at ``path`` (the
     base layout when 0), in overwrite mode: chunks, then the manifest,
-    whose _SUCCESS makes the commit visible."""
+    whose _SUCCESS makes the commit visible. The encode runs once, in
+    the chunk write; nothing is persisted."""
     if n:
         existing = read_schema(path)
         if existing != df.schema:
@@ -128,23 +134,29 @@ def _commit(df: DataFrame, path: str, n: int, **encode_kwargs) -> None:
                 f"got {df.schema.simpleString()}"
             )
         path = fsio.join(path, f"{COMMIT_PREFIX}{n:08d}")
-    encoded = encode_table(df, **encode_kwargs).persist()
-    try:
-        _write_schema(path, df.schema)
-        (
-            encoded.write.mode("overwrite")
-            .option("compression", "uncompressed")
-            .parquet(fsio.join(path, CHUNKS_DIR))
-        )
-        # manifest rows come from the SAME persisted plan (encode runs
-        # once; no chunk re-scan) and commit strictly after the chunks;
-        # a commit writes only its own rows, so the manifest write cost
-        # stays proportional to the increment at 100 TB
-        encoded.select(*MANIFEST_COLS).write.mode("overwrite").parquet(
-            fsio.join(path, MANIFEST_DIR)
-        )
-    finally:
-        encoded.unpersist()
+    # encode_table checks its kwargs (and plans) before anything lands
+    encoded = encode_table(df, **encode_kwargs)
+    _write_schema(path, df.schema)
+    encoded.write.mode("overwrite").option("compression", "uncompressed").parquet(
+        fsio.join(path, CHUNKS_DIR)
+    )
+    _commit_manifest(df.sparkSession, path)
+
+
+def _commit_manifest(spark: SparkSession, root: str) -> None:
+    """Write the manifest of the (sub-)dataset at ``root``, the one
+    manifest writer: its written chunk files read back without their
+    payload column, which the scan never reads. The manifest's _SUCCESS
+    commits ``root``.
+
+    Like parquet-mr's footer, the manifest describes the bytes written,
+    not a second evaluation of the data; caching the encode output
+    instead would hold every payload in executor memory. The explicit
+    schema reads a column an earlier revision's files lack (bloom,
+    payload_ck) as NULL. A commit reads only its own chunk files, so
+    the cost stays proportional to the increment."""
+    chunks = spark.read.schema(MANIFEST_DDL).parquet(fsio.join(root, CHUNKS_DIR))
+    chunks.write.mode("overwrite").parquet(fsio.join(root, MANIFEST_DIR))
 
 
 def _committed(root: str) -> bool:
@@ -178,19 +190,6 @@ def _next_commit(path: str) -> int:
     )
 
 
-# Explicit read schemas: a dataset appended to across format revisions
-# holds parquet files with and without the r6 payload_ck column, and
-# plain spark.read.parquet infers the schema from ONE arbitrary footer
-# — checksums would nondeterministically vanish (and compact_epochs
-# would then drop them permanently). Reading with the declared schema
-# fills absent columns with NULL deterministically, and unlike
-# mergeSchema costs zero footer reads — which matters when chunks/ is
-# millions of files at 100 TB.
-_MANIFEST_DDL = ", ".join(
-    f for f in ENCODED_DDL.split(", ") if not f.startswith("payload ")
-)
-
-
 def _committed_dirs(path: str, sub: str) -> list[str]:
     """The ``sub`` directories (chunks/ or manifest/) a reader sees: the
     committed base, or else the committed epochs, plus the committed
@@ -207,8 +206,16 @@ def _committed_dirs(path: str, sub: str) -> list[str]:
     return [fsio.join(r, sub) for r in roots]
 
 
+# Explicit read schemas: a dataset appended to across format revisions
+# holds parquet files with and without the r6 payload_ck column, and
+# plain spark.read.parquet infers the schema from ONE arbitrary footer
+# — checksums would nondeterministically vanish (and compact_epochs
+# would then drop them permanently). Reading with the declared schema
+# fills absent columns with NULL deterministically, and unlike
+# mergeSchema costs zero footer reads — which matters when chunks/ is
+# millions of files at 100 TB.
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(_MANIFEST_DDL).parquet(
+    return spark.read.schema(MANIFEST_DDL).parquet(
         *_committed_dirs(path, MANIFEST_DIR)
     )
 
@@ -356,7 +363,7 @@ def _colocated_file_df(
 
 def _chunk_file_batches(files, requested: "list[str] | None", target):
     """Yield normalized chunk-row batches of the Arrow schema
-    ``target`` (a subset of the ENCODED_DDL columns, as the decode
+    ``target`` (a subset of the CHUNK_SCHEMA fields, as the decode
     worker asks for them) from whole chunk part files — pyarrow-read
     inside the worker. Mirrors the explicit-schema Spark read: a
     column absent from a file an earlier revision wrote (payload_ck,
@@ -476,9 +483,6 @@ def compact_epochs(spark: SparkSession, path: str) -> int:
         .option("compression", "uncompressed")
         .parquet(fsio.join(path, CHUNKS_DIR))
     )
-    manifest = spark.read.schema(_MANIFEST_DDL).parquet(
-        *[fsio.join(e, MANIFEST_DIR) for e in epochs]
-    )
     fsio.write_text(
         fsio.join(path, SCHEMA_FILE),
         fsio.read_text(fsio.join(epochs[0], SCHEMA_FILE)),
@@ -487,7 +491,7 @@ def compact_epochs(spark: SparkSession, path: str) -> int:
         fsio.join(path, COMPACTED_FILE),
         json.dumps({"epochs": names}),
     )
-    manifest.write.mode("overwrite").parquet(fsio.join(path, MANIFEST_DIR))
+    _commit_manifest(spark, path)
     for e in epochs:
         fsio.rmtree(e)
     return len(epochs)
@@ -665,23 +669,13 @@ def verify_dataset(
     try:
         manifest = read_manifest(spark, path)
     except AnalysisException:
-        manifest = spark.createDataFrame([], _MANIFEST_DDL)
+        manifest = spark.createDataFrame([], MANIFEST_DDL)
     key = ["chunk_id", "column"]
-    m_ck = (
-        F.col("payload_ck")
-        if "payload_ck" in manifest.columns
-        else F.lit(None).cast("bigint")
-    )
-    c_ck = (
-        F.col("payload_ck")
-        if "payload_ck" in chunks.columns
-        else F.lit(None).cast("bigint")
-    )
     m = manifest.groupBy(*key).agg(
-        F.count("*").alias("m_n"), F.min(m_ck).alias("m_ck")
+        F.count("*").alias("m_n"), F.min("payload_ck").alias("m_ck")
     )
     c = chunks.groupBy(*key).agg(
-        F.count("*").alias("c_n"), F.min(c_ck).alias("c_ck")
+        F.count("*").alias("c_n"), F.min("payload_ck").alias("c_ck")
     )
     j = m.join(c, key, "full_outer")
     flag = lambda cond: F.sum(F.when(cond, 1).otherwise(0))  # noqa: E731
@@ -713,7 +707,7 @@ def verify_dataset(
                     F.xxhash64("chunk_id", "column"), F.lit(n_slices)
                 ) == F.lit(scrub_slice % n_slices)
             )
-        sel = chunks.select("payload", c_ck.alias("stored_ck"))
+        sel = chunks.select("payload", F.col("payload_ck").alias("stored_ck"))
 
         def scrub(it):
             pa.set_cpu_count(1)
@@ -810,13 +804,8 @@ def resume_encode(
     chunks_path = fsio.join(path, CHUNKS_DIR)
     if not _committed(path) and fsio.exists(fsio.join(chunks_path, "_SUCCESS")):
         # crashed between chunk write and manifest commit: the chunk
-        # job itself completed (_SUCCESS), so recover the manifest.
-        # Explicit read schema: columns the legacy chunk files lack
-        # (bloom, payload_ck) surface as NULL — a dataset written
-        # before they existed stays recoverable, deterministically
-        spark.read.schema(ENCODED_DDL).parquet(chunks_path).select(
-            *MANIFEST_COLS
-        ).write.mode("overwrite").parquet(fsio.join(path, MANIFEST_DIR))
+        # job itself completed (_SUCCESS), so commit its manifest
+        _commit_manifest(spark, path)
     n = _next_commit(path)
     pending = df
     if n:

@@ -31,7 +31,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..codecs import decode_array
 from ..codecs.dec_rescale import rescale_decimal128
-from .encoder import payload_ck
+from .encoder import CHUNK_SCHEMA, payload_ck
 
 
 def _spark_field_for(arrow_type: pa.DataType) -> T.DataType:
@@ -98,16 +98,11 @@ class IncompleteChunksError(RuntimeError):
     the chunk rows it was fed were not co-located per chunk."""
 
 
-# the chunk-row stats a chunk predicate reads (ENCODED_DDL types), in
-# the order ``survives`` receives them
-STATS_FIELDS = (
-    pa.field("n_rows", pa.int64()),
-    pa.field("n_nulls", pa.int64()),
-    pa.field("min_s", pa.string()),
-    pa.field("max_s", pa.string()),
-    pa.field("min_d", pa.float64()),
-    pa.field("max_d", pa.float64()),
-    pa.field("bloom", pa.list_(pa.int64())),
+# the chunk-row stats a chunk predicate reads, in the order
+# ``survives`` receives them
+STATS_FIELDS = tuple(
+    CHUNK_SCHEMA.field(n)
+    for n in ("n_rows", "n_nulls", "min_s", "max_s", "min_d", "max_d", "bloom")
 )
 
 # the prune pass (decode=False): one verdict row per chunk
@@ -125,7 +120,7 @@ def decode_table(
     prune: "tuple | None" = None,
     decode: bool = True,
 ) -> DataFrame:
-    """Decode a chunk DataFrame (ENCODED_DDL) back to rows: the
+    """Decode a chunk DataFrame (CHUNK_SCHEMA rows) back to rows: the
     projected chunk rows, repartitioned on chunk_id, through
     :func:`decode_worker` in one mapInArrow stage.
 
@@ -221,12 +216,14 @@ def decode_worker(
     with_ck = with_ck and decode
     in_schema = pa.schema(
         [
-            pa.field("chunk_id", pa.string()),
-            pa.field("column", pa.string()),
-            *([pa.field("payload", pa.binary())] if decode else []),
-            *([pa.field("payload_ck", pa.int64())] if with_ck else []),
-            *(STATS_FIELDS if survives is not None else []),
+            CHUNK_SCHEMA.field(n)
+            for n in (
+                "chunk_id", "column",
+                *(["payload"] if decode else []),
+                *(["payload_ck"] if with_ck else []),
+            )
         ]
+        + list(STATS_FIELDS if survives is not None else [])
     )
     if not decode:
         out_schema = from_arrow_schema(PRUNE_SCHEMA)

@@ -31,23 +31,52 @@ import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..codecs import encode_array
 from ..codecs import bloom as bloom_mod
 
-ENCODED_DDL = (
-    "chunk_id string, group_key string, salt int, seq bigint, column string, "
-    "codec string, n_rows bigint, n_nulls bigint, raw_bytes bigint, "
-    "enc_bytes bigint, dict_size bigint, min_s string, max_s string, "
-    "min_d double, max_d double, bloom array<bigint>, payload binary, "
-    "payload_ck bigint"
+# The chunk row, one per (chunk, column): the only statement of the
+# format. Spark's read and output schemas, the manifest columns, the
+# encode worker's output batches and the decode worker's input fields
+# all derive from it; a new column goes here (at the end) and nowhere
+# else, and every consumer must tolerate it being NULL in older files.
+CHUNK_SCHEMA = pa.schema(
+    [
+        ("chunk_id", pa.string()),
+        ("group_key", pa.string()),
+        ("salt", pa.int32()),
+        ("seq", pa.int64()),
+        ("column", pa.string()),
+        ("codec", pa.string()),
+        ("n_rows", pa.int64()),
+        ("n_nulls", pa.int64()),
+        ("raw_bytes", pa.int64()),
+        ("enc_bytes", pa.int64()),
+        ("dict_size", pa.int64()),
+        ("min_s", pa.string()),
+        ("max_s", pa.string()),
+        ("min_d", pa.float64()),
+        ("max_d", pa.float64()),
+        ("bloom", pa.list_(pa.int64())),
+        ("payload", pa.binary()),
+        ("payload_ck", pa.int64()),
+    ]
 )
 
-MANIFEST_COLS = [
-    "chunk_id", "group_key", "salt", "seq", "column", "codec", "n_rows",
-    "n_nulls", "raw_bytes", "enc_bytes", "dict_size", "min_s", "max_s",
-    "min_d", "max_d", "bloom", "payload_ck",
-]
+
+def _ddl(schema: pa.Schema) -> str:
+    """Spark DDL of an Arrow schema."""
+    return ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in from_arrow_schema(schema).fields
+    )
+
+
+ENCODED_DDL = _ddl(CHUNK_SCHEMA)
+# the manifest row: the chunk row without its payload
+MANIFEST_COLS = [n for n in CHUNK_SCHEMA.names if n != "payload"]
+MANIFEST_DDL = _ddl(pa.schema([CHUNK_SCHEMA.field(n) for n in MANIFEST_COLS]))
 
 
 def payload_ck(blob: bytes) -> int:
@@ -235,12 +264,6 @@ def _chunk_bloom(arr: pa.Array) -> "list[int] | None":
     return bloom_mod.build_bloom(lengths, blob)
 
 
-_OUT_COLS = (
-    "chunk_id", "group_key", "salt", "seq", "column", "codec", "n_rows",
-    "n_nulls", "raw_bytes", "enc_bytes", "dict_size", "min_s", "max_s",
-    "min_d", "max_d", "bloom", "payload", "payload_ck",
-)
-
 # target size for OUTPUT record batches: encoded rows of many chunks
 # are packed into one arrow batch before crossing back into the JVM —
 # a per-chunk 5-row batch costs 17 pa.array calls + one IPC frame per
@@ -321,33 +344,11 @@ def _batch_row_sizes(batch: pa.RecordBatch) -> np.ndarray:
 
 
 def _new_out_rows() -> dict:
-    return {name: [] for name in _OUT_COLS}
+    return {name: [] for name in CHUNK_SCHEMA.names}
 
 
 def _rows_to_batch(rows: dict) -> pa.RecordBatch:
-    return pa.record_batch(
-        [
-            pa.array(rows["chunk_id"], type=pa.string()),
-            pa.array(rows["group_key"], type=pa.string()),
-            pa.array(rows["salt"], type=pa.int32()),
-            pa.array(rows["seq"], type=pa.int64()),
-            pa.array(rows["column"], type=pa.string()),
-            pa.array(rows["codec"], type=pa.string()),
-            pa.array(rows["n_rows"], type=pa.int64()),
-            pa.array(rows["n_nulls"], type=pa.int64()),
-            pa.array(rows["raw_bytes"], type=pa.int64()),
-            pa.array(rows["enc_bytes"], type=pa.int64()),
-            pa.array(rows["dict_size"], type=pa.int64()),
-            pa.array(rows["min_s"], type=pa.string()),
-            pa.array(rows["max_s"], type=pa.string()),
-            pa.array(rows["min_d"], type=pa.float64()),
-            pa.array(rows["max_d"], type=pa.float64()),
-            pa.array(rows["bloom"], type=pa.list_(pa.int64())),
-            pa.array(rows["payload"], type=pa.binary()),
-            pa.array(rows["payload_ck"], type=pa.int64()),
-        ],
-        names=list(_OUT_COLS),
-    )
+    return pa.RecordBatch.from_pydict(rows, schema=CHUNK_SCHEMA)
 
 
 def _encode_chunk_into(
@@ -633,7 +634,7 @@ def encode_table(
     bloom: "bool | Iterable[str]" = True,
     salt_plan: "DataFrame | None" = None,
 ) -> DataFrame:
-    """Encode ``df`` into the chunk table (ENCODED_DDL schema): the
+    """Encode ``df`` into the chunk table (CHUNK_SCHEMA rows): the
     salted/partitioned/sorted row stream through the encode worker in
     one mapInArrow stage.
 

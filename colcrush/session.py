@@ -35,8 +35,9 @@ def default_driver_memory() -> str:
     return f"{max(1, min(8, ram // 4 // (1 << 30)))}g"
 
 
-# Spark's shuffle/spill dir when the host has a RAM-backed /dev/shm
-RAM_LOCAL_DIR = "/dev/shm/colcrush-spark-local"
+# the RAM-backed parent of Spark's shuffle/spill dir, where the host
+# has one
+SHM = "/dev/shm"
 
 
 def local_dir_conf(
@@ -55,11 +56,17 @@ def local_dir_conf(
     the smaller bytes to help — and stays at Spark's default (on)
     everywhere else, where shuffle bytes cross real disks and NICs. A
     host with a small /dev/shm (e.g. a container's default 64 MB)
-    points spark.local.dir elsewhere and so gets compression back."""
+    points spark.local.dir elsewhere and so gets compression back.
+
+    The RAM-backed dir is colcrush's per-user dir under /dev/shm
+    (``user_dir``, which ``get_spark`` creates): Spark makes its
+    ``blockmgr-*`` dirs 0755 and its shuffle files 0644, and the
+    shuffle bytes there are uncompressed, so only a private parent
+    keeps them from other local users."""
     if env_local_dirs or "spark.local.dir" in extra or not shm:
         return {}
     return {
-        "spark.local.dir": RAM_LOCAL_DIR,
+        "spark.local.dir": user_dir_path(SHM),
         "spark.shuffle.compress": "false",
         "spark.shuffle.spill.compress": "false",
     }
@@ -153,10 +160,10 @@ def get_spark(
         .config("spark.driver.host", "127.0.0.1")
     )
     local = local_dir_conf(
-        extra, os.environ.get("SPARK_LOCAL_DIRS"), os.path.isdir("/dev/shm")
+        extra, os.environ.get("SPARK_LOCAL_DIRS"), os.path.isdir(SHM)
     )
     if local:
-        os.makedirs(RAM_LOCAL_DIR, exist_ok=True)
+        user_dir(SHM)
     for k, v in {**local, **python_socket_conf(extra), **extra}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()

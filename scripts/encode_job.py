@@ -9,8 +9,10 @@ resumable colcrush dataset (the north_rule deployment shape).
 Prints one JSON line; ``chunk_ids_sha256`` digests the sorted distinct
 chunk ids, so runs at two widths can be compared by one value, and
 ``rows`` is the dataset's row count (``count_rows``, from the
-manifest). ``--group-cols ""`` runs the ungrouped encode; ``--mode
-append`` adds the input to an existing dataset as a new commit.
+manifest) and ``verified`` is ``verify_dataset``'s ``ok`` (manifest and
+chunk files agree, no duplicate keys). ``--group-cols ""`` runs the
+ungrouped encode; ``--mode append`` adds the input to an existing
+dataset as a new commit.
 
 On a cluster, swap --master for yarn/k8s and size --num-executors; the
 job itself is unchanged (the engine plans partitioning from data size,
@@ -42,7 +44,13 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
 
     # imported after session start so --py-files zips resolve on executors
-    from colcrush.engine import count_rows, read_manifest, resume_encode, write_encoded
+    from colcrush.engine import (
+        count_rows,
+        read_manifest,
+        resume_encode,
+        verify_dataset,
+        write_encoded,
+    )
     from colcrush.fixtures import source_code_df
 
     if args.input.startswith("SYNTH:"):
@@ -77,6 +85,7 @@ def main() -> None:
         "raw_bytes": int(stats["raw_bytes"]),
         "ratio": round(stats["enc_bytes"] / max(1, stats["raw_bytes"]), 4),
         "chunk_ids_sha256": hashlib.sha256("\n".join(ids).encode()).hexdigest(),
+        "verified": verify_dataset(spark, args.output)["ok"],
     }))
     spark.stop()
 

@@ -7,7 +7,8 @@
 # fresh encode at local[4N]; and a resume at local[4N] of that encode
 # with its chunks/ and manifest/ deleted (the crash window). The encode,
 # the 4N encode and the resume must print the same chunk-id digest
-# (chunk_ids_sha256). The script exits 1 if a check fails.
+# (chunk_ids_sha256), and every run must report its dataset verified
+# (verify_dataset). The script exits 1 if a check fails.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 N="${1:-2}"
@@ -22,7 +23,9 @@ trap 'rm -rf "$(dirname "$OUT")" "$(dirname "$ZIP")" "$SOCK_DIR"' EXIT
 zip -qr "$ZIP" colcrush
 # driver heap fitted to this host, as get_spark() sizes it
 MEM="$(python3 -c 'from colcrush.session import default_driver_memory as m; print(m())')"
-run() {  # run CORES GROUP_COLS [encode_job.py flags...]; sets DIGEST, ROWS_OUT, CHUNKS
+STATUS=0
+run() {  # run CORES GROUP_COLS [encode_job.py flags...]; sets DIGEST, ROWS_OUT,
+  # CHUNKS, and STATUS=1 unless the dataset verified
   local cores="$1" group_cols="$2" line
   shift 2
   echo "== spark-submit local[$cores] --group-cols \"$group_cols\" $* =="
@@ -36,9 +39,12 @@ run() {  # run CORES GROUP_COLS [encode_job.py flags...]; sets DIGEST, ROWS_OUT,
     scripts/encode_job.py --input "SYNTH:$ROWS" --output "$OUT" \
     --group-cols "$group_cols" "$@" 2>/dev/null | tail -1)"
   echo "$line"
-  read -r DIGEST ROWS_OUT CHUNKS < <(python3 -c 'import json, sys; r = json.loads(sys.argv[1]); print(r["chunk_ids_sha256"], r["rows"], r["chunks"])' "$line")
+  read -r DIGEST ROWS_OUT CHUNKS VERIFIED < <(python3 -c 'import json, sys; r = json.loads(sys.argv[1]); print(r["chunk_ids_sha256"], r["rows"], r["chunks"], r["verified"])' "$line")
+  if [ "$VERIFIED" != "True" ]; then
+    echo "local[$cores] --group-cols \"$group_cols\" $*: verify_dataset not ok"
+    STATUS=1
+  fi
 }
-STATUS=0
 for GROUP_COLS in "repo,lang" ""; do
   rm -rf "$OUT"
   run "$N" "$GROUP_COLS"

@@ -44,7 +44,7 @@ from colcrush.engine import (
 )
 from colcrush.engine.dataset import _chunk_file_batches, _committed_part_files
 from colcrush.engine.decoder import decode_worker
-from colcrush.engine.encoder import _OUT_COLS, _encode_chunk_into, _rows_to_batch
+from colcrush.engine.encoder import _encode_chunk_into, _new_out_rows, _rows_to_batch
 from colcrush.engine.scan import (
     _TEMPORAL,
     _epoch_units,
@@ -161,7 +161,7 @@ def _encode(kind, chunks):
     arrow_type = KINDS[kind][0]
     out = []
     for seq, values in enumerate(chunks):
-        rows = {c: [] for c in _OUT_COLS}
+        rows = _new_out_rows()
         batch = pa.record_batch([pa.array(values, type=arrow_type)], names=["v"])
         _encode_chunk_into(rows, [batch], "g", 0, seq, "balanced")
         out.append(_rows_to_batch(rows))

@@ -38,6 +38,7 @@ from colcrush.engine import (
     encode_table,
     read_chunks,
     read_decoded,
+    read_manifest,
     resume_encode,
     scan,
     verify_dataset,
@@ -325,7 +326,11 @@ class DatasetLifecycle(RuleBasedStateMachine):
         want = self.rows
 
         def got(df):
-            return Counter(tuple(r) for r in df.collect())
+            # bloom words arrive as lists: make every row hashable
+            return Counter(
+                tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                for r in df.collect()
+            )
 
         assert got(read_decoded(spark, path)) == want
         exchange = decode_table(read_chunks(spark, path), read_schema(path))
@@ -341,6 +346,10 @@ class DatasetLifecycle(RuleBasedStateMachine):
         assert column_min_max(spark, path, "lang") == (min(langs), max(langs))
         report = verify_dataset(spark, path)
         assert report["ok"], report
+        # the manifest is the committed chunk rows without their payload
+        assert got(read_manifest(spark, path)) == got(
+            read_chunks(spark, path).select(*MANIFEST_COLS)
+        )
 
 
 def _lifecycle(spark, tmp_path):

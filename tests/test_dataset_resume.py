@@ -118,10 +118,61 @@ def test_encode_and_resume_persist_no_salt_plan(spark, src, tmp):
     assert not added()
 
 
+def test_no_write_path_persists(spark, tmp_path, monkeypatch):
+    """No write caches its encode output: with DataFrame.persist and
+    DataFrame.cache raising, a write, an append, the resumes of a write
+    that crashed after its chunk job and of one that crashed before it,
+    and a compaction all succeed, and every manifest is the chunk rows
+    less their payload."""
+    from colcrush.engine import compact_epochs, verify_dataset
+    from colcrush.engine.dataset import CHUNKS_DIR, MANIFEST_DIR
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("a write path persisted a DataFrame")
+
+    groups = ["repo", "lang"]
+    df = source_code_df(spark, 400, n_repos=6)
+    # the session's DataFrame class (Spark 4's classic DataFrame
+    # overrides both methods of pyspark.sql.DataFrame)
+    monkeypatch.setattr(type(df), "persist", refuse)
+    monkeypatch.setattr(type(df), "cache", refuse)
+
+    def check(p, rows):
+        assert read_decoded(spark, p).count() == rows
+        assert verify_dataset(spark, p)["ok"]
+
+    ds = str(tmp_path / "ds")
+    write_encoded(df, ds, group_cols=groups)
+    write_encoded(df, ds, mode="append", group_cols=["lang"])
+    check(ds, 800)
+
+    crashed = str(tmp_path / "crashed")
+    write_encoded(df, crashed, group_cols=groups)
+    shutil.rmtree(os.path.join(crashed, MANIFEST_DIR))
+    assert resume_encode(df, crashed, group_cols=groups) == 0
+    check(crashed, 400)
+    shutil.rmtree(os.path.join(crashed, CHUNKS_DIR))
+    shutil.rmtree(os.path.join(crashed, MANIFEST_DIR))
+    assert resume_encode(df, crashed, group_cols=groups) > 0
+    check(crashed, 400)
+
+    streamed = str(tmp_path / "streamed")
+    for i, part in enumerate(
+        (df.where(F.col("lang") < "m"), df.where(F.col("lang") >= "m"))
+    ):
+        write_encoded(
+            part, os.path.join(streamed, f"epoch={i:08d}"), mode="overwrite",
+            group_cols=["lang"], namespace=f"epoch-{i}",
+        )
+    assert compact_epochs(spark, streamed) == 2
+    check(streamed, 400)
+
+
 # Spark jobs one grouped write_encoded of the input below runs under
 # the test session. Building a chunk->file map or recording the salt
-# plan would add one more each.
-WRITE_ENCODED_JOBS = 7
+# plan would add one more each, and so would caching the encode output
+# to write the manifest from.
+WRITE_ENCODED_JOBS = 6
 
 
 def test_write_encoded_job_count_and_no_file_map(spark, tmp_path):
@@ -596,7 +647,7 @@ def test_column_min_max_long_strings_one_pruned_scan(spark, tmp_path, monkeypatc
 # (no chunks/, no manifest/) runs under the test session: the plan of
 # its pending groups, then write_encoded's jobs on that plan. A pass
 # that only counts the pending groups would add jobs.
-RESUME_JOBS = 7
+RESUME_JOBS = 6
 
 
 def _chunk_rows(spark, p):

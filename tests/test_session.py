@@ -14,7 +14,6 @@ import sys
 import pytest
 
 from colcrush.session import (
-    RAM_LOCAL_DIR,
     SOCKET_NAME_LEN,
     UDS_DIR,
     UDS_ENABLED,
@@ -197,7 +196,8 @@ def test_session_starts_under_a_deep_temp_dir(tmp_path):
 
 def test_ram_local_dir_only_when_nothing_else_is_named():
     ram = local_dir_conf({}, None, shm=True)
-    assert ram["spark.local.dir"] == RAM_LOCAL_DIR
+    # the per-user private dir, not one path shared by every user
+    assert ram["spark.local.dir"] == f"/dev/shm/colcrush-{os.getuid()}"
     # compressing blocks headed to tmpfs is pure CPU
     assert ram["spark.shuffle.compress"] == "false"
     assert ram["spark.shuffle.spill.compress"] == "false"
@@ -208,3 +208,22 @@ def test_ram_local_dir_only_when_nothing_else_is_named():
     assert local_dir_conf({}, None, shm=False) == {}
     # unrelated caller settings leave the rule alone
     assert local_dir_conf({"spark.ui.enabled": "true"}, "", shm=True) == ram
+
+
+@pytest.mark.skipif(not os.path.isdir("/dev/shm"), reason="no /dev/shm")
+def test_ram_local_dir_of_another_user_raises():
+    """get_spark refuses a RAM-backed local dir another user owns (one
+    made first at the predictable name), before any JVM starts."""
+    probe = (
+        "import os; from colcrush.session import get_spark\n"
+        "uid = os.geteuid(); os.geteuid = lambda: uid + 1\n"
+        "get_spark('shm-owner', cores=1, driver_memory='1g')\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_LOCAL_DIRS"}
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=REPO, capture_output=True, text=True, timeout=300, env=env,
+    )
+    assert out.returncode != 0
+    want = f"/dev/shm/colcrush-{os.getuid()} exists but is not owned by this user"
+    assert want in out.stderr, out.stderr[-2000:]
