@@ -1,21 +1,23 @@
-"""Optional C acceleration for the FSST-style codec hot loops.
+"""Optional C acceleration for the codec hot loops.
 
-The numpy/stdlib implementation in fsst.py is the canonical,
-always-available path; this module compiles (with the system C
-compiler, if present) kernels for the inner loops — BPE training,
-greedy longest-match encode, decode byte-expansion, presence scan,
-bit packing — and exposes them via ctypes. Every kernel implements
-EXACTLY the semantics of its Python counterpart (training counts ==
-full recount of the shrinking sample; greedy encode == longest-match,
-fixed candidate order), so encoded bytes are identical whichever path
-runs; tests/test_codecs.py asserts this equivalence.
+The numpy/stdlib code in fsst.py, intcodec.py, bitpack.py and bloom.py
+is the canonical, always-available path; this module compiles (with
+the system C compiler, if present) kernels for their inner loops and
+exposes them via ctypes. Each caller chooses C or numpy inside small
+per-kernel dispatchers; the payload formats around them are written
+once. Every kernel implements EXACTLY the semantics of its numpy twin
+(training counts == full recount of the shrinking sample; greedy
+encode == longest-match, fixed candidate order), so encoded bytes are
+identical whichever path runs; the parity tests and the format goldens
+(run with every kernel on and off) pin this.
 
 No third-party installs: the C source is embedded here (so it travels
 inside the --py-files zip to every executor), compiled once per host
 into a content-addressed .so under a per-user temp dir, and loaded
 with ctypes after an ownership check. Any failure (no compiler,
-sandboxed tmp, exotic platform) degrades silently to the Python path.
-Set COLCRUSH_NATIVE=0 to disable.
+sandboxed tmp, exotic platform, a refused .so) falls back to numpy
+with one RuntimeWarning per process naming the cause, since that path
+is much slower on text. COLCRUSH_NATIVE=0 chooses it without a warning.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ import hashlib
 import os
 import subprocess
 import tempfile
+import warnings
 
 import numpy as np
 
@@ -615,13 +618,6 @@ class _Kernels:
         self._presence = lib.colcrush_presence
         self._presence.restype = None
         self._presence.argtypes = [ctypes.c_void_p, ctypes.c_long, ctypes.c_void_p]
-        self._greedy = lib.colcrush_compress_greedy
-        self._greedy.restype = ctypes.c_long
-        self._greedy.argtypes = [
-            ctypes.c_void_p, ctypes.c_long, ctypes.c_void_p, ctypes.c_void_p,
-            ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,
-            ctypes.c_void_p,
-        ]
         self._expand = lib.colcrush_expand
         self._expand.restype = ctypes.c_long
         self._expand.argtypes = [
@@ -697,26 +693,6 @@ class _Kernels:
         self._presence(buf.ctypes.data, len(buf), out.ctypes.data)
         return out.astype(bool)
 
-    def compress_greedy(
-        self,
-        corpus: bytes,
-        exps: bytes,
-        starts: np.ndarray,
-        lens: np.ndarray,
-        codes: np.ndarray,
-        head: np.ndarray,
-        nxt: np.ndarray,
-    ) -> bytes:
-        inb = np.frombuffer(corpus, dtype=np.uint8)
-        eb = np.frombuffer(exps, dtype=np.uint8)
-        out = np.empty(len(inb), dtype=np.uint8)
-        n = self._greedy(
-            inb.ctypes.data, len(inb), eb.ctypes.data, starts.ctypes.data,
-            lens.ctypes.data, codes.ctypes.data, head.ctypes.data,
-            nxt.ctypes.data, out.ctypes.data,
-        )
-        return out[:n].tobytes()
-
     def pack_bits(self, v: np.ndarray, width: int) -> bytes:
         # 64-bit accumulator: safe for width <= 56 (caller-gated)
         v = np.ascontiguousarray(v, dtype=np.uint64)
@@ -770,7 +746,8 @@ class _Kernels:
             a.ctypes.data, len(a), flat.ctypes.data,
             starts.ctypes.data, lens.ctypes.data, out.ctypes.data,
         )
-        assert o == total
+        if o != total:
+            raise RuntimeError(f"expand wrote {o} bytes, expected {total}")
         return out
 
     def expand_total(self, a: np.ndarray, lens: np.ndarray) -> int:
@@ -780,8 +757,9 @@ class _Kernels:
     def compress_table(
         self, corpus: bytes, table: list[tuple[int, int, int]]
     ) -> "bytes | None":
-        """Greedy compress from the raw table in one C call; None on a
-        pathological expansion blow-up (caller uses the Python prep)."""
+        """Greedy compress from the raw table in one C call; None when
+        the expansions pass 64 MB or malloc fails (caller uses the re
+        path)."""
         inb = np.frombuffer(corpus, dtype=np.uint8)
         t = np.array(table, dtype=np.uint8)  # (nt, 3): code, x, y
         codes = np.ascontiguousarray(t[:, 0])
@@ -813,7 +791,8 @@ class _Kernels:
         got = self._extract_runs(
             v.ctypes.data, len(v), rv.ctypes.data, rl.ctypes.data
         )
-        assert got == n_runs
+        if got != n_runs:
+            raise RuntimeError(f"extract_runs found {got} runs, expected {n_runs}")
         return rv, rl
 
     def pack_for(self, v: np.ndarray, lo: int, width: int) -> bytes:
@@ -904,17 +883,24 @@ def load() -> _Kernels | None:
     global _cached
     if _cached is not False:
         return _cached
+    _cached = None
     if os.environ.get("COLCRUSH_NATIVE", "1") == "0":
-        _cached = None
         return None
     try:
         so = _so_path()
         if not os.path.exists(so):
             _compile(so)
         if not _safe_to_load(so):
-            _cached = None
-            return None
-        _cached = _Kernels(ctypes.CDLL(so))
-    except Exception:  # noqa: BLE001 — any failure means numpy fallback
-        _cached = None
-    return _cached
+            cause = f"refusing {so}: not owned by this user or writable by others"
+        else:
+            _cached = _Kernels(ctypes.CDLL(so))
+            return _cached
+    except Exception as e:  # noqa: BLE001 — any failure means numpy fallback
+        cause = f"{type(e).__name__}: {e}"
+    warnings.warn(
+        f"colcrush C kernels unavailable ({cause}); using the much slower "
+        "numpy fallback (set COLCRUSH_NATIVE=0 to choose it silently)",
+        RuntimeWarning,
+        stacklevel=2,
+    )
+    return None

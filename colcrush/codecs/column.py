@@ -341,20 +341,8 @@ _FSST_PROFILE = {
 
 
 def _enc_fsst(
-    lengths: np.ndarray,
-    blob: bytes,
-    profile: str,
-    table: list | None = None,
-    comp: bytes | None = None,
+    lengths: np.ndarray, blob: bytes, table: list, comp: bytes | None = None
 ) -> bytes:
-    if table is None:
-        cap, sl, max_symbols, frac = _FSST_PROFILE.get(
-            profile, _FSST_PROFILE["balanced"]
-        )
-        sample = fsst_mod.strided_sample(blob, cap, sl)
-        table = fsst_mod.train(
-            blob, sample=sample, max_symbols=max_symbols, min_count_frac=frac
-        )
     if comp is None:
         comp = fsst_mod.compress(blob, table)
     return (
@@ -395,7 +383,6 @@ def _schema_ser(t: pa.DataType) -> bytes:
 def encode_array(
     arr: pa.Array,
     profile: str = "balanced",
-    force_codec: int | None = None,
     _allow_dict: bool = True,
     kernel_cache: dict | None = None,
     _entropy: bool = True,
@@ -465,7 +452,7 @@ def encode_array(
         mn, mx = mm["min"].as_py(), mm["max"].as_py()
     meta["min"], meta["max"] = mn, mx
 
-    custom = _match_value_codec(t) if force_codec is None else None
+    custom = _match_value_codec(t)
     if custom is not None:
         name, to_s, _ = custom
         inner, _ = encode_array(to_s(nn), profile=profile, _entropy=False)
@@ -474,9 +461,7 @@ def encode_array(
             _blk(name.encode()) + _blk(inner),
             {},
         )
-    elif force_codec is None and (
-        pa.types.is_list(t) or pa.types.is_large_list(t)
-    ):
+    elif pa.types.is_list(t) or pa.types.is_large_list(t):
         # lightweight nested codec: element lengths through the int
         # codec, flattened values recursively through the full selector
         # (so list<string> content gets FSST, list<int> gets FOR/delta —
@@ -484,15 +469,11 @@ def encode_array(
         # values through real pages the same way (ParquetRecord.scala:
         # 606-629 in /root/reference builds groups over encoded leaves).
         codec_id, payload, extra = LIST, _enc_list(nn, profile), {}
-    elif force_codec is None and pa.types.is_struct(t):
+    elif pa.types.is_struct(t):
         codec_id, payload, extra = STRUCT, _enc_struct(nn, profile), {}
-    elif force_codec is None and pa.types.is_map(t):
+    elif pa.types.is_map(t):
         codec_id, payload, extra = MAP, _enc_map(nn, profile), {}
-    elif (
-        force_codec is None
-        and isinstance(t, pa.Decimal128Type)
-        and t.precision > 18
-    ):
+    elif isinstance(t, pa.Decimal128Type) and t.precision > 18:
         # precision > 18 (precision <= 18 took the single-int64 path via
         # _is_intlike): the reference's DEFAULT decimal is
         # DecimalType(38, 18) stored as FIXED_LEN_BYTE_ARRAY(16)
@@ -502,14 +483,12 @@ def encode_array(
         # columns have an all-sign-extension hi word (RLE collapses it)
         # and a FOR/delta-packable lo word.
         codec_id, payload, extra = DEC128, _enc_dec128(nn), {}
-    elif force_codec == IPC or not (
-        is_str or _is_intlike(t) or pa.types.is_floating(t)
-    ):
+    elif not (is_str or _is_intlike(t) or pa.types.is_floating(t)):
         # IPC keeps the original array (nulls inline)
         codec_id, payload, extra = IPC, _enc_ipc(arr, t), {}
     else:
         codec_id, payload, extra = _choose(
-            nn, t, profile, force_codec, _allow_dict, str_parts, kernel_cache
+            nn, t, profile, _allow_dict, str_parts, kernel_cache
         )
     meta.update(extra)
     meta["codec"] = CODEC_NAMES[codec_id]
@@ -549,26 +528,15 @@ def _choose(
     nn: pa.Array,
     t: pa.DataType,
     profile: str,
-    force: int | None,
     allow_dict: bool,
-    str_parts: tuple | None = None,
-    kernel_cache: dict | None = None,
+    str_parts: tuple | None,
+    kernel_cache: dict | None,
 ) -> tuple[int, bytes, dict]:
+    """Smallest codec for a null-free string, int-like or float array;
+    ``str_parts`` is ``_string_parts(nn)`` for strings, else None."""
     extra: dict = {}
-    is_str = (
-        pa.types.is_string(t)
-        or pa.types.is_large_string(t)
-        or pa.types.is_binary(t)
-        or pa.types.is_large_binary(t)
-    )
-
-    if force == IPC or not (is_str or _is_intlike(t) or pa.types.is_floating(t)):
-        return IPC, _enc_ipc(nn, t), extra
-
-    if is_str:
-        lengths, blob = str_parts if str_parts is not None else _string_parts(nn)
-        if force is not None:
-            return _encode_str_forced(force, nn, lengths, blob, profile, extra)
+    if str_parts is not None:
+        lengths, blob = str_parts
         candidates: list[tuple[int, int]] = []  # (est_size, codec)
         len_enc = encode_ints_best(lengths)
         plain_size = len(len_enc) + len(blob) + 16
@@ -584,7 +552,7 @@ def _choose(
                 comp = fsst_mod.compress(blob, table)
                 ratio = len(comp) / max(1, len(blob))
                 if ratio <= ref_ratio * 1.15:
-                    payload = _enc_fsst(lengths, blob, profile, table=table, comp=comp)
+                    payload = _enc_fsst(lengths, blob, table, comp)
                     if len(payload) < plain_size:
                         return FSST, payload, extra
             del kernel_cache["fsst"]  # stale — retrain below
@@ -605,7 +573,7 @@ def _choose(
         )
         if dict_est is not None:
             candidates.append((dict_est, DICT))
-        fsst_table = fsst_comp = None
+        fsst_table = None
         # skip FSST training when the dictionary already beats plain by
         # 8x: symbol compression never reaches 1/8 on value bytes a
         # dictionary collapses that hard (measured floor ~0.2 on
@@ -626,7 +594,7 @@ def _choose(
             # partitions — so codec choice stays deterministic.
             skip_fsst = dict_est < plain_size * kernel_cache["fsst_ratio_est"] * 0.9
         if len(blob) >= 1024 and not skip_fsst:
-            fsst_est, fsst_table, fsst_comp = _fsst_estimate(lengths, blob, profile)
+            fsst_est, fsst_table = _fsst_estimate(lengths, blob, profile)
             if fsst_est is not None:
                 candidates.append((fsst_est, FSST))
                 if kernel_cache is not None:
@@ -637,7 +605,7 @@ def _choose(
             return PLAIN_STR, _blk(len_enc) + _blk(blob), extra
         if codec == DICT:
             return DICT, *_enc_dict(nn, profile, extra, dict_cache.get("denc"))
-        payload = _enc_fsst(lengths, blob, profile, table=fsst_table, comp=fsst_comp)
+        payload = _enc_fsst(lengths, blob, fsst_table)
         if len(payload) > plain_size:  # estimate was wrong — fall back
             return PLAIN_STR, _blk(len_enc) + _blk(blob), extra
         if kernel_cache is not None and fsst_table:
@@ -650,25 +618,23 @@ def _choose(
     if _is_intlike(t):
         v = _int_view(nn)
         ints_payload = encode_ints_best(v)
-        if force == INTS or not allow_dict:
+        if not allow_dict:
             return INTS, ints_payload, extra
-        if force != DICT and len(ints_payload) <= _dict_floor(nn, len(nn)):
+        if len(ints_payload) <= _dict_floor(nn, len(nn)):
             return INTS, ints_payload, extra  # DICT provably can't win
         dict_cache = {}
         dict_est = _dict_estimate(nn, dict_cache)
-        if force == DICT or (dict_est is not None and dict_est < len(ints_payload)):
+        if dict_est is not None and dict_est < len(ints_payload):
             dict_payload, dextra = _enc_dict(
                 nn, profile, extra, dict_cache.get("denc")
             )
-            if len(dict_payload) < len(ints_payload) or force == DICT:
+            if len(dict_payload) < len(ints_payload):
                 extra.update(dextra)
                 return DICT, dict_payload, extra
         return INTS, ints_payload, extra
 
     # floats
     plain = _enc_plain_fixed(nn)
-    if force == PLAIN_FIXED:
-        return PLAIN_FIXED, plain, extra
     fi = _enc_float_int(nn)
     if fi is not None and len(fi) < len(plain):
         return FLOAT_INT, fi, extra
@@ -739,18 +705,6 @@ def _dec_float_int(payload: bytes, mask) -> pa.Array:
     else:
         full = values
     return pa.array(full, mask=mask)
-
-
-def _encode_str_forced(force, nn, lengths, blob, profile, extra):
-    if force == PLAIN_STR:
-        return PLAIN_STR, _blk(encode_ints_best(lengths)) + _blk(blob), extra
-    if force == DICT:
-        payload, dextra = _enc_dict(nn, profile, extra)
-        extra.update(dextra)
-        return DICT, payload, extra
-    if force == FSST:
-        return FSST, _enc_fsst(lengths, blob, profile), extra
-    raise ValueError(f"bad forced codec {force}")
 
 
 def _constant_dict(
@@ -838,8 +792,8 @@ def _dict_floor(nn: pa.Array, n: int) -> int:
 
 def _fsst_estimate(
     lengths: np.ndarray, blob: bytes, profile: str
-) -> tuple[int | None, list | None, bytes | None]:
-    """Train ONCE on a sample; return (size estimate, table, None).
+) -> tuple[int | None, list | None]:
+    """Train ONCE on a sample; return (size estimate, table).
     Training substitutes each learned symbol into the sample as it
     goes, so the residual's length IS the size estimate for free (the
     greedy encoder lands within ~2% of the sequential ratio on text);
@@ -852,10 +806,10 @@ def _fsst_estimate(
         blob, sample=sample, max_symbols=max_symbols, min_count_frac=frac
     )
     if not table:
-        return None, None, None
+        return None, None
     ratio = len(residual) / max(1, len(sample))
     est = int(ratio * len(blob)) + 3 * len(table) + len(lengths) * 1 + 64
-    return est, table, None
+    return est, table
 
 
 def _enc_dict(

@@ -209,51 +209,21 @@ def _match_symbols(table: list[tuple[int, int, int]]) -> list[tuple[bytes, int]]
 
 def compress(corpus: bytes, table: list[tuple[int, int, int]]) -> bytes:
     """Single-pass greedy longest-match encode (see module docstring).
-    Identical bytes whether the C kernel or the re-based fallback runs,
-    so chunk identity never depends on the host toolchain."""
+    Two paths, identical bytes: the one-call C kernel, and a ``re``
+    alternation for hosts without it. The kernel declines (None) only
+    when the expansions pass 64 MB or malloc fails, far above what a
+    trained table reaches; the ``re`` path covers that case too. So
+    chunk identity never depends on the host toolchain."""
     if not table or len(corpus) < 2:
         return corpus
     if _native is not None:
-        # one C call: expansion derivation, (len desc, bytes asc)
-        # candidate ordering with first-in-table dedup, bucket build,
-        # greedy match — the Python prep below cost ~2x the match loop
-        # itself per chunk. None only on a pathological recursive
-        # expansion blow-up; fall through to the stepwise path then.
         res = _native.compress_table(corpus, table)
         if res is not None:
             return res
+    # re alternation tries candidates in pattern order at the leftmost
+    # matching position — with longest-first ordering this IS greedy
+    # longest-match, and re's scan loop runs in C
     syms = _match_symbols(table)
-    if _native is not None:
-        ns = len(syms)
-        exps = b"".join(e for e, _ in syms)
-        starts = np.zeros(ns, dtype=np.int64)
-        lens = np.zeros(ns, dtype=np.int64)
-        codes = np.zeros(ns, dtype=np.uint8)
-        off = 0
-        for i, (e, c) in enumerate(syms):
-            starts[i] = off
-            lens[i] = len(e)
-            codes[i] = c
-            off += len(e)
-        # chain candidates by first-2-bytes, preserving global order:
-        # a bucket's chain is walked front-to-back, so the longest
-        # matching symbol wins exactly as in the re alternation
-        head = np.full(65536, -1, dtype=np.int32)
-        nxt = np.full(max(ns, 1), -1, dtype=np.int32)
-        tail: dict[int, int] = {}
-        for i, (e, _) in enumerate(syms):
-            p = (e[0] << 8) | e[1]
-            if head[p] < 0:
-                head[p] = i
-            else:
-                nxt[tail[p]] = i
-            tail[p] = i
-        return _native.compress_greedy(
-            corpus, exps, starts, lens, codes, head, nxt
-        )
-    # fallback: re alternation tries candidates in pattern order at the
-    # leftmost matching position — with longest-first ordering this IS
-    # greedy longest-match, and re's scan loop runs in C
     pat = re.compile(b"|".join(re.escape(e) for e, _ in syms))
     repl = {e: bytes((c,)) for e, c in syms}
     return pat.sub(lambda m: repl[m.group(0)], corpus)

@@ -7,8 +7,8 @@ string lengths, run lengths) reuse via :func:`encode_ints_best`.
 Re-implements from scratch the encodings parquet-mr applies under
 parquet4s (RLE/bit-packed hybrid for dictionary ids and levels — see
 /root/reference/core/src/main/scala/com/github/mjakubowski84/parquet4s/ParquetWriter.scala:79-84),
-expressed as whole-array vectorized numpy transforms instead of a
-per-value state machine.
+expressed as whole-array vectorized transforms instead of a per-value
+state machine.
 
 Payload layout (all little-endian):
   [1B tag][8B n][body]
@@ -16,6 +16,15 @@ Payload layout (all little-endian):
   tag 1 FORBP : body = [8B ref][1B width][packed bits]
   tag 2 DELTA : body = [8B first][1B width][8B ref][packed zigzag deltas]
   tag 3 RLE   : body = [8B n_runs][ints payload run_values][ints payload run_lengths]
+
+The encoder sizes every candidate exactly (:func:`_candidates`), keeps
+the smallest (:func:`_plan`) and writes only that one (:func:`_pack`).
+Those three are the only statement of the size formulas and header
+layouts. The array passes they need go through four kernel dispatchers
+(:func:`_stats`, :func:`_runs`, :func:`_pack_for`,
+:func:`_pack_deltas`), each running the C kernel when it is loaded and
+numpy otherwise; the two give identical bytes (pinned by the parity
+tests), so chunk identity never depends on the host toolchain.
 """
 
 from __future__ import annotations
@@ -37,34 +46,6 @@ TAG_RLE = 3
 _HDR = struct.Struct("<Bq")
 
 
-def _to_i64(values: np.ndarray) -> np.ndarray:
-    return np.ascontiguousarray(values, dtype=np.int64)
-
-
-# ---------------------------------------------------------------- encoders
-
-
-def encode_plain(values: np.ndarray) -> bytes:
-    v = _to_i64(values)
-    return _HDR.pack(TAG_PLAIN, len(v)) + v.tobytes()
-
-
-def encode_forbp(values: np.ndarray) -> bytes | None:
-    """Frame-of-reference + bit-pack. None if the range overflows int64."""
-    v = _to_i64(values)
-    if len(v) == 0:
-        return _HDR.pack(TAG_FORBP, 0) + struct.pack("<qB", 0, 0)
-    lo = int(v.min())
-    hi = int(v.max())
-    span = hi - lo  # python ints: no overflow
-    if span >= (1 << 63):
-        return None
-    width = bit_width(span)
-    # span < 2**63 guarantees (v - lo) fits int64; reinterpret as uint64
-    packed = pack_bits((v - lo).view(np.uint64), width)
-    return _HDR.pack(TAG_FORBP, len(v)) + struct.pack("<qB", lo, width) + packed
-
-
 def _zigzag(d: np.ndarray) -> np.ndarray:
     # compute in uint64 domain: wrapping shifts are the intended mod-2^64
     u = d.view(np.uint64)
@@ -76,284 +57,117 @@ def _unzigzag(u: np.ndarray) -> np.ndarray:
     return ((u >> np.uint64(1)).astype(np.int64)) ^ -((u & np.uint64(1)).astype(np.int64))
 
 
-def encode_delta(values: np.ndarray) -> bytes | None:
-    """First value + zigzagged deltas, FOR+bit-packed. Wins on sorted ids."""
-    v = _to_i64(values)
-    if len(v) < 2:
-        return None
+# ------------------------------------------------------ kernel dispatchers
+# Deltas wrap mod 2^64 on both paths: the wrapped diff, its zigzag and
+# the decoder's cumsum all wrap identically, so every delta roundtrips.
+
+
+def _stats(v: np.ndarray) -> tuple[int, int, int, int, int]:
+    """(min, max, zz_min, zz_max, n_runs) of a non-empty int64 array;
+    the zz bounds are the unsigned zigzagged-delta bounds (0 for n == 1)."""
+    if _native is not None:
+        return _native.int_stats(v)
+    if len(v) == 1:
+        return int(v[0]), int(v[0]), 0, 0, 1
     with np.errstate(over="ignore"):
         d = np.diff(v)
-    # verify no int64 overflow in diffs
-    if not np.array_equal(v[:-1] + d, v[1:]):
-        return None
     zz = _zigzag(d)
-    lo = int(zz.min())  # uint64 value: pack unsigned
-    width = bit_width(int(zz.max()) - lo)
-    packed = pack_bits(zz - np.uint64(lo), width)
     return (
-        _HDR.pack(TAG_DELTA, len(v))
-        + struct.pack("<qB", int(v[0]), width)
-        + struct.pack("<Q", lo)
-        + packed
+        int(v.min()), int(v.max()), int(zz.min()), int(zz.max()),
+        1 + int(np.count_nonzero(d)),
     )
 
 
-def encode_rle(values: np.ndarray) -> bytes:
-    """Run-length: change-point split, then best-int-encode values+lengths."""
-    v = _to_i64(values)
-    if len(v) == 0:
-        return _HDR.pack(TAG_RLE, 0) + struct.pack("<q", 0)
-    change = np.flatnonzero(np.diff(v) != 0)
-    starts = np.concatenate(([0], change + 1))
-    run_values = v[starts]
-    ends = np.concatenate((starts[1:], [len(v)]))
-    run_lengths = ends - starts
-    body_v = encode_ints_best(run_values, allow_rle=False)
-    body_l = encode_ints_best(run_lengths, allow_rle=False)
-    return (
-        _HDR.pack(TAG_RLE, len(v))
-        + struct.pack("<q", len(run_values))
-        + struct.pack("<q", len(body_v))
-        + body_v
-        + body_l
-    )
+def _runs(v: np.ndarray, n_runs: int) -> tuple[np.ndarray, np.ndarray]:
+    """(run_values, run_lengths) of a non-empty int64 array."""
+    if _native is not None:
+        return _native.extract_runs(v, n_runs)
+    starts = np.concatenate(([0], np.flatnonzero(v[1:] != v[:-1]) + 1))
+    return v[starts], np.diff(starts, append=len(v))
 
 
-def _size_plain(n: int) -> int:
-    return _HDR.size + 8 * n
+def _pack_for(v: np.ndarray, ref: int, width: int) -> bytes:
+    """pack_bits(v - ref, width)."""
+    if width == 0:
+        return b""
+    if _native is not None and width <= 56:
+        return _native.pack_for(v, ref, width)
+    return pack_bits((v - ref).view(np.uint64), width)
 
 
-def _size_forbp(v: np.ndarray) -> int | None:
-    n = len(v)
-    if n == 0:
-        return _HDR.size + 9
-    span = int(v.max()) - int(v.min())
-    if span >= (1 << 63):
-        return None
-    w = bit_width(span)
-    return _HDR.size + 9 + (0 if w == 0 else -(-n * w // 8))
-
-
-def _size_delta(v: np.ndarray) -> int | None:
-    n = len(v)
-    if n < 2:
-        return None
+def _pack_deltas(v: np.ndarray, ref: int, width: int) -> bytes:
+    """pack_bits(zigzag(diff(v)) - ref, width)."""
+    if width == 0:
+        return b""
+    if _native is not None and width <= 56:
+        return _native.pack_deltas(v, ref, width)
     with np.errstate(over="ignore"):
         zz = _zigzag(np.diff(v))
-    w = bit_width(int(zz.max()) - int(zz.min()))
-    return _HDR.size + 9 + 8 + (0 if w == 0 else -(-(n - 1) * w // 8))
+    return pack_bits(zz - np.uint64(ref), width)
 
 
-def _analytic_best_size(v: np.ndarray) -> int:
-    """min size over plain/forbp/delta — mirrors the encoders exactly.
-    With the C kernels loaded, all bounds come from one
-    colcrush_int_stats sweep instead of six numpy array passes; the
-    formulas (and therefore the returned size) are identical either
-    way, pinned by the native-vs-numpy parity fuzz test."""
-    n = len(v)
-    if _native is None or n == 0:
-        sizes = [_size_plain(n)]
-        f = _size_forbp(v)
-        if f is not None:
-            sizes.append(f)
-        d = _size_delta(v)
-        if d is not None:
-            sizes.append(d)
-        return min(sizes)
-    mn, mx, zmn, zmx, _ = _native.int_stats(v)
-    sizes = [_size_plain(n)]
-    span = mx - mn
-    if span < (1 << 63):
-        w = bit_width(span)
-        sizes.append(_HDR.size + 9 + (0 if w == 0 else -(-n * w // 8)))
+# ---------------------------------------------------------------- encoder
+
+
+def _candidates(n: int, stats) -> list[tuple]:
+    """Exact (size, tag, ref, width) of the plain, FOR and delta
+    payloads, in tie-break order. FOR is left out when the range
+    overflows int64 (and for n == 0, where plain is always smaller);
+    delta needs n >= 2."""
+    out = [(_HDR.size + 8 * n, TAG_PLAIN, 0, 0)]
+    if n == 0:
+        return out
+    lo, hi, zlo, zhi, _ = stats
+    if hi - lo < 1 << 63:  # python ints: no overflow
+        w = bit_width(hi - lo)
+        out.append((_HDR.size + 9 + -(-n * w // 8), TAG_FORBP, lo, w))
     if n >= 2:
-        w = bit_width(zmx - zmn)
-        sizes.append(
-            _HDR.size + 9 + 8 + (0 if w == 0 else -(-(n - 1) * w // 8))
+        w = bit_width(zhi - zlo)
+        out.append((_HDR.size + 17 + -(-(n - 1) * w // 8), TAG_DELTA, zlo, w))
+    return out
+
+
+def _plan(v: np.ndarray, allow_rle: bool) -> tuple:
+    """The smallest candidate for ``v`` (first of equals wins). An RLE
+    plan is (size, TAG_RLE, (run_values, plan), (run_lengths, plan)):
+    the run arrays travel with their own plans, so packing a winning RLE
+    body needs no second stats sweep."""
+    n = len(v)
+    stats = _stats(v) if n else None
+    cands = _candidates(n, stats)
+    # with no repeats the run values are v itself, so RLE would cost v's
+    # best payload plus headers and run lengths: it cannot win
+    if allow_rle and n > 4 and stats[4] < n:
+        rv, rl = _runs(v, stats[4])
+        pv, pl = _plan(rv, False), _plan(rl, False)
+        cands.append((_HDR.size + 16 + pv[0] + pl[0], TAG_RLE, (rv, pv), (rl, pl)))
+    # tags ascend in tie-break order, so tuples compare as (size, order)
+    return min(cands)
+
+
+def _pack(v: np.ndarray, plan: tuple) -> bytes:
+    _, tag, ref, width = plan
+    head = _HDR.pack(tag, len(v))
+    if tag == TAG_PLAIN:
+        return head + v.tobytes()
+    if tag == TAG_FORBP:
+        return head + struct.pack("<qB", ref, width) + _pack_for(v, ref, width)
+    if tag == TAG_DELTA:
+        return (
+            head
+            + struct.pack("<qBQ", int(v[0]), width, ref)
+            + _pack_deltas(v, ref, width)
         )
-    return min(sizes)
+    (rv, pv), (rl, pl) = ref, width
+    body_v = _pack(rv, pv)
+    return head + struct.pack("<qq", len(rv), len(body_v)) + body_v + _pack(rl, pl)
 
 
 def encode_ints_best(values: np.ndarray, allow_rle: bool = True) -> bytes:
-    """Encode with whichever of plain/forbp/delta/rle is smallest.
-
-    Candidate sizes are computed ANALYTICALLY (exact formulas mirroring
-    each encoder), and every shared intermediate — min/max, the diff
-    array, the zigzagged deltas — is computed ONCE and reused by the
-    winning encoder (the earlier size-then-encode split recomputed the
-    diff up to three times per call; this path is a hot loop under
-    string lengths and dictionary indices). Tie-break order matches the
-    old encode-everything implementation (plain, forbp, delta, rle) so
-    outputs are byte-identical — pinned by the roundtrip property
-    tests. Note encode_delta's int64-overflow guard is intentionally
-    absent here: wrapping arithmetic is self-consistent (d, cumsum, and
-    the check all wrap mod 2^64 identically), so the guard can never
-    fire and wrapped deltas still roundtrip exactly.
-
-    With the C kernels loaded, selection bounds come from one
-    colcrush_int_stats sweep and the winning FOR/delta payload is
-    packed in one fused pass (no shifted/zigzagged temps); the numpy
-    body below is the canonical fallback and the parity fuzz test pins
-    byte identity between the two."""
-    v = _to_i64(values)
-    if _native is not None:
-        return _encode_best_native(v, allow_rle)
-    return _encode_best_numpy(v, allow_rle)
-
-
-def _encode_best_native(v: np.ndarray, allow_rle: bool) -> bytes:
-    n = len(v)
-    candidates: list[tuple[int, int]] = [(_size_plain(n), TAG_PLAIN)]
-    f_lo = f_width = z_lo = z_width = n_runs = None
-    if n == 0:
-        candidates.append((_HDR.size + 9, TAG_FORBP))
-    else:
-        f_lo, mx, zmn, zmx, n_runs = _native.int_stats(v)
-        span = mx - f_lo  # python ints: no overflow
-        if span < (1 << 63):
-            f_width = bit_width(span)
-            candidates.append(
-                (
-                    _HDR.size + 9 + (0 if f_width == 0 else -(-n * f_width // 8)),
-                    TAG_FORBP,
-                )
-            )
-        if n >= 2:
-            z_lo = zmn
-            z_width = bit_width(zmx - zmn)
-            candidates.append(
-                (
-                    _HDR.size
-                    + 17
-                    + (0 if z_width == 0 else -(-(n - 1) * z_width // 8)),
-                    TAG_DELTA,
-                )
-            )
-    run_values = run_lengths = None
-    if allow_rle and n > 4:
-        run_values, run_lengths = _native.extract_runs(v, n_runs)
-        rle_size = (
-            _HDR.size
-            + 16
-            + _analytic_best_size(run_values)
-            + _analytic_best_size(run_lengths)
-        )
-        candidates.append((rle_size, TAG_RLE))
-    # stable min: first of the smallest, in candidate insertion order
-    best_tag = min(candidates, key=lambda c: c[0])[1]
-    if best_tag == TAG_PLAIN:
-        return encode_plain(v)
-    if best_tag == TAG_FORBP:
-        if n == 0:
-            return _HDR.pack(TAG_FORBP, 0) + struct.pack("<qB", 0, 0)
-        if f_width == 0:
-            packed = b""
-        elif f_width <= 56:
-            packed = _native.pack_for(v, f_lo, f_width)
-        else:  # 57..63: numpy bit-matrix path, same bytes
-            packed = pack_bits((v - f_lo).view(np.uint64), f_width)
-        return (
-            _HDR.pack(TAG_FORBP, n) + struct.pack("<qB", f_lo, f_width) + packed
-        )
-    if best_tag == TAG_DELTA:
-        if z_width == 0:
-            packed = b""
-        elif z_width <= 56:
-            packed = _native.pack_deltas(v, z_lo, z_width)
-        else:  # 57..64: materialize once, pack via the wide-width path
-            d = np.diff(v)
-            packed = pack_bits(_zigzag(d) - np.uint64(z_lo), z_width)
-        return (
-            _HDR.pack(TAG_DELTA, n)
-            + struct.pack("<qB", int(v[0]), z_width)
-            + struct.pack("<Q", z_lo)
-            + packed
-        )
-    body_v = _encode_best_native(run_values, allow_rle=False)
-    body_l = _encode_best_native(run_lengths, allow_rle=False)
-    return (
-        _HDR.pack(TAG_RLE, n)
-        + struct.pack("<q", len(run_values))
-        + struct.pack("<q", len(body_v))
-        + body_v
-        + body_l
-    )
-
-
-def _encode_best_numpy(v: np.ndarray, allow_rle: bool) -> bytes:
-    n = len(v)
-    candidates: list[tuple[int, int]] = [(_size_plain(n), TAG_PLAIN)]
-    f_lo = f_width = None
-    if n == 0:
-        candidates.append((_HDR.size + 9, TAG_FORBP))
-    else:
-        f_lo, hi = int(v.min()), int(v.max())
-        span = hi - f_lo  # python ints: no overflow
-        if span < (1 << 63):
-            f_width = bit_width(span)
-            candidates.append(
-                (
-                    _HDR.size + 9 + (0 if f_width == 0 else -(-n * f_width // 8)),
-                    TAG_FORBP,
-                )
-            )
-    d = zz = z_lo = z_width = None
-    if n >= 2:
-        with np.errstate(over="ignore"):
-            d = np.diff(v)
-        zz = _zigzag(d)
-        z_lo = int(zz.min())
-        z_width = bit_width(int(zz.max()) - z_lo)
-        candidates.append(
-            (
-                _HDR.size + 17 + (0 if z_width == 0 else -(-(n - 1) * z_width // 8)),
-                TAG_DELTA,
-            )
-        )
-    run_values = run_lengths = None
-    if allow_rle and n > 4:
-        # d != 0 detects value changes exactly even for wrapped diffs
-        # (a - b mod 2^64 is 0 iff a == b for int64 inputs)
-        change = np.flatnonzero(d != 0)
-        starts = np.concatenate(([0], change + 1))
-        run_values = v[starts]
-        ends = np.concatenate((starts[1:], [n]))
-        run_lengths = ends - starts
-        rle_size = (
-            _HDR.size
-            + 16
-            + _analytic_best_size(run_values)
-            + _analytic_best_size(run_lengths)
-        )
-        candidates.append((rle_size, TAG_RLE))
-    # stable min: first of the smallest, in candidate insertion order
-    best_tag = min(candidates, key=lambda c: c[0])[1]
-    if best_tag == TAG_PLAIN:
-        return encode_plain(v)
-    if best_tag == TAG_FORBP:
-        if n == 0:
-            return _HDR.pack(TAG_FORBP, 0) + struct.pack("<qB", 0, 0)
-        packed = pack_bits((v - f_lo).view(np.uint64), f_width)
-        return (
-            _HDR.pack(TAG_FORBP, n) + struct.pack("<qB", f_lo, f_width) + packed
-        )
-    if best_tag == TAG_DELTA:
-        packed = pack_bits(zz - np.uint64(z_lo), z_width)
-        return (
-            _HDR.pack(TAG_DELTA, n)
-            + struct.pack("<qB", int(v[0]), z_width)
-            + struct.pack("<Q", z_lo)
-            + packed
-        )
-    body_v = _encode_best_numpy(run_values, allow_rle=False)
-    body_l = _encode_best_numpy(run_lengths, allow_rle=False)
-    return (
-        _HDR.pack(TAG_RLE, n)
-        + struct.pack("<q", len(run_values))
-        + struct.pack("<q", len(body_v))
-        + body_v
-        + body_l
-    )
+    """Encode with whichever of plain/forbp/delta/rle is smallest (ties
+    go to the earlier of that order)."""
+    v = np.ascontiguousarray(values, dtype=np.int64)
+    return _pack(v, _plan(v, allow_rle))
 
 
 # ---------------------------------------------------------------- decoder

@@ -24,14 +24,7 @@ from colcrush.codecs import (
     pack_bits,
     unpack_bits,
 )
-from colcrush.codecs import column as C
 from colcrush.codecs import fsst
-from colcrush.codecs.intcodec import (
-    encode_delta,
-    encode_forbp,
-    encode_plain,
-    encode_rle,
-)
 
 rng = np.random.default_rng(42)
 
@@ -76,11 +69,18 @@ def test_int_roundtrip(case):
 
 
 def test_int_individual_codecs():
-    v = np.repeat(np.array([3, -9, 3, 1 << 50], dtype=np.int64), [7, 2, 30, 1])
-    for enc in (encode_plain, encode_forbp, encode_rle):
-        assert np.array_equal(decode_ints(enc(v)), v)
-    d = encode_delta(v)
-    assert d is not None and np.array_equal(decode_ints(d), v)
+    """One input per payload tag, each picked by the selector itself."""
+    i64 = np.iinfo(np.int64)
+    cases = {
+        0: rng.integers(i64.min, i64.max, 1000, dtype=np.int64),  # full range
+        1: rng.integers(0, 16, 1000).astype(np.int64),  # small range: FOR
+        2: np.arange(1000, dtype=np.int64) * 7 + 3,  # stride ramp: delta
+        3: np.repeat(np.array([5, -3, 9, 1 << 40], dtype=np.int64), 500),
+    }
+    for tag, v in cases.items():
+        blob = encode_ints_best(v)
+        assert blob[0] == tag, f"expected tag {tag}, got {blob[0]}"
+        assert np.array_equal(decode_ints(blob), v)
 
 
 def test_int_codec_choices_compress():
@@ -93,8 +93,12 @@ def test_int_codec_choices_compress():
 
 
 def test_forbp_overflow_guard():
+    """A range that overflows int64 never picks FOR (tag 1)."""
     v = np.array([np.iinfo(np.int64).min, np.iinfo(np.int64).max])
-    assert encode_forbp(v) is None  # span overflows -> refuse
+    for allow_rle in (True, False):
+        blob = encode_ints_best(v, allow_rle)
+        assert blob[0] != 1
+        assert np.array_equal(decode_ints(blob), v)
 
 
 # ------------------------------------------------------------ fsst / bpe
@@ -220,10 +224,24 @@ def test_codec_selection_plain_for_random_strings():
 
 
 def test_forced_codecs_all_roundtrip():
-    arr = pa.array(["alpha", "beta", None, "alpha", ""] * 200)
-    for force in (C.PLAIN_STR, C.DICT, C.FSST, C.IPC):
-        blob, meta = encode_array(arr, force_codec=force)
-        assert decode_array(blob).to_pylist() == arr.to_pylist(), meta["codec"]
+    """Each string-side codec, forced by the shape of its input (no
+    knob picks a codec), roundtrips with a null and an empty string
+    appended (a null only for the fixed-width binary)."""
+    code = [
+        f"    result_{i} = compute(value_{i % 7}, offset={i})\n" for i in range(400)
+    ]
+    cases = {
+        "dict": pa.array(["alpha", "beta"] * 200),
+        "plain_str": pa.array([rng.bytes(4).hex() for _ in range(100)]),
+        "fsst": pa.array(code),
+        "ipc": pa.array([b"abcdef", b"ghijkl", None] * 50, type=pa.binary(6)),
+    }
+    for codec, arr in cases.items():
+        tail = [None] if codec == "ipc" else [None, ""]
+        arr = pa.concat_arrays([arr, pa.array(tail, type=arr.type)])
+        blob, meta = encode_array(arr)
+        assert meta["codec"] == codec
+        assert decode_array(blob).to_pylist() == arr.to_pylist(), codec
 
 
 def test_minmax_stats_recorded():
@@ -244,17 +262,12 @@ def test_content_sha_invariant():
     assert src == got
 
 
-def test_native_kernel_matches_numpy_bytes():
-    """The C kernel and the numpy fallback must produce IDENTICAL
-    compressed bytes (and exact roundtrips) — chunk identity can never
-    depend on whether a host has a C compiler."""
-    import numpy as np
-
-    from colcrush.codecs import fsst
-
+def test_native_kernel_matches_numpy_bytes(monkeypatch):
+    """The one-call C kernel, the re fallback, and the re path taken
+    when the kernel declines a table (compress_table -> None) must give
+    IDENTICAL compressed bytes (and exact roundtrips) — chunk identity
+    can never depend on whether a host has a C compiler."""
     if fsst._native is None:
-        import pytest
-
         pytest.skip("no C toolchain on this host")
     rng = np.random.default_rng(3)
     cases = [
@@ -265,19 +278,68 @@ def test_native_kernel_matches_numpy_bytes():
         rng.integers(0, 200, size=100_000, dtype=np.uint8).tobytes(),
     ]
     nat = fsst._native
-    try:
-        for i, rb in enumerate(cases):
-            tb = fsst.train(rb)
-            fsst._native = None
-            a = fsst.compress(rb, tb)
-            da = fsst.decompress(a, tb)
-            fsst._native = nat
-            b = fsst.compress(rb, tb)
-            db = fsst.decompress(b, tb)
-            assert a == b, f"case {i}: native/numpy compress diverge"
-            assert da == rb and db == rb, f"case {i}: roundtrip"
-    finally:
-        fsst._native = nat
+    for i, rb in enumerate(cases):
+        tb = fsst.train(rb)
+        got = {}
+        for name in ("native", "numpy", "declined"):
+            with monkeypatch.context() as m:
+                if name == "numpy":
+                    m.setattr(fsst, "_native", None)
+                elif name == "declined":
+                    m.setattr(nat, "compress_table", lambda corpus, table: None)
+                got[name] = fsst.compress(rb, tb)
+                assert fsst.decompress(got[name], tb) == rb, f"case {i}: {name}"
+        assert got["numpy"] == got["native"], f"case {i}: numpy diverges"
+        assert got["declined"] == got["native"], f"case {i}: declined diverges"
+
+
+def test_native_wrappers_check_kernel_output_sizes():
+    """The ctypes wrappers check the C kernels' output sizes with a
+    RuntimeError, which survives python -O (an assert would not, and a
+    short expand would hand back an uninitialised tail). Sizes one too
+    large leave the buffers big enough, so nothing overruns."""
+    from colcrush.codecs import intcodec
+
+    nat = fsst._native
+    if nat is None:
+        pytest.skip("no C toolchain on this host")
+    corpus = b"for i in range(n):\n    print(i)\n" * 200
+    table = fsst.train(corpus)
+    a = np.frombuffer(fsst.compress(corpus, table), dtype=np.uint8)
+    flat, starts, lens = fsst._expansions(table)
+    total = nat.expand_total(a, lens)
+    assert nat.expand(a, flat, starts, lens, total).tobytes() == corpus
+    with pytest.raises(RuntimeError, match="expand"):
+        nat.expand(a, flat, starts, lens, total + 1)
+    v = np.array([4, 4, 9, 9, 9, 1], dtype=np.int64)
+    n_runs = intcodec._stats(v)[4]
+    assert n_runs == 3
+    with pytest.raises(RuntimeError, match="extract_runs"):
+        nat.extract_runs(v, n_runs + 1)
+
+
+def test_native_fallback_warns_once_unless_disabled(monkeypatch, tmp_path):
+    """A failed build falls back to numpy with one RuntimeWarning naming
+    the cause; COLCRUSH_NATIVE=0 picks numpy without a warning."""
+    import warnings
+
+    from colcrush.codecs import _native as native_mod
+
+    def boom(so):
+        raise OSError("no compiler here")
+
+    monkeypatch.setattr(native_mod, "_compile", boom)
+    monkeypatch.setattr(native_mod, "_so_path", lambda: str(tmp_path / "k.so"))
+    monkeypatch.delenv("COLCRUSH_NATIVE", raising=False)
+    monkeypatch.setattr(native_mod, "_cached", False)
+    with pytest.warns(RuntimeWarning, match="no compiler here"):
+        assert native_mod.load() is None
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert native_mod.load() is None  # cached: no second warning
+        monkeypatch.setenv("COLCRUSH_NATIVE", "0")
+        monkeypatch.setattr(native_mod, "_cached", False)
+        assert native_mod.load() is None
 
 
 def test_trainer_parity_native_vs_fallback(monkeypatch):

@@ -456,19 +456,24 @@ def test_row_sizes_sliced_fixed_size_list():
 )
 @settings(max_examples=300, deadline=None)
 def test_encode_ints_best_native_vs_numpy_parity(vals, allow_rle):
-    """The C int_stats/extract_runs/pack_for/pack_deltas fast path and
-    the pure-numpy body must choose the same codec and emit identical
-    bytes for every input (chunk identity can never depend on the host
-    toolchain). Full-range integers exercise the span >= 2^63 no-FOR
-    branch and the 57..64-bit pack fallbacks; the roundtrip closes the
-    loop."""
+    """encode_ints_best with intcodec's C kernels (int_stats,
+    extract_runs, pack_for, pack_deltas) and with their numpy twins
+    must choose the same codec and emit identical bytes for every input
+    (chunk identity can never depend on the host toolchain). Full-range
+    integers exercise the span >= 2^63 no-FOR branch and the 57..64-bit
+    pack fallbacks; the roundtrip closes the loop."""
     from colcrush.codecs import intcodec as ic
 
-    if ic._native is None:
+    kernels = ic._native
+    if kernels is None:
         pytest.skip("no C compiler available")
     v = np.array(vals, dtype=np.int64)
-    nat = ic._encode_best_native(v, allow_rle)
-    ref = ic._encode_best_numpy(v, allow_rle)
+    nat = ic.encode_ints_best(v, allow_rle)
+    try:
+        ic._native = None
+        ref = ic.encode_ints_best(v, allow_rle)
+    finally:
+        ic._native = kernels
     assert nat == ref
     assert np.array_equal(ic.decode_ints(nat), v)
 
@@ -507,7 +512,7 @@ def test_int_stats_and_runs_match_numpy_formulas(vals):
 @settings(max_examples=150, deadline=None)
 def test_compress_table_matches_python_prep(data):
     """colcrush_compress_table (one-call expansion+sort+dedup+match)
-    vs the stepwise _match_symbols + greedy path, including tables with
+    vs the _match_symbols + re alternation path, including tables with
     DUPLICATE expansions (two code chains producing the same bytes —
     first table entry must win) and chained codes (x/y referencing
     earlier codes)."""

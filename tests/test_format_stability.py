@@ -13,8 +13,9 @@ import hashlib
 
 import numpy as np
 import pyarrow as pa
+import pytest
 
-from colcrush.codecs import decode_array, encode_array
+from colcrush.codecs import bitpack, bloom, decode_array, encode_array, fsst, intcodec
 from colcrush.engine.encoder import chunk_id_for
 from colcrush.fixtures import source_code_table
 
@@ -38,7 +39,17 @@ def test_fixture_generation_stable():
     )
 
 
-def test_encoded_blob_stable():
+@pytest.fixture(params=["native", "numpy"])
+def kernels(request, monkeypatch):
+    """Run a golden with the C kernels as loaded, then with every
+    kernel off at once: both must hit the same bytes."""
+    if request.param == "numpy":
+        for mod in (intcodec, fsst, bloom, bitpack):
+            monkeypatch.setattr(mod, "_native", None)
+    return request.param
+
+
+def test_encoded_blob_stable(kernels):
     tbl = source_code_table(200, n_repos=10)
     got = {}
     for col in ("content", "lang", "path"):
@@ -54,7 +65,7 @@ _FIXTURE_SHA = "f982717d332a2a678d293a8bfe5f0a2605d24041757978dc8e37d155934be616
 _BLOB_GOLDENS = {'content': ('fsst', 'f431a8868d5c348b'), 'lang': ('dict', '0da15ed86f3b5f8a'), 'path': ('fsst', '04bc3fbc03daec20')}
 
 
-def test_decimal_blob_stable():
+def test_decimal_blob_stable(kernels):
     """Decimal codec format golden: a fixed decimal array encodes to
     fixed bytes via the unscaled-int path (never IPC)."""
     import decimal
@@ -74,7 +85,7 @@ def test_decimal_blob_stable():
 _DECIMAL_GOLDEN = ('ints', '8a1f85eea33efe93')
 
 
-def test_dec128_blob_stable():
+def test_dec128_blob_stable(kernels):
     """DecimalType(38,18) golden — the reference's DEFAULT decimal
     format (DecimalFormat.scala:21-26). Pins the dec128 container and
     its sub-mode selection (descale/delta128/words)."""
