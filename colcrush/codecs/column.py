@@ -12,16 +12,32 @@ Container layout (little-endian):
   u32 schema_len | arrow-serialized single-field schema
   u8  codec_id
   i64 n_rows | i64 null_count
-  [validity bitmap, ceil(n/8) bytes, LSB-first]   (iff 0 < null_count < n, codec != IPC)
+  [null bitmap, ceil(n/8) bytes, LSB-first, bit set = NULL]
+      (iff null_count > 0, all-NULL included; never for IPC or ENTROPY)
   payload (codec-specific)
 
-Codecs:
-  PLAIN_FIXED raw buffer of non-null fixed-width values
+Codecs (every payload but IPC's holds the non-null values only):
+  PLAIN_FIXED raw float32/float64 buffer
   INTS        best-of plain/FOR+bitpack/delta/RLE over int64 views
+              (integers, bool, date/time/timestamp, decimal precision <= 18)
   PLAIN_STR   int-encoded lengths + concatenated bytes
   DICT        sorted dictionary (recursively encoded) + int-encoded codes
-  FSST        symbol-table compressed concatenated bytes + lengths
-  IPC         arrow IPC fallback for exotic types (decimal, nested)
+  FSST        symbol table + int-encoded lengths + compressed bytes
+  IPC         arrow IPC stream, nulls inline: the types no other codec
+              takes (fixed-size binary, uint64, duration, ...)
+  FLOAT_INT   floats that are exact decimals: scale + int-encoded x*scale
+  LIST        int-encoded lengths + recursively encoded flattened values
+  STRUCT      one recursively encoded blob per field
+  MAP         int-encoded lengths + recursively encoded keys and items
+  CUSTOM      registered value-codec name + recursively encoded storage
+  DEC128      decimal128 precision > 18: descaled int64, int64 deltas,
+              or hi/lo int64 words
+  ENTROPY     zstd-wrapped finished container (profile "archive")
+
+Nulls are stripped once on encode (``nn`` plus the bitmap) and put
+back once on decode: each codec decoder returns the non-null values,
+and ``decode_array`` spreads them to full length through ``_spread``
+(numpy values) or ``_scatter`` (Arrow arrays).
 """
 
 from __future__ import annotations
@@ -168,16 +184,9 @@ def _int_view(nn: pa.Array) -> np.ndarray:
     """Non-null int-like array -> int64 numpy."""
     t = nn.type
     if isinstance(t, pa.Decimal128Type):
-        # unscaled int64, zero-copy reinterpretation of the 16-byte
-        # little-endian two's-complement storage: precision <= 18
-        # guarantees the high word is pure sign extension of the low
-        pairs = np.frombuffer(
-            nn.buffers()[1],
-            dtype=np.uint64,
-            offset=nn.offset * 16,
-            count=2 * len(nn),
-        )
-        return pairs[0::2].view(np.int64).copy()
+        # unscaled int64: precision <= 18 guarantees the high word is
+        # pure sign extension of the low
+        return _dec128_words(nn)[0]
     if pa.types.is_boolean(t):
         return nn.to_numpy(zero_copy_only=False).astype(np.int64)
     if pa.types.is_timestamp(t) or pa.types.is_time64(t) or pa.types.is_date64(t):
@@ -187,40 +196,65 @@ def _int_view(nn: pa.Array) -> np.ndarray:
     return nn.cast(pa.int64()).to_numpy(zero_copy_only=False).astype(np.int64)
 
 
-def _int_restore(values: np.ndarray, t: pa.DataType, mask: np.ndarray | None) -> pa.Array:
-    """int64 values (+ null mask over full length) -> typed array."""
-    if mask is not None:
-        full = np.zeros(len(mask), dtype=np.int64)
-        full[~mask] = values
-    else:
-        full = values
+def _int_restore(full: np.ndarray, t: pa.DataType, mask: np.ndarray | None) -> pa.Array:
+    """Full-length int64 values (zeros under the nulls) -> typed array."""
     if isinstance(t, pa.Decimal128Type):
-        # rebuild decimal128 storage from unscaled int64 (sign-extend
-        # into the high word); exact inverse of _int_view
-        lo = full.astype(np.int64).view(np.uint64)
-        hi = np.where(
-            full < 0, np.uint64(0xFFFFFFFFFFFFFFFF), np.uint64(0)
-        ).astype(np.uint64)
-        buf = np.empty(2 * len(full), dtype=np.uint64)
-        buf[0::2] = lo
-        buf[1::2] = hi
-        validity = None
-        null_count = 0
-        if mask is not None:
-            validity = pa.py_buffer(
-                np.packbits(~mask, bitorder="little").tobytes()
-            )
-            null_count = int(mask.sum())
-        return pa.Array.from_buffers(
-            t, len(full), [validity, pa.py_buffer(buf.tobytes())],
-            null_count=null_count,
-        )
+        # exact inverse of _int_view: sign-extend into the high word
+        return _dec128_array(full, full >> 63, t, mask)
     if pa.types.is_boolean(t):
         return pa.array(full.astype(bool), mask=mask)
     arr = pa.array(full, mask=mask)  # int64
     if pa.types.is_date32(t) or pa.types.is_time32(t):
         return arr.cast(pa.int32()).cast(t)
     return arr.cast(t)
+
+
+def _dec128_words(nn: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(lo, hi) int64 words of a decimal128 array's 16-byte
+    little-endian two's-complement storage."""
+    words = np.frombuffer(
+        nn.buffers()[1], dtype=np.int64, offset=nn.offset * 16,
+        count=2 * len(nn),
+    )
+    return words[0::2].copy(), words[1::2].copy()
+
+
+def _dec128_array(
+    lo: np.ndarray, hi: np.ndarray, t: pa.DataType, mask: np.ndarray | None
+) -> pa.Array:
+    """decimal128 array from full-length int64 words (inverse of
+    _dec128_words)."""
+    buf = np.empty((len(lo), 2), dtype=np.int64)
+    buf[:, 0] = lo
+    buf[:, 1] = hi
+    return pa.Array.from_buffers(
+        t, len(lo), [_validity(mask), pa.py_buffer(buf)]
+    )
+
+
+def _validity(mask: np.ndarray | None) -> pa.Buffer | None:
+    """Arrow validity bitmap (bit set = valid) for a null mask."""
+    if mask is None:
+        return None
+    return pa.py_buffer(np.packbits(~mask, bitorder="little"))
+
+
+def _spread(values: np.ndarray, mask: np.ndarray | None) -> np.ndarray:
+    """Non-null numpy values -> full length, zeros under the nulls."""
+    if mask is None:
+        return values
+    full = np.zeros(len(mask), dtype=values.dtype)
+    full[~mask] = values
+    return full
+
+
+def _scatter(nn: pa.Array, t: pa.DataType, mask: np.ndarray | None) -> pa.Array:
+    """Non-null Arrow values -> full length, NULL under the mask, as t."""
+    if mask is not None:
+        idx = np.zeros(len(mask), dtype=np.int64)
+        idx[~mask] = np.arange(len(nn), dtype=np.int64)
+        nn = nn.take(pa.array(idx, mask=mask))
+    return nn if nn.type == t else nn.cast(t)
 
 
 def _string_parts(nn: pa.Array) -> tuple[np.ndarray, bytes]:
@@ -256,17 +290,11 @@ def _string_parts(nn: pa.Array) -> tuple[np.ndarray, bytes]:
 def _string_restore(
     lengths: np.ndarray, blob: bytes, t: pa.DataType, mask: np.ndarray | None
 ) -> pa.Array:
-    n = len(mask) if mask is not None else len(lengths)
-    full_lengths = np.zeros(n, dtype=np.int64)
-    if mask is not None:
-        full_lengths[~mask] = lengths
-    else:
-        full_lengths = lengths.astype(np.int64)
+    """Full-length lengths (zeros under the nulls) + concatenated
+    bytes -> typed array."""
+    n = len(lengths)
     offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(full_lengths, out=offsets[1:])
-    validity = None
-    if mask is not None and mask.any():
-        validity = pa.py_buffer(np.packbits(~mask, bitorder="little").tobytes())
+    np.cumsum(lengths, out=offsets[1:])
     # zero-copy buffers (py_buffer holds the ndarray refs) and direct
     # large_string construction: the old binary->string cast re-scanned
     # every byte for UTF-8 validation that a roundtrip of valid strings
@@ -284,8 +312,7 @@ def _string_restore(
     arr = pa.Array.from_buffers(
         pa.large_string() if target_is_str else pa.large_binary(),
         n,
-        [validity, pa.py_buffer(offsets), pa.py_buffer(blob)],
-        null_count=int(mask.sum()) if mask is not None else 0,
+        [_validity(mask), pa.py_buffer(offsets), pa.py_buffer(blob)],
     )
     return arr if arr.type == t else arr.cast(t)
 
@@ -314,15 +341,9 @@ def _enc_plain_fixed(nn: pa.Array) -> bytes:
     return v.tobytes()
 
 
-def _dec_plain_fixed(payload: bytes, t: pa.DataType, n_valid: int, mask) -> pa.Array:
+def _dec_plain_fixed(payload: bytes, t: pa.DataType, n_valid: int) -> np.ndarray:
     dtype = np.float32 if pa.types.is_float32(t) else np.float64
-    values = np.frombuffer(payload, dtype=dtype, count=n_valid)
-    if mask is not None:
-        full = np.zeros(len(mask), dtype=dtype)
-        full[~mask] = values
-    else:
-        full = values
-    return pa.array(full, mask=mask)
+    return np.frombuffer(payload, dtype=dtype, count=n_valid)
 
 
 _FSST_PROFILE = {
@@ -409,11 +430,7 @@ def encode_array(
         mask = ~arr.is_valid().to_numpy(zero_copy_only=False).astype(bool)
     nn = arr.drop_null() if null_count else arr
 
-    meta: dict = {
-        "n_rows": n,
-        "n_nulls": null_count,
-        "dict_size": 0,
-    }
+    meta: dict = {"n_rows": n, "n_nulls": null_count}
 
     is_str = (
         pa.types.is_string(t)
@@ -452,15 +469,12 @@ def encode_array(
         mn, mx = mm["min"].as_py(), mm["max"].as_py()
     meta["min"], meta["max"] = mn, mx
 
+    dict_size = 0
     custom = _match_value_codec(t)
     if custom is not None:
         name, to_s, _ = custom
         inner, _ = encode_array(to_s(nn), profile=profile, _entropy=False)
-        codec_id, payload, extra = (
-            CUSTOM,
-            _blk(name.encode()) + _blk(inner),
-            {},
-        )
+        codec_id, payload = CUSTOM, _blk(name.encode()) + _blk(inner)
     elif pa.types.is_list(t) or pa.types.is_large_list(t):
         # lightweight nested codec: element lengths through the int
         # codec, flattened values recursively through the full selector
@@ -468,11 +482,11 @@ def encode_array(
         # the IPC fallback compressed neither). parquet encodes nested
         # values through real pages the same way (ParquetRecord.scala:
         # 606-629 in /root/reference builds groups over encoded leaves).
-        codec_id, payload, extra = LIST, _enc_list(nn, profile), {}
+        codec_id, payload = LIST, _enc_list(nn, profile)
     elif pa.types.is_struct(t):
-        codec_id, payload, extra = STRUCT, _enc_struct(nn, profile), {}
+        codec_id, payload = STRUCT, _enc_struct(nn, profile)
     elif pa.types.is_map(t):
-        codec_id, payload, extra = MAP, _enc_map(nn, profile), {}
+        codec_id, payload = MAP, _enc_map(nn, profile)
     elif isinstance(t, pa.Decimal128Type) and t.precision > 18:
         # precision > 18 (precision <= 18 took the single-int64 path via
         # _is_intlike): the reference's DEFAULT decimal is
@@ -482,15 +496,15 @@ def encode_array(
         # each through the best-of int codec. Real money/quantity
         # columns have an all-sign-extension hi word (RLE collapses it)
         # and a FOR/delta-packable lo word.
-        codec_id, payload, extra = DEC128, _enc_dec128(nn), {}
+        codec_id, payload = DEC128, _enc_dec128(nn)
     elif not (is_str or _is_intlike(t) or pa.types.is_floating(t)):
         # IPC keeps the original array (nulls inline)
-        codec_id, payload, extra = IPC, _enc_ipc(arr, t), {}
+        codec_id, payload = IPC, _enc_ipc(arr, t)
     else:
-        codec_id, payload, extra = _choose(
+        codec_id, payload, dict_size = _choose(
             nn, t, profile, _allow_dict, str_parts, kernel_cache
         )
-    meta.update(extra)
+    meta["dict_size"] = dict_size
     meta["codec"] = CODEC_NAMES[codec_id]
 
     head = MAGIC + struct.pack("<I", len(schema_ser)) + schema_ser
@@ -510,12 +524,9 @@ def encode_array(
 
 
 def _raw_bytes(arr: pa.Array) -> int:
+    """Uncompressed size of a non-string array (strings count their
+    value bytes, from ``_string_parts``)."""
     t = arr.type
-    if pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_binary(t) or pa.types.is_large_binary(t):
-        nn = arr.drop_null() if arr.null_count else arr
-        if len(nn) == 0:
-            return 0
-        return int(pc.sum(pc.binary_length(nn.cast(pa.large_binary()))).as_py() or 0)
     if pa.types.is_boolean(t):
         return len(arr)
     try:
@@ -531,10 +542,10 @@ def _choose(
     allow_dict: bool,
     str_parts: tuple | None,
     kernel_cache: dict | None,
-) -> tuple[int, bytes, dict]:
-    """Smallest codec for a null-free string, int-like or float array;
-    ``str_parts`` is ``_string_parts(nn)`` for strings, else None."""
-    extra: dict = {}
+) -> tuple[int, bytes, int]:
+    """Smallest codec for a null-free string, int-like or float array:
+    (codec id, payload, dictionary size or 0). ``str_parts`` is
+    ``_string_parts(nn)`` for strings, else None."""
     if str_parts is not None:
         lengths, blob = str_parts
         candidates: list[tuple[int, int]] = []  # (est_size, codec)
@@ -554,7 +565,7 @@ def _choose(
                 if ratio <= ref_ratio * 1.15:
                     payload = _enc_fsst(lengths, blob, table, comp)
                     if len(payload) < plain_size:
-                        return FSST, payload, extra
+                        return FSST, payload, 0
             del kernel_cache["fsst"]  # stale — retrain below
         # gate the full-column dictionary_encode behind a 4096-row
         # probe: on high-cardinality long text (the FSST home turf) the
@@ -564,12 +575,9 @@ def _choose(
         dict_plausible = allow_dict
         const_denc = _constant_dict(nn, lengths, blob) if allow_dict else None
         if const_denc is None and allow_dict and len(nn) > 4096:
-            dict_plausible = _dict_estimate(nn.slice(0, 4096)) is not None
-        dict_cache: dict = {}
-        dict_est = (
-            _dict_estimate(nn, dict_cache, denc=const_denc)
-            if dict_plausible
-            else None
+            dict_plausible = _dict_estimate(nn.slice(0, 4096))[0] is not None
+        dict_est, denc = (
+            _dict_estimate(nn, const_denc) if dict_plausible else (None, None)
         )
         if dict_est is not None:
             candidates.append((dict_est, DICT))
@@ -602,54 +610,36 @@ def _choose(
         candidates.sort()
         codec = candidates[0][1]
         if codec == PLAIN_STR:
-            return PLAIN_STR, _blk(len_enc) + _blk(blob), extra
+            return PLAIN_STR, _blk(len_enc) + _blk(blob), 0
         if codec == DICT:
-            return DICT, *_enc_dict(nn, profile, extra, dict_cache.get("denc"))
+            return DICT, *_enc_dict(denc)
         payload = _enc_fsst(lengths, blob, fsst_table)
         if len(payload) > plain_size:  # estimate was wrong — fall back
-            return PLAIN_STR, _blk(len_enc) + _blk(blob), extra
+            return PLAIN_STR, _blk(len_enc) + _blk(blob), 0
         if kernel_cache is not None and fsst_table:
             kernel_cache["fsst"] = (
                 fsst_table,
                 (len(payload) - len(len_enc)) / max(1, len(blob)),
             )
-        return FSST, payload, extra
+        return FSST, payload, 0
 
     if _is_intlike(t):
-        v = _int_view(nn)
-        ints_payload = encode_ints_best(v)
-        if not allow_dict:
-            return INTS, ints_payload, extra
-        if len(ints_payload) <= _dict_floor(nn, len(nn)):
-            return INTS, ints_payload, extra  # DICT provably can't win
-        dict_cache = {}
-        dict_est = _dict_estimate(nn, dict_cache)
-        if dict_est is not None and dict_est < len(ints_payload):
-            dict_payload, dextra = _enc_dict(
-                nn, profile, extra, dict_cache.get("denc")
-            )
-            if len(dict_payload) < len(ints_payload):
-                extra.update(dextra)
-                return DICT, dict_payload, extra
-        return INTS, ints_payload, extra
-
-    # floats
-    plain = _enc_plain_fixed(nn)
-    fi = _enc_float_int(nn)
-    if fi is not None and len(fi) < len(plain):
-        return FLOAT_INT, fi, extra
-    if not allow_dict:
-        return PLAIN_FIXED, plain, extra
-    dict_cache = {}
-    dict_est = _dict_estimate(nn, dict_cache)
-    if dict_est is not None and dict_est < len(plain):
-        dict_payload, dextra = _enc_dict(
-            nn, profile, extra, dict_cache.get("denc")
-        )
-        if len(dict_payload) < len(plain):
-            extra.update(dextra)
-            return DICT, dict_payload, extra
-    return PLAIN_FIXED, plain, extra
+        codec, payload = INTS, encode_ints_best(_int_view(nn))
+        if len(payload) <= _dict_floor(nn):
+            allow_dict = False  # DICT provably can't win
+    else:
+        codec, payload = PLAIN_FIXED, _enc_plain_fixed(nn)
+        fi = _enc_float_int(nn)
+        if fi is not None and len(fi) < len(payload):
+            return FLOAT_INT, fi, 0
+    # DICT replaces the type's own payload only when it is smaller
+    if allow_dict:
+        dict_est, denc = _dict_estimate(nn)
+        if dict_est is not None and dict_est < len(payload):
+            dict_payload, dict_size = _enc_dict(denc)
+            if len(dict_payload) < len(payload):
+                return DICT, dict_payload, dict_size
+    return codec, payload, 0
 
 
 _FLOAT_SCALES = (1, 10, 100, 1000, 10000)
@@ -689,22 +679,10 @@ def _enc_float_int(nn: pa.Array) -> bytes | None:
     return None
 
 
-def _dec_float_int(payload: bytes, mask) -> pa.Array:
+def _dec_float_int(payload: bytes) -> np.ndarray:
     is32, scale = struct.unpack_from("<Bq", payload, 0)
-    m = decode_ints(payload[9:])
-    back = m.astype(np.float64) / scale
-    if is32:
-        values = back.astype(np.float32)
-        dtype = np.float32
-    else:
-        values = back
-        dtype = np.float64
-    if mask is not None:
-        full = np.zeros(len(mask), dtype=dtype)
-        full[~mask] = values
-    else:
-        full = values
-    return pa.array(full, mask=mask)
+    back = decode_ints(payload[9:]).astype(np.float64) / scale
+    return back.astype(np.float32) if is32 else back
 
 
 def _constant_dict(
@@ -744,38 +722,34 @@ def _constant_dict(
 
 
 def _dict_estimate(
-    nn: pa.Array, out: dict | None = None, denc: "pa.DictionaryArray | None" = None
-) -> int | None:
-    """Cheap upper-ish estimate of DICT encoding size, or None if
-    hopeless. When ``out`` is given, the computed DictionaryArray is
-    stashed under ``out['denc']`` so a winning DICT choice doesn't pay
-    pc.dictionary_encode a second time in _enc_dict (the estimate and
-    the encode hash the same values; threading the result is purely a
-    CPU saving — the bytes are identical either way). ``denc`` injects
-    a pre-built DictionaryArray (the constant-column shortcut) and
-    skips the hash entirely."""
+    nn: pa.Array, denc: "pa.DictionaryArray | None" = None
+) -> tuple[int | None, "pa.DictionaryArray | None"]:
+    """(cheap upper-ish estimate of DICT encoding size, or None if
+    hopeless; the DictionaryArray it measured). A winning DICT choice
+    hands that DictionaryArray to _enc_dict, so pc.dictionary_encode
+    runs once per chunk-column. ``denc`` injects a pre-built
+    DictionaryArray (the constant-column shortcut) and skips the hash
+    entirely."""
     n = len(nn)
     if n == 0:
-        return None
+        return None, None
     try:
         if denc is None:
             denc = pc.dictionary_encode(nn)
     except pa.ArrowNotImplementedError:
-        return None
+        return None, None
     if not isinstance(denc, pa.DictionaryArray):
         denc = denc.combine_chunks()
-    if out is not None:
-        out["denc"] = denc
     dvals = denc.dictionary
     n_unique = len(dvals)
     if n_unique > max(16, n // 2):
-        return None  # dictionary would not pay off
+        return None, denc  # dictionary would not pay off
     dict_bytes = dvals.nbytes
     idx_bits = max(1, int(np.ceil(np.log2(max(2, n_unique)))))
-    return int(dict_bytes + n * idx_bits // 8 + 64)
+    return int(dict_bytes + n * idx_bits // 8 + 64), denc
 
 
-def _dict_floor(nn: pa.Array, n: int) -> int:
+def _dict_floor(nn: pa.Array) -> int:
     """Provable lower bound on any _dict_estimate result: >= one
     dictionary value's bytes + n rows at the 1-bit index floor + the 64
     header allowance. Lets fixed-width branches skip the full
@@ -787,7 +761,7 @@ def _dict_floor(nn: pa.Array, n: int) -> int:
         unit = nn.type.bit_width // 8
     except (ValueError, AttributeError):
         unit = 1
-    return unit + n // 8 + 64
+    return unit + len(nn) // 8 + 64
 
 
 def _fsst_estimate(
@@ -812,13 +786,9 @@ def _fsst_estimate(
     return est, table
 
 
-def _enc_dict(
-    nn: pa.Array, profile: str, extra: dict, denc=None
-) -> tuple[bytes, dict]:
-    if denc is None:
-        denc = pc.dictionary_encode(nn)
-    if isinstance(denc, pa.ChunkedArray):
-        denc = denc.combine_chunks()
+def _enc_dict(denc: pa.DictionaryArray) -> tuple[bytes, int]:
+    """DICT payload and dictionary size of ``_dict_estimate``'s
+    DictionaryArray."""
     dvals = denc.dictionary
     idx = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     # sorted dictionary pages (stable, deterministic): remap codes by rank
@@ -831,10 +801,7 @@ def _enc_dict(
     dict_blob, _ = encode_array(
         sorted_vals, profile="fast", _allow_dict=False, _entropy=False
     )
-    idx_blob = encode_ints_best(new_idx)
-    extra = dict(extra)
-    extra["dict_size"] = len(dvals)
-    return _blk(dict_blob) + _blk(idx_blob), extra
+    return _blk(dict_blob) + _blk(encode_ints_best(new_idx)), len(dvals)
 
 
 def _enc_list(nn: pa.Array, profile: str) -> bytes:
@@ -843,7 +810,7 @@ def _enc_list(nn: pa.Array, profile: str) -> bytes:
     return _blk(encode_ints_best(lengths.astype(np.int64))) + _blk(child)
 
 
-def _dec_list(payload: bytes, t: pa.DataType, mask) -> pa.Array:
+def _dec_list(payload: bytes, t: pa.DataType) -> pa.Array:
     lenb, o = _unblk(payload, 0)
     child_b, o = _unblk(payload, o)
     lengths = decode_ints(lenb)
@@ -853,10 +820,7 @@ def _dec_list(payload: bytes, t: pa.DataType, mask) -> pa.Array:
     offsets = np.zeros(len(lengths) + 1, dtype=odt)
     np.cumsum(lengths, out=offsets[1:])
     cls = pa.LargeListArray if large else pa.ListArray
-    nn = cls.from_arrays(pa.array(offsets), child)
-    if nn.type != t:
-        nn = nn.cast(t)
-    return _scatter(nn, t, mask) if mask is not None else nn
+    return cls.from_arrays(pa.array(offsets), child)
 
 
 def _enc_struct(nn: pa.Array, profile: str) -> bytes:
@@ -867,16 +831,13 @@ def _enc_struct(nn: pa.Array, profile: str) -> bytes:
     return out
 
 
-def _dec_struct(payload: bytes, t: pa.DataType, mask) -> pa.Array:
+def _dec_struct(payload: bytes, t: pa.DataType) -> pa.Array:
     fields = []
     o = 0
     for _ in range(t.num_fields):
         b, o = _unblk(payload, o)
         fields.append(decode_array(b))
-    nn = pa.StructArray.from_arrays(fields, fields=list(t))
-    if nn.type != t:
-        nn = nn.cast(t)
-    return _scatter(nn, t, mask) if mask is not None else nn
+    return pa.StructArray.from_arrays(fields, fields=list(t))
 
 
 def _enc_map(nn: pa.Array, profile: str) -> bytes:
@@ -902,7 +863,7 @@ def _enc_map(nn: pa.Array, profile: str) -> bytes:
     )
 
 
-def _dec_map(payload: bytes, t: pa.DataType, mask) -> pa.Array:
+def _dec_map(payload: bytes) -> pa.Array:
     lenb, o = _unblk(payload, 0)
     keys_b, o = _unblk(payload, o)
     items_b, o = _unblk(payload, o)
@@ -911,10 +872,7 @@ def _dec_map(payload: bytes, t: pa.DataType, mask) -> pa.Array:
     items = decode_array(items_b)
     offsets = np.zeros(len(lengths) + 1, dtype=np.int32)
     np.cumsum(lengths, out=offsets[1:])
-    nn = pa.MapArray.from_arrays(pa.array(offsets), keys, items)
-    if nn.type != t:
-        nn = nn.cast(t)
-    return _scatter(nn, t, mask) if mask is not None else nn
+    return pa.MapArray.from_arrays(pa.array(offsets), keys, items)
 
 
 def _enc_dec128(nn: pa.Array) -> bytes:
@@ -965,16 +923,12 @@ def _enc_dec128(nn: pa.Array) -> bytes:
             if small is not None:
                 inner, _ = encode_array(small, _entropy=False)
                 return struct.pack("<BB", 2, best_g) + _blk(inner)
-    pairs = np.frombuffer(
-        nn.buffers()[1], dtype=np.uint64, offset=nn.offset * 16,
-        count=2 * len(nn),
-    )
-    lo_u = np.ascontiguousarray(pairs[0::2])
-    hi = np.ascontiguousarray(pairs[1::2]).view(np.int64)
+    lo, hi = _dec128_words(nn)
+    lo_u = lo.view(np.uint64)
     words = (
         struct.pack("<B", 0)
         + _blk(encode_ints_best(hi))
-        + _blk(encode_ints_best(lo_u.view(np.int64)))
+        + _blk(encode_ints_best(lo))
     )
     n = len(lo_u)
     if n >= 2:
@@ -993,14 +947,12 @@ def _enc_dec128(nn: pa.Array) -> bytes:
     return words
 
 
-def _dec_dec128(payload: bytes, t: pa.DataType, mask) -> pa.Array:
+def _dec_dec128(payload: bytes, t: pa.DataType) -> pa.Array:
     (mode,) = struct.unpack_from("<B", payload, 0)
     if mode == 2:
-        (g,) = struct.unpack_from("<B", payload, 1)
-        inner, _ = _unblk(payload, 2)
-        small = decode_array(inner)  # decimal128(18, t.scale - g)
-        nn = pc.cast(small, t)  # exact scale widening
-        return _scatter(nn, t, mask) if mask is not None else nn
+        # byte 1 (g) is implied by the inner type: decimal128(18,
+        # t.scale - g) -> t is an exact scale widening
+        return pc.cast(decode_array(_unblk(payload, 2)[0]), t)
     if mode == 1:
         lo0, hi0 = struct.unpack_from("<Qq", payload, 1)
         d = decode_ints(payload[17:])
@@ -1028,24 +980,7 @@ def _dec_dec128(payload: bytes, t: pa.DataType, mask) -> pa.Array:
         lob, o = _unblk(payload, o)
         hi = decode_ints(hib)
         lo = decode_ints(lob)
-    if mask is not None:
-        full_hi = np.zeros(len(mask), dtype=np.int64)
-        full_lo = np.zeros(len(mask), dtype=np.int64)
-        full_hi[~mask] = hi
-        full_lo[~mask] = lo
-        hi, lo = full_hi, full_lo
-    buf = np.empty(2 * len(lo), dtype=np.uint64)
-    buf[0::2] = lo.view(np.uint64)
-    buf[1::2] = hi.view(np.uint64)
-    validity = None
-    null_count = 0
-    if mask is not None:
-        validity = pa.py_buffer(np.packbits(~mask, bitorder="little").tobytes())
-        null_count = int(mask.sum())
-    return pa.Array.from_buffers(
-        t, len(lo), [validity, pa.py_buffer(buf.tobytes())],
-        null_count=null_count,
-    )
+    return _dec128_array(lo, hi, t, None)
 
 
 def _enc_ipc(nn_or_arr: pa.Array, t: pa.DataType) -> bytes:
@@ -1094,22 +1029,35 @@ def decode_array(blob: bytes) -> pa.Array:
         ).astype(bool)
         off += nbytes
     payload = blob[off:]
-    n_valid = n - null_count
 
-    if codec_id == PLAIN_FIXED:
-        return _dec_plain_fixed(payload, t, n_valid, mask)
-    if codec_id == FLOAT_INT:
-        return _dec_float_int(payload, mask)
+    if codec_id in (PLAIN_FIXED, FLOAT_INT):
+        if codec_id == PLAIN_FIXED:
+            values = _dec_plain_fixed(payload, t, n - null_count)
+        else:
+            values = _dec_float_int(payload)
+        return pa.array(_spread(values, mask), mask=mask)
     if codec_id == INTS:
-        return _int_restore(decode_ints(payload), t, mask)
-    if codec_id == PLAIN_STR:
-        lenb, o = _unblk(payload, 0)
-        blob_b, o = _unblk(payload, o)
-        return _string_restore(decode_ints(lenb), blob_b, t, mask)
-    if codec_id == FSST:
-        lengths, data = _dec_fsst(payload)
-        return _string_restore(lengths, data, t, mask)
-    if codec_id == CUSTOM:
+        return _int_restore(_spread(decode_ints(payload), mask), t, mask)
+    if codec_id in (PLAIN_STR, FSST):
+        if codec_id == PLAIN_STR:
+            lenb, o = _unblk(payload, 0)
+            lengths, data = decode_ints(lenb), _unblk(payload, o)[0]
+        else:
+            lengths, data = _dec_fsst(payload)
+        return _string_restore(_spread(lengths, mask), data, t, mask)
+    if codec_id == LIST:
+        nn = _dec_list(payload, t)
+    elif codec_id == STRUCT:
+        nn = _dec_struct(payload, t)
+    elif codec_id == MAP:
+        nn = _dec_map(payload)
+    elif codec_id == DEC128:
+        nn = _dec_dec128(payload, t)
+    elif codec_id == DICT:
+        dict_blob, o = _unblk(payload, 0)
+        idx_blob, o = _unblk(payload, o)
+        nn = decode_array(dict_blob).take(pa.array(decode_ints(idx_blob)))
+    elif codec_id == CUSTOM:
         nameb, o = _unblk(payload, 0)
         inner_b, o = _unblk(payload, o)
         name = nameb.decode()
@@ -1120,36 +1068,6 @@ def decode_array(blob: bytes) -> pa.Array:
             )
         _, _, from_s = _VALUE_CODECS[name]
         nn = from_s(decode_array(inner_b), t)
-        if nn.type != t:
-            nn = nn.cast(t)
-        return _scatter(nn, t, mask) if mask is not None else nn
-    if codec_id == LIST:
-        return _dec_list(payload, t, mask)
-    if codec_id == STRUCT:
-        return _dec_struct(payload, t, mask)
-    if codec_id == MAP:
-        return _dec_map(payload, t, mask)
-    if codec_id == DEC128:
-        return _dec_dec128(payload, t, mask)
-    if codec_id == DICT:
-        dict_blob, o = _unblk(payload, 0)
-        idx_blob, o = _unblk(payload, o)
-        dvals = decode_array(dict_blob)
-        idx = decode_ints(idx_blob)
-        nn = dvals.take(pa.array(idx, type=pa.int64()))
-        if mask is None:
-            return nn.cast(t) if nn.type != t else nn
-        # scatter non-null values back into full-length array
-        return _scatter(nn, t, mask)
-    raise ValueError(f"unknown codec {codec_id}")
-
-
-def _scatter(nn: pa.Array, t: pa.DataType, mask: np.ndarray) -> pa.Array:
-    n = len(mask)
-    take_idx = np.full(n, -1, dtype=np.int64)
-    take_idx[~mask] = np.arange(len(nn), dtype=np.int64)
-    idx_arr = pa.array(
-        np.where(mask, 0, take_idx), mask=mask, type=pa.int64()
-    )
-    out = nn.take(idx_arr)
-    return out.cast(t) if out.type != t else out
+    else:
+        raise ValueError(f"unknown codec {codec_id}")
+    return _scatter(nn, t, mask)

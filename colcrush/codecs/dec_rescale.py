@@ -128,7 +128,17 @@ def _mul_pow10(
 
 
 def rescale_decimal128(arr: pa.Array, precision: int, scale: int) -> pa.Array:
-    """HALF_UP rescale of a decimal128 array to (precision, scale)."""
+    """HALF_UP rescale of a decimal128 array to (precision, scale).
+
+    parquet4s rescale-on-read (/root/reference/core/src/main/scala/com/github/mjakubowski84/parquet4s/DecimalFormat.scala:80-83):
+    round the stored value to ``precision`` significant digits
+    (MathContext), then setScale(``scale``), both HALF_UP. One
+    divergence, pinned by test: a result whose integer digits then
+    exceed precision-scale (Java's BigDecimal carries it silently; a
+    typed arrow/Spark decimal column cannot) raises ValueError instead
+    of silently violating the declared type. Hypothesis-pinned equal to
+    the scalar decimal.Decimal reference in
+    tests/test_codecs_property.py."""
     t = arr.type
     if t.precision == precision and t.scale == scale:
         return arr

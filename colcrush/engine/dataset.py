@@ -506,7 +506,8 @@ def read_decoded(
 ) -> DataFrame:
     """Full decode of a persisted dataset (optionally projected).
     ``decimal_formats`` rescales stored decimal columns on read
-    (parquet4s rescaleOnRead, HALF_UP — see decoder._rescale_decimal).
+    (parquet4s rescaleOnRead, HALF_UP — see
+    codecs.dec_rescale.rescale_decimal128).
 
     The plan is :func:`fused_decode`: a whole-file pyarrow chunk reader
     and the decode worker in one mapInArrow stage over a local table of

@@ -34,65 +34,6 @@ from ..codecs.dec_rescale import rescale_decimal128
 from .encoder import CHUNK_SCHEMA, payload_ck
 
 
-def _spark_field_for(arrow_type: pa.DataType) -> T.DataType:
-    """Minimal arrow->spark type mapping for decode output schemas."""
-    if pa.types.is_string(arrow_type) or pa.types.is_large_string(arrow_type):
-        return T.StringType()
-    if pa.types.is_binary(arrow_type) or pa.types.is_large_binary(arrow_type):
-        return T.BinaryType()
-    if pa.types.is_int64(arrow_type):
-        return T.LongType()
-    if pa.types.is_int32(arrow_type):
-        return T.IntegerType()
-    if pa.types.is_int16(arrow_type):
-        return T.ShortType()
-    if pa.types.is_int8(arrow_type):
-        return T.ByteType()
-    if pa.types.is_float64(arrow_type):
-        return T.DoubleType()
-    if pa.types.is_float32(arrow_type):
-        return T.FloatType()
-    if pa.types.is_boolean(arrow_type):
-        return T.BooleanType()
-    if pa.types.is_timestamp(arrow_type):
-        return T.TimestampType()
-    if pa.types.is_date(arrow_type):
-        return T.DateType()
-    if isinstance(arrow_type, pa.Decimal128Type):
-        return T.DecimalType(arrow_type.precision, arrow_type.scale)
-    if pa.types.is_list(arrow_type) or pa.types.is_large_list(arrow_type):
-        return T.ArrayType(_spark_field_for(arrow_type.value_type))
-    if pa.types.is_map(arrow_type):
-        return T.MapType(
-            _spark_field_for(arrow_type.key_type),
-            _spark_field_for(arrow_type.item_type),
-        )
-    if pa.types.is_struct(arrow_type):
-        return T.StructType(
-            [
-                T.StructField(f.name, _spark_field_for(f.type), True)
-                for f in arrow_type
-            ]
-        )
-    raise TypeError(f"unsupported arrow type {arrow_type}")
-
-
-def _rescale_decimal(arr: pa.Array, precision: int, scale: int) -> pa.Array:
-    """parquet4s rescale-on-read (/root/reference/core/src/main/scala/com/github/mjakubowski84/parquet4s/DecimalFormat.scala:80-83):
-    round the stored value to ``precision`` significant digits
-    (MathContext), then setScale(``scale``) — both HALF_UP. One
-    divergence, pinned by test: a result whose integer digits then
-    exceed precision-scale (Java's BigDecimal carries it silently; a
-    typed arrow/Spark decimal column cannot) raises ValueError instead
-    of silently violating the declared type.
-
-    Fully vectorized (uint64 limb arithmetic on the unscaled int128
-    words — see codecs/dec_rescale.py); hypothesis-pinned equal to the
-    scalar decimal.Decimal reference in tests/test_codecs_property.py.
-    """
-    return rescale_decimal128(arr, precision, scale)
-
-
 class IncompleteChunksError(RuntimeError):
     """A decode worker's input ended with chunks missing column rows:
     the chunk rows it was fed were not co-located per chunk."""
@@ -141,7 +82,8 @@ def decode_table(
 
     ``decimal_formats``: {column: (precision, scale)} reads a stored
     decimal column at a different format, rescaling HALF_UP — the
-    parquet4s rescaleOnRead contract (see _rescale_decimal).
+    parquet4s rescaleOnRead contract (see
+    codecs.dec_rescale.rescale_decimal128).
 
     ``prune`` (a chunk predicate) and ``decode`` prune chunks inside
     the worker; see :func:`decode_worker`. With ``prune=None`` and
@@ -259,7 +201,7 @@ def decode_worker(
                 )
             arr = decode_array(blob)
             if c in decimal_formats:
-                arr = _rescale_decimal(arr, *decimal_formats[c])
+                arr = rescale_decimal128(arr, *decimal_formats[c])
             arrays.append(arr)
         return pa.record_batch(arrays, names=columns)
 

@@ -226,7 +226,9 @@ def test_codec_selection_plain_for_random_strings():
 def test_forced_codecs_all_roundtrip():
     """Each string-side codec, forced by the shape of its input (no
     knob picks a codec), roundtrips with a null and an empty string
-    appended (a null only for the fixed-width binary)."""
+    appended (a null only for the fixed-width binary). The fixed-width
+    codecs and large_string roundtrip with a NULL first, in the middle
+    and last."""
     code = [
         f"    result_{i} = compute(value_{i % 7}, offset={i})\n" for i in range(400)
     ]
@@ -242,6 +244,35 @@ def test_forced_codecs_all_roundtrip():
         blob, meta = encode_array(arr)
         assert meta["codec"] == codec
         assert decode_array(blob).to_pylist() == arr.to_pylist(), codec
+
+    g = np.random.default_rng(7)
+
+    def nulls_around(values, t):
+        k = len(values) // 2
+        return pa.array(
+            [None, *values[:k], None, *values[k:], None], type=t
+        )
+
+    null_cases = [
+        ("dict", nulls_around(
+            g.choice(g.integers(0, 2**60, 4), 200).tolist(), pa.int64())),
+        ("dict", nulls_around(g.choice(g.random(4), 200).tolist(),
+                              pa.float64())),
+        ("plain", nulls_around(g.random(50).astype(np.float32).tolist(),
+                               pa.float32())),
+        ("float_int", nulls_around([i / 4 for i in range(50)],
+                                   pa.float32())),
+        ("ints", nulls_around([0, -1, 2**31 - 1, -(2**31)] * 10,
+                              pa.int32())),
+        ("ints", nulls_around([0, 1000, 86_399_999] * 10,
+                              pa.time32("ms"))),
+        ("plain_str", nulls_around([g.bytes(4).hex() for _ in range(20)],
+                                   pa.large_string())),
+    ]
+    for i, (codec, arr) in enumerate(null_cases):
+        blob, meta = encode_array(arr)
+        assert meta["codec"] == codec, f"null case {i}: {meta['codec']}"
+        assert decode_array(blob).equals(arr), f"null case {i} roundtrip"
 
 
 def test_minmax_stats_recorded():

@@ -244,39 +244,40 @@ def test_map_only_sort_cols_raise_loudly(spark):
 
 
 def test_rescale_decimal_widening_fast_path():
-    """precision>=old and scale>=old cannot round, so _rescale_decimal
-    takes a vectorized arrow cast (review finding: the decode hot path
-    ran per-value Python decimal ops even for exact widenings). The
+    """precision>=old and scale>=old cannot round, so
+    rescale_decimal128 takes a vectorized arrow cast (review finding:
+    the decode hot path ran per-value Python decimal ops even for exact
+    widenings). The
     fast path must agree with HALF_UP semantics (trivially: exactness)
     and overflow must still raise ValueError."""
     import decimal as dec
 
     import pyarrow as pa
 
-    from colcrush.engine.decoder import _rescale_decimal
+    from colcrush.codecs.dec_rescale import rescale_decimal128
 
     vals = [dec.Decimal("1234567.89"), dec.Decimal("-0.01"), None,
             dec.Decimal("99999999.99")]
     arr = pa.array(vals, type=pa.decimal128(10, 2))
 
-    out = _rescale_decimal(arr, 12, 4)
+    out = rescale_decimal128(arr, 12, 4)
     assert out.type == pa.decimal128(12, 4)
     assert out.to_pylist() == [
         dec.Decimal("1234567.8900"), dec.Decimal("-0.0100"), None,
         dec.Decimal("99999999.9900")]
 
     # to the Spark/parquet4s default format
-    wide = _rescale_decimal(arr, 38, 18)
+    wide = rescale_decimal128(arr, 38, 18)
     assert wide.type == pa.decimal128(38, 18)
     assert wide.to_pylist()[0] == dec.Decimal("1234567.89").scaleb(0)
 
     # widening scale but NOT precision enough: integer digits overflow
     import pytest
     with pytest.raises(ValueError):
-        _rescale_decimal(arr, 11, 4)  # 8 int digits + 4 > 11
+        rescale_decimal128(arr, 11, 4)  # 8 int digits + 4 > 11
 
     # narrowing still rounds HALF_UP via the slow path
-    nar = _rescale_decimal(arr, 10, 1)
+    nar = rescale_decimal128(arr, 10, 1)
     assert nar.to_pylist()[0] == dec.Decimal("1234567.9")
     assert nar.to_pylist()[1] == dec.Decimal("0.0")
 
