@@ -163,6 +163,13 @@ def _match_value_codec(t: pa.DataType):
 # ------------------------------------------------------------------ helpers
 
 
+def _is_float(t: pa.DataType) -> bool:
+    """float32 or float64: the widths the float codecs and the stats
+    take. float16 has no numpy-free kernels in pyarrow (``pc.is_nan``
+    and ``pc.min_max`` refuse it), so it rides IPC without stats."""
+    return pa.types.is_float32(t) or pa.types.is_float64(t)
+
+
 def _is_intlike(t: pa.DataType) -> bool:
     return (
         pa.types.is_integer(t)
@@ -446,7 +453,7 @@ def encode_array(
     mn = mx = None
     want_stats = n > null_count and (
         _is_intlike(t)
-        or pa.types.is_floating(t)
+        or _is_float(t)
         or isinstance(t, pa.Decimal128Type)
     )
     if (
@@ -456,7 +463,7 @@ def encode_array(
         and (len(str_parts[1]) <= 256 * max(1, len(nn)))
     ):
         want_stats = True
-    if want_stats and pa.types.is_floating(t) and pc.any(
+    if want_stats and _is_float(t) and pc.any(
         pc.is_nan(nn)
     ).as_py():
         # NaN is invisible to pc.min_max but Spark orders it above every
@@ -497,7 +504,7 @@ def encode_array(
         # columns have an all-sign-extension hi word (RLE collapses it)
         # and a FOR/delta-packable lo word.
         codec_id, payload = DEC128, _enc_dec128(nn)
-    elif not (is_str or _is_intlike(t) or pa.types.is_floating(t)):
+    elif not (is_str or _is_intlike(t) or _is_float(t)):
         # IPC keeps the original array (nulls inline)
         codec_id, payload = IPC, _enc_ipc(arr, t)
     else:

@@ -35,6 +35,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from .column import _dec128_array, _dec128_words
+
 _MASK32 = np.uint64(0xFFFFFFFF)
 _SH32 = np.uint64(32)
 
@@ -156,20 +158,15 @@ def rescale_decimal128(arr: pa.Array, precision: int, scale: int) -> pa.Array:
     n = len(arr)
     if n == 0:
         return pa.array([], type=pa.decimal128(precision, scale))
-    pairs = np.frombuffer(
-        arr.buffers()[1], dtype=np.uint64, offset=arr.offset * 16,
-        count=2 * n,
-    )
-    lo = np.ascontiguousarray(pairs[0::2])
-    hi = np.ascontiguousarray(pairs[1::2])
+    # the limb math runs on unsigned words
+    lo, hi = (w.view(np.uint64) for w in _dec128_words(arr))
+    mask = None
     if arr.null_count:
-        valid = np.asarray(pc.is_valid(arr))
+        mask = ~np.asarray(pc.is_valid(arr))
         # null slots hold arbitrary buffer bytes — zero them so they
         # can never trip the overflow/precision checks
-        lo = np.where(valid, lo, np.uint64(0))
-        hi = np.where(valid, hi, np.uint64(0))
-    else:
-        valid = None
+        lo = np.where(mask, np.uint64(0), lo)
+        hi = np.where(mask, np.uint64(0), hi)
     neg = hi.view(np.int64) < 0
     # 128-bit two's-complement negate: -x = ~x + 1
     with np.errstate(over="ignore"):
@@ -221,17 +218,7 @@ def rescale_decimal128(arr: pa.Array, precision: int, scale: int) -> pa.Array:
         neg_hi = ~res_hi + (res_lo == 0).astype(np.uint64)
     res_lo = np.where(neg, neg_lo, res_lo)
     res_hi = np.where(neg, neg_hi, res_hi)
-    buf = np.empty(2 * n, dtype=np.uint64)
-    buf[0::2] = res_lo
-    buf[1::2] = res_hi
-    validity = (
-        pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
-        if valid is not None
-        else None
-    )
-    return pa.Array.from_buffers(
-        pa.decimal128(precision, scale),
-        n,
-        [validity, pa.py_buffer(buf.tobytes())],
-        null_count=int((~valid).sum()) if valid is not None else 0,
+    return _dec128_array(
+        res_lo.view(np.int64), res_hi.view(np.int64),
+        pa.decimal128(precision, scale), mask,
     )

@@ -1,4 +1,5 @@
-"""Encoded dataset persistence: chunks + manifest, one commit per write.
+"""Encoded dataset persistence: chunk files plus a commit record, one
+commit per write.
 
 Directory layout (an Iceberg-metadata-style commit protocol without the
 Iceberg jars, which aren't in this image):
@@ -7,10 +8,11 @@ Iceberg jars, which aren't in this image):
   <root>/chunks/              chunk rows (encoder.CHUNK_SCHEMA), parquet,
                               UNCOMPRESSED (our codecs did the compression
                               — storing them re-compressed would hide the
-                              ratio)
-  <root>/manifest/            the chunk files read back without payload
-                              (lineage + metrics: codec, dict size, ratio,
-                              row counts, min/max)
+                              ratio); each row carries its chunk column's
+                              lineage and stats (codec, sizes, row counts,
+                              min/max, bloom), the metadata readers read
+  <root>/_commit.json         the commit record: {"files": [[name, size],
+                              ...]}, the chunk part files of this commit
   <root>/commit=NNNNNNNN/     each later write: the same three entries
   <root>/epoch=NNNNNNNN/      a stream epoch (streaming/encode_sink.py), ditto
 
@@ -18,17 +20,24 @@ A ``salt_plan/`` or ``file_map/`` dir left by an earlier revision is
 inert: nothing reads or writes it.
 
 Every write is one commit, written in overwrite mode, and visible once
-``manifest/_SUCCESS`` lands — the analog of parquet4s's
-postWriteHandler checkpoint (ParquetPartitioningFlow.scala 303-316).
-The encode runs once, unpersisted, into the chunk files; the manifest
-is then written from those files (``_commit_manifest``, also the
-manifest writer of a resumed crash and of compaction), as parquet-mr
-writes a footer describing the pages it wrote. The first write is the
+its ``_commit.json`` lands — the analog of parquet4s's postWriteHandler
+checkpoint (ParquetPartitioningFlow.scala 303-316). The encode runs
+once, unpersisted, into the chunk files; the driver then lists them
+once and writes the record atomically (on ``s3://`` one PUT), as
+parquet-mr writes a footer describing the pages it wrote. Metadata
+readers (count_rows, column_min_max, resume's anti-join) read the
+chunk files without their payload column; the fused reader bins the
+files the records name and lists no chunk dir. The first write is the
 base; commit n > 0 is ``commit=n``, n one above the highest committed
 commit, so a retry replaces its own uncommitted attempt. Readers see
 the committed base (or else the committed epochs) plus the committed
 commits; a crash leaves nothing to repair.
-Resume = anti-join the input's groups against the committed manifest,
+
+A root an earlier revision committed carries ``manifest/_SUCCESS``
+(its ``manifest/`` a payload-less copy of the chunk rows) and no
+record: it stays committed, and its chunk dir is listed instead.
+Earlier revisions cannot read a dataset this one writes.
+Resume = anti-join the input's groups against the committed chunk rows,
 plan the salts of the pending groups and commit only those
 (SURVEY.md §7 step 5).
 """
@@ -55,6 +64,8 @@ from .encoder import (
 
 SCHEMA_FILE = "schema.json"
 CHUNKS_DIR = "chunks"
+COMMIT_FILE = "_commit.json"
+# an earlier revision's commit: manifest/_SUCCESS, no record
 MANIFEST_DIR = "manifest"
 COMMIT_PREFIX = "commit="
 EPOCH_PREFIX = "epoch="
@@ -82,7 +93,7 @@ def write_encoded(
     file_map: bool = True,
     **encode_kwargs,
 ) -> None:
-    """Encode ``df`` and commit its chunks + manifest at ``path``.
+    """Encode ``df`` and commit its chunks at ``path``.
 
     mode: 'error' (CREATE semantics, like parquet4s Mode.CREATE,
     IOOps.scala:37-56) refuses base chunks, committed epochs or commits;
@@ -123,9 +134,11 @@ def write_encoded(
 
 def _commit(df: DataFrame, path: str, n: int, **encode_kwargs) -> None:
     """Encode ``df`` into commit ``n`` of the dataset at ``path`` (the
-    base layout when 0), in overwrite mode: chunks, then the manifest,
-    whose _SUCCESS makes the commit visible. The encode runs once, in
-    the chunk write; nothing is persisted."""
+    base layout when 0), in overwrite mode: the old record and any
+    earlier revision's ``manifest/`` go first, so an overwrite or a
+    retry is never visible half-written; then schema.json, the chunk
+    job, and the record, whose landing makes the commit visible. The
+    encode runs once, in the chunk write; nothing is persisted."""
     if n:
         existing = read_schema(path)
         if existing != df.schema:
@@ -136,33 +149,46 @@ def _commit(df: DataFrame, path: str, n: int, **encode_kwargs) -> None:
         path = fsio.join(path, f"{COMMIT_PREFIX}{n:08d}")
     # encode_table checks its kwargs (and plans) before anything lands
     encoded = encode_table(df, **encode_kwargs)
+    fsio.remove(fsio.join(path, COMMIT_FILE))
+    fsio.rmtree(fsio.join(path, MANIFEST_DIR))
     _write_schema(path, df.schema)
     encoded.write.mode("overwrite").option("compression", "uncompressed").parquet(
         fsio.join(path, CHUNKS_DIR)
     )
-    _commit_manifest(df.sparkSession, path)
+    _write_record(path)
 
 
-def _commit_manifest(spark: SparkSession, root: str) -> None:
-    """Write the manifest of the (sub-)dataset at ``root``, the one
-    manifest writer: its written chunk files read back without their
-    payload column, which the scan never reads. The manifest's _SUCCESS
-    commits ``root``.
+def _write_record(root: str) -> None:
+    """Commit the (sub-)dataset at ``root``, the one commit writer (a
+    write, a resumed crash, a compaction): list its chunk dir once and
+    write the ``.parquet`` files' names and sizes to ``_commit.json``,
+    atomically. No Spark job: the chunk rows already carry the stats
+    metadata readers read, and the record spares every reader the
+    listing."""
+    files = sorted(
+        [name, size]
+        for name, size in fsio.list_files(fsio.join(root, CHUNKS_DIR))
+        if name.endswith(".parquet")
+    )
+    fsio.write_text_atomic(
+        fsio.join(root, COMMIT_FILE), json.dumps({"files": files})
+    )
 
-    Like parquet-mr's footer, the manifest describes the bytes written,
-    not a second evaluation of the data; caching the encode output
-    instead would hold every payload in executor memory. The explicit
-    schema reads a column an earlier revision's files lack (bloom,
-    payload_ck) as NULL. A commit reads only its own chunk files, so
-    the cost stays proportional to the increment."""
-    chunks = spark.read.schema(MANIFEST_DDL).parquet(fsio.join(root, CHUNKS_DIR))
-    chunks.write.mode("overwrite").parquet(fsio.join(root, MANIFEST_DIR))
+
+def _record(root: str) -> "list[list] | None":
+    """The ``[name, size]`` part files ``root``'s commit record names,
+    or None when it has no record."""
+    p = fsio.join(root, COMMIT_FILE)
+    return fsio.read_json(p)["files"] if fsio.exists(p) else None
 
 
 def _committed(root: str) -> bool:
-    """The (sub-)dataset at ``root`` is committed iff its manifest
-    carries Spark's job-commit marker."""
-    return fsio.exists(fsio.join(root, MANIFEST_DIR, "_SUCCESS"))
+    """The (sub-)dataset at ``root`` is committed iff its commit record
+    exists, or (an earlier revision's commit) its manifest carries
+    Spark's job-commit marker."""
+    return fsio.exists(fsio.join(root, COMMIT_FILE)) or fsio.exists(
+        fsio.join(root, MANIFEST_DIR, "_SUCCESS")
+    )
 
 
 def _committed_subs(path: str) -> list[str]:
@@ -190,20 +216,23 @@ def _next_commit(path: str) -> int:
     )
 
 
-def _committed_dirs(path: str, sub: str) -> list[str]:
-    """The ``sub`` directories (chunks/ or manifest/) a reader sees: the
-    committed base, or else the committed epochs, plus the committed
-    commits; the bare path's when nothing is committed, so that Spark
-    raises its own path error."""
+def _committed_roots(path: str) -> list[str]:
+    """The (sub-)dataset roots a reader sees: the committed base, or
+    else the committed epochs, plus the committed commits; the bare
+    path when nothing is committed, so that Spark raises its own path
+    error."""
     subs = _committed_subs(path)
     if _committed(path):
         # a compacted base absorbed the epochs; a commit stays beside it
-        roots = [path] + [
+        return [path] + [
             fsio.join(path, d) for d in subs if d.startswith(COMMIT_PREFIX)
         ]
-    else:
-        roots = [fsio.join(path, d) for d in subs] or [path]
-    return [fsio.join(r, sub) for r in roots]
+    return [fsio.join(path, d) for d in subs] or [path]
+
+
+def _chunk_dirs(path: str) -> list[str]:
+    """The chunk dirs of the roots a reader sees."""
+    return [fsio.join(r, CHUNKS_DIR) for r in _committed_roots(path)]
 
 
 # Explicit read schemas: a dataset appended to across format revisions
@@ -215,29 +244,39 @@ def _committed_dirs(path: str, sub: str) -> list[str]:
 # mergeSchema costs zero footer reads — which matters when chunks/ is
 # millions of files at 100 TB.
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
+    """The committed chunk rows without their payload column, which
+    parquet's column projection never reads: the rows an earlier
+    revision's ``manifest/`` copied."""
     return spark.read.schema(MANIFEST_DDL).parquet(
-        *_committed_dirs(path, MANIFEST_DIR)
+        *_chunk_dirs(path)
     )
 
 
 def read_chunks(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(ENCODED_DDL).parquet(
-        *_committed_dirs(path, CHUNKS_DIR)
+        *_chunk_dirs(path)
     )
+
+
+def _root_part_files(root: str) -> list[tuple[str, int]]:
+    """(full path, size) of the chunk part files of ``root``: the ones
+    its commit record names; for a root without one (an earlier
+    revision's commit, or the bare path of an uncommitted dataset),
+    the ``.parquet`` files its chunk dir lists."""
+    d = fsio.join(root, CHUNKS_DIR)
+    files = _record(root)
+    if files is None:
+        if not fsio.isdir(d):
+            # nothing committed: the caller's Spark read of the bare
+            # path raises Spark's own path error
+            return []
+        files = [f for f in fsio.list_files(d) if f[0].endswith(".parquet")]
+    return [(fsio.join(d, name), size) for name, size in files]
 
 
 def _committed_part_files(path: str) -> list[tuple[str, int]]:
     """(full path, size) of every committed chunk part file."""
-    out = []
-    for d in _committed_dirs(path, CHUNKS_DIR):
-        if not fsio.isdir(d):
-            # nothing committed: the caller's Spark read of the bare
-            # path raises Spark's own path error
-            continue
-        for name, size in fsio.list_files(d):
-            if name.endswith(".parquet"):
-                out.append((fsio.join(d, name), size))
-    return out
+    return [f for r in _committed_roots(path) for f in _root_part_files(r)]
 
 
 def ensure_file_map(spark: SparkSession, path: str) -> int:
@@ -329,8 +368,8 @@ def _colocated_file_df(
     (4-vCPU host, CPython 3.11), so the 1x rule awaits a re-tune.
     Greedy largest-first size-binning bounds bin skew by the largest
     single file (a file is never split). None when ``files`` is empty.
-    Callers pass the driver-side listing of _committed_part_files, the
-    same listing Spark's own file source makes."""
+    Callers pass _committed_part_files: the files and sizes the commit
+    records name, so binning needs no listing."""
     import heapq
 
     import pyarrow as pa
@@ -423,19 +462,20 @@ def compact_epochs(spark: SparkSession, path: str) -> int:
     into the base layout — a CHUNK-LEVEL move, never a re-encode: chunk
     payloads are already compressed and their ids are epoch-namespaced
     (no collisions), so compaction is one distributed copy of chunk
-    rows plus the manifest. Returns the number of epochs compacted.
+    rows plus the base's commit record. Returns the number of epochs
+    compacted.
 
     Epochs fold into an absent base; commit dirs stay where they are,
     visible on both sides of the flip.
 
     Crash-safe ordering: base chunks first, then the _compacted.json
-    record of which epoch dirs the base absorbs, then the base manifest
-    (its _SUCCESS marker is the base's commit, which flips readers from
-    the epoch view to the base view — see _committed_dirs), epoch-dir
+    record of which epoch dirs the base absorbs, then the base's
+    ``_commit.json`` (the base's commit, which flips readers from the
+    epoch view to the base view — see _committed_roots), epoch-dir
     cleanup last. A crash at any point leaves readers on exactly one
     consistent view; re-running compaction after a crash between the
-    manifest commit and the cleanup deletes exactly the recorded
-    absorbed dirs (returns 0).
+    base commit and the cleanup deletes exactly the recorded absorbed
+    dirs (returns 0).
     Epochs NOT in the record with a committed base present are an
     inconsistent state (a sink kept writing past compaction — the
     encode sink refuses to, see streaming/encode_sink.py) and raise.
@@ -491,7 +531,7 @@ def compact_epochs(spark: SparkSession, path: str) -> int:
         fsio.join(path, COMPACTED_FILE),
         json.dumps({"epochs": names}),
     )
-    _commit_manifest(spark, path)
+    _write_record(path)
     for e in epochs:
         fsio.rmtree(e)
     return len(epochs)
@@ -629,31 +669,38 @@ def verify_dataset(
     deep: "bool | float" = False,
     scrub_slice: int = 0,
 ) -> dict:
-    """fsck for an encoded dataset: cross-check manifest against chunk
-    files and (``deep=True``) scrub every payload's stored checksum.
+    """fsck for an encoded dataset: check each commit record against
+    its chunk dir and (``deep=True``) scrub every payload's stored
+    checksum.
 
     At 100 TB a dataset is maintained for years across resumes,
     appends, compactions and storage migrations; this is the audit that
     says "every committed chunk is present, exactly once, and intact"
-    without decoding anything. Detects, per (chunk_id, column) key:
-    manifest rows whose chunk payload is gone (lost files), chunk rows
-    the manifest never recorded inside a committed (sub-)dataset,
-    duplicate keys on either side (appends by earlier revisions reused
-    chunk ids), and stored-checksum divergence between
-    the manifest copy and the chunk copy. ``deep=True`` additionally
-    re-computes every payload's md5 checksum from its bytes (the same
-    verification decode performs, but over ALL columns without
-    decoding) — the scheduled-scrub pattern object stores recommend
-    for bit rot. Runs as one metadata aggregation (+ one payload scan
-    when deep); returns a dict of counts with ``ok``.
+    without decoding anything. Counts:
+
+    - ``missing_files``: part files a commit record names that are
+      absent from its chunk dir or have another size (lost or
+      rewritten files; the fused read fails on them);
+    - ``unlisted_files``: ``.parquet`` files in a record-committed
+      chunk dir that its record does not name (readers skip them), or,
+      when nothing at ``path`` is committed (a write that crashed
+      before its record), in the bare chunk dir;
+    - ``keys`` and ``dup_chunk_keys``: (chunk_id, column) keys of the
+      committed chunk rows, and those that occur more than once
+      (appends by earlier revisions reused chunk ids).
+
+    A root an earlier revision committed has no record, so it reports
+    no missing or unlisted files. ``deep=True`` additionally re-computes
+    every payload's md5 checksum from its bytes (the same verification
+    decode performs, but over ALL columns without decoding) — the
+    scheduled-scrub pattern object stores recommend for bit rot. Runs
+    as one listing per committed root and one metadata aggregation (+
+    one payload scan when deep); returns a dict of counts with ``ok``.
 
     Datasets written before the checksum column report their payloads
-    as ``payloads_unchecked`` rather than failing. A write that crashed
-    before creating any manifest (chunks exist, manifest dir absent)
-    reports every chunk as ``missing_in_manifest`` instead of raising
-    Spark's path error. The audit covers COMMITTED data: epoch and
-    commit dirs without a committed manifest are invisible to readers
-    by protocol and are not scanned here.
+    as ``payloads_unchecked`` rather than failing. The audit covers
+    COMMITTED data: epoch and commit dirs without a commit are
+    invisible to readers by protocol and are not scanned here.
 
     ``deep`` may also be a FRACTION in (0, 1): ``deep=True`` reads
     every payload byte — right for a one-off audit, too expensive as a
@@ -664,35 +711,34 @@ def verify_dataset(
     ``scrub_slice`` 0,1,2,... covers DISJOINT slices and the whole
     dataset every n_slices passes (the object-store rolling-scrub
     pattern). ``payloads_scanned`` reports the slice size."""
-    from pyspark.errors import AnalysisException
-
+    out = {"missing_files": 0, "unlisted_files": 0}
+    for root in _committed_roots(path):
+        listed = _record(root)
+        if listed is None and _committed(root):
+            continue  # an earlier revision's commit names no files
+        d = fsio.join(root, CHUNKS_DIR)
+        present = dict(
+            f for f in (fsio.list_files(d) if fsio.isdir(d) else [])
+            if f[0].endswith(".parquet")
+        )
+        listed = dict(listed or [])
+        out["missing_files"] += sum(
+            present.get(name) != size for name, size in listed.items()
+        )
+        out["unlisted_files"] += len(present.keys() - listed.keys())
     chunks = read_chunks(spark, path)
-    try:
-        manifest = read_manifest(spark, path)
-    except AnalysisException:
-        manifest = spark.createDataFrame([], MANIFEST_DDL)
-    key = ["chunk_id", "column"]
-    m = manifest.groupBy(*key).agg(
-        F.count("*").alias("m_n"), F.min("payload_ck").alias("m_ck")
+    row = (
+        chunks.groupBy("chunk_id", "column")
+        .count()
+        .agg(
+            F.count("*").alias("keys"),
+            F.sum(F.when(F.col("count") > 1, 1).otherwise(0)).alias(
+                "dup_chunk_keys"
+            ),
+        )
+        .collect()[0]
     )
-    c = chunks.groupBy(*key).agg(
-        F.count("*").alias("c_n"), F.min("payload_ck").alias("c_ck")
-    )
-    j = m.join(c, key, "full_outer")
-    flag = lambda cond: F.sum(F.when(cond, 1).otherwise(0))  # noqa: E731
-    row = j.agg(
-        F.count("*").alias("keys"),
-        flag(F.col("c_n").isNull()).alias("missing_in_chunks"),
-        flag(F.col("m_n").isNull()).alias("missing_in_manifest"),
-        flag(F.col("m_n") > 1).alias("dup_manifest_keys"),
-        flag(F.col("c_n") > 1).alias("dup_chunk_keys"),
-        flag(
-            F.col("m_ck").isNotNull()
-            & F.col("c_ck").isNotNull()
-            & (F.col("m_ck") != F.col("c_ck"))
-        ).alias("metadata_ck_mismatches"),
-    ).collect()[0]
-    out = {k: int(v or 0) for k, v in row.asDict().items()}
+    out.update({k: int(v or 0) for k, v in row.asDict().items()})
     if deep:
         import pyarrow as pa
 
@@ -751,11 +797,9 @@ def verify_dataset(
         out["payloads_unchecked"] = int(agg["u"] or 0)
         out["payloads_scanned"] = int(agg["n"] or 0)
     out["ok"] = not (
-        out["missing_in_chunks"]
-        or out["missing_in_manifest"]
-        or out["dup_manifest_keys"]
+        out["missing_files"]
+        or out["unlisted_files"]
         or out["dup_chunk_keys"]
-        or out["metadata_ck_mismatches"]
         or out.get("payload_ck_mismatches", 0)
     )
     return out
@@ -796,7 +840,7 @@ def resume_encode(
     twice: once to plan, once to encode.
 
     The pending groups are the next commit, under the caller's
-    namespace: their keys are in no committed manifest, so their ids
+    namespace: their keys are in no committed chunk row, so their ids
     are new. Resume is group-granular: a crashed append into committed
     groups is retried by re-running it.
     """
@@ -804,9 +848,9 @@ def resume_encode(
     spark = df.sparkSession
     chunks_path = fsio.join(path, CHUNKS_DIR)
     if not _committed(path) and fsio.exists(fsio.join(chunks_path, "_SUCCESS")):
-        # crashed between chunk write and manifest commit: the chunk
-        # job itself completed (_SUCCESS), so commit its manifest
-        _commit_manifest(spark, path)
+        # crashed between the chunk job and the record: the chunk job
+        # itself completed (_SUCCESS), so record its files
+        _write_record(path)
     n = _next_commit(path)
     pending = df
     if n:

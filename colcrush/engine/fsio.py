@@ -1,9 +1,10 @@
 """Scheme-aware filesystem I/O for dataset metadata.
 
-The chunk/manifest parquet files already go through Spark's Hadoop-FS
-layer (any scheme Spark supports: file://, hdfs://, s3a://, ...), but
-the engine's own metadata — schema.json, the _compacted.json record,
-flush markers, epoch-dir listings — used plain ``os``/``open`` and was
+The chunk parquet files already go through Spark's Hadoop-FS layer
+(any scheme Spark supports: file://, hdfs://, s3a://, ...), but the
+engine's own metadata — schema.json, the _commit.json and
+_compacted.json records, flush markers, epoch-dir listings — used
+plain ``os``/``open`` and was
 therefore silently LOCAL-ONLY. This module routes those operations
 through the JVM's Hadoop FileSystem whenever the path carries a scheme
 (parquet4s's Path is a Hadoop path end to end — IOOps.scala works
@@ -25,8 +26,9 @@ Object-store routes (parquet4s S3ItSpec.scala analog):
   HTTP protocol, bucket/object semantics). Credentials and endpoint
   come from the standard AWS env vars (AWS_ACCESS_KEY_ID /
   AWS_SECRET_ACCESS_KEY / AWS_ENDPOINT_URL). These fsio ops are
-  small-metadata IO (markers, schema.json); bulk chunk parquet always
-  goes through Spark's own FileSystem layer.
+  small-metadata IO (records, schema.json, listings); bulk chunk
+  parquet goes through Spark's own FileSystem layer or, in the fused
+  reader, pyarrow.
 """
 
 from __future__ import annotations
@@ -146,8 +148,9 @@ def listdir(path: str) -> list[str]:
 
 def list_files(path: str) -> list[tuple[str, int]]:
     """(basename, size_bytes) of the regular files directly under
-    ``path`` (no recursion). Used by the fused chunk reader to
-    enumerate part files with sizes for task balancing."""
+    ``path`` (no recursion). A commit lists its chunk dir once and
+    records the part files with their sizes, which the fused reader
+    bins for task balancing."""
     if not has_scheme(path):
         out = []
         with os.scandir(path) as it:

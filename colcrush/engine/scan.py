@@ -1,8 +1,9 @@
 """Metadata-only statistics and stats-pruned scans.
 
 The engine's analog of parquet4s's stats layer and row-group skipping:
-- metadata-only count/min/max from the manifest (parquet4s
-  Stats.scala:16-58, stats/FileStats.scala:30-52)
+- metadata-only count/min/max from the stats every chunk row carries,
+  read without the payload column (parquet4s Stats.scala:16-58,
+  stats/FileStats.scala:30-52, which reads the data files' footers)
 - predicate-driven chunk pruning on chunk min/max, null counts and
   bloom filters before any chunk is decoded (FilteredFileStats.scala:
   129-143, row-group pushdown in ParquetIterator.scala:144-150)
@@ -59,7 +60,7 @@ def column_min_max(spark: SparkSession, path: str, column: str) -> tuple[Any, An
     floating ones, ``bool`` for booleans, ``date``/``datetime`` for
     dates and timestamps, ``(None, None)`` when every value is NULL.
 
-    One manifest aggregate answers when every chunk's stats are exact
+    One metadata aggregate answers when every chunk's stats are exact
     values. Integer, boolean, date and timestamp extremes come from the
     stringified stats (min_s/max_s) cast back to the column type, exact
     at any magnitude and in any session time zone (a timestamp stat

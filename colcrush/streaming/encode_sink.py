@@ -12,11 +12,11 @@ epoch retried after a crash re-runs write_batch with the same epoch_id
 and offsets. Each epoch therefore writes its own sub-dataset
 ``<path>/epoch=NNNNNNNN/`` in OVERWRITE mode: a retry replaces its own
 partial output instead of appending a second copy, and a fully
-committed epoch (manifest/_SUCCESS present) is skipped outright.
+committed epoch (its _commit.json record present) is skipped outright.
 Chunk ids are namespaced by epoch so ids can never collide across
 epochs (colliding ids would let the decoder's accumulator mix columns
 from different chunks). Readers (read_manifest / read_chunks /
-read_decoded) see only epochs whose manifest committed.
+read_decoded) see only epochs whose record landed.
 """
 
 from __future__ import annotations

@@ -8,9 +8,9 @@ resumable colcrush dataset (the north_rule deployment shape).
 
 Prints one JSON line; ``chunk_ids_sha256`` digests the sorted distinct
 chunk ids, so runs at two widths can be compared by one value, and
-``rows`` is the dataset's row count (``count_rows``, from the
-manifest) and ``verified`` is ``verify_dataset``'s ``ok`` (manifest and
-chunk files agree, no duplicate keys). ``--group-cols ""`` runs the
+``rows`` is the dataset's row count (``count_rows``, from the chunk
+rows' stats) and ``verified`` is ``verify_dataset``'s ``ok`` (every
+commit record matches its chunk files, no duplicate keys). ``--group-cols ""`` runs the
 ungrouped encode; ``--mode append`` adds the input to an existing
 dataset as a new commit.
 

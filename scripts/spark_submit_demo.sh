@@ -5,7 +5,7 @@
 # append of the same input at local[4N], which must double the dataset's
 # rows and chunks (an append commits under chunk ids of its own); a
 # fresh encode at local[4N]; and a resume at local[4N] of that encode
-# with its chunks/ and manifest/ deleted (the crash window). The encode,
+# with its chunks/ and _commit.json deleted (the crash window). The encode,
 # the 4N encode and the resume must print the same chunk-id digest
 # (chunk_ids_sha256), and every run must report its dataset verified
 # (verify_dataset). The script exits 1 if a check fails.
@@ -61,7 +61,7 @@ for GROUP_COLS in "repo,lang" ""; do
   rm -rf "$OUT"
   run "$((4 * N))" "$GROUP_COLS"
   FRESH="$DIGEST"
-  rm -rf "$OUT/chunks" "$OUT/manifest"
+  rm -rf "$OUT/chunks" "$OUT/_commit.json"
   run "$((4 * N))" "$GROUP_COLS" --resume
   if [ "$DIGEST" = "$WANT" ] && [ "$FRESH" = "$WANT" ]; then
     echo "group-cols \"$GROUP_COLS\": one chunk_ids_sha256 at both widths and resumed"

@@ -245,18 +245,20 @@ def test_bloom_absent_manifest_is_tolerated(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from colcrush.engine import write_encoded
-    from colcrush.engine.dataset import MANIFEST_DIR
+    from colcrush.engine.dataset import CHUNKS_DIR, _write_record
     from colcrush.engine.scan import scan
 
     cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     path = str(tmp_path / "legacy")
     write_encoded(cust, path, group_cols=["c_mktsegment"], target_chunk_rows=32)
-    # rewrite the manifest without the bloom column (legacy layout)
-    mpath = f"{path}/{MANIFEST_DIR}"
-    legacy = spark.read.parquet(mpath).drop("bloom").cache()
+    # rewrite the chunk files without the bloom column (legacy layout)
+    # and record the new files
+    cpath = f"{path}/{CHUNKS_DIR}"
+    legacy = spark.read.parquet(cpath).drop("bloom").cache()
     legacy.count()
-    legacy.write.mode("overwrite").parquet(mpath)
+    legacy.write.mode("overwrite").parquet(cpath)
     legacy.unpersist()
+    _write_record(path)
 
     target = cust.select("c_name").orderBy("c_custkey").limit(1).collect()[0][0]
     got = scan(spark, path, columns=["c_name"], filters=[("c_name", "==", target)])
@@ -265,25 +267,25 @@ def test_bloom_absent_manifest_is_tolerated(spark, tmp_path):
 
 def test_legacy_crash_recovery_without_bloom_column(spark, tmp_path):
     """A PRE-bloom dataset that crashed between chunk write and
-    manifest commit must still be recoverable: the manifest rebuild
-    selects only the columns the chunk files actually carry."""
+    commit must still be recoverable, and its metadata rows read the
+    absent bloom column as NULL."""
     from colcrush.engine import resume_encode, write_encoded
-    from colcrush.engine.dataset import CHUNKS_DIR, MANIFEST_DIR, read_manifest
+    from colcrush.engine.dataset import CHUNKS_DIR, COMMIT_FILE, read_manifest
 
     cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     path = str(tmp_path / "crashds")
     write_encoded(cust, path, group_cols=["c_mktsegment"], target_chunk_rows=64)
 
     # simulate the legacy layout + crash: strip bloom from the chunk
-    # files and delete the manifest (chunk job's _SUCCESS remains)
+    # files and delete the record (chunk job's _SUCCESS remains)
     cpath = f"{path}/{CHUNKS_DIR}"
     legacy_chunks = spark.read.parquet(cpath).drop("bloom").cache()
     legacy_chunks.count()
     legacy_chunks.write.mode("overwrite").parquet(cpath)
     legacy_chunks.unpersist()
-    import shutil
+    import os
 
-    shutil.rmtree(f"{path}/{MANIFEST_DIR}")
+    os.remove(f"{path}/{COMMIT_FILE}")
 
     # recovery must succeed and report nothing missing; the explicit
     # read schema (r6) surfaces the absent bloom column as all-NULL —

@@ -179,6 +179,10 @@ ARRAYS = {
     "float32": pa.array(np.linspace(0, 1, 500).astype(np.float32), type=pa.float32()),
     "float64": pa.array([0.0, -0.0, 1.5, -2.25] * 100, type=pa.float64()),
     "float64_nulls": pa.array([1.0, None, 3.0] * 100, type=pa.float64()),
+    "float16_nan_null": pa.array(
+        np.array([1.5, np.nan, 0.0, -2.5] * 10, np.float16),
+        mask=np.array([False, False, True, False] * 10),
+    ),
     "ts_us": pa.array(
         [datetime.datetime(1969, 12, 31), datetime.datetime(2024, 2, 29, 23, 59, 59, 999999), None],
         type=pa.timestamp("us"),
@@ -190,6 +194,8 @@ ARRAYS = {
     ),
     "list_int": pa.array([[1, 2], [], None, [3]], type=pa.list_(pa.int64())),
 }
+# the codec a case must take, where it has no other
+ARRAY_CODECS = {"float16_nan_null": "ipc"}
 
 
 @pytest.mark.parametrize("name", list(ARRAYS))
@@ -200,6 +206,9 @@ def test_column_roundtrip(name):
     assert out.equals(arr) or out.to_pylist() == arr.to_pylist(), f"{name} mismatch"
     assert meta["n_rows"] == len(arr)
     assert meta["n_nulls"] == arr.null_count
+    if name in ARRAY_CODECS:
+        assert meta["codec"] == ARRAY_CODECS[name]
+        assert out.equals(arr)
 
 
 def test_codec_selection_dict_for_categorical():

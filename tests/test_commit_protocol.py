@@ -1,6 +1,6 @@
 """One commit protocol: every write_encoded is its own committed
 sub-dataset (the base for a dataset's first write, ``commit=<n>`` for
-every later one), visible once its manifest/_SUCCESS lands.
+every later one), visible once its _commit.json record lands.
 
 Checks that appends never repeat committed chunk ids, that the write
 modes see the whole dataset (base, epochs, commits), that a dataset
@@ -46,6 +46,7 @@ from colcrush.engine import (
 )
 from colcrush.engine.dataset import (
     CHUNKS_DIR,
+    COMMIT_FILE,
     COMPACTED_FILE,
     MANIFEST_DIR,
     read_schema,
@@ -54,7 +55,7 @@ from colcrush.engine.decoder import decode_worker
 from colcrush.engine.encoder import MANIFEST_COLS, payload_ck
 from colcrush.fixtures import source_code_df
 
-from .test_dataset_resume import _crash_before_manifest, _same_rows
+from .test_dataset_resume import _as_legacy, _crash_before_commit, _same_rows
 
 GROUPS = ["repo", "lang"]
 # the lifecycle model's operations
@@ -131,7 +132,7 @@ def test_overwrite_replaces_epochs_commits_and_compaction_record(
     _epoch(df, ds, 0)
     write_encoded(df, ds, mode="append", group_cols=GROUPS)
     write_encoded(small, ds, mode="overwrite", group_cols=GROUPS)
-    assert sorted(os.listdir(ds)) == [CHUNKS_DIR, MANIFEST_DIR, "schema.json"]
+    assert sorted(os.listdir(ds)) == [COMMIT_FILE, CHUNKS_DIR, "schema.json"]
     assert _same_rows(read_decoded(spark, ds), small)
     assert compact_epochs(spark, ds) == 0
 
@@ -178,14 +179,15 @@ def test_append_to_a_stream_dataset_survives_compaction(spark, tmp_path):
 
 
 def test_in_place_appended_dataset_reads_as_before(spark, tmp_path):
-    """A base-layout dataset an earlier revision appended to in place
-    (second chunk and manifest files in chunks/ and manifest/, ids
-    repeated) reads the same rows as then, and a new append to it
-    commits beside it."""
+    """A base-layout dataset an earlier revision committed with a
+    manifest and appended to in place (second chunk and manifest files
+    in chunks/ and manifest/, ids repeated, no record) reads the same
+    rows as then, and a new append to it commits beside it."""
     src = source_code_df(spark, 400, n_repos=6).cache()
     first, rest = src.where(F.col("path") < "m"), src.where(F.col("path") >= "m")
     ds = str(tmp_path / "ds")
     write_encoded(first, ds, group_cols=GROUPS)
+    _as_legacy(spark, ds)
     encoded = encode_table(rest, group_cols=GROUPS).cache()
     encoded.write.mode("append").option("compression", "uncompressed").parquet(
         os.path.join(ds, CHUNKS_DIR)
@@ -290,7 +292,7 @@ class DatasetLifecycle(RuleBasedStateMachine):
 
     def crashed_append(self, idx, group_cols):
         with pytest.MonkeyPatch.context() as m:
-            _crash_before_manifest(m)
+            _crash_before_commit(m)
             with pytest.raises(RuntimeError, match="simulated crash"):
                 write_encoded(
                     self._df(idx), self.path, mode="append",
@@ -346,10 +348,11 @@ class DatasetLifecycle(RuleBasedStateMachine):
         assert column_min_max(spark, path, "lang") == (min(langs), max(langs))
         report = verify_dataset(spark, path)
         assert report["ok"], report
-        # the manifest is the committed chunk rows without their payload
+        # the metadata rows are the committed chunk rows less payload
         assert got(read_manifest(spark, path)) == got(
             read_chunks(spark, path).select(*MANIFEST_COLS)
         )
+        assert not any(MANIFEST_DIR in dirs for _, dirs, _ in os.walk(path))
 
 
 def _lifecycle(spark, tmp_path):

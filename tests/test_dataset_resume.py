@@ -1,10 +1,10 @@
-"""Persisted datasets: write/read modes, manifest commit, resume, scans.
+"""Persisted datasets: write/read modes, commit records, resume, scans.
 
 Models parquet4s's IOOps CREATE/OVERWRITE semantics
 (/root/reference/core/src/main/scala/com/github/mjakubowski84/parquet4s/IOOps.scala:37-56),
 the postWriteHandler checkpoint (ParquetPartitioningFlow.scala:303-316)
 and the stats / row-group-skipping layer (stats/FilteredFileStats.scala:129-143)
-— re-expressed as manifest-driven DataFrame logic (FIXTURES.md F3/F4).
+— re-expressed as chunk-stats-driven DataFrame logic (FIXTURES.md F3/F4).
 """
 
 from __future__ import annotations
@@ -95,7 +95,7 @@ def test_encode_and_resume_persist_no_salt_plan(spark, src, tmp):
     path) and a resume that plans its pending groups both add no
     persisted RDD to the session."""
     from colcrush.engine import decode_table, encode_table
-    from colcrush.engine.dataset import CHUNKS_DIR, MANIFEST_DIR
+    from colcrush.engine.dataset import CHUNKS_DIR, COMMIT_FILE
 
     sc = spark.sparkContext
 
@@ -112,7 +112,7 @@ def test_encode_and_resume_persist_no_salt_plan(spark, src, tmp):
 
     write_encoded(src, tmp, group_cols=["repo", "lang"])
     shutil.rmtree(os.path.join(tmp, CHUNKS_DIR))
-    shutil.rmtree(os.path.join(tmp, MANIFEST_DIR))
+    os.remove(os.path.join(tmp, COMMIT_FILE))
     assert resume_encode(src, tmp, group_cols=["repo", "lang"]) > 0
     assert read_decoded(spark, tmp).count() == src.count()
     assert not added()
@@ -122,10 +122,9 @@ def test_no_write_path_persists(spark, tmp_path, monkeypatch):
     """No write caches its encode output: with DataFrame.persist and
     DataFrame.cache raising, a write, an append, the resumes of a write
     that crashed after its chunk job and of one that crashed before it,
-    and a compaction all succeed, and every manifest is the chunk rows
-    less their payload."""
+    and a compaction all succeed and verify."""
     from colcrush.engine import compact_epochs, verify_dataset
-    from colcrush.engine.dataset import CHUNKS_DIR, MANIFEST_DIR
+    from colcrush.engine.dataset import CHUNKS_DIR, COMMIT_FILE
 
     def refuse(self, *args, **kwargs):
         raise AssertionError("a write path persisted a DataFrame")
@@ -148,11 +147,11 @@ def test_no_write_path_persists(spark, tmp_path, monkeypatch):
 
     crashed = str(tmp_path / "crashed")
     write_encoded(df, crashed, group_cols=groups)
-    shutil.rmtree(os.path.join(crashed, MANIFEST_DIR))
+    os.remove(os.path.join(crashed, COMMIT_FILE))
     assert resume_encode(df, crashed, group_cols=groups) == 0
     check(crashed, 400)
     shutil.rmtree(os.path.join(crashed, CHUNKS_DIR))
-    shutil.rmtree(os.path.join(crashed, MANIFEST_DIR))
+    os.remove(os.path.join(crashed, COMMIT_FILE))
     assert resume_encode(df, crashed, group_cols=groups) > 0
     check(crashed, 400)
 
@@ -169,15 +168,15 @@ def test_no_write_path_persists(spark, tmp_path, monkeypatch):
 
 
 # Spark jobs one grouped write_encoded of the input below runs under
-# the test session. Building a chunk->file map or recording the salt
-# plan would add one more each, and so would caching the encode output
-# to write the manifest from.
-WRITE_ENCODED_JOBS = 6
+# the test session. Building a chunk->file map, recording the salt plan
+# or copying the chunk rows into a manifest would add one more each.
+WRITE_ENCODED_JOBS = 5
 
 
 def test_write_encoded_job_count_and_no_file_map(spark, tmp_path):
-    """A grouped write runs a pinned number of Spark jobs and no write
-    or compaction leaves a file_map/ or salt_plan/ dir behind."""
+    """A grouped write runs a pinned number of Spark jobs and no write,
+    append, overwrite or compaction leaves a file_map/, salt_plan/ or
+    manifest/ dir behind."""
     from colcrush.engine import compact_epochs
 
     df = source_code_df(spark, 400, n_repos=6)
@@ -187,7 +186,9 @@ def test_write_encoded_job_count_and_no_file_map(spark, tmp_path):
 
     def no_sidecar(p):
         return not any(
-            os.path.exists(os.path.join(p, d)) for d in ("file_map", "salt_plan")
+            os.path.exists(os.path.join(r, d))
+            for r, _, _ in os.walk(p)
+            for d in ("file_map", "salt_plan", "manifest")
         )
 
     assert no_sidecar(ds)
@@ -291,31 +292,37 @@ def test_resume_encodes_only_missing_groups(spark, src, tmp):
 
 
 def test_resume_recovers_lost_manifest(spark, src, tmp):
+    """A write that crashed after its chunk job, before its commit
+    record, is committed by a resume with nothing left to encode."""
+    from colcrush.engine.dataset import COMMIT_FILE
+
     write_encoded(src, tmp, group_cols=["repo", "lang"])
-    shutil.rmtree(os.path.join(tmp, "manifest"))
+    os.remove(os.path.join(tmp, COMMIT_FILE))
     assert resume_encode(src, tmp, group_cols=["repo", "lang"]) == 0
+    assert os.path.exists(os.path.join(tmp, COMMIT_FILE))
     dec = read_decoded(spark, tmp)
     assert dec.count() == src.count()
 
 
-def _crash_before_manifest(monkeypatch):
-    """Make every parquet write to a ``manifest`` dir raise: a write
-    then dies after its chunk job, before its manifest commit."""
-    from pyspark.sql import DataFrameWriter
+def _crash_before_commit(monkeypatch):
+    """Make every commit record write raise: a write then dies after
+    its chunk job, before its commit."""
+    from colcrush.engine import fsio
+    from colcrush.engine.dataset import COMMIT_FILE
 
-    parquet = DataFrameWriter.parquet
+    write_text_atomic = fsio.write_text_atomic
 
-    def crashing(self, path, *args, **kwargs):
-        if path.rstrip("/").endswith("manifest"):
-            raise RuntimeError("simulated crash before the manifest commit")
-        return parquet(self, path, *args, **kwargs)
+    def crashing(path, content):
+        if path.endswith(COMMIT_FILE):
+            raise RuntimeError("simulated crash before the commit record")
+        return write_text_atomic(path, content)
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", crashing)
+    monkeypatch.setattr(fsio, "write_text_atomic", crashing)
 
 
 def test_crashed_append_is_invisible_until_rerun(spark, tmp_path, monkeypatch):
-    """An append that crashed before its manifest commit leaves a commit
-    dir whose manifest never committed: read_decoded, count_rows and
+    """An append that crashed before its commit record leaves a commit
+    dir that never committed: read_decoded, count_rows and
     scan see none of its rows. Re-running the same append replaces that
     attempt and commits the rows once, grouped and ungrouped; so does a
     resume, whose pending groups here are the crashed append's."""
@@ -335,7 +342,7 @@ def test_crashed_append_is_invisible_until_rerun(spark, tmp_path, monkeypatch):
             write_encoded(rest, ds, mode="append", group_cols=groups)
 
         with monkeypatch.context() as m:
-            _crash_before_manifest(m)
+            _crash_before_commit(m)
             with pytest.raises(RuntimeError, match="simulated crash"):
                 append()
         assert count_rows(spark, ds) == n_first
@@ -644,10 +651,10 @@ def test_column_min_max_long_strings_one_pruned_scan(spark, tmp_path, monkeypatc
 
 
 # Spark jobs a resume of a write that crashed before its chunks landed
-# (no chunks/, no manifest/) runs under the test session: the plan of
+# (no chunks/, no commit record) runs under the test session: the plan of
 # its pending groups, then write_encoded's jobs on that plan. A pass
 # that only counts the pending groups would add jobs.
-RESUME_JOBS = 6
+RESUME_JOBS = 5
 
 
 def _chunk_rows(spark, p):
@@ -666,16 +673,16 @@ def test_resume_replans_pending_groups(spark, src, tmp):
     pinned number of Spark jobs to chunks byte-identical to an
     uncrashed write. No write records a plan, and a ``salt_plan/`` dir
     left by an earlier revision is ignored, wrong salts and all."""
-    from colcrush.engine.dataset import CHUNKS_DIR, MANIFEST_DIR
+    from colcrush.engine.dataset import CHUNKS_DIR, COMMIT_FILE
 
     groups = ["repo", "lang"]
     full = tmp + "_full"
     write_encoded(src, full, group_cols=groups)
     write_encoded(src, tmp, group_cols=groups)
     # simulate the crash window: the chunk job died mid-write (no
-    # chunks, no manifest)
+    # chunks, no record)
     shutil.rmtree(os.path.join(tmp, CHUNKS_DIR))
-    shutil.rmtree(os.path.join(tmp, MANIFEST_DIR))
+    os.remove(os.path.join(tmp, COMMIT_FILE))
     # an earlier revision's plan, every group salted 7 ways
     src.groupBy(*groups).agg(
         F.lit(1 << 30).cast("long").alias("_grp_bytes"),
@@ -700,13 +707,13 @@ def test_ungrouped_resume_after_crash_byte_identical(spark, src, tmp):
     """An ungrouped write that crashed before its chunks landed resumes
     to chunks byte-identical to an uncrashed write, and a second resume
     finds nothing missing: the empty pending input plans no group."""
-    from colcrush.engine.dataset import CHUNKS_DIR, MANIFEST_DIR
+    from colcrush.engine.dataset import CHUNKS_DIR, COMMIT_FILE
 
     full = tmp + "_full"
     write_encoded(src, full)
     write_encoded(src, tmp)
     shutil.rmtree(os.path.join(tmp, CHUNKS_DIR))
-    shutil.rmtree(os.path.join(tmp, MANIFEST_DIR))
+    os.remove(os.path.join(tmp, COMMIT_FILE))
     assert resume_encode(src, tmp, group_cols=[]) == 1
     assert _same_rows(_chunk_rows(spark, tmp), _chunk_rows(spark, full))
     assert resume_encode(src, tmp, group_cols=[]) == 0
@@ -714,62 +721,169 @@ def test_ungrouped_resume_after_crash_byte_identical(spark, src, tmp):
 
 
 def test_verify_dataset_fsck(spark, src, tmp):
-    """verify_dataset: clean dataset passes shallow + deep; a manifest
-    row without its chunk (lost file) and a chunk/manifest checksum
-    divergence are each counted and flip ok=False; a legacy dataset
-    (pre-checksum columns) reports unchecked payloads, not failures."""
+    """verify_dataset: a clean dataset passes shallow + deep; a listed
+    part file that is gone or rewritten counts as missing, a part file
+    no record names as unlisted, and a payload whose bytes no longer
+    match its stored checksum as a mismatch, each flipping ok=False; a
+    legacy dataset (pre-checksum columns) reports unchecked payloads,
+    not failures."""
     from colcrush.engine import read_chunks, verify_dataset
-    from colcrush.engine.dataset import MANIFEST_DIR
+    from colcrush.engine.dataset import CHUNKS_DIR, COMMIT_FILE, _write_record
 
     write_encoded(src, tmp, group_cols=["repo", "lang"])
     report = verify_dataset(spark, tmp, deep=True)
     assert report["ok"] and report["keys"] > 0
+    assert report["missing_files"] == report["unlisted_files"] == 0
     assert report["payload_ck_mismatches"] == 0
     assert report["payloads_unchecked"] == 0
 
-    # plant a manifest row whose chunk does not exist (lost chunk file)
-    phantom = read_manifest(spark, tmp).limit(1).withColumn(
-        "chunk_id", F.lit("phantom-chunk")
-    )
-    phantom.write.mode("append").parquet(os.path.join(tmp, MANIFEST_DIR))
-    report = verify_dataset(spark, tmp)
-    assert report["missing_in_chunks"] == 1 and not report["ok"]
-
-    # divergent stored checksums (manifest copy vs chunk copy):
-    # rewrite via a temp dir + rename — a cached-DF-over-deleted-files
+    # corrupt stored checksums: the chunk files rewritten (a rewrite
+    # renames them, so the old record misses them all and names none of
+    # the new ones), then re-recorded, which leaves only the scrub's
+    # finding. A temp dir + rename: a cached-DF-over-deleted-files
     # pattern would flake on block eviction
     tmp2 = tmp + "_ck"
     write_encoded(src, tmp2, group_cols=["repo", "lang"])
-    chunks_dir = os.path.join(tmp2, "chunks")
+    chunks_dir = os.path.join(tmp2, CHUNKS_DIR)
+    n_files = len([f for f in os.listdir(chunks_dir) if f.endswith(".parquet")])
     read_chunks(spark, tmp2).withColumn(
         "payload_ck", F.col("payload_ck") + F.lit(1)
-    ).write.parquet(chunks_dir + ".new")
+    ).repartition(1).write.parquet(chunks_dir + ".new")
     shutil.rmtree(chunks_dir)
     os.rename(chunks_dir + ".new", chunks_dir)
+    report = verify_dataset(spark, tmp2)
+    assert report["missing_files"] == n_files
+    assert report["unlisted_files"] == 1 and not report["ok"]
+    _write_record(tmp2)
     report = verify_dataset(spark, tmp2, deep=True)
-    assert report["metadata_ck_mismatches"] > 0
+    assert report["missing_files"] == report["unlisted_files"] == 0
     assert report["payload_ck_mismatches"] > 0  # bytes no longer match
     assert not report["ok"]
 
-    # legacy dataset: strip the checksum columns everywhere
+    # legacy dataset: strip the checksum column from the chunk files
     tmp3 = tmp + "_legacy"
     write_encoded(src, tmp3, group_cols=["repo", "lang"])
-    for sub in ("chunks", "manifest"):
-        d = os.path.join(tmp3, sub)
-        spark.read.parquet(d).drop("payload_ck").write.parquet(d + ".new")
-        shutil.rmtree(d)
-        os.rename(d + ".new", d)
+    d = os.path.join(tmp3, CHUNKS_DIR)
+    spark.read.parquet(d).drop("payload_ck").write.parquet(d + ".new")
+    shutil.rmtree(d)
+    os.rename(d + ".new", d)
+    _write_record(tmp3)
     report = verify_dataset(spark, tmp3, deep=True)
     assert report["ok"]
     assert report["payloads_unchecked"] == report["keys"]
 
-    # crashed write: chunks committed, manifest dir never created
-    tmp4 = tmp + "_nomanifest"
+    # crashed write: chunks written, no record
+    tmp4 = tmp + "_uncommitted"
     write_encoded(src, tmp4, group_cols=["repo", "lang"])
-    shutil.rmtree(os.path.join(tmp4, "manifest"))
+    os.remove(os.path.join(tmp4, COMMIT_FILE))
     report = verify_dataset(spark, tmp4)
-    assert report["missing_in_manifest"] == report["keys"] > 0
+    assert report["unlisted_files"] > 0 and report["missing_files"] == 0
     assert not report["ok"]
+
+
+def _listings(monkeypatch):
+    """A list that grows by one path per fsio.list_files call."""
+    from colcrush.engine import fsio
+
+    calls = []
+    list_files = fsio.list_files
+
+    def counting(path):
+        calls.append(path)
+        return list_files(path)
+
+    monkeypatch.setattr(fsio, "list_files", counting)
+    return calls
+
+
+def test_reads_list_no_chunk_dir(spark, tmp_path, monkeypatch):
+    """The fused reader bins the part files the commit records name:
+    read_decoded, scan and pruned_chunk_count on a base plus an
+    appended commit list no chunk dir."""
+    src = source_code_df(spark, 400, n_repos=6).cache()
+    ds = str(tmp_path / "ds")
+    write_encoded(src.where(F.col("path") < "m"), ds, group_cols=["repo", "lang"])
+    write_encoded(
+        src.where(F.col("path") >= "m"), ds, mode="append",
+        group_cols=["repo", "lang"],
+    )
+    key = src.orderBy("path").first()["path"]
+    calls = _listings(monkeypatch)
+    assert _same_rows(read_decoded(spark, ds), src)
+    assert scan(spark, ds, filters=[("path", "==", key)]).count() == 1
+    surviving, total = pruned_chunk_count(spark, ds, [("path", "==", key)])
+    assert 0 < surviving < total
+    assert calls == []
+
+
+def test_lost_and_stray_part_files(spark, tmp_path):
+    """A listed part file that is gone fails the fused read, which
+    names the file, and counts as missing; a stray part file in a
+    committed chunk dir is never read and counts as unlisted."""
+    from colcrush.engine import verify_dataset
+    from colcrush.engine.dataset import CHUNKS_DIR
+
+    src = source_code_df(spark, 400, n_repos=6)
+    ds = str(tmp_path / "ds")
+    write_encoded(src, ds, group_cols=["repo", "lang"], num_partitions=2)
+    chunks = os.path.join(ds, CHUNKS_DIR)
+    parts = sorted(f for f in os.listdir(chunks) if f.endswith(".parquet"))
+    assert len(parts) == 2
+
+    stray = os.path.join(chunks, "part-99999-stray.parquet")
+    shutil.copy(os.path.join(chunks, parts[0]), stray)
+    report = verify_dataset(spark, ds)
+    assert report["unlisted_files"] == 1 and report["missing_files"] == 0
+    assert not report["ok"]
+    assert read_decoded(spark, ds).count() == 400
+    os.remove(stray)
+
+    os.remove(os.path.join(chunks, parts[0]))
+    with pytest.raises(Exception, match=parts[0]):
+        read_decoded(spark, ds).count()
+    report = verify_dataset(spark, ds)
+    assert report["missing_files"] == 1 and report["unlisted_files"] == 0
+    assert not report["ok"]
+
+
+def _as_legacy(spark, ds):
+    """Turn the record-committed base at ``ds`` into an earlier
+    revision's commit: its chunk rows less payload in manifest/ (with
+    Spark's _SUCCESS), no record."""
+    from colcrush.engine.dataset import CHUNKS_DIR, COMMIT_FILE, MANIFEST_DIR
+    from colcrush.engine.encoder import MANIFEST_DDL
+
+    chunks = spark.read.schema(MANIFEST_DDL).parquet(os.path.join(ds, CHUNKS_DIR))
+    chunks.write.parquet(os.path.join(ds, MANIFEST_DIR))
+    os.remove(os.path.join(ds, COMMIT_FILE))
+
+
+def test_legacy_manifest_dataset(spark, tmp_path):
+    """A dataset an earlier revision committed (manifest/_SUCCESS, the
+    chunk rows without payload in manifest/, no record) reads, counts,
+    verifies, resumes and takes an append, which commits with a
+    record."""
+    from colcrush.engine import verify_dataset
+    from colcrush.engine.dataset import COMMIT_FILE, MANIFEST_DIR
+
+    src = source_code_df(spark, 400, n_repos=6).cache()
+    first, rest = src.where(F.col("path") < "m"), src.where(F.col("path") >= "m")
+    ds = str(tmp_path / "ds")
+    write_encoded(first, ds, group_cols=["repo", "lang"])
+    _as_legacy(spark, ds)
+
+    assert _same_rows(read_decoded(spark, ds), first)
+    assert count_rows(spark, ds) == first.count()
+    report = verify_dataset(spark, ds, deep=True)
+    assert report["ok"] and report["missing_files"] == report["unlisted_files"] == 0
+    assert resume_encode(first, ds, group_cols=["repo", "lang"]) == 0
+
+    write_encoded(rest, ds, mode="append", group_cols=["repo", "lang"])
+    assert os.path.exists(os.path.join(ds, "commit=00000001", COMMIT_FILE))
+    assert os.path.exists(os.path.join(ds, MANIFEST_DIR, "_SUCCESS"))
+    assert _same_rows(read_decoded(spark, ds), src)
+    assert count_rows(spark, ds) == 400
+    assert verify_dataset(spark, ds)["ok"]
 
 
 def test_verify_dataset_sampled_scrub(spark, src, tmp):
@@ -780,6 +894,7 @@ def test_verify_dataset_sampled_scrub(spark, src, tmp):
     scheduled rolling-scrub pattern a 100 TB store needs (deep=True
     reads every payload byte, too expensive on a schedule)."""
     from colcrush.engine import read_chunks, verify_dataset
+    from colcrush.engine.dataset import _write_record
 
     write_encoded(src, tmp, group_cols=["repo", "lang"])
     n_slices = 4  # deep=0.25
@@ -830,6 +945,7 @@ def test_verify_dataset_sampled_scrub(spark, src, tmp):
     ).write.parquet(chunks_dir + ".new")
     shutil.rmtree(chunks_dir)
     os.rename(chunks_dir + ".new", chunks_dir)
+    _write_record(tmp)  # the rewrite renamed the part files
 
     hit = verify_dataset(spark, tmp, deep=0.25, scrub_slice=bad_slice)
     assert hit["payload_ck_mismatches"] == 1 and not hit["ok"]

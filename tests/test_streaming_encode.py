@@ -44,13 +44,12 @@ def test_stream_encodes_to_dataset(spark, tmp_path):
 
 def test_epoch_retry_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: a retried epoch must overwrite its
-    own sub-dataset, not append a second copy; an epoch whose manifest
-    never committed must stay invisible to readers."""
+    own sub-dataset, not append a second copy; an epoch whose record
+    never landed must stay invisible to readers."""
     import os
-    import shutil
 
     from colcrush.engine import write_encoded
-    from colcrush.engine.dataset import MANIFEST_DIR
+    from colcrush.engine.dataset import CHUNKS_DIR, COMMIT_FILE
 
     ds = str(tmp_path / "ds")
     df = source_code_df(spark, 200, n_repos=3)
@@ -59,9 +58,9 @@ def test_epoch_retry_is_idempotent(spark, tmp_path):
                   namespace="epoch-0")
     assert read_decoded(spark, ds).count() == 200
 
-    # retry after a crash between chunk write and manifest commit:
-    # manifest gone, stale chunks present
-    shutil.rmtree(os.path.join(ep, MANIFEST_DIR))
+    # retry after a crash between chunk write and commit record:
+    # record gone, stale chunks present
+    os.remove(os.path.join(ep, COMMIT_FILE))
     # uncommitted epoch is invisible to readers
     import pytest as _pytest
     with _pytest.raises(Exception):
@@ -85,7 +84,7 @@ def test_epoch_retry_is_idempotent(spark, tmp_path):
                   namespace="epoch-1")
     m = read_manifest(spark, ds)
     n_per_epoch = (
-        spark.read.parquet(os.path.join(ep, MANIFEST_DIR))
+        spark.read.parquet(os.path.join(ep, CHUNKS_DIR))
         .select("chunk_id").distinct().count()
     )
     assert m.select("chunk_id").distinct().count() == 2 * n_per_epoch
@@ -100,7 +99,7 @@ def test_compact_epochs(spark, tmp_path):
     import shutil
 
     from colcrush.engine import compact_epochs, write_encoded
-    from colcrush.engine.dataset import CHUNKS_DIR, MANIFEST_DIR
+    from colcrush.engine.dataset import CHUNKS_DIR, COMMIT_FILE
 
     ds = str(tmp_path / "ds")
     df = source_code_df(spark, 300, n_repos=4)
@@ -112,7 +111,7 @@ def test_compact_epochs(spark, tmp_path):
                   mode="overwrite", group_cols=["lang"], namespace="epoch-1")
     assert read_decoded(spark, ds).count() == 300
 
-    # a crashed compaction (chunks written, manifest not committed)
+    # a crashed compaction (chunks written, no record)
     # leaves readers on the epoch view
     chunks_dir = os.path.join(ds, CHUNKS_DIR)
     os.makedirs(chunks_dir, exist_ok=True)
@@ -121,7 +120,7 @@ def test_compact_epochs(spark, tmp_path):
 
     n = compact_epochs(spark, ds)
     assert n == 2
-    assert os.path.exists(os.path.join(ds, MANIFEST_DIR, "_SUCCESS"))
+    assert os.path.exists(os.path.join(ds, COMMIT_FILE))
     assert not [d for d in os.listdir(ds) if d.startswith("epoch=")]
     got = read_decoded(spark, ds)
     assert got.count() == 300
@@ -138,7 +137,7 @@ def test_compact_epochs(spark, tmp_path):
 
 
 def test_compact_epochs_crash_cleanup_resumes(spark, tmp_path):
-    """A crash between the base-manifest commit and the epoch-dir
+    """A crash between the base's commit record and the epoch-dir
     cleanup leaves absorbed epoch dirs behind; re-running compaction
     completes the cleanup (deletes exactly the recorded absorbed dirs)
     instead of raising."""
