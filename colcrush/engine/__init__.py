@@ -5,7 +5,7 @@ from .dataset import (
     ensure_file_map,
     read_chunks,
     register_view,
-    compact_epochs,
+    compact,
     read_decoded,
     read_manifest,
     read_schema,
@@ -28,7 +28,7 @@ __all__ = [
     "read_manifest",
     "read_schema",
     "read_decoded",
-    "compact_epochs",
+    "compact",
     "register_view",
     "verify_dataset",
     "scan",

@@ -12,9 +12,10 @@ Iceberg jars, which aren't in this image):
                               lineage and stats (codec, sizes, row counts,
                               min/max, bloom), the metadata readers read
   <root>/_commit.json         the commit record: {"files": [[name, size],
-                              ...]}, the chunk part files of this commit
-  <root>/commit=NNNNNNNN/     each later write: the same three entries
-  <root>/epoch=NNNNNNNN/      a stream epoch (streaming/encode_sink.py), ditto
+                              ...]}, the chunk part files of this commit,
+                              plus a stream commit's "epoch" and a
+                              compaction's "absorbs" (roots it folded)
+  <root>/commit=NNNNNNNN/     each later commit: the same three entries
 
 A ``salt_plan/`` or ``file_map/`` dir left by an earlier revision is
 inert: nothing reads or writes it.
@@ -29,13 +30,16 @@ readers (count_rows, column_min_max, resume's anti-join) read the
 chunk files without their payload column; the fused reader bins the
 files the records name and lists no chunk dir. The first write is the
 base; commit n > 0 is ``commit=n``, n one above the highest committed
-commit, so a retry replaces its own uncommitted attempt. Readers see
-the committed base (or else the committed epochs) plus the committed
-commits; a crash leaves nothing to repair.
+commit, so a retry replaces its own uncommitted attempt; a stream
+micro-batch and a compaction are commits too. Readers see the
+committed base plus every committed commit that no committed record
+absorbs; a crash leaves nothing to repair.
 
 A root an earlier revision committed carries ``manifest/_SUCCESS``
 (its ``manifest/`` a payload-less copy of the chunk rows) and no
-record: it stays committed, and its chunk dir is listed instead.
+record: it stays committed, and its chunk dir is listed instead. Its
+stream epochs (``epoch=NNNNNNNN/``) read as commits with no "epoch",
+and its ``_compacted.json`` as the base record's "absorbs".
 Earlier revisions cannot read a dataset this one writes.
 Resume = anti-join the input's groups against the committed chunk rows,
 plan the salts of the pending groups and commit only those
@@ -68,6 +72,7 @@ COMMIT_FILE = "_commit.json"
 # an earlier revision's commit: manifest/_SUCCESS, no record
 MANIFEST_DIR = "manifest"
 COMMIT_PREFIX = "commit="
+# an earlier revision's stream epoch and compaction record, read only
 EPOCH_PREFIX = "epoch="
 COMPACTED_FILE = "_compacted.json"
 
@@ -80,9 +85,7 @@ def _write_schema(path: str, schema: T.StructType) -> None:
 def read_schema(path: str) -> T.StructType:
     p = fsio.join(path, SCHEMA_FILE)
     if not fsio.exists(p):
-        subs = _committed_subs(path)
-        if subs:
-            p = fsio.join(path, subs[0], SCHEMA_FILE)
+        p = fsio.join(_visible(path)[0][0], SCHEMA_FILE)
     return T.StructType.fromJson(fsio.read_json(p))
 
 
@@ -96,11 +99,11 @@ def write_encoded(
     """Encode ``df`` and commit its chunks at ``path``.
 
     mode: 'error' (CREATE semantics, like parquet4s Mode.CREATE,
-    IOOps.scala:37-56) refuses base chunks, committed epochs or commits;
-    'overwrite' removes epochs, commits and the compaction record, then
-    rewrites the base (not crash-atomic, like Spark's overwrite);
-    'append' is the next commit, its chunk ids namespaced
-    ``commit-<n>``. A crashed append is invisible; re-run it.
+    IOOps.scala:37-56) refuses base chunks or committed commits;
+    'overwrite' removes every commit (and an earlier revision's epochs
+    and compaction record), then rewrites the base (not crash-atomic,
+    like Spark's overwrite); 'append' is the next commit, its chunk ids
+    namespaced ``commit-<n>``. A crashed append is invisible; re-run it.
 
     ``file_map`` is ignored. It once turned the chunk->file sidecar
     build on or off and stays only because perfbench/layers.py still
@@ -116,7 +119,7 @@ def write_encoded(
         # skip the CREATE existence check and silently APPEND
         raise ValueError(f"mode must be error|overwrite|append, got {mode!r}")
     if mode == "error" and (
-        fsio.exists(fsio.join(path, CHUNKS_DIR)) or _committed_subs(path)
+        fsio.exists(fsio.join(path, CHUNKS_DIR)) or _commit_log(path)
     ):
         raise FileExistsError(f"{path} already contains an encoded dataset")
     if mode == "overwrite" and fsio.isdir(path):
@@ -125,20 +128,27 @@ def write_encoded(
                 fsio.rmtree(fsio.join(path, name))
             elif name == COMPACTED_FILE:
                 fsio.remove(fsio.join(path, name))
-    n = _next_commit(path) if mode == "append" else 0
+    if mode == "append":
+        _append(df, path, {}, **encode_kwargs)
+    else:
+        _commit(df, path, 0, {}, **encode_kwargs)
+
+
+def _append(df: DataFrame, path: str, meta: dict, **encode_kwargs) -> None:
+    """Commit ``df`` as the next commit of the dataset at ``path``: the
+    base when nothing is committed, else ``commit=n`` with its chunk ids
+    namespaced ``commit-<n>``. ``meta`` adds its keys to the record
+    (the encode sink's ``epoch``)."""
+    n = _next_commit(_commit_log(path))
     if n:
         ns = encode_kwargs.get("namespace")
         encode_kwargs["namespace"] = f"{ns}|commit-{n}" if ns else f"commit-{n}"
-    _commit(df, path, n, **encode_kwargs)
+    _commit(df, path, n, meta, **encode_kwargs)
 
 
-def _commit(df: DataFrame, path: str, n: int, **encode_kwargs) -> None:
+def _commit(df: DataFrame, path: str, n: int, meta: dict, **encode_kwargs) -> None:
     """Encode ``df`` into commit ``n`` of the dataset at ``path`` (the
-    base layout when 0), in overwrite mode: the old record and any
-    earlier revision's ``manifest/`` go first, so an overwrite or a
-    retry is never visible half-written; then schema.json, the chunk
-    job, and the record, whose landing makes the commit visible. The
-    encode runs once, in the chunk write; nothing is persisted."""
+    base layout when 0), recording ``meta``; nothing is persisted."""
     if n:
         existing = read_schema(path)
         if existing != df.schema:
@@ -148,97 +158,120 @@ def _commit(df: DataFrame, path: str, n: int, **encode_kwargs) -> None:
             )
         path = fsio.join(path, f"{COMMIT_PREFIX}{n:08d}")
     # encode_table checks its kwargs (and plans) before anything lands
-    encoded = encode_table(df, **encode_kwargs)
-    fsio.remove(fsio.join(path, COMMIT_FILE))
-    fsio.rmtree(fsio.join(path, MANIFEST_DIR))
-    _write_schema(path, df.schema)
-    encoded.write.mode("overwrite").option("compression", "uncompressed").parquet(
-        fsio.join(path, CHUNKS_DIR)
+    _land(encode_table(df, **encode_kwargs), path, df.schema, meta)
+
+
+def _land(chunks: DataFrame, root: str, schema: T.StructType, meta: dict) -> None:
+    """Write the chunk rows ``chunks`` as the commit at ``root``, in
+    overwrite mode: the old record and any earlier revision's
+    ``manifest/`` go first, so an overwrite or a retry is never visible
+    half-written; then schema.json, the chunk job, and the record,
+    whose landing makes the commit visible."""
+    fsio.remove(fsio.join(root, COMMIT_FILE))
+    fsio.rmtree(fsio.join(root, MANIFEST_DIR))
+    _write_schema(root, schema)
+    chunks.write.mode("overwrite").option("compression", "uncompressed").parquet(
+        fsio.join(root, CHUNKS_DIR)
     )
-    _write_record(path)
+    _write_record(root, meta)
 
 
-def _write_record(root: str) -> None:
+def _write_record(root: str, meta: "dict | None" = None) -> None:
     """Commit the (sub-)dataset at ``root``, the one commit writer (a
-    write, a resumed crash, a compaction): list its chunk dir once and
-    write the ``.parquet`` files' names and sizes to ``_commit.json``,
-    atomically. No Spark job: the chunk rows already carry the stats
-    metadata readers read, and the record spares every reader the
-    listing."""
+    write, a stream commit, a resumed crash, a compaction): list its
+    chunk dir once and write the ``.parquet`` files' names and sizes,
+    plus ``meta``'s keys, to ``_commit.json``, atomically. No Spark
+    job: the chunk rows already carry the stats metadata readers read,
+    and the record spares every reader the listing."""
     files = sorted(
         [name, size]
         for name, size in fsio.list_files(fsio.join(root, CHUNKS_DIR))
         if name.endswith(".parquet")
     )
     fsio.write_text_atomic(
-        fsio.join(root, COMMIT_FILE), json.dumps({"files": files})
+        fsio.join(root, COMMIT_FILE), json.dumps({"files": files, **(meta or {})})
     )
 
 
-def _record(root: str) -> "list[list] | None":
-    """The ``[name, size]`` part files ``root``'s commit record names,
-    or None when it has no record."""
+def _record(root: str) -> "dict | None":
+    """The commit record of the (sub-)dataset at ``root``; ``{}`` for an
+    earlier revision's commit (its manifest carries Spark's job-commit
+    marker, and it has no record); None when it is not committed."""
     p = fsio.join(root, COMMIT_FILE)
-    return fsio.read_json(p)["files"] if fsio.exists(p) else None
+    if fsio.exists(p):
+        return fsio.read_json(p)
+    return {} if fsio.exists(fsio.join(root, MANIFEST_DIR, "_SUCCESS")) else None
 
 
-def _committed(root: str) -> bool:
-    """The (sub-)dataset at ``root`` is committed iff its commit record
-    exists, or (an earlier revision's commit) its manifest carries
-    Spark's job-commit marker."""
-    return fsio.exists(fsio.join(root, COMMIT_FILE)) or fsio.exists(
-        fsio.join(root, MANIFEST_DIR, "_SUCCESS")
-    )
+def _root(path: str, name: str) -> str:
+    """The root of the commit ``name`` at ``path`` ("" is the base)."""
+    return fsio.join(path, name) if name else path
 
 
-def _committed_subs(path: str) -> list[str]:
-    """Sorted names of the committed ``commit=`` and ``epoch=``
-    sub-datasets under ``path``: one listing of the dataset root."""
+def _commit_log(path: str) -> "list[tuple[str, dict]]":
+    """``(name, record)`` of every committed root at ``path``: the base
+    (name "") first, then the ``commit=`` and ``epoch=`` roots by name.
+    One listing of the dataset root and one read of each record. An
+    earlier revision's ``_compacted.json`` is the committed base's
+    "absorbs"."""
     if not fsio.isdir(path):
         return []
-    return sorted(
-        d
-        for d in fsio.listdir(path)
-        if d.startswith((COMMIT_PREFIX, EPOCH_PREFIX))
-        and _committed(fsio.join(path, d))
-    )
+    names = fsio.listdir(path)
+    log = []
+    for name in [""] + sorted(
+        d for d in names if d.startswith((COMMIT_PREFIX, EPOCH_PREFIX))
+    ):
+        rec = _record(_root(path, name))
+        if rec is None:
+            continue
+        if not name and COMPACTED_FILE in names:
+            legacy = fsio.read_json(fsio.join(path, COMPACTED_FILE))
+            rec["absorbs"] = legacy["epochs"]
+        log.append((name, rec))
+    return log
 
 
-def _next_commit(path: str) -> int:
-    """0 (the base) when nothing at ``path`` is committed, else one
-    above the highest committed commit (a base or epochs count as 0)."""
-    subs = _committed_subs(path)
-    if not subs and not _committed(path):
+def _next_commit(log: "list[tuple[str, dict]]") -> int:
+    """0 (the base) when nothing is committed, else one above the
+    highest committed commit (a base or legacy epochs count as 0)."""
+    if not log:
         return 0
     return 1 + max(
-        (int(d[len(COMMIT_PREFIX):]) for d in subs if d.startswith(COMMIT_PREFIX)),
+        (int(d[len(COMMIT_PREFIX):]) for d, _ in log if d.startswith(COMMIT_PREFIX)),
         default=0,
     )
 
 
-def _committed_roots(path: str) -> list[str]:
-    """The (sub-)dataset roots a reader sees: the committed base, or
-    else the committed epochs, plus the committed commits; the bare
-    path when nothing is committed, so that Spark raises its own path
+def _last_epoch(path: str) -> int:
+    """The highest stream epoch a committed record carries, -1 when
+    none does: the encode sink's replay test."""
+    return max(
+        (rec["epoch"] for _, rec in _commit_log(path) if "epoch" in rec),
+        default=-1,
+    )
+
+
+def _visible(path: str) -> "list[tuple[str, dict | None]]":
+    """``(root, record)`` of the roots a reader sees: every committed
+    root that no committed record absorbs; the bare path with no record
+    when nothing is committed, so that Spark raises its own path
     error."""
-    subs = _committed_subs(path)
-    if _committed(path):
-        # a compacted base absorbed the epochs; a commit stays beside it
-        return [path] + [
-            fsio.join(path, d) for d in subs if d.startswith(COMMIT_PREFIX)
-        ]
-    return [fsio.join(path, d) for d in subs] or [path]
+    log = _commit_log(path)
+    absorbed = {a for _, rec in log for a in rec.get("absorbs", ())}
+    return [
+        (_root(path, name), rec) for name, rec in log if name not in absorbed
+    ] or [(path, None)]
 
 
 def _chunk_dirs(path: str) -> list[str]:
     """The chunk dirs of the roots a reader sees."""
-    return [fsio.join(r, CHUNKS_DIR) for r in _committed_roots(path)]
+    return [fsio.join(r, CHUNKS_DIR) for r, _ in _visible(path)]
 
 
 # Explicit read schemas: a dataset appended to across format revisions
 # holds parquet files with and without the r6 payload_ck column, and
 # plain spark.read.parquet infers the schema from ONE arbitrary footer
-# — checksums would nondeterministically vanish (and compact_epochs
+# — checksums would nondeterministically vanish (and compact
 # would then drop them permanently). Reading with the declared schema
 # fills absent columns with NULL deterministically, and unlike
 # mergeSchema costs zero footer reads — which matters when chunks/ is
@@ -258,13 +291,13 @@ def read_chunks(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _root_part_files(root: str) -> list[tuple[str, int]]:
+def _root_part_files(root: str, rec: "dict | None") -> list[tuple[str, int]]:
     """(full path, size) of the chunk part files of ``root``: the ones
-    its commit record names; for a root without one (an earlier
+    its commit record ``rec`` names; for a root without one (an earlier
     revision's commit, or the bare path of an uncommitted dataset),
     the ``.parquet`` files its chunk dir lists."""
     d = fsio.join(root, CHUNKS_DIR)
-    files = _record(root)
+    files = (rec or {}).get("files")
     if files is None:
         if not fsio.isdir(d):
             # nothing committed: the caller's Spark read of the bare
@@ -275,8 +308,9 @@ def _root_part_files(root: str) -> list[tuple[str, int]]:
 
 
 def _committed_part_files(path: str) -> list[tuple[str, int]]:
-    """(full path, size) of every committed chunk part file."""
-    return [f for r in _committed_roots(path) for f in _root_part_files(r)]
+    """(full path, size) of every committed chunk part file a reader
+    sees."""
+    return [f for r, rec in _visible(path) for f in _root_part_files(r, rec)]
 
 
 def ensure_file_map(spark: SparkSession, path: str) -> int:
@@ -448,93 +482,46 @@ def _chunk_file_batches(files, requested: "list[str] | None", target):
             pf.close(force=True)
 
 
-def _absorbed_epochs(path: str) -> list[str] | None:
-    """Epoch dir basenames recorded as absorbed by a compaction, or
-    None when no compaction record exists."""
-    p = fsio.join(path, COMPACTED_FILE)
-    if not fsio.exists(p):
-        return None
-    return fsio.read_json(p)["epochs"]
-
-
-def compact_epochs(spark: SparkSession, path: str) -> int:
-    """Compact a streaming-sink dataset (epoch=NNNNNNNN sub-datasets)
-    into the base layout — a CHUNK-LEVEL move, never a re-encode: chunk
-    payloads are already compressed and their ids are epoch-namespaced
-    (no collisions), so compaction is one distributed copy of chunk
-    rows plus the base's commit record. Returns the number of epochs
-    compacted.
-
-    Epochs fold into an absent base; commit dirs stay where they are,
-    visible on both sides of the flip.
-
-    Crash-safe ordering: base chunks first, then the _compacted.json
-    record of which epoch dirs the base absorbs, then the base's
-    ``_commit.json`` (the base's commit, which flips readers from the
-    epoch view to the base view — see _committed_roots), epoch-dir
-    cleanup last. A crash at any point leaves readers on exactly one
-    consistent view; re-running compaction after a crash between the
-    base commit and the cleanup deletes exactly the recorded absorbed
-    dirs (returns 0).
-    Epochs NOT in the record with a committed base present are an
-    inconsistent state (a sink kept writing past compaction — the
-    encode sink refuses to, see streaming/encode_sink.py) and raise.
-    Compaction writes no chunk->file map; a ``file_map/`` dir left by
-    an earlier revision is neither read nor refreshed.
-    """
-    names = [d for d in _committed_subs(path) if d.startswith(EPOCH_PREFIX)]
-    epochs = [fsio.join(path, d) for d in names]
-    if _committed(path):
-        # resume of the cleanup phase: delete only what the base absorbs
-        absorbed = _absorbed_epochs(path)
-        if absorbed is None and epochs:
-            raise ValueError(
-                f"{path} has a committed base dataset but no compaction "
-                "record — cannot tell whether the remaining epoch dirs "
-                "are absorbed (safe to delete) or contain unmerged data"
-            )
-        leftover = [d for d in names if d not in (absorbed or [])]
-        if leftover:
-            raise ValueError(
-                f"{path} has epochs written AFTER compaction "
-                f"({leftover}); their data "
-                "is invisible to base-view readers — move them to a fresh "
-                "dataset path and compact there"
-            )
-        for e in epochs:
-            fsio.rmtree(e)
+def compact(spark: SparkSession, path: str) -> int:
+    """Fold the commits beside the base into one new commit, a
+    CHUNK-LEVEL copy (chunk ids are unique across commits), and return
+    how many it folded: 0 when fewer than two. The base is never
+    folded, so the cost follows the commits. The new record names the
+    roots it ``absorbs`` (and their highest stream ``epoch``); its
+    landing flips readers to it, and the absorbed dirs go last. A
+    crash before it leaves readers on the folded roots, one after it
+    leaves dirs readers skip. Each run first deletes every absorbed
+    root: a folded root must absorb nothing that could resurface."""
+    log = _commit_log(path)
+    absorbed = {a for _, rec in log for a in rec.get("absorbs", ())}
+    for name in absorbed:
+        fsio.rmtree(fsio.join(path, name))
+    folded = [(name, rec) for name, rec in log if name and name not in absorbed]
+    if len(folded) < 2:
         return 0
-    if not epochs:
-        return 0
-    # explicit schemas: epochs written across the payload_ck format
-    # revision must compact deterministically (see read_chunks note)
-    chunks = spark.read.schema(ENCODED_DDL).parquet(
-        *[fsio.join(e, CHUNKS_DIR) for e in epochs]
+    meta = {"absorbs": [name for name, _ in folded]}
+    epochs = [rec["epoch"] for _, rec in folded if "epoch" in rec]
+    if epochs:
+        meta["epoch"] = max(epochs)
+    # explicit schema: roots written across the payload_ck format
+    # revision must compact deterministically (see the read_chunks note)
+    chunks = spark.read.schema(ENCODED_DDL).parquet(*[
+        f for name, rec in folded
+        for f, _ in _root_part_files(fsio.join(path, name), rec)
+    ])
+    # repartition on chunk_id: each chunk's rows must stay in ONE
+    # output file (Spark's read can split a source file mid-chunk at a
+    # row-group boundary) for the fused read_decoded plan; one shuffle
+    # per compaction buys every later read its shuffle-free plan
+    _land(
+        chunks.repartition("chunk_id"),
+        fsio.join(path, f"{COMMIT_PREFIX}{_next_commit(log):08d}"),
+        read_schema(path),
+        meta,
     )
-    (
-        # repartition on chunk_id: the compacted rewrite must keep each
-        # chunk's rows within ONE output file (Spark's read can split a
-        # source file mid-chunk at a row-group boundary) so the fused
-        # read_decoded plan stays valid after maintenance. One extra
-        # shuffle during a one-time compaction buys every future read
-        # its shuffle-free plan — the right trade at 100 TB.
-        chunks.repartition("chunk_id")
-        .write.mode("overwrite")
-        .option("compression", "uncompressed")
-        .parquet(fsio.join(path, CHUNKS_DIR))
-    )
-    fsio.write_text(
-        fsio.join(path, SCHEMA_FILE),
-        fsio.read_text(fsio.join(epochs[0], SCHEMA_FILE)),
-    )
-    fsio.write_text_atomic(
-        fsio.join(path, COMPACTED_FILE),
-        json.dumps({"epochs": names}),
-    )
-    _write_record(path)
-    for e in epochs:
-        fsio.rmtree(e)
-    return len(epochs)
+    for name, _ in folded:
+        fsio.rmtree(fsio.join(path, name))
+    return len(folded)
 
 
 def read_decoded(
@@ -558,7 +545,7 @@ def read_decoded(
 
     Precondition: every chunk's rows sit in ONE part file. This
     engine's writers keep it (encode emits each chunk from one
-    partition; compact_epochs repartitions on chunk_id before its
+    partition; compact repartitions on chunk_id before its
     rewrite). A file set that breaks it never mis-decodes: the read
     raises the decoder's "incomplete chunks" error naming the dataset
     and the way out, ``decode_table(read_chunks(spark, path), schema)``,
@@ -699,8 +686,9 @@ def verify_dataset(
 
     Datasets written before the checksum column report their payloads
     as ``payloads_unchecked`` rather than failing. The audit covers
-    COMMITTED data: epoch and commit dirs without a commit are
-    invisible to readers by protocol and are not scanned here.
+    COMMITTED data: commit dirs without a record, and those a record
+    absorbs, are invisible to readers by protocol and are not scanned
+    here.
 
     ``deep`` may also be a FRACTION in (0, 1): ``deep=True`` reads
     every payload byte — right for a one-off audit, too expensive as a
@@ -712,9 +700,9 @@ def verify_dataset(
     dataset every n_slices passes (the object-store rolling-scrub
     pattern). ``payloads_scanned`` reports the slice size."""
     out = {"missing_files": 0, "unlisted_files": 0}
-    for root in _committed_roots(path):
-        listed = _record(root)
-        if listed is None and _committed(root):
+    for root, rec in _visible(path):
+        listed = (rec or {}).get("files")
+        if listed is None and rec is not None:
             continue  # an earlier revision's commit names no files
         d = fsio.join(root, CHUNKS_DIR)
         present = dict(
@@ -847,11 +835,11 @@ def resume_encode(
     layout_cols(group_cols, encode_kwargs.get("range_cols"))
     spark = df.sparkSession
     chunks_path = fsio.join(path, CHUNKS_DIR)
-    if not _committed(path) and fsio.exists(fsio.join(chunks_path, "_SUCCESS")):
+    if _record(path) is None and fsio.exists(fsio.join(chunks_path, "_SUCCESS")):
         # crashed between the chunk job and the record: the chunk job
         # itself completed (_SUCCESS), so record its files
         _write_record(path)
-    n = _next_commit(path)
+    n = _next_commit(_commit_log(path))
     pending = df
     if n:
         committed_keys = (
@@ -874,7 +862,7 @@ def resume_encode(
     n_missing = len(plan.collect())
     if n_missing:
         _commit(
-            pending, path, n, group_cols=group_cols, salt_plan=plan,
+            pending, path, n, {}, group_cols=group_cols, salt_plan=plan,
             **encode_kwargs,
         )
     return n_missing

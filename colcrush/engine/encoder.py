@@ -743,19 +743,23 @@ def encode_table(
     else:
         # an ungrouped encode is one group: its one plan row salts the
         # whole input by bytes, and every row takes the key "[]"
-        df = df.join(
-            F.broadcast(salt_plan.select(*group_cols, "_n_salts")),
-            on=group_cols or None,
-            how="left",
+        # null-safe (<=>), so NULL-keyed groups take their salts too; one
+        # SQL condition keeps the build's py4j calls flat
+        names = [f"`{c.replace('`', '``')}`" for c in group_cols]
+        keys = [f"_plan_{i}" for i in range(len(group_cols))]
+        plan = salt_plan.selectExpr(
+            *[f"{c} AS {k}" for c, k in zip(names, keys)], "_n_salts"
         )
+        on = " AND ".join(f"{c} <=> {k}" for c, k in zip(names, keys))
+        df = df.join(F.broadcast(plan), on=F.expr(on or "true"), how="left")
         df = df.withColumn(key_col, sort_key)
-        # a group the plan lacks (NULL keys never match the join) gets 1
+        # a group a caller's salt_plan lacks gets 1 salt
         df = df.withColumn(
             salt_col,
             F.pmod(
                 F.col(key_col), F.coalesce(F.col("_n_salts"), F.lit(1))
             ).cast("int"),
-        ).drop("_n_salts")
+        ).drop("_n_salts", *keys)
         df = df.withColumn(gk_col, group_key_expr(group_cols))
         df = df.repartition(num_partitions, *group_cols, salt_col)
         # lead the sort with an 8-byte hash of the group key: the

@@ -2,8 +2,8 @@
 
 The chunk parquet files already go through Spark's Hadoop-FS layer
 (any scheme Spark supports: file://, hdfs://, s3a://, ...), but the
-engine's own metadata — schema.json, the _commit.json and
-_compacted.json records, flush markers, epoch-dir listings — used
+engine's own metadata — schema.json, the _commit.json records, flush
+markers, dataset-root listings — used
 plain ``os``/``open`` and was
 therefore silently LOCAL-ONLY. This module routes those operations
 through the JVM's Hadoop FileSystem whenever the path carries a scheme

@@ -20,7 +20,6 @@ min/max.
 from __future__ import annotations
 
 import math
-import os
 from datetime import date, datetime, timezone
 
 import pyarrow as pa
@@ -33,7 +32,7 @@ from pyspark.sql import types as T
 
 from colcrush.engine import (
     column_min_max,
-    compact_epochs,
+    compact,
     filtered_min_max,
     pruned_chunk_count,
     read_decoded,
@@ -55,6 +54,7 @@ from colcrush.engine.scan import (
     scan_udp,
 )
 from colcrush.fixtures import source_code_df
+from colcrush.streaming.encode_sink import write_batch
 
 NAN = float("nan")
 BIG = 1 << 53
@@ -372,14 +372,12 @@ def test_scan_matches_filtered_read_on_value_edge_cases(spark, tmp_path):
 def test_scan_matches_filtered_read_over_epochs_and_compaction(spark, tmp_path):
     ds = str(tmp_path / "ds")
     df = source_code_df(spark, 300, n_repos=4)
-    write_encoded(
-        df.where(F.col("lang") < "m"), os.path.join(ds, "epoch=00000000"),
-        mode="overwrite", group_cols=["lang"], namespace="epoch-0",
+    parts = (
+        F.col("lang") < "j", (F.col("lang") >= "j") & (F.col("lang") < "m"),
+        F.col("lang") >= "m",
     )
-    write_encoded(
-        df.where(F.col("lang") >= "m"), os.path.join(ds, "epoch=00000001"),
-        mode="overwrite", group_cols=["lang"], namespace="epoch-1",
-    )
+    for epoch, part in enumerate(parts):
+        write_batch(df.where(part), epoch, ds, ["lang"])
     key = df.orderBy("path").first()
     cases = [
         [("path", "==", key["path"])],
@@ -388,7 +386,7 @@ def test_scan_matches_filtered_read_over_epochs_and_compaction(spark, tmp_path):
     ]
     for stage in ("epochs", "compacted"):
         if stage == "compacted":
-            assert compact_epochs(spark, ds) == 2
+            assert compact(spark, ds) == 2
         for filters in cases:
             _assert_scan_equals_filtered_read(
                 spark, ds, filters, columns=["path", "lang"]

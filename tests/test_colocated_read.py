@@ -23,7 +23,7 @@ import pytest
 import pyspark.sql.functions as F
 
 from colcrush.engine import (
-    compact_epochs,
+    compact,
     decode_table,
     read_chunks,
     read_decoded,
@@ -32,6 +32,7 @@ from colcrush.engine import (
 )
 from colcrush.engine.dataset import CHUNKS_DIR
 from colcrush.fixtures import source_code_df
+from colcrush.streaming.encode_sink import write_batch
 
 
 def _rows(df):
@@ -221,24 +222,21 @@ def test_dataset_without_chunks_raises_spark_path_error(spark, tmp_path):
 
 
 def test_colocated_across_epochs_and_compaction(spark, tmp_path):
-    """Epoch-view datasets read colocated; compaction (which now
-    repartitions on chunk_id before its rewrite) preserves the
-    whole-chunks-per-file precondition, so the colocated read keeps
-    working on the compacted base layout."""
+    """Stream datasets read colocated; compaction (which repartitions
+    on chunk_id before its rewrite) preserves the whole-chunks-per-file
+    precondition, so the colocated read keeps working after it."""
     ds = str(tmp_path / "ds")
     df = source_code_df(spark, 300, n_repos=4)
-    write_encoded(
-        df.where(F.col("lang") < "m"), os.path.join(ds, "epoch=00000000"),
-        mode="overwrite", group_cols=["lang"], namespace="epoch-0",
+    parts = (
+        F.col("lang") < "j", (F.col("lang") >= "j") & (F.col("lang") < "m"),
+        F.col("lang") >= "m",
     )
-    write_encoded(
-        df.where(F.col("lang") >= "m"), os.path.join(ds, "epoch=00000001"),
-        mode="overwrite", group_cols=["lang"], namespace="epoch-1",
-    )
+    for epoch, part in enumerate(parts):
+        write_batch(df.where(part), epoch, ds, ["lang"])
     before = _rows(read_decoded(spark, ds))
     assert before == _rows(_reference(spark, ds))
     assert len(before) == 300
-    assert compact_epochs(spark, ds) == 2
+    assert compact(spark, ds) == 2
     assert _rows(read_decoded(spark, ds)) == before
     assert _rows(_reference(spark, ds)) == before
 

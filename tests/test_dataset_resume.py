@@ -118,12 +118,25 @@ def test_encode_and_resume_persist_no_salt_plan(spark, src, tmp):
     assert not added()
 
 
+def _stream_in_three(df, ds):
+    """Commit ``df`` to ``ds`` as three stream epochs: the base and two
+    commits."""
+    from colcrush.streaming.encode_sink import write_batch
+
+    parts = (
+        F.col("lang") < "j", (F.col("lang") >= "j") & (F.col("lang") < "m"),
+        F.col("lang") >= "m",
+    )
+    for epoch, part in enumerate(parts):
+        write_batch(df.where(part), epoch, ds, ["lang"])
+
+
 def test_no_write_path_persists(spark, tmp_path, monkeypatch):
     """No write caches its encode output: with DataFrame.persist and
     DataFrame.cache raising, a write, an append, the resumes of a write
     that crashed after its chunk job and of one that crashed before it,
     and a compaction all succeed and verify."""
-    from colcrush.engine import compact_epochs, verify_dataset
+    from colcrush.engine import compact, verify_dataset
     from colcrush.engine.dataset import CHUNKS_DIR, COMMIT_FILE
 
     def refuse(self, *args, **kwargs):
@@ -156,14 +169,8 @@ def test_no_write_path_persists(spark, tmp_path, monkeypatch):
     check(crashed, 400)
 
     streamed = str(tmp_path / "streamed")
-    for i, part in enumerate(
-        (df.where(F.col("lang") < "m"), df.where(F.col("lang") >= "m"))
-    ):
-        write_encoded(
-            part, os.path.join(streamed, f"epoch={i:08d}"), mode="overwrite",
-            group_cols=["lang"], namespace=f"epoch-{i}",
-        )
-    assert compact_epochs(spark, streamed) == 2
+    _stream_in_three(df, streamed)
+    assert compact(spark, streamed) == 2
     check(streamed, 400)
 
 
@@ -177,7 +184,7 @@ def test_write_encoded_job_count_and_no_file_map(spark, tmp_path):
     """A grouped write runs a pinned number of Spark jobs and no write,
     append, overwrite or compaction leaves a file_map/, salt_plan/ or
     manifest/ dir behind."""
-    from colcrush.engine import compact_epochs
+    from colcrush.engine import compact
 
     df = source_code_df(spark, 400, n_repos=6)
     ds = str(tmp_path / "ds")
@@ -198,14 +205,8 @@ def test_write_encoded_job_count_and_no_file_map(spark, tmp_path):
     assert no_sidecar(ds)
 
     streamed = str(tmp_path / "streamed")
-    for i, part in enumerate(
-        (df.where(F.col("lang") < "m"), df.where(F.col("lang") >= "m"))
-    ):
-        write_encoded(
-            part, os.path.join(streamed, f"epoch={i:08d}"), mode="overwrite",
-            group_cols=["lang"], namespace=f"epoch-{i}",
-        )
-    assert compact_epochs(spark, streamed) == 2
+    _stream_in_three(df, streamed)
+    assert compact(spark, streamed) == 2
     assert no_sidecar(streamed)
     assert read_decoded(spark, streamed).count() == 400
 
@@ -406,6 +407,49 @@ def test_resume_across_parallelism_byte_identical(spark, src, tmp):
         )
 
     assert payloads(tmp) == payloads(tmp2)
+
+
+def test_null_keyed_group_takes_its_planned_salts(spark, tmp):
+    """A NULL group key joins the salt plan by null-safe equality: a
+    skewed NULL group is split across the salts the plan gives it, not
+    encoded in one task, and its chunks are byte-identical at N and 4N
+    partitions and after a crash resume, whose anti-join compares the
+    key group_key_expr renders as [null]."""
+    from colcrush.engine import plan_salts
+
+    rows = spark.range(8000).select(
+        F.when(F.col("id") % 2 == 0, F.lit(None).cast("string"))
+        .otherwise(F.lit("k")).alias("g"),
+        F.sha2(F.col("id").cast("string"), 256).alias("v"),
+        F.col("id"),
+    )
+    kw = dict(group_cols=["g"], target_group_bytes=32 << 10)
+    salts = dict(plan_salts(rows, ["g"], 32 << 10).select("g", "_n_salts").collect())
+    assert salts[None] > 1 and salts["k"] > 1
+
+    def payloads(p):
+        return sorted(
+            (r["group_key"], r["chunk_id"], r["column"], bytes(r["payload"]))
+            for r in read_chunks(spark, p).collect()
+        )
+
+    write_encoded(rows, tmp, num_partitions=4, **kw)
+    got = payloads(tmp)
+    chunks = {}
+    for key, chunk_id, column, _ in got:
+        if column == "v":
+            chunks.setdefault(key, set()).add(chunk_id)
+    assert len(chunks["[null]"]) >= salts[None]
+    assert len(chunks['["k"]']) >= salts["k"]
+
+    wide = tmp + "_4n"
+    write_encoded(rows, wide, num_partitions=16, **kw)
+    assert payloads(wide) == got
+
+    resumed = tmp + "_resumed"
+    write_encoded(rows.where(F.col("g").isNotNull()), resumed, num_partitions=4, **kw)
+    assert resume_encode(rows, resumed, num_partitions=16, **kw) == 1
+    assert payloads(resumed) == got
 
 
 def test_scan_filters_and_projects(spark, src, tmp):

@@ -4,7 +4,7 @@ parquet4s runs against any Hadoop FileSystem (its Path is a Hadoop
 path end to end; the reference ships an S3 integration suite,
 s3Test/src/it/.../S3ItSpec.scala). colcrush's chunk/manifest parquet
 always went through Spark's Hadoop layer, but the engine's own
-metadata I/O (schema.json, compaction record, epoch listings, flush
+metadata I/O (schema.json, commit records, commit listings, flush
 markers) was os/open-based and silently local-only. These tests drive
 the FULL engine lifecycle through ``file://`` URIs — the only scheme
 mountable in this sandbox; the fsio layer uses the identical Hadoop
@@ -14,13 +14,14 @@ that s3a:// or hdfs:// paths would hit.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pyspark.sql.functions as F
 import pytest
 
 from colcrush.engine import (
-    compact_epochs,
+    compact,
     read_decoded,
     read_manifest,
     resume_encode,
@@ -28,6 +29,7 @@ from colcrush.engine import (
 )
 from colcrush.engine.scan import column_min_max, count_rows, scan, scan_udp
 from colcrush.fixtures import source_code_df
+from colcrush.streaming.encode_sink import write_batch
 
 
 def _plan(df):
@@ -65,20 +67,21 @@ def test_engine_lifecycle_over_scheme_paths(spark, tmp_path):
 def test_epochs_and_compaction_over_scheme_paths(spark, tmp_path):
     uri = f"file://{tmp_path}/sds"
     df = source_code_df(spark, 200, n_repos=3)
-    half_a = df.where(F.col("lang") < "m")
-    half_b = df.where(F.col("lang") >= "m")
-    write_encoded(half_a, f"{uri}/epoch=00000000", mode="overwrite",
-                  group_cols=["lang"], namespace="epoch-0")
-    write_encoded(half_b, f"{uri}/epoch=00000001", mode="overwrite",
-                  group_cols=["lang"], namespace="epoch-1")
-    assert read_decoded(spark, uri).count() == 200  # epoch view via listings
+    parts = (
+        F.col("lang") < "j", (F.col("lang") >= "j") & (F.col("lang") < "m"),
+        F.col("lang") >= "m",
+    )
+    for epoch, part in enumerate(parts):
+        write_batch(df.where(part), epoch, uri, ["lang"])
+    assert read_decoded(spark, uri).count() == 200  # commits via listings
 
-    assert compact_epochs(spark, uri) == 2
+    assert compact(spark, uri) == 2
     assert read_decoded(spark, uri).count() == 200
-    assert not [d for d in os.listdir(tmp_path / "sds")
-                if d.startswith("epoch=")]
-    # the compaction record was written through the FS layer
-    assert os.path.exists(tmp_path / "sds" / "_compacted.json")
+    assert [d for d in os.listdir(tmp_path / "sds")
+            if d.startswith("commit=")] == ["commit=00000003"]
+    # the compaction's record was written through the FS layer
+    with open(tmp_path / "sds" / "commit=00000003" / "_commit.json") as f:
+        assert json.load(f)["absorbs"] == ["commit=00000001", "commit=00000002"]
     m = read_manifest(spark, uri)
     assert m.where(F.col("column") == "content").agg(
         F.sum("n_rows")

@@ -188,8 +188,9 @@ def test_s3_client_cache_invalidates_on_secret_rotation(s3_env):
 
 
 def test_s3_epoch_listing_shape(spark, s3_env):
-    # the epoch-dir listing pattern used by compact_epochs/read paths:
-    # epoch=N/ prefixes must come back as directory names
+    # the dataset-root listing the commit log reads: commit=N/ (and an
+    # earlier revision's epoch=N/) prefixes must come back as directory
+    # names
     base = f"s3://{BUCKET}/stream"
     for e in (0, 1, 2):
         fsio.write_text(fsio.join(base, f"epoch={e}", "part.json"), "{}")
